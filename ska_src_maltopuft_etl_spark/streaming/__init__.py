@@ -22,10 +22,6 @@ from ska_src_maltopuft_etl_spark.streaming.recovery import (
     clear_aborted_batch0,
     is_aborted_batch0,
 )
-from ska_src_maltopuft_etl_spark.streaming.tws import (
-    sessionize_events_tws,
-    tws_available,
-)
 
 __all__ = [
     "clear_aborted_batch0",
@@ -39,9 +35,7 @@ __all__ = [
     "resolve_beams_stream",
     "run_curation_stream",
     "sessionize_events",
-    "sessionize_events_tws",
     "stream_run_summaries",
     "stream_spccl",
     "stream_with_watermark_dedup",
-    "tws_available",
 ]

@@ -766,64 +766,6 @@ def test_sessionize_null_ts_dropped_and_null_value_ignored(spark, tmp_path):
     ]
 
 
-def test_sessionize_tws_guarded(spark, tmp_path):
-    """transformWithStateInPandas port (streaming/tws.py): gated on
-    google.protobuf (the PySpark state-server protocol). Where the
-    runtime dependency is missing the operator must refuse with a
-    descriptive error; where present it must match the shipped
-    applyInPandasWithState operator on the canonical two-session
-    fixture."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from ska_src_maltopuft_etl_spark.streaming import (
-        sessionize_events_tws,
-        tws_available,
-    )
-
-    data = tmp_path / "events_tws"
-    data.mkdir()
-    (data / "a.json").write_text(
-        "\n".join(
-            _json.dumps(r)
-            for r in [
-                {"user_id": 1, "ts": "2024-01-01T00:00:00.000Z", "value": 1.5},
-                {"user_id": 1, "ts": "2024-01-01T00:01:00.000Z", "value": 2.5},
-            ]
-        )
-    )
-    (data / "b.json").write_text(
-        _json.dumps({"user_id": 1, "ts": "2024-01-01T02:00:00.000Z", "value": 9.0})
-    )
-    schema = "user_id long, ts timestamp, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(str(data))
-    )
-    if not tws_available():
-        with _pytest.raises(RuntimeError, match="google.protobuf"):
-            sessionize_events_tws(stream, gap_minutes=30)
-        _pytest.skip(
-            "google.protobuf absent — transformWithStateInPandas state "
-            "server cannot run here; guard behavior verified"
-        )
-    sessions = sessionize_events_tws(stream, gap_minutes=30)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sessions_tws")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120) is True
-    rows = spark.sql("SELECT * FROM sessions_tws").collect()
-    assert len(rows) == 1
-    assert rows[0]["n_events"] == 2
-    assert rows[0]["total_value"] == 4.0
-
-
 def test_sessionize_empty_batch_rearms_timeout(spark, tmp_path):
     """Round-14 advice pin: a micro-batch whose rows for a stateful key
     all have NULL event times (dropped by the NULL-axis rule) takes the
