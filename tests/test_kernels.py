@@ -99,39 +99,6 @@ def test_duration_sum_from_config(spark):
     assert got[2] == 0.0
 
 
-def test_astropy_fallback_gated(spark):
-    """Without astropy installed, the parity fallbacks must fail with a
-    clear ImportError pointing at the native kernels; with astropy they
-    would cross-validate F14/F15 (not available in this container)."""
-    import pytest as _pytest
-
-    from ska_src_maltopuft_etl_spark.functions import astropy_fallback
-
-    try:
-        import astropy  # noqa: F401
-        has_astropy = True
-    except ImportError:
-        has_astropy = False
-
-    if not has_astropy:
-        with _pytest.raises(ImportError, match="native kernels"):
-            astropy_fallback.mjd_to_timestamp_astropy("mjd")
-    else:  # pragma: no cover - exercised only where astropy exists
-        df = spark.createDataFrame([(60268.91471, "4:40:17.07", "-43:33:09.0")],
-                                   ["mjd", "ra", "dec"])
-        ra, dec = astropy_fallback.hms_to_degrees_astropy("ra", "dec")
-        row = df.select(
-            astropy_fallback.mjd_to_timestamp_astropy("mjd").alias("ts"),
-            ra.alias("ra_deg"), dec.alias("dec_deg"),
-            K.mjd_to_timestamp("mjd").alias("ts_native"),
-            K.hms_to_degrees("ra").alias("ra_native"),
-            K.dms_to_degrees("dec").alias("dec_native"),
-        ).first()
-        assert abs((row["ts"] - row["ts_native"]).total_seconds()) < 1e-3
-        assert row["ra_deg"] == _pytest.approx(row["ra_native"], abs=1e-5)
-        assert row["dec_deg"] == _pytest.approx(row["dec_native"], abs=1e-5)
-
-
 def test_simhash_all_three_forms_identical(spark):
     """The Arrow mapInPandas kernel (default), the per-row expression
     fold, and the explode+shuffle aggregate formulation must produce
