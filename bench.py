@@ -11,15 +11,12 @@ projections and under-reports projection-heavy queries; that
 count-based series was the r1-r9 legacy metric, retired in round 10
 per the r8/r9 verdicts).
 
-Headline pair (round-10 VERDICT item #4):
+Headline pair:
 
 - ``value`` — raw noop-sink battery total (best-of-N per query);
 - ``value_canary_normalized`` — the same total divided by
-  ``canary_drift_noop``, the drift of a 10-query untouched canary
-  subset (``cfg/bench_canary.json``) against its quiet-box reference.
-  ~1.0 drift = quiet box; the normalized number is the round-over-round
-  comparable one on this shared box (observed ±40% environmental
-  swings).
+  ``canary_drift_box``, the drift of a synthetic engine-free box probe
+  against its quiet-box reference (``cfg/bench_canary.json``).
 
 A 1-minute loadavg above ``SPARK_GRAFT_BENCH_MAX_LOAD`` (default 8.0)
 is flagged as ``"env_hot": true`` in the artifact and warned on stderr;
@@ -79,20 +76,15 @@ def _executor_task_ms(spark) -> int | None:
 
 def _box_probe_sec(spark) -> float:
     """Pure box-speed probe: a fixed synthetic workload that never
-    touches engine code (round-15 canary re-base, VERDICT r14 #8).
+    touches engine code, so no code change can move it.
 
-    The r7 "untouched query" canary stopped being a box probe the
-    moment optimization rounds touched shared engine layers (session
-    memo, table loading): its drift conflates box speed with real code
-    wins and the r14 re-pin folded a measured code factor into the
-    reference — structurally one bad measurement away from normalizing
-    a regression. This probe is immune by construction: plain Spark API
-    over ``range()`` data, fixed seed-free integer arithmetic, fixed
-    partition counts, no engine imports — byte-frozen alongside the
-    reference value in cfg/bench_canary.json (``box_probe_reference_sec``).
-    Shape: one CPU-bound hash aggregate + one shuffle join, ~1 s on a
-    quiet local[32] box. Timed best-of-2 (JVM/codegen warm by the time
-    it runs — bench.py's warmup precedes it).
+    Plain Spark API over ``range()`` data, fixed seed-free integer
+    arithmetic, fixed partition counts, no engine imports — byte-frozen
+    alongside the reference value in cfg/bench_canary.json
+    (``box_probe_reference_sec``). Shape: one CPU-bound hash aggregate +
+    one shuffle join, ~1 s on a quiet local[32] box. Timed best-of-2
+    (JVM/codegen warm by the time it runs — bench.py's warmup precedes
+    it).
     """
     import time as _t
 
@@ -209,12 +201,9 @@ def main() -> None:
         timings_noop[name] = round(best_noop, 3)
     total_noop = round(sum(timings_noop.values()), 3)
 
-    # Round-15 box probe (VERDICT r14 #8): a synthetic, engine-free
-    # workload timed against a quiet-box reference pinned in
-    # cfg/bench_canary.json. This is the structural replacement for the
-    # query canary below, whose "untouched" premise optimization rounds
-    # keep breaking via shared-engine changes. Runs AFTER the battery so
-    # it never warms the timed queries.
+    # Box probe: a synthetic, engine-free workload timed against a
+    # quiet-box reference pinned in cfg/bench_canary.json. Runs AFTER
+    # the battery so it never warms the timed queries.
     box_probe_sec = None
     try:
         box_probe_sec = _box_probe_sec(spark)
@@ -222,15 +211,8 @@ def main() -> None:
         pass
     load_end = os.getloadavg()[0]
 
-    # Canary drift (round-7 VERDICT #3b): sum of the 10 untouched
-    # canary queries vs their quiet-box reference. ~1.0 = quiet box,
-    # comparable battery; >>1.0 = environmental inflation — the
-    # normalized total divides it out. Since round 15 the headline
-    # normalization uses the BOX PROBE drift (pure box speed by
-    # construction); the legacy query-canary drift and its normalized
-    # total are still emitted for round-over-round continuity.
-    canary_drift_noop = None
-    total_normalized_legacy = None
+    # Box drift: ~1.0 = quiet box; >>1.0 = environmental inflation,
+    # which the normalized total divides out.
     canary_drift_box = None
     total_normalized = None
     try:
@@ -238,23 +220,12 @@ def main() -> None:
             os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          "cfg", "bench_canary.json")
         ) as f:
-            canary = json.load(f)
-        ref_n = canary["reference_noop_sec"]
-        if all(k in timings_noop for k in ref_n):
-            canary_drift_noop = round(
-                sum(timings_noop[k] for k in ref_n) / sum(ref_n.values()), 3
-            )
-            total_normalized_legacy = round(total_noop / canary_drift_noop, 3)
-        box_ref = canary.get("box_probe_reference_sec")
+            box_ref = json.load(f).get("box_probe_reference_sec")
         if box_probe_sec is not None and box_ref:
             canary_drift_box = round(box_probe_sec / float(box_ref), 3)
             total_normalized = round(total_noop / canary_drift_box, 3)
-    except (OSError, ValueError, KeyError, ZeroDivisionError):
+    except (OSError, ValueError, ZeroDivisionError):
         pass
-    if total_normalized is None:
-        # Box probe unavailable — fall back to the legacy definition so
-        # the contract key is always populated.
-        total_normalized = total_normalized_legacy
     # Round 2 postmortem: the single-line JSON with all per-query
     # timings outgrew the driver's tail capture and the headline line was
     # truncated away ("parsed": null in BENCH_r02.json). Emit the full
@@ -265,7 +236,6 @@ def main() -> None:
         "metric": "per_query_wall_sec_full",
         "queries_noop_sink": timings_noop,
         "queries_exec_task_sec": task_sec,
-        "canary_drift_noop": canary_drift_noop,
         "canary_drift_box": canary_drift_box,
         "box_probe_sec": box_probe_sec,
         "loadavg_start": round(load_start, 2),
@@ -300,12 +270,8 @@ def main() -> None:
                 "metric": "total_query_battery_noop_sink_sec",
                 "value": total_noop,
                 "unit": "sec",
-                # The round-over-round comparable number on a shared
-                # box: raw total divided by box drift (r15+: synthetic
-                # box probe; legacy query-canary kept alongside).
+                # raw total divided by the box probe's drift
                 "value_canary_normalized": total_normalized,
-                "value_canary_normalized_legacy": total_normalized_legacy,
-                "canary_drift_noop": canary_drift_noop,
                 "canary_drift_box": canary_drift_box,
                 "loadavg_start": round(load_start, 2),
                 "loadavg_end": round(load_end, 2),
