@@ -239,7 +239,8 @@ def surrogate_key_dense_int(
     spark = df.sparkSession
     n_b = num_buckets or spark.sparkContext.defaultParallelism
     w = max(1, math.ceil(key_max / max(1, n_b)))
-    with_b = df.withColumn("__skb", F.expr(f"({key_col} - 1) DIV {w}"))
+    key = "`" + key_col.replace("`", "``") + "`"
+    with_b = df.withColumn("__skb", F.expr(f"({key} - 1) DIV {w}"))
     counts = with_b.groupBy("__skb").agg(F.count(F.lit(1)).alias("__cnt"))
     offw = (
         Window.orderBy("__skb")
@@ -249,7 +250,7 @@ def surrogate_key_dense_int(
         "__skb",
         F.coalesce(F.sum("__cnt").over(offw), F.lit(0)).alias("__skoff"),
     )
-    win = Window.partitionBy("__skb").orderBy(F.col(key_col).asc())
+    win = Window.partitionBy("__skb").orderBy(F.col(key).asc())
     return (
         with_b.join(F.broadcast(offsets), "__skb")
         .withColumn(

@@ -190,6 +190,20 @@ def test_surrogate_key_dense_int_matches_scalable(spark):
     assert [(r["cid"], r["sk"]) for r in rows] == [(7, 5), (9_999, 6)]
 
 
+@pytest.mark.parametrize("key_col", ["cand-id", "cand.id", "cand`id"])
+def test_surrogate_key_dense_int_quotes_key_col(spark, key_col):
+    """A key column whose name is not a bare SQL identifier is numbered
+    like any other."""
+    from ska_src_maltopuft_etl_spark.operators import surrogate_key_dense_int
+
+    df = spark.createDataFrame([(9,), (3,), (5,)], "k long").withColumnRenamed(
+        "k", key_col
+    )
+    out = surrogate_key_dense_int(df, "sk", key_col, key_max=10, num_buckets=2)
+    rows = sorted(tuple(r) for r in out.collect())
+    assert rows == [(3, 1), (5, 2), (9, 3)]
+
+
 def test_surrogate_key_scalable_storage_level(spark):
     """storage_level= reaches the localCheckpoint: with DISK_ONLY the
     materialized fact must occupy zero storage memory, and the ids must
