@@ -1,7 +1,6 @@
 from ska_src_maltopuft_etl_spark.engine.session import (
     get_spark,
     release_all_persisted,
-    release_checkpoints,
 )
 
-__all__ = ["get_spark", "release_all_persisted", "release_checkpoints"]
+__all__ = ["get_spark", "release_all_persisted"]

@@ -139,7 +139,3 @@ def release_all_persisted(spark: SparkSession) -> int:
         rdd.unpersist()
     return len(rdds)
 
-
-#: Deprecated alias — the old name implied only checkpoint storage was
-#: released, which invited misuse between stages of a live pipeline.
-release_checkpoints = release_all_persisted

@@ -1,12 +1,7 @@
 from ska_src_maltopuft_etl_spark.operators.joins import (
     CardinalityError,
     asof_join,
-    asof_join_backward,
-    asof_join_forward,
     interval_join,
-    interval_join_asof,
-    interval_join_bucketed,
-    interval_join_sweep,
     interval_overlap_join,
     remap_keys,
     validated_join,
@@ -72,16 +67,11 @@ __all__ = [
     "weighted_sample_per_group",
     "weighted_sample_topk",
     "asof_join",
-    "asof_join_backward",
-    "asof_join_forward",
     "connected_components",
     "dedup_clusters",
     "dedup_keep_first",
     "exact_percentiles",
     "interval_join",
-    "interval_join_asof",
-    "interval_join_bucketed",
-    "interval_join_sweep",
     "interval_overlap_join",
     "kmeans_fixed_point",
     "pagerank_fixed_point",

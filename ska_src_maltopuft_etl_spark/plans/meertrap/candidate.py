@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark import functions as K
 from ska_src_maltopuft_etl_spark.operators import (
-    asof_join_backward,
+    asof_join,
     dedup_keep_first,
     surrogate_key_dense_int,
     surrogate_key_with_count,
@@ -92,7 +92,7 @@ def transform_candidate(
         "obs_t_min",
         "beam_id",
     )
-    joined = asof_join_backward(
+    joined = asof_join(
         cand,
         right,
         left_on="__obs_round",

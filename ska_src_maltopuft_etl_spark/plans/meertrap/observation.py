@@ -191,7 +191,6 @@ def get_obs_df(
         right_end="__iv_end",
         how="left",
         tie_break="schedule_block_id",
-        broadcast_right=True,
     ).drop("__iv_start", "__iv_end")
 
     obs = surrogate_key(obs, "observation_id", ["obs_t_min"])

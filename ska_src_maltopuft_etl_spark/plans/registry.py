@@ -134,15 +134,15 @@ from ska_src_maltopuft_etl_spark.plans.meertrap import parity  # noqa: E402,F401
 # association_rules_lift, variant_props_stats, time_range_moving_stats,
 # weighted_sample_docs, cohort_weekly_retention, … — plus the two
 # round-10 additions revenue_exact_decimal and
-# interval_join_asof_sessions). In exchange 28 driver-certified rows
+# the as-of interval-join row, since removed). In exchange 28 driver-certified rows
 # rotate to the tail (r10 first-timer TPC-H stragglers and stalwarts
 # whose covers stay multiply held). Verified at edit time by iterative
 # covers-closure (script in the round-11 session log): zero §2 IDs lose
 # their last in-window holder. After this window certifies, cumulative
 # distinct driver-certified = 153/153 queries registered at rotation
 # time — every one driver-certified at least once; the rotation backlog
-# is retired. The three round-11 additions (interval_join_sweep_sessions,
-# interval_overlap_pairs, q01_pricing_summary_exact) ALSO take window
+# is retired. The three round-11 additions (the sweep interval-join row,
+# since removed, interval_overlap_pairs, q01_pricing_summary_exact) ALSO take window
 # slots — swapped in for three long-certified rows
 # (q03_shipping_priority r01+, triangle_count_copurchase,
 # ols_trend_daily r10) whose covers stay multiply held after the swap
@@ -175,14 +175,15 @@ _TAIL = [
     # Round 12: RE-CERTIFICATION rotation (not backlog — that's retired).
     # The round-12 fuzzer-driven fixes changed asof_join's NULL
     # semantics (rights with NULL time/by-keys filtered; NULLS FIRST in
-    # both directions) and interval_join_sweep's desc tie policy
-    # (_Rev.__eq__), and interval_join_bucketed grew the tie_break
-    # delegation guard (force_pairwise exhibit). The five tail queries
+    # both directions) and the interval sweep's desc tie policy
+    # (_Rev.__eq__), and the bucketed interval join grew a tie_break
+    # delegation guard (both since folded into interval_join). The
+    # five tail queries
     # exercising those exact code paths move back IN-WINDOW so the
     # driver re-certifies the changed operators this round:
     # asof_join_purchase_context, asof_join_forward_next_action,
-    # asof_join_nearest_action, interval_join_bucketed_sessions,
-    # interval_join_sessions. In exchange five r11-certified rows with
+    # asof_join_nearest_action, the bucketed interval-join row (since
+    # removed), interval_join_sessions. In exchange five r11-certified rows with
     # multiply-held covers rotate out (joint covers-closure verified in
     # the round-12 session: zero §2 IDs lose their last in-window
     # holder; prefix stays exactly 50 with no overflow).

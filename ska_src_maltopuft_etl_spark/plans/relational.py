@@ -14,14 +14,10 @@ from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark import functions as K
 from ska_src_maltopuft_etl_spark.operators import (
-    asof_join_backward,
+    asof_join,
     dedup_keep_first,
-    asof_join_forward,
     exact_percentiles,
     interval_join,
-    interval_join_asof,
-    interval_join_bucketed,
-    interval_join_sweep,
     interval_overlap_join,
     remap_keys,
     surrogate_key,
@@ -441,161 +437,6 @@ def interval_join_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="left",
         tie_break="session_start",
         tie_break_desc=True,
-        broadcast_right=False,
-    )
-    return out.select(
-        "event_id", F.unix_micros("session_start").alias("session_start_us")
-    )
-
-
-@register(
-    "interval_join_bucketed_sessions",
-    oracle="""
-    SELECT e.event_id,
-           (SELECT epoch_us(MAX(s.ts)) FROM events s
-            WHERE s.event_type = 'signup' AND s.user_id = e.user_id
-              AND s.ts <= e.ts AND e.ts <= s.ts + INTERVAL 3 DAY) AS session_start_us
-    FROM events e
-    WHERE e.event_type = 'click'
-    """,
-    covers=("J5", "P5", "R1"),
-    description=(
-        "bucketized interval join (time axis in the shuffle key): same "
-        "semantics + oracle as interval_join_sessions, but a plain "
-        "equi-join on (user, day-bucket) with the containment residual — "
-        "the non-broadcastable / hot-key formulation (force_pairwise: "
-        "kept as the measured ALL-pairs baseline exhibit; plain "
-        "tie_break calls auto-delegate to interval_join_sweep)"
-    ),
-)
-def interval_join_bucketed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    sessions = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id"),
-        F.col("ts").alias("session_start"),
-        (F.col("ts") + F.expr("INTERVAL 3 DAY")).alias("session_end"),
-    )
-    out = interval_join_bucketed(
-        clicks,
-        sessions,
-        left_ts="ts",
-        right_start="session_start",
-        right_end="session_end",
-        bucket_width_s=86400,
-        by=["user_id"],
-        how="left",
-        tie_break="session_start",
-        tie_break_desc=True,
-        # Deliberate: this registry entry IS the pair-join exhibit the
-        # skew benches A/B against the sweep; without this flag the
-        # tie_break guard would silently delegate and erase the baseline.
-        force_pairwise=True,
-    )
-    return out.select(
-        "event_id", F.unix_micros("session_start").alias("session_start_us")
-    )
-
-
-
-@register(
-    "interval_join_asof_sessions",
-    oracle="""
-    SELECT e.event_id,
-           (SELECT epoch_us(MAX(s.ts)) FROM events s
-            WHERE s.event_type = 'signup' AND s.user_id = e.user_id
-              AND s.ts <= e.ts AND e.ts <= s.ts + INTERVAL 3 DAY) AS session_start_us
-    FROM events e
-    WHERE e.event_type = 'click'
-    """,
-    covers=("J5", "J6", "P5"),
-    description=(
-        "as-of formulation of the interval join (exact for non-nested "
-        "intervals, e.g. fixed-width sessions): union+last window, one "
-        "shuffle, zero pair blowup — the Zipf-hot-key-proof twin of "
-        "interval_join_bucketed_sessions (same oracle)"
-    ),
-)
-def interval_join_asof_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-10 Zipf-skew fix: interval_join_bucketed pairs every click
-    with every candidate session of the same (user, day-bucket) before
-    the tie-break — a Zipf-hot user alone yields tens of millions of
-    intermediate pairs (measured 8.7x cliff at the x10-zipf tier,
-    SCALING.md). Fixed-width sessions are non-nested, so the latest
-    containing session IS the as-of-backward match filtered on
-    containment: O(n log n) in the hot key, no blowup."""
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    sessions = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id"),
-        F.col("ts").alias("session_start"),
-        (F.col("ts") + F.expr("INTERVAL 3 DAY")).alias("session_end"),
-    )
-    out = interval_join_asof(
-        clicks,
-        sessions,
-        left_ts="ts",
-        right_start="session_start",
-        right_end="session_end",
-        by=["user_id"],
-        how="left",
-    )
-    return out.select(
-        "event_id", F.unix_micros("session_start").alias("session_start_us")
-    )
-
-
-@register(
-    "interval_join_sweep_sessions",
-    oracle="""
-    SELECT e.event_id,
-           (SELECT epoch_us(MAX(s.ts)) FROM events s
-            WHERE s.event_type = 'signup' AND s.user_id = e.user_id
-              AND s.ts <= e.ts AND e.ts <= s.ts + INTERVAL 3 DAY) AS session_start_us
-    FROM events e
-    WHERE e.event_type = 'click'
-    """,
-    covers=("J5", "P5"),
-    description=(
-        "merge-scan formulation of the interval join: ordered sweep per "
-        "(user, day-bucket) with a lazy-eviction heap — exact for "
-        "ARBITRARY nested/overlapping intervals (unlike the as-of "
-        "reduction) with ZERO pair blowup (unlike the bucketed "
-        "equi-join); the Zipf-hot-key-safe general path (same oracle)"
-    ),
-)
-def interval_join_sweep_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 skew fix (VERDICT r10 'What's wrong' #1): the bucketed
-    equi-join pairs every click with every candidate session of its
-    (user, day-bucket) before the tie-break dedups — an 8.7-12x
-    intermediate blowup on Zipf-hot keys — and interval_join_asof is
-    exact only for NON-NESTED intervals. The sweep handles both: one
-    shuffle on (user, bucket), one linear Arrow-batched scan, candidates
-    held in a heap, O((n+m) log m) per group."""
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    sessions = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id"),
-        F.col("ts").alias("session_start"),
-        (F.col("ts") + F.expr("INTERVAL 3 DAY")).alias("session_end"),
-    )
-    out = interval_join_sweep(
-        clicks,
-        sessions,
-        left_ts="ts",
-        right_start="session_start",
-        right_end="session_end",
-        tie_break="session_start",
-        bucket_width_s=86400,
-        by=["user_id"],
-        how="left",
-        tie_break_desc=True,
     )
     return out.select(
         "event_id", F.unix_micros("session_start").alias("session_start_us")
@@ -675,7 +516,7 @@ def asof_join_purchase_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     pur = ev.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_event_id"), "user_id", F.col("ts").alias("pts")
     )
-    out = asof_join_backward(
+    out = asof_join(
         err,
         pur,
         left_on="ts",
@@ -715,13 +556,14 @@ def asof_join_forward_next_action(spark: SparkSession, sf_dir: str) -> DataFrame
     pur = ev.where(F.col("event_type") == "purchase").select(
         F.col("user_id"), F.col("event_id").alias("p_event_id"), F.col("ts").alias("p_ts")
     )
-    out = asof_join_forward(
+    out = asof_join(
         err,
         pur,
         left_on="ts",
         right_on="p_ts",
         by=["user_id"],
         right_tiebreak=["p_event_id"],
+        direction="forward",
     )
     return out.select(
         "event_id",

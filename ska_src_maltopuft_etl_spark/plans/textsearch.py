@@ -1987,10 +1987,7 @@ def asof_join_nearest_action(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same by-keys plus a map-only pick — still no range-join
     row explosion at any scale.
     """
-    from ska_src_maltopuft_etl_spark.operators import (
-        asof_join_backward,
-        asof_join_forward,
-    )
+    from ska_src_maltopuft_etl_spark.operators import asof_join
 
     ev = load_table(spark, sf_dir, "events")
     err = ev.where(F.col("event_type") == "error").select(
@@ -2004,8 +2001,8 @@ def asof_join_nearest_action(spark: SparkSession, sf_dir: str) -> DataFrame:
     kwargs = dict(
         left_on="ts", right_on="p_ts", by=["user_id"], right_tiebreak=["p_id"]
     )
-    b = asof_join_backward(err, pur, right_prefix="b_", **kwargs)
-    f = asof_join_forward(err, pur, right_prefix="f_", **kwargs)
+    b = asof_join(err, pur, right_prefix="b_", **kwargs)
+    f = asof_join(err, pur, right_prefix="f_", direction="forward", **kwargs)
     both = b.join(
         f.select("event_id", "f_p_id", "f_p_ts"), "event_id", "left"
     )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ska_src_maltopuft_etl_spark import functions as K
-from ska_src_maltopuft_etl_spark.operators import asof_join_backward
+from ska_src_maltopuft_etl_spark.operators import asof_join
 from ska_src_maltopuft_etl_spark.sources.spccl import SPCCL_SCHEMA
 
 
@@ -76,7 +76,7 @@ def resolve_beams_stream(
         withround = batch_df.withColumn(
             "__obs_round", K.round_timestamp_seconds("cand_observed_at")
         )
-        resolved = asof_join_backward(
+        resolved = asof_join(
             withround,
             right,
             left_on="__obs_round",

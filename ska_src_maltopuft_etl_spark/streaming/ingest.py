@@ -379,7 +379,7 @@ def join_event_streams(
     right side is exploded into those two candidate buckets and the
     join becomes a plain multi-column equi-join plus the exact band
     filter — probe cost O(n_key × band-density), the same reduction
-    the batch ``interval_join_bucketed`` applies. Output is identical
+    the batch ``interval_join`` applies. Output is identical
     to the unbucketed join (the exact band condition is still
     applied); ``bucketed=False`` keeps the naive formulation as the
     parity baseline.

@@ -1,11 +1,10 @@
 """Gate-sized slice of the interval/as-of operator-family fuzzer.
 
-The full sweep (tools/fuzz_intervals.py, 500+ cases per round) writes
+The full run (tools/fuzz_intervals.py, 300 cases) writes
 FUZZ_INTERVALS.json; this keeps a fixed 25-case prefix of the same
-seed in the pytest gate so a regression in any operator formulation
-(as-of direction/tolerance/exact-match, the five interval-point
-formulations' equivalence, the sweep tie policy, the overlap join's
-first-common-bucket trick) fails fast.
+seed in the pytest gate so a regression in any operator (as-of
+direction/tolerance/exact-match, every interval_join strategy and its
+tie order, the overlap join's first-common-bucket trick) fails fast.
 """
 
 from __future__ import annotations

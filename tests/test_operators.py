@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark.operators import (
     CardinalityError,
-    asof_join_backward,
+    asof_join,
     dedup_keep_first,
     interval_join,
     remap_keys,
@@ -48,7 +48,7 @@ def test_asof_backward_basic(spark, obs):
         ],
         "beam int, coherent boolean, observed_at timestamp, name string",
     )
-    out = asof_join_backward(
+    out = asof_join(
         cand, obs, "observed_at", "t_min", by=["beam", "coherent"]
     )
     got = {r["name"]: r["beam_id"] for r in out.collect()}
@@ -61,7 +61,7 @@ def test_asof_backward_no_exact(spark, obs):
         [(1, True, ts("2023-11-20 22:00:00"), "b")],
         "beam int, coherent boolean, observed_at timestamp, name string",
     )
-    out = asof_join_backward(
+    out = asof_join(
         cand, obs, "observed_at", "t_min", by=["beam", "coherent"],
         allow_exact_matches=False,
     )
@@ -105,7 +105,7 @@ def test_asof_tolerance(spark, obs):
         [(1, True, ts("2023-11-20 21:30:00"), "a")],
         "beam int, coherent boolean, observed_at timestamp, name string",
     )
-    out = asof_join_backward(
+    out = asof_join(
         cand, obs, "observed_at", "t_min", by=["beam", "coherent"],
         tolerance_seconds=60,
     )
@@ -394,113 +394,59 @@ def test_incremental_agg_matches_full_recompute(spark):
     assert got["c"]["n_rows"] == 2 and got["c"]["value_mean"] == 0.0
 
 
-def test_interval_join_bucketed_matches_plain(spark):
-    """The bucketized formulation must produce exactly the plain
-    interval_join result (same fixture as interval_join_sessions),
-    and its plan must be an equi-join — no BroadcastNestedLoop."""
+def test_interval_join_strategies_agree(spark, no_broadcast):
+    """Both one-match strategies return the same rows on the
+    interval_join_sessions fixture without the user key: the broadcast
+    range join when the sessions fit the broadcast limit, the sweep
+    (no join node at all) when broadcast is off. All matches plan as an
+    equi-join on the time bucket, never a nested loop."""
     import contextlib
     import io
 
-    from ska_src_maltopuft_etl_spark.operators.joins import (
-        interval_join,
-        interval_join_bucketed,
-    )
+    from ska_src_maltopuft_etl_spark.operators.joins import interval_join
     from ska_src_maltopuft_etl_spark.sources import load_table
 
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    sessions = ev.where(F.col("event_type") == "signup").select(
-        "user_id",
-        F.col("ts").alias("session_start"),
-        (F.col("ts") + F.expr("INTERVAL 3 DAY")).alias("session_end"),
-    )
-    kwargs = dict(
-        left_ts="ts",
-        right_start="session_start",
-        right_end="session_end",
-        by=["user_id"],
-        how="left",
-        tie_break="session_start",
-        tie_break_desc=True,
-    )
-    plain = interval_join(clicks, sessions, broadcast_right=False, **kwargs)
-    bucketed = interval_join_bucketed(
-        clicks, sessions, bucket_width_s=86400, force_pairwise=True, **kwargs
-    )
-    key = lambda r: (r["event_id"], r["session_start"])  # noqa: E731
-    assert sorted(map(key, plain.collect())) == sorted(
-        map(key, bucketed.collect())
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        bucketed.explain("formatted")
-    assert "BroadcastNestedLoopJoin" not in buf.getvalue()
-
-
-def test_interval_join_bucketed_tie_break_delegates_to_sweep(spark):
-    """The tie_break foot-gun guard (round-11 VERDICT #1): a bucketed
-    call with a tie_break warns and routes to interval_join_sweep —
-    same rows, but the plan is the sweep's (ZERO join nodes, one
-    MapInPandas) instead of the pair-materializing equi-join."""
-    import contextlib
-    import io
-    import warnings
-
-    from ska_src_maltopuft_etl_spark.operators.joins import (
-        interval_join_bucketed,
-    )
-    from ska_src_maltopuft_etl_spark.sources import load_table
+    def plan(df):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
 
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
+    clicks = ev.where(F.col("event_type") == "click").select("event_id", "ts")
     sessions = (
         ev.where(F.col("event_type") == "signup")
         .select(
-            "user_id",
+            F.col("event_id").alias("session_id"),
             F.col("ts").alias("session_start"),
             (F.col("ts") + F.expr("INTERVAL 3 DAY")).alias("session_end"),
         )
-        # Unique (user_id, session_start) by construction: the pairwise
-        # path's row_number tie among equal-session_start intervals is
-        # nondeterministic by design, so equal-start sessions with
-        # different session_end would make the equivalence assertion
-        # below flaky. Here session_end is a function of session_start,
-        # so dropDuplicates is content-deterministic.
-        .dropDuplicates(["user_id", "session_start"])
     )
     kwargs = dict(
         left_ts="ts",
         right_start="session_start",
         right_end="session_end",
-        bucket_width_s=86400,
-        by=["user_id"],
         how="left",
-        tie_break="session_start",
+        tie_break="session_id",
         tie_break_desc=True,
     )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        delegated = interval_join_bucketed(clicks, sessions, **kwargs)
-    assert any("interval_join_sweep" in str(w.message) for w in caught)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        pairwise = interval_join_bucketed(
-            clicks, sessions, force_pairwise=True, **kwargs
-        )
-    key = lambda r: (r["event_id"], r["session_start"])  # noqa: E731
-    assert sorted(map(key, delegated.collect())) == sorted(
-        map(key, pairwise.collect())
+    key = lambda r: (r["event_id"], r["session_id"])  # noqa: E731
+    broadcast = interval_join(clicks, sessions, **kwargs)
+    assert "BroadcastNestedLoopJoin" in plan(broadcast)
+    want = sorted(map(key, broadcast.collect()))
+    with no_broadcast():
+        sweep = interval_join(clicks, sessions, **kwargs)
+        got = sorted(map(key, sweep.collect()))
+    assert "MapInPandas" in plan(sweep) and "Join" not in plan(sweep).replace(
+        "MapInPandas", ""
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        delegated.explain("formatted")
-    plan = buf.getvalue()
-    assert "MapInPandas" in plan
-    assert "Join" not in plan.replace("MapInPandas", "")
+    assert got == want
+    assert any(sid is not None for _, sid in want)
+
+    kwargs.pop("tie_break"), kwargs.pop("tie_break_desc")
+    assert "BroadcastNestedLoopJoin" not in plan(
+        interval_join(clicks, sessions, **kwargs)
+    )
 
 
 def test_interval_union_sweep_line_matches_python_model(spark):
@@ -640,87 +586,3 @@ def test_mmr_rerank_matches_python_greedy(spark):
         picked.append(nxt)
         remaining.pop(nxt)
     assert [v for _, v in got] == picked
-
-
-def test_interval_join_asof_matches_plain(spark):
-    """The as-of formulation must produce exactly the plain
-    interval_join result (tie_break=start desc) on the flagship
-    fixture — fixed-width sessions, i.e. non-nested, its exactness
-    domain — and on a randomized non-nested fixture with equal starts,
-    touching intervals, and probes outside every interval. Its plan
-    must contain NO join node at all (union + window)."""
-    import contextlib
-    import datetime as dt
-    import io
-    import random
-
-    from ska_src_maltopuft_etl_spark.operators.joins import (
-        interval_join,
-        interval_join_asof,
-    )
-    from ska_src_maltopuft_etl_spark.sources import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    sessions = ev.where(F.col("event_type") == "signup").select(
-        "user_id",
-        F.col("ts").alias("session_start"),
-        (F.col("ts") + F.expr("INTERVAL 3 DAY")).alias("session_end"),
-    )
-    kwargs = dict(
-        left_ts="ts",
-        right_start="session_start",
-        right_end="session_end",
-        by=["user_id"],
-        how="left",
-    )
-    plain = interval_join(
-        clicks, sessions, broadcast_right=False,
-        tie_break="session_start", tie_break_desc=True, **kwargs
-    )
-    asof = interval_join_asof(clicks, sessions, **kwargs)
-    key = lambda r: (r["event_id"], r["session_start"])  # noqa: E731
-    assert sorted(map(key, plain.collect())) == sorted(
-        map(key, asof.collect())
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        asof.explain("formatted")
-    assert "Join" not in buf.getvalue()
-
-    # randomized non-nested fixture: sorted starts with non-decreasing
-    # ends per user (prefix-max of raw ends), equal starts allowed
-    rng = random.Random(11)
-    t0 = dt.datetime(2024, 1, 1)
-    ivals, probes = [], []
-    for u in range(1, 6):
-        starts = sorted(rng.randrange(0, 10_000) for _ in range(40))
-        end_floor = 0
-        for i, s0 in enumerate(starts):
-            end_floor = max(end_floor, s0 + rng.randrange(0, 500))
-            ivals.append(
-                (u, t0 + dt.timedelta(seconds=s0),
-                 t0 + dt.timedelta(seconds=end_floor))
-            )
-        for i in range(120):
-            probes.append((u * 1000 + i, u,
-                           t0 + dt.timedelta(seconds=rng.randrange(-100, 11_000))))
-    right = spark.createDataFrame(
-        ivals, "user_id long, session_start timestamp, session_end timestamp"
-    )
-    left = spark.createDataFrame(
-        probes, "event_id long, user_id long, ts timestamp"
-    )
-    plain = interval_join(
-        left, right, broadcast_right=False,
-        tie_break="session_start", tie_break_desc=True, **kwargs
-    )
-    asof = interval_join_asof(left, right, **kwargs)
-    # equal starts: plain's row_number tie-break is arbitrary among
-    # equal (start) rows; compare on (event_id, start) which is what
-    # the operator guarantees deterministically
-    assert sorted(map(key, plain.collect())) == sorted(
-        map(key, asof.collect())
-    )

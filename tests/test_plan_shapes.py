@@ -145,10 +145,10 @@ def _exchanges(plan: str) -> int:
 
 
 def test_sweep_join_one_shuffle_no_pair_join(spark):
-    plan = plan_of(spark, "interval_join_sweep_sessions")
-    # the whole point of the sweep: NO join node materializes
-    # probe x candidate pairs — one hash shuffle on (key, bucket),
-    # one sort, one linear Arrow pass
+    plan = plan_of(spark, "interval_join_sessions")
+    # a keyed one-match interval join takes the sweep: NO join node
+    # materializes probe x candidate pairs — one hash shuffle on
+    # (key, bucket), one sort, one linear Arrow pass
     for node in ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin",
                  "CartesianProduct"):
         assert node not in plan, node
@@ -156,6 +156,15 @@ def test_sweep_join_one_shuffle_no_pair_join(spark):
     assert _exchanges(plan) == 1, plan
     # null-key probes are routed AROUND the shuffle (union after)
     assert "Union" in plan
+
+
+def test_obs_schedule_block_join_is_broadcast(spark):
+    plan = plan_of(spark, "meertrap_observation")
+    # get_obs_df's parent-block lookup: unkeyed, one match, and the
+    # schedule blocks fit the broadcast limit, so it stays a broadcast
+    # range join and never crosses into Python
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "MapInPandas" not in plan
 
 
 def test_overlap_join_single_equi_join_no_dedup(spark):

@@ -11,14 +11,13 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ska_src_maltopuft_etl_spark.operators import (
-    asof_join_backward,
+    asof_join,
     dedup_keep_first,
     surrogate_key,
 )
 
-# Times as small ints (cast to timestamps implicitly unnecessary — the
-# operator works on any orderable type); keys from a tiny alphabet to
-# force group collisions.
+# Times as small ints (the as-of join works on any orderable type);
+# keys from a tiny alphabet to force group collisions.
 row = st.tuples(st.integers(0, 5), st.integers(0, 100))
 rows = st.lists(row, min_size=0, max_size=25)
 
@@ -47,7 +46,7 @@ def test_asof_matches_pandas_merge_asof(spark, left, right):
     else:
         rdf = spark.createDataFrame([], "rid long, k long, rt long")
 
-    out = asof_join_backward(
+    out = asof_join(
         ldf, rdf, left_on="t", right_on="rt", by=["k"], right_tiebreak=["rid"]
     )
     got = {r["lid"]: r["rid"] for r in out.collect()}
@@ -103,7 +102,10 @@ def test_dedup_and_surrogate_deterministic_under_partitioning(spark, data):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(left=rows, right=st.lists(st.tuples(st.integers(0, 5), st.integers(0, 100), st.integers(0, 30)), max_size=15))
-def test_interval_join_matches_pandas_filter(spark, left, right):
+def test_interval_join_matches_pandas_filter(spark, no_broadcast, left, right):
+    """One best match (smallest rid) per left row, against a pandas
+    filter: unkeyed with a broadcastable right side (broadcast range
+    join), unkeyed with broadcast off and keyed (both the sweep)."""
     from ska_src_maltopuft_etl_spark.operators import interval_join
 
     lpdf = pd.DataFrame(left, columns=["k", "t"]).reset_index(names="lid")
@@ -111,25 +113,45 @@ def test_interval_join_matches_pandas_filter(spark, left, right):
     if not len(lpdf):
         return
     rpdf["end"] = rpdf["start"] + rpdf["dur"]
-    ldf = spark.createDataFrame(lpdf[["lid", "k", "t"]])
-    if len(rpdf):
-        rdf = spark.createDataFrame(rpdf[["rid", "k", "start", "end"]])
-    else:
-        rdf = spark.createDataFrame([], "rid long, k long, start long, end long")
-
-    out = interval_join(
-        ldf, rdf, left_ts="t", right_start="start", right_end="end",
-        by=["k"], how="left", tie_break="rid", broadcast_right=False,
+    # second offsets → timestamps; pandas frames carry the size
+    # statistics interval_join reads to pick its strategy
+    base = pd.Timestamp("2024-01-01")
+    ldf = spark.createDataFrame(
+        lpdf.assign(t=base + pd.to_timedelta(lpdf.t, unit="s"))[["lid", "k", "t"]]
     )
-    got = {r["lid"]: r["rid"] for r in out.collect()}
+    if len(rpdf):
+        rdf = spark.createDataFrame(
+            rpdf.assign(
+                start=base + pd.to_timedelta(rpdf.start, unit="s"),
+                end=base + pd.to_timedelta(rpdf.end, unit="s"),
+            )[["rid", "k", "start", "end"]]
+        )
+    else:
+        rdf = spark.createDataFrame(
+            [], "rid long, k long, start timestamp, end timestamp"
+        )
 
-    exp = {}
-    for lrow in lpdf.itertuples():
-        matches = rpdf[
-            (rpdf.k == lrow.k) & (rpdf.start <= lrow.t) & (rpdf.end >= lrow.t)
-        ] if len(rpdf) else rpdf
-        exp[lrow.lid] = None if len(matches) == 0 else int(matches.sort_values("rid").iloc[0]["rid"])
-    assert got == exp
+    def run(by):
+        out = interval_join(
+            ldf, rdf, left_ts="t", right_start="start", right_end="end",
+            by=by, how="left", tie_break="rid", right_prefix="r_",
+        )
+        return {r["lid"]: r["r_rid"] for r in out.collect()}
+
+    def expected(keyed):
+        exp = {}
+        for lrow in lpdf.itertuples():
+            hit = (rpdf.start <= lrow.t) & (rpdf.end >= lrow.t)
+            if keyed:
+                hit &= rpdf.k == lrow.k
+            matches = rpdf[hit] if len(rpdf) else rpdf
+            exp[lrow.lid] = None if len(matches) == 0 else int(matches.rid.min())
+        return exp
+
+    assert run([]) == expected(False)
+    with no_broadcast():
+        assert run([]) == expected(False)
+    assert run(["k"]) == expected(True)
 
 
 @settings(
@@ -139,8 +161,6 @@ def test_interval_join_matches_pandas_filter(spark, left, right):
 )
 @given(left=rows, right=rows)
 def test_asof_forward_matches_pandas_merge_asof(spark, left, right):
-    from ska_src_maltopuft_etl_spark.operators import asof_join_forward
-
     lpdf = pd.DataFrame(left, columns=["k", "t"]).reset_index(names="lid")
     rpdf = pd.DataFrame(right, columns=["k", "t"]).reset_index(names="rid")
     # unique winner per (k, t) so both implementations agree (ours picks
@@ -157,8 +177,9 @@ def test_asof_forward_matches_pandas_merge_asof(spark, left, right):
     else:
         rdf = spark.createDataFrame([], "rid long, k long, rt long")
 
-    out = asof_join_forward(
-        ldf, rdf, left_on="t", right_on="rt", by=["k"], right_tiebreak=["rid"]
+    out = asof_join(
+        ldf, rdf, left_on="t", right_on="rt", by=["k"], right_tiebreak=["rid"],
+        direction="forward",
     )
     got = {r["lid"]: r["rid"] for r in out.collect()}
 
@@ -193,13 +214,13 @@ def test_asof_forward_matches_pandas_merge_asof(spark, left, right):
         min_size=0, max_size=15,
     ),
 )
-def test_interval_join_bucketed_matches_python_model(spark, points, intervals):
-    """Bucketized interval join vs a brute-force python model on random
-    epoch-second points/intervals: same matches for every bucket width,
-    including widths much smaller and larger than the interval spans."""
+def test_interval_join_all_matches_python_model(spark, points, intervals):
+    """All-matches interval join (time-bucketed equi-join) vs a
+    brute-force python model on random epoch-second points/intervals,
+    with a bucket width much smaller than most interval spans."""
     import datetime as dt
 
-    from ska_src_maltopuft_etl_spark.operators.joins import interval_join_bucketed
+    from ska_src_maltopuft_etl_spark.operators.joins import interval_join
 
     if not points:
         return
@@ -223,7 +244,7 @@ def test_interval_join_bucketed_matches_python_model(spark, points, intervals):
             [], "rid long, k long, s timestamp, e timestamp"
         )
 
-    out = interval_join_bucketed(
+    out = interval_join(
         ldf, rdf, left_ts="ts", right_start="s", right_end="e",
         bucket_width_s=60, by=["k"], how="inner",
     )
@@ -252,16 +273,15 @@ def test_interval_join_bucketed_matches_python_model(spark, points, intervals):
     width=st.sampled_from([7, 60, 1000]),
 )
 def test_interval_join_sweep_matches_python_model(spark, points, intervals, width):
-    """Merge-scan interval join vs a brute-force python model on random
-    points/intervals — random durations make NESTED and overlapping
-    intervals common, the case the as-of reduction cannot express.
-    Checks the full tie-break contract: best containing interval by
+    """Keyed one-match interval join (the sweep) vs a brute-force python
+    model on random points/intervals — random durations make NESTED and
+    overlapping intervals common. Checks the full tie-break contract: best containing interval by
     (tie_break=start DESC, then greatest start, then greatest end), and
     left-join null emission for unmatched probes — at bucket widths
     smaller than, near, and larger than the interval spans."""
     import datetime as dt
 
-    from ska_src_maltopuft_etl_spark.operators.joins import interval_join_sweep
+    from ska_src_maltopuft_etl_spark.operators.joins import interval_join
 
     base = dt.datetime(2024, 1, 1)
     lrows = [
@@ -278,7 +298,7 @@ def test_interval_join_sweep_matches_python_model(spark, points, intervals, widt
         rrows or [], "rid long, k long, s timestamp, e timestamp"
     )
 
-    out = interval_join_sweep(
+    out = interval_join(
         ldf, rdf, left_ts="ts", right_start="s", right_end="e",
         tie_break="s", bucket_width_s=width, by=["k"], how="left",
         tie_break_desc=True, right_prefix="r_",
@@ -312,16 +332,13 @@ def test_interval_join_sweep_matches_python_model(spark, points, intervals, widt
 
 
 def test_interval_join_sweep_nested_boundaries(spark):
-    """Deterministic nested-interval fixture: the as-of reduction gives
-    the WRONG answer here (latest-started interval has already ended),
-    the sweep must give the right one; plus inclusive-boundary probes
-    at t == start and t == end."""
+    """Deterministic nested-interval fixture where the latest-started
+    interval has already ended at d(50), so the sweep must keep the
+    wider one alive; plus inclusive-boundary probes at t == start and
+    t == end."""
     import datetime as dt
 
-    from ska_src_maltopuft_etl_spark.operators.joins import (
-        interval_join_asof,
-        interval_join_sweep,
-    )
+    from ska_src_maltopuft_etl_spark.operators.joins import interval_join
 
     base = dt.datetime(2024, 1, 1)
 
@@ -340,21 +357,13 @@ def test_interval_join_sweep_nested_boundaries(spark):
          ("u", d(101))], # after everything: unmatched
         "k string, ts timestamp",
     )
-    out = interval_join_sweep(
-        left, right, "ts", "s", "e", tie_break="s",
+    out = interval_join(
+        left, right, "ts", "s", "e", tie_break="s", tie_break_desc=True,
         bucket_width_s=86400 * 7, by=["k"], how="left", right_prefix="r_",
     )
     got = {r["ts"]: r["r_tag"] for r in out.collect()}
     assert got == {d(50): "wide", d(7): "nested", d(1): "wide",
                    d(10): "nested", d(101): None}
-
-    # the as-of reduction demonstrably CANNOT express this: at d(50) the
-    # latest-started interval (`nested`) has ended, so it returns null
-    asof = interval_join_asof(
-        left, right, "ts", "s", "e", by=["k"], how="left", right_prefix="r_",
-    )
-    asof_got = {r["ts"]: r["r_tag"] for r in asof.collect()}
-    assert asof_got[d(50)] is None  # the documented non-nested limitation
 
 
 @settings(

@@ -1,22 +1,21 @@
 #!/usr/bin/env python
 """Seeded differential fuzzer for the custom operator families Spark
-lacks as primitives: as-of joins, interval point joins (all FIVE
-formulations), and the interval-overlap join (round-11 VERDICT item #3).
+lacks as primitives: as-of joins, the interval point join and the
+interval-overlap join.
 
 tools/fuzz_differential.py pins the DataFrame-rendering surface
 (scan/filter/join/agg/window) — plans Catalyst itself executes. This
-tool pins the OPERATOR-EQUIVALENCE claims that were previously tested
-on hand-picked fixtures only:
+tool pins the operators against DuckDB oracles on generated data:
 
-- ``interval_join`` (plain, broadcast or shuffled)
-  ≡ ``interval_join_bucketed(force_pairwise=True)``
-  ≡ ``interval_join_bucketed(tie_break=...)`` (the delegation path)
-  ≡ ``interval_join_sweep``              — on unique-tie-break data;
-- ``interval_join_asof`` joins the equivalence class on NON-NESTED
-  interval sets (the documented precondition);
-- the sweep's deterministic tie policy (tb, then greatest start, then
-  greatest end, NULL tie-breaks lose) against a DuckDB ROW_NUMBER
-  oracle on duplicate-tie-break data;
+- ``interval_join`` with every strategy it can pick: each point-join
+  case runs once as the inputs dictate (broadcast range join for an
+  unkeyed one-match call with a small right side, the sweep for a
+  keyed one, the bucketed equi-join for all matches) and once with
+  ``spark.sql.autoBroadcastJoinThreshold=-1``, which forces the sweep
+  for one-match calls and a shuffled equi-join for all matches;
+- the one-match tie order (tb, then greatest start, then greatest end,
+  NULL tie-breaks lose) against a DuckDB ROW_NUMBER oracle, including
+  duplicate-tie-break data;
 - ``asof_join`` backward/forward × allow_exact_matches × tolerance ×
   by-keys against a DuckDB ROW_NUMBER oracle;
 - ``interval_overlap_join``'s dedup-free first-common-bucket trick
@@ -39,25 +38,25 @@ Hash-stability rules (same conventions as fuzz_differential):
 - all generated event times are whole seconds and tolerances whole
   integers, so tolerance boundaries are exact in both engines;
 - tie-break orderings are total by construction: unique tie-break
-  values where ALL formulations must agree (plain/bucketed row_number
-  leaves further ties nondeterministic by design), unique
-  (key, start, end) where only the sweep's documented deeper tie
-  policy is under test.
+  values, unique (key, start) when ties fall to the start column, or
+  unique (key, start, end) where the deeper tie order is under test.
 
 Usage: python tools/fuzz_intervals.py [--n N] [--seed S | --seeds A,B,..]
                                       [--out FUZZ_INTERVALS.json]
-Writes FUZZ_INTERVALS.json at the repo root; exit 1 on any mismatch.
+Writes FUZZ_INTERVALS.json at the repo root, with the number of
+one-match runs each strategy served; exit 1 on any mismatch.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
 import os
 import random
 import sys
 import time
-import warnings
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -87,8 +86,8 @@ def _key(rng: random.Random, n_k: int, zipf: bool, p_null: float = 0.02):
 
 def gen_intervals(rng, n, n_k, zipf, window, mode, tie, by_key=True):
     """Rows (ival_id, k, s, e, tb). mode 'nonnested' = fixed width per
-    key (ends non-decreasing in starts — the interval_join_asof
-    precondition); 'nested' = free spans incl. zero-length, inverted,
+    key (ends non-decreasing in starts); 'nested' = free spans incl.
+    zero-length, inverted,
     and NULL endpoints. tie 'unique' = globally unique tb;
     'dup' = small-domain tb with NULLs and unique (k, s, e);
     's' = unique (k, s) so tie-breaking on the start column is total.
@@ -235,9 +234,8 @@ def gen_case(rng: random.Random, oracle_form: str = "rownum") -> dict:
     )
     # string tie-breaks (sweep_ties only): pins the sweep heap's
     # type-generality — _Rev/None-handling must work for any orderable
-    # type, and ASCII zero-padded strings order identically under
-    # Python codepoint compare (the heap) and DuckDB binary collation
-    # (the oracle), so the comparison stays engine-stable.
+    # type, and ASCII strings order identically under Python codepoint
+    # compare (the heap), Spark and DuckDB binary collation.
     if family == "sweep_ties" and rng.random() < 0.4:
         case["tb_str"] = True
         case["ivals"] = [
@@ -249,7 +247,6 @@ def gen_case(rng: random.Random, oracle_form: str = "rownum") -> dict:
     )
     case["how"] = rng.choice(["inner", "left"])
     case["desc"] = rng.random() < 0.6
-    case["broadcast"] = rng.random() < 0.5
     return case
 
 
@@ -287,27 +284,44 @@ def _arrow(rows, schema):
     )
 
 
-def _sdf(spark, rows, ddl):
-    return spark.createDataFrame(rows, ddl)
+def _sdf(spark, rows, schema):
+    # Arrow-built frames carry size statistics, which interval_join
+    # reads to choose its strategy (Python-list frames have none).
+    return spark.createDataFrame(_arrow(rows, schema))
 
 
-def _collect_ids(df, cols):
-    return [tuple(r[c] for c in cols) for r in df.collect()]
+def _collect(df):
+    return df.columns, [tuple(r) for r in df.collect()]
+
+
+@contextlib.contextmanager
+def _no_broadcast(spark):
+    """Size-based broadcast off: one-match interval joins take the sweep."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _strategy(df) -> str:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    return "sweep" if "MapInPandas" in plan else "broadcast"
 
 
 def _key_cond(by, lt, rt):
     return f" AND {rt}.k = {lt}.k" if by else ""
 
 
-def run_case(spec: dict, spark, con) -> dict | None:
+def run_case(spec: dict, spark, con, strategies: Counter | None = None) -> dict | None:
     """Render through the operators AND DuckDB; any divergence between
-    ANY Spark variant and the oracle is a failure record."""
+    ANY Spark variant and the oracle is a failure record. One-match
+    interval joins add the strategy that served them to ``strategies``."""
     from ska_src_maltopuft_etl_spark.operators.joins import (
         asof_join,
         interval_join,
-        interval_join_asof,
-        interval_join_bucketed,
-        interval_join_sweep,
         interval_overlap_join,
     )
 
@@ -316,8 +330,8 @@ def run_case(spec: dict, spark, con) -> dict | None:
     sql_asof: str | None = None
 
     if family == "asof":
-        ldf = _sdf(spark, spec["left"], "lid long, k long, t timestamp")
-        rdf = _sdf(spark, spec["right"], "rid long, k long, rt timestamp")
+        ldf = _sdf(spark, spec["left"], EVENT_SCHEMA_L)
+        rdf = _sdf(spark, spec["right"], EVENT_SCHEMA_R)
         con.register("fz_l", _arrow(spec["left"], EVENT_SCHEMA_L))
         con.register("fz_r", _arrow(spec["right"], EVENT_SCHEMA_R))
         rsel = rdf.select("rid", "rt", *(["k"] if by else []))
@@ -327,7 +341,7 @@ def run_case(spec: dict, spark, con) -> dict | None:
             allow_exact_matches=spec["allow_exact"],
             right_tiebreak=["rid"], direction=spec["direction"],
         ).select("lid", "rid")
-        variants["asof"] = out
+        variants["asof"] = _collect(out)
         back = spec["direction"] == "backward"
         cmp_op = ("<=" if spec["allow_exact"] else "<") if back else (
             ">=" if spec["allow_exact"] else ">")
@@ -388,8 +402,8 @@ def run_case(spec: dict, spark, con) -> dict | None:
     elif family == "overlap":
         lrows = [(r[0], r[1], r[2], r[3]) for r in spec["left"]]
         rrows = [(r[0], r[1], r[2], r[3]) for r in spec["right"]]
-        ldf = _sdf(spark, lrows, "lid long, k long, ls timestamp, le timestamp")
-        rdf = _sdf(spark, rrows, "rid long, k long, rs timestamp, re timestamp")
+        ldf = _sdf(spark, lrows, OV_SCHEMA_L)
+        rdf = _sdf(spark, rrows, OV_SCHEMA_R)
         con.register("fz_l", _arrow(lrows, OV_SCHEMA_L))
         con.register("fz_r", _arrow(rrows, OV_SCHEMA_R))
         rsel = rdf.select("rid", "rs", "re", *(["k"] if by else []))
@@ -398,19 +412,12 @@ def run_case(spec: dict, spark, con) -> dict | None:
             right_start="rs", right_end="re",
             bucket_width_s=spec["bucket"], by=by,
         ).select("lid", "rid")
-        variants["overlap"] = out
+        variants["overlap"] = _collect(out)
         sql = f"""
         SELECT l.lid, r.rid FROM fz_l l JOIN fz_r r
           ON l.ls <= r.re AND r.rs <= l.le{_key_cond(by, 'l', 'r')}
         """
     else:
-        # overlap rows reuse (ival_id, k, s, e, tb); probes (probe_id, k, ts)
-        pdf = _sdf(spark, spec["probes"], "probe_id long, k long, ts timestamp")
-        idf = _sdf(
-            spark, spec["ivals"],
-            "ival_id long, k long, s timestamp, e timestamp, tb "
-            + ("string" if spec.get("tb_str") else "long"),
-        )
         ischema = (
             pa.schema(
                 [(f.name, pa.string() if f.name == "tb" else f.type)
@@ -419,50 +426,26 @@ def run_case(spec: dict, spark, con) -> dict | None:
             if spec.get("tb_str")
             else IVAL_SCHEMA
         )
+        pdf = _sdf(spark, spec["probes"], PROBE_SCHEMA)
+        idf = _sdf(spark, spec["ivals"], ischema)
         con.register("fz_p", _arrow(spec["probes"], PROBE_SCHEMA))
         con.register("fz_i", _arrow(spec["ivals"], ischema))
         isel = idf.select("ival_id", "s", "e", "tb", *(["k"] if by else []))
-        kw = dict(left_ts="ts", right_start="s", right_end="e", by=by)
+        kw = dict(left_ts="ts", right_start="s", right_end="e", by=by,
+                  bucket_width_s=spec["bucket"])
         if family == "pairs":
-            variants["plain"] = interval_join(
-                pdf, isel, how="inner", broadcast_right=spec["broadcast"], **kw
-            ).select("probe_id", "ival_id")
-            variants["bucketed"] = interval_join_bucketed(
-                pdf, isel, how="inner", bucket_width_s=spec["bucket"], **kw
-            ).select("probe_id", "ival_id")
+            kw["how"] = "inner"
             sql = f"""
             SELECT p.probe_id, i.ival_id FROM fz_p p JOIN fz_i i
               ON i.s <= p.ts AND p.ts <= i.e{_key_cond(by, 'p', 'i')}
             """
         else:
             how, desc = spec["how"], spec["desc"]
-            tie_col = "s" if spec.get("tie") == "s" else "tb"
-            if family == "sweep_ties":
-                tie_col = "tb"
-            tkw = dict(tie_break=tie_col, tie_break_desc=desc, how=how, **kw)
-            variants["sweep"] = interval_join_sweep(
-                pdf, isel, bucket_width_s=spec["bucket"], **tkw
-            ).select("probe_id", "ival_id")
-            if family == "best":
-                variants["plain"] = interval_join(
-                    pdf, isel, broadcast_right=spec["broadcast"], **tkw
-                ).select("probe_id", "ival_id")
-                variants["forced_pairwise"] = interval_join_bucketed(
-                    pdf, isel, bucket_width_s=spec["bucket"],
-                    force_pairwise=True, **tkw
-                ).select("probe_id", "ival_id")
-                with warnings.catch_warnings():
-                    warnings.simplefilter("ignore")
-                    variants["delegated"] = interval_join_bucketed(
-                        pdf, isel, bucket_width_s=spec["bucket"], **tkw
-                    ).select("probe_id", "ival_id")
-                if spec["mode"] == "nonnested" and tie_col == "s" and desc:
-                    variants["asof_reduction"] = interval_join_asof(
-                        pdf, isel, how=how, **kw
-                    ).select("probe_id", "ival_id")
+            tie_col = "tb" if family == "sweep_ties" or spec["tie"] != "s" else "s"
+            kw.update(tie_break=tie_col, tie_break_desc=desc, how=how)
+            # the one-match tie order; the extra keys are inert when the
+            # tie column is unique by construction
             direc = "DESC" if desc else "ASC"
-            # the sweep's documented deeper tie policy; inert extra
-            # orders when the tie column is unique by construction
             order = f"i.{tie_col} {direc} NULLS LAST, i.s DESC, i.e DESC"
             m = f"""
             SELECT p.probe_id, i.ival_id,
@@ -479,6 +462,13 @@ def run_case(spec: dict, spark, con) -> dict | None:
                     f"FROM fz_p p LEFT JOIN m ON m.probe_id = p.probe_id "
                     f"AND m.rn = 1"
                 )
+        for name, ctx in (("default", contextlib.nullcontext()),
+                          ("no_broadcast", _no_broadcast(spark))):
+            with ctx:
+                out = interval_join(pdf, isel, **kw)
+                if family != "pairs" and strategies is not None:
+                    strategies[_strategy(out)] += 1
+                variants[name] = _collect(out.select("probe_id", "ival_id"))
 
     res = con.execute(sql)
     ocols = [d[0] for d in res.description]
@@ -494,9 +484,7 @@ def run_case(spec: dict, spark, con) -> dict | None:
                 "rows": (len(orows2), len(orows)),
                 "hash": (h_o2, h_o),
             }
-    for name, df in variants.items():
-        scols = df.columns
-        srows = [tuple(r) for r in df.collect()]
+    for name, (scols, srows) in variants.items():
         sub = {}
         if len(srows) != len(orows):
             sub["rows"] = (len(srows), len(orows))
@@ -521,7 +509,7 @@ def main() -> int:
     from ska_src_maltopuft_etl_spark.engine import get_spark
 
     args = sys.argv[1:]
-    n = int(args[args.index("--n") + 1]) if "--n" in args else 250
+    n = int(args[args.index("--n") + 1]) if "--n" in args else 300
     if "--seeds" in args:
         seeds = [int(s) for s in args[args.index("--seeds") + 1].split(",")]
     else:
@@ -546,6 +534,7 @@ def main() -> int:
     t0 = time.time()
     total = 0
     fam_counts: dict = {}
+    strategies: Counter = Counter()
     for seed in seeds:
         for i in range(n):
             total += 1
@@ -553,7 +542,7 @@ def main() -> int:
             spec = gen_case(rng, oracle_form=oracle_form)
             fam_counts[spec["family"]] = fam_counts.get(spec["family"], 0) + 1
             try:
-                fail = run_case(spec, spark, con)
+                fail = run_case(spec, spark, con, strategies)
             except Exception as exc:  # an engine error is a finding too
                 fail = {"error": repr(exc)[:500],
                         "spec": {k: v for k, v in spec.items()
@@ -567,6 +556,7 @@ def main() -> int:
                       flush=True)
     out = {
         "seeds": seeds, "cases": total, "families": fam_counts,
+        "one_match_strategies": dict(strategies),
         "failures": failures, "elapsed_sec": round(time.time() - t0, 1),
     }
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -592,7 +582,7 @@ def main() -> int:
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(f"\n{total} cases, {len(failures)} failures ({out['elapsed_sec']}s)")
-    print(json.dumps(fam_counts))
+    print(json.dumps(fam_counts), json.dumps(dict(strategies)))
     spark.stop()
     return 1 if failures else 0
 

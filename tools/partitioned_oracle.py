@@ -5,7 +5,7 @@
 Two scaled-tier certificates previously failed ONLY because DuckDB
 could not hold the hot-key intermediate:
 
-- ``interval_join_sweep_sessions`` at ×1000-zipf: the decorrelated
+- ``interval_join_sessions`` at ×1000-zipf: the decorrelated
   clicks×sessions range join materializes every containing pair of the
   4.87M-event hot user before the MAX;
 - ``asof_join_forward_next_action`` at ×100-zipf: the errors×purchases
@@ -55,7 +55,7 @@ from tools.check_correctness import canon
 # stays full, which is what makes the rewrite sound (see module
 # docstring). {S} = slice count, {i} = slice index.
 SLICED_ORACLES = {
-    "interval_join_sweep_sessions": """
+    "interval_join_sessions": """
     SELECT e.event_id,
            (SELECT epoch_us(MAX(s.ts)) FROM events s
             WHERE s.event_type = 'signup' AND s.user_id = e.user_id
@@ -63,13 +63,13 @@ SLICED_ORACLES = {
     FROM events e
     WHERE e.event_type = 'click' AND (e.event_id % {S}) = {i}
     """,
-    # Formulation B for the sweep query: DuckDB's native ASOF join.
+    # Formulation B for the interval query: DuckDB's native ASOF join.
     # The pair-enumerating formulation above is O(pairs) — at the
     # ×1000-zipf tier the hot user's clicks×containing-sessions pair
     # set alone is ~1e10 and the sliced oracle would run for hours.
     # Sessions here are FIXED-WIDTH (ts .. ts + 3 days), hence
-    # non-nested per user, so the interval_join_asof reduction is
-    # exact: the latest signup at-or-before the click either contains
+    # non-nested per user, so an as-of reduction is exact: the
+    # latest signup at-or-before the click either contains
     # it or nothing does. DuckDB's ASOF LEFT JOIN computes exactly that
     # latest-before match sort-merge-style (linear, no pair set), and
     # the CASE applies the containment filter. Independence is
@@ -77,8 +77,8 @@ SLICED_ORACLES = {
     # formulations are cross-validated against each other (both must
     # match the SAME Spark hash) at sf0.01/sf0.1 before the asof form
     # is trusted at tiers the pair form cannot reach. Invoke as
-    # "interval_join_sweep_sessions:asof".
-    "interval_join_sweep_sessions:asof": """
+    # "interval_join_sessions:asof".
+    "interval_join_sessions:asof": """
     WITH e AS (SELECT event_id, user_id, ts FROM events
                WHERE event_type = 'click' AND (event_id % {S}) = {i}),
          s AS (SELECT user_id, ts FROM events WHERE event_type = 'signup')

@@ -24,9 +24,7 @@ Usage:
     python tools/zipf_bench.py [zipf_tier] [uniform_tier] [--rounds 2]
                                [--ab-only] [--out ZIPF_SKEW.json]
 
---ab-only runs just the key profiles + the sort-merge-join A/B (for the
-×100 tier, where the bucketed-interval flagship's known quadratic cliff
-would dominate the session without adding information).
+--ab-only runs just the key profiles + the sort-merge-join A/B.
 
 Emits one JSON line per datapoint and writes the --out artifact.
 """
@@ -153,9 +151,7 @@ def main() -> int:
     # --- flagship family under the session default, uniform vs zipf --
     default_battery = (
         "asof_join_forward_next_action",
-        "interval_join_bucketed_sessions",
-        "interval_join_asof_sessions",
-        "interval_join_sweep_sessions",
+        "interval_join_sessions",
         "interval_overlap_pairs",
         "bloom_pruned_semi_join",
         "salted_join_revenue",
