@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import contextlib
 import os
 import sys
 
@@ -25,21 +24,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
-
-
-@pytest.fixture()
-def no_broadcast(spark):
-    """Context manager turning size-based broadcast off for a block, so
-    one-match ``interval_join`` calls take the sweep strategy."""
-
-    @contextlib.contextmanager
-    def off():
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        old = spark.conf.get(key)
-        spark.conf.set(key, "-1")
-        try:
-            yield
-        finally:
-            spark.conf.set(key, old)
-
-    return off

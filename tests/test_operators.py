@@ -394,7 +394,7 @@ def test_incremental_agg_matches_full_recompute(spark):
     assert got["c"]["n_rows"] == 2 and got["c"]["value_mean"] == 0.0
 
 
-def test_interval_join_strategies_agree(spark, no_broadcast):
+def test_interval_join_strategies_agree(spark):
     """Both one-match strategies return the same rows on the
     interval_join_sessions fixture without the user key: the broadcast
     range join when the sessions fit the broadcast limit, the sweep
@@ -405,6 +405,7 @@ def test_interval_join_strategies_agree(spark, no_broadcast):
 
     from ska_src_maltopuft_etl_spark.operators.joins import interval_join
     from ska_src_maltopuft_etl_spark.sources import load_table
+    from tools.fuzz_intervals import no_broadcast
 
     def plan(df):
         buf = io.StringIO()
@@ -434,7 +435,7 @@ def test_interval_join_strategies_agree(spark, no_broadcast):
     broadcast = interval_join(clicks, sessions, **kwargs)
     assert "BroadcastNestedLoopJoin" in plan(broadcast)
     want = sorted(map(key, broadcast.collect()))
-    with no_broadcast():
+    with no_broadcast(spark):
         sweep = interval_join(clicks, sessions, **kwargs)
         got = sorted(map(key, sweep.collect()))
     assert "MapInPandas" in plan(sweep) and "Join" not in plan(sweep).replace(

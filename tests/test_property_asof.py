@@ -102,11 +102,12 @@ def test_dedup_and_surrogate_deterministic_under_partitioning(spark, data):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(left=rows, right=st.lists(st.tuples(st.integers(0, 5), st.integers(0, 100), st.integers(0, 30)), max_size=15))
-def test_interval_join_matches_pandas_filter(spark, no_broadcast, left, right):
+def test_interval_join_matches_pandas_filter(spark, left, right):
     """One best match (smallest rid) per left row, against a pandas
     filter: unkeyed with a broadcastable right side (broadcast range
     join), unkeyed with broadcast off and keyed (both the sweep)."""
     from ska_src_maltopuft_etl_spark.operators import interval_join
+    from tools.fuzz_intervals import no_broadcast
 
     lpdf = pd.DataFrame(left, columns=["k", "t"]).reset_index(names="lid")
     rpdf = pd.DataFrame(right, columns=["k", "start", "dur"]).reset_index(names="rid")
@@ -149,7 +150,7 @@ def test_interval_join_matches_pandas_filter(spark, no_broadcast, left, right):
         return exp
 
     assert run([]) == expected(False)
-    with no_broadcast():
+    with no_broadcast(spark):
         assert run([]) == expected(False)
     assert run(["k"]) == expected(True)
 

@@ -295,7 +295,7 @@ def _collect(df):
 
 
 @contextlib.contextmanager
-def _no_broadcast(spark):
+def no_broadcast(spark):
     """Size-based broadcast off: one-match interval joins take the sweep."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
@@ -463,7 +463,7 @@ def run_case(spec: dict, spark, con, strategies: Counter | None = None) -> dict 
                     f"AND m.rn = 1"
                 )
         for name, ctx in (("default", contextlib.nullcontext()),
-                          ("no_broadcast", _no_broadcast(spark))):
+                          ("no_broadcast", no_broadcast(spark))):
             with ctx:
                 out = interval_join(pdf, isel, **kw)
                 if family != "pairs" and strategies is not None:
