@@ -349,7 +349,7 @@ def _sweep_best_match(
         probe_ok = probe_ok & F.col(k).isNotNull()
     probes = left.where(probe_ok).select(
         *[F.col(b).alias(K[i]) for i, b in enumerate(by)],
-        _bucket(F.col(left_ts), width_us).cast("long").alias("__sw_b"),
+        _bucket(F.col(left_ts), width_us).alias("__sw_b"),
         F.unix_micros(F.col(left_ts)).alias("__sw_t"),
         F.lit(1).alias("__sw_m"),
         F.lit(None).cast("long").alias("__sw_s"),
