@@ -11,12 +11,10 @@ projections and under-reports projection-heavy queries; that
 count-based series was the r1-r9 legacy metric, retired in round 10
 per the r8/r9 verdicts).
 
-Headline pair:
-
-- ``value`` — raw noop-sink battery total (best-of-N per query);
-- ``value_canary_normalized`` — the same total divided by
-  ``canary_drift_box``, the drift of a synthetic engine-free box probe
-  against its quiet-box reference (``cfg/bench_canary.json``).
+Each timed execution runs inside ``tools.metrics.measure``, so every
+query also carries Spark's own accounting for the round its best wall
+came from: ``jobs``, executor ``run_s``, ``cpu_s``, ``shuffle_mb`` and
+``spill_mb`` (``BENCH_FULL.json`` keeps them for every query).
 
 A 1-minute loadavg above ``SPARK_GRAFT_BENCH_MAX_LOAD`` (default 8.0)
 is flagged as ``"env_hot": true`` in the artifact and warned on stderr;
@@ -33,85 +31,16 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
+from ska_src_maltopuft_etl_spark.config import load_harness_config  # noqa: E402
+from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted  # noqa: E402
+from ska_src_maltopuft_etl_spark.plans import QUERIES  # noqa: E402
+from tools.metrics import STATUS_CONF, measure  # noqa: E402
 
-from ska_src_maltopuft_etl_spark.config import load_harness_config
-from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted
-from ska_src_maltopuft_etl_spark.plans import QUERIES
-
-
-def _executor_task_ms(spark) -> int | None:
-    """Cumulative executor task time (ms) across the app so far.
-
-    Round-15 scaling contract (VERDICT r14 #2): the per-query WALL time
-    at sf0.1 is driver-dominated, so the driver's low-vs-high-core wall
-    ratio reads ~1 everywhere and cannot tell a serial operator from a
-    driver-bound tier. Executor aggregate task time is the number that
-    scales with cores: per-query deltas of this counter let the scaling
-    probe separate "executor compute (parallelizable)" from "driver
-    overhead (core-count-invariant)". Read from the app status store's
-    executor summaries (sum of ``totalDuration``); the listener bus is
-    drained first so late task-end events land on the query that ran
-    them. Returns None if the internal API is unavailable (the field is
-    additive — wall timings are unaffected).
-    """
-    try:
-        jsc = spark.sparkContext._jsc.sc()  # noqa: SLF001
-        try:
-            jsc.listenerBus().waitUntilEmpty()
-        except Exception:
-            pass  # best-effort drain; ~ms-level attribution slack is fine
-        total = 0
-        it = jsc.statusStore().executorList(False).iterator()
-        while it.hasNext():
-            total += it.next().totalDuration()
-        return int(total)
-    except Exception:
-        return None
-
-
-def _box_probe_sec(spark) -> float:
-    """Pure box-speed probe: a fixed synthetic workload that never
-    touches engine code, so no code change can move it.
-
-    Plain Spark API over ``range()`` data, fixed seed-free integer
-    arithmetic, fixed partition counts, no engine imports — byte-frozen
-    alongside the reference value in cfg/bench_canary.json
-    (``box_probe_reference_sec``). Shape: one CPU-bound hash aggregate +
-    one shuffle join, ~1 s on a quiet local[32] box. Timed best-of-2
-    (JVM/codegen warm by the time it runs — bench.py's warmup precedes
-    it).
-    """
-    import time as _t
-
-    best = None
-    for _ in range(2):
-        t0 = _t.time()
-        left = (
-            spark.range(0, 12_000_000, 1, 32)
-            .selectExpr(
-                "id % 100000 AS k",
-                "(id * 2654435761) % 1000003 AS v",
-            )
-        )
-        agg = left.groupBy("k").agg(
-            F.sum("v").alias("s"),
-            F.avg("v").alias("a"),
-            F.max("v").alias("m"),
-        )
-        right = spark.range(0, 100_000, 1, 8).selectExpr(
-            "id AS k", "id * 7 % 97 AS w"
-        )
-        agg.join(right, "k").selectExpr(
-            "k", "s + w AS sw", "a", "m"
-        ).write.format("noop").mode("overwrite").save()
-        el = _t.time() - t0
-        best = el if best is None else min(best, el)
-    return round(best, 3)
+#: per-query fields kept from the best round's accounting
+QUERY_FIELDS = ("wall_s", "jobs", "run_s", "cpu_s", "shuffle_mb", "spill_mb")
 
 
 def main() -> None:
@@ -148,7 +77,9 @@ def main() -> None:
             }))
             sys.exit(3)
 
-    spark = get_spark(app_name="bench", conf={"spark.ui.enabled": "false"})
+    spark = get_spark(
+        app_name="bench", conf={"spark.ui.enabled": "false", **STATUS_CONF}
+    )
 
     # Warm the JVM / codegen / parquet footer caches so the first timed
     # query doesn't absorb session startup.
@@ -167,29 +98,19 @@ def main() -> None:
     # estimator; each round still executes the complete plan from the
     # parquet scan up (cache cleared between).
     rounds = cfg.bench_rounds
-    timings_noop: dict[str, float] = {}
-    # Per-query executor aggregate task time (sec) — additive round-15
-    # field (VERDICT r14 #2): recorded for the same round the best wall
-    # time came from, so wall and task time describe one execution.
-    task_sec: dict[str, float] = {}
+    per_query: dict[str, dict[str, float]] = {}
     for name, spec in specs.items():
         # progress marker on stderr (stdout stays machine-parseable;
         # the driver keeps only the final stdout line): long scaled-tier
         # batteries die mid-run on resource walls, and without this the
         # failing QUERY is unidentifiable from stage numbers alone.
         print(f"[bench] {name}", file=sys.stderr, flush=True)
-        best_noop = None
+        best = None
         for _ in range(rounds):
-            tk0 = _executor_task_ms(spark)
-            t0 = time.time()
-            df = spec.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.time() - t0
-            tk1 = _executor_task_ms(spark)
-            if best_noop is None or elapsed < best_noop:
-                if tk0 is not None and tk1 is not None:
-                    task_sec[name] = round((tk1 - tk0) / 1000.0, 3)
-            best_noop = elapsed if best_noop is None else min(best_noop, elapsed)
+            with measure(spark, name) as m:
+                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            if best is None or m["wall_s"] < best["wall_s"]:
+                best = {k: m[k] for k in QUERY_FIELDS}
             # queries are independent; drop any intermediates a query
             # pinned so later timings aren't distorted by cache/GC
             # pressure. clearCache only unpins catalog-cached frames —
@@ -198,34 +119,11 @@ def main() -> None:
             # accumulate across the battery, degrading every later
             # query via GC pressure (measured +40% battery drift).
             release_all_persisted(spark)
-        timings_noop[name] = round(best_noop, 3)
+        per_query[name] = best
+    timings_noop = {k: v["wall_s"] for k, v in per_query.items()}
     total_noop = round(sum(timings_noop.values()), 3)
-
-    # Box probe: a synthetic, engine-free workload timed against a
-    # quiet-box reference pinned in cfg/bench_canary.json. Runs AFTER
-    # the battery so it never warms the timed queries.
-    box_probe_sec = None
-    try:
-        box_probe_sec = _box_probe_sec(spark)
-    except Exception:
-        pass
     load_end = os.getloadavg()[0]
 
-    # Box drift: ~1.0 = quiet box; >>1.0 = environmental inflation,
-    # which the normalized total divides out.
-    canary_drift_box = None
-    total_normalized = None
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "cfg", "bench_canary.json")
-        ) as f:
-            box_ref = json.load(f).get("box_probe_reference_sec")
-        if box_probe_sec is not None and box_ref:
-            canary_drift_box = round(box_probe_sec / float(box_ref), 3)
-            total_normalized = round(total_noop / canary_drift_box, 3)
-    except (OSError, ValueError, ZeroDivisionError):
-        pass
     # Round 2 postmortem: the single-line JSON with all per-query
     # timings outgrew the driver's tail capture and the headline line was
     # truncated away ("parsed": null in BENCH_r02.json). Emit the full
@@ -234,10 +132,7 @@ def main() -> None:
     # slowest 12 so the line stays well under any tail-capture limit.
     full = {
         "metric": "per_query_wall_sec_full",
-        "queries_noop_sink": timings_noop,
-        "queries_exec_task_sec": task_sec,
-        "canary_drift_box": canary_drift_box,
-        "box_probe_sec": box_probe_sec,
+        "queries": per_query,
         "loadavg_start": round(load_start, 2),
         "loadavg_end": round(load_end, 2),
         "env_hot": env_hot,
@@ -270,19 +165,13 @@ def main() -> None:
                 "metric": "total_query_battery_noop_sink_sec",
                 "value": total_noop,
                 "unit": "sec",
-                # raw total divided by the box probe's drift
-                "value_canary_normalized": total_normalized,
-                "canary_drift_box": canary_drift_box,
                 "loadavg_start": round(load_start, 2),
                 "loadavg_end": round(load_end, 2),
                 "env_hot": env_hot,
                 "queries": slowest,
-                # executor aggregate task time for the same 12 queries
-                # (r15 scaling contract: task time scales with cores,
-                # wall at sf0.1 is driver-bound — see VERDICT r14 #2).
-                "queries_exec_task_sec": {
-                    k: task_sec[k] for k in slowest if k in task_sec
-                },
+                # executor CPU time of the same 12 queries: wall at
+                # sf0.1 is largely driver-bound, CPU time is not
+                "queries_cpu_s": {k: per_query[k]["cpu_s"] for k in slowest},
                 "n_queries": len(timings_noop),
                 "sf": sf_val,
             }

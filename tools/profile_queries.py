@@ -2,15 +2,16 @@
 """Per-query optimization profiler (guide §1: measure first).
 
 For each named query (default: all), under the SAME session settings as
-bench.py, measures separately:
+bench.py, runs build + noop-sink execution ``--rounds`` times (full
+re-build each round, like bench.py) and keeps the fastest round's:
 
-- ``build_s``  — Python-side DataFrame construction (plan building,
+- ``build_s`` — Python-side DataFrame construction (plan building,
   including any driver-side actions a query performs while building:
   collects, localCheckpoints, toPandas samples);
-- ``noop_s``   — the noop-sink execution of the built frame
-  (best of ``--rounds``, full re-build each round like bench.py);
-- ``n_jobs``   — Spark jobs triggered across one full build+noop round
-  (job-count >> 1 flags hidden actions / eager checkpoints);
+- Spark's accounting of the whole round from ``tools.metrics.measure``:
+  ``wall_s``, ``jobs`` (job-count >> 1 flags hidden actions / eager
+  checkpoints), ``run_s``, ``cpu_s``, ``shuffle_mb``, ``spill_mb`` and
+  the rest of ``tools.metrics.TOTALS``;
 - writes ``.explain('formatted')`` to ``plans/<round>/<query>_<tag>.txt``
   when ``--plans <tag>`` is given (round dir from ``--plans-dir``,
   default r15).
@@ -32,8 +33,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted
-from ska_src_maltopuft_etl_spark.plans import QUERIES
+from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted  # noqa: E402
+from ska_src_maltopuft_etl_spark.plans import QUERIES  # noqa: E402
+from tools.metrics import STATUS_CONF, measure  # noqa: E402
 
 
 def main() -> int:
@@ -56,8 +58,9 @@ def main() -> int:
     names = args or list(QUERIES)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="profile", conf={"spark.ui.enabled": "false"})
-    sc = spark.sparkContext
+    spark = get_spark(
+        app_name="profile", conf={"spark.ui.enabled": "false", **STATUS_CONF}
+    )
     # warm like bench.py
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     next(iter(QUERIES.values())).fn(spark, sf_dir).count()
@@ -70,21 +73,14 @@ def main() -> int:
     for name in names:
         spec = QUERIES[name]
         best = None
-        for r in range(rounds):
-            sc.setJobGroup(f"prof:{name}:{r}", name)
-            t0 = time.time()
-            df = spec.fn(spark, sf_dir)
-            t1 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.time()
-            jobs = len(sc.statusTracker().getJobIdsForGroup(f"prof:{name}:{r}"))
-            rec = {
-                "build_s": round(t1 - t0, 3),
-                "noop_s": round(t2 - t1, 3),
-                "total_s": round(t2 - t0, 3),
-                "n_jobs": jobs,
-            }
-            if best is None or rec["total_s"] < best["total_s"]:
+        for _ in range(rounds):
+            with measure(spark, name) as m:
+                t0 = time.perf_counter()
+                df = spec.fn(spark, sf_dir)
+                build_s = time.perf_counter() - t0
+                df.write.format("noop").mode("overwrite").save()
+            rec = {"build_s": round(build_s, 3), **m}
+            if best is None or rec["wall_s"] < best["wall_s"]:
                 best = rec
             release_all_persisted(spark)
         if plans_tag:
@@ -98,15 +94,15 @@ def main() -> int:
         results[name] = best
         print(json.dumps({"query": name, **best}), flush=True)
 
-    order = sorted(results.items(), key=lambda kv: -kv[1]["total_s"])
-    print("\n== slowest (total_s, build_s, noop_s, n_jobs) ==", file=sys.stderr)
+    order = sorted(results.items(), key=lambda kv: -kv[1]["wall_s"])
+    print("\n== slowest (wall_s, build_s, run_s, cpu_s, jobs) ==", file=sys.stderr)
     for n, r in order[:40]:
         print(
-            f"{n:38s} {r['total_s']:7.3f} {r['build_s']:7.3f} "
-            f"{r['noop_s']:7.3f} {r['n_jobs']:4d}",
+            f"{n:38s} {r['wall_s']:7.3f} {r['build_s']:7.3f} "
+            f"{r['run_s']:7.3f} {r['cpu_s']:7.3f} {r['jobs']:4d}",
             file=sys.stderr,
         )
-    tot = sum(r["total_s"] for r in results.values())
+    tot = sum(r["wall_s"] for r in results.values())
     print(f"TOTAL best-of-{rounds}: {tot:.1f}s over {len(results)} queries",
           file=sys.stderr)
     spark.stop()

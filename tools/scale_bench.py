@@ -4,11 +4,12 @@
 Runs the shuffle-heavy flagship queries at the base tier (sf0.1) and a
 10× tier generated by tools/make_sfN.py, recording per query:
 
-- best-of-N wall seconds at each tier,
-- total shuffle-write bytes at each tier (from the Spark UI REST API:
-  the sum over all stages completed during the run — includes the jobs
-  that materialize localCheckpoint invariants, which ARE part of the
-  query),
+- at each tier, Spark's accounting of the fastest of N rounds from
+  ``tools.metrics.measure``: ``wall_s``, ``jobs``, ``run_s``, ``cpu_s``,
+  ``shuffle_mb`` (shuffle write, summed over every stage the query's
+  jobs ran — including the jobs that materialize localCheckpoint
+  invariants, which ARE part of the query), ``spill_mb`` and
+  ``input_mb``;
 - the wall and shuffle scale factors (flagging anything super-linear).
 
 Usage: python tools/scale_bench.py [sf1_dir] [rounds] [query ...]
@@ -24,13 +25,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted
-from ska_src_maltopuft_etl_spark.plans import QUERIES
+from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted  # noqa: E402
+from ska_src_maltopuft_etl_spark.plans import QUERIES  # noqa: E402
+from tools.metrics import STATUS_CONF, measure  # noqa: E402
 
 DEFAULT_QUERIES = [
     "dedup_connected_components",
@@ -45,26 +45,8 @@ DEFAULT_QUERIES = [
     "percentile_stats",
 ]
 
-UI = "http://localhost:4040"
-
-
-def _stages() -> list[dict]:
-    apps = json.load(urllib.request.urlopen(f"{UI}/api/v1/applications", timeout=10))
-    app_id = apps[0]["id"]
-    return json.load(
-        urllib.request.urlopen(
-            f"{UI}/api/v1/applications/{app_id}/stages?status=complete", timeout=10
-        )
-    )
-
-
-def _shuffle_totals() -> tuple[int, int]:
-    """Cumulative (shuffle write bytes, input bytes) over completed stages."""
-    sw = si = 0
-    for st in _stages():
-        sw += st.get("shuffleWriteBytes", 0)
-        si += st.get("inputBytes", 0)
-    return sw, si
+#: per-tier fields kept from the fastest round's accounting
+TIER_FIELDS = ("wall_s", "jobs", "run_s", "cpu_s", "shuffle_mb", "spill_mb", "input_mb")
 
 
 def main() -> int:
@@ -89,17 +71,7 @@ def main() -> int:
     base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     spark = get_spark(
-        app_name="scale_bench",
-        conf={
-            "spark.ui.enabled": "true",
-            # The shuffle numbers are CUMULATIVE sums over the stage
-            # list; with the default retention (1000 stages) the UI
-            # evicts old stages mid-sweep and the cumulative sum DROPS,
-            # producing negative per-query deltas. Retain everything a
-            # 13-query x 2-tier x 3-round sweep can produce.
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "50000",
-        },
+        app_name="scale_bench", conf={"spark.ui.enabled": "false", **STATUS_CONF}
     )
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
@@ -114,13 +86,15 @@ def main() -> int:
         try:
             with open(out_path) as f:
                 prior = json.load(f)
-            if prior.get("factor") not in (None, factor):
-                sys.exit(
-                    f"{out_name} was written with factor={prior['factor']}; "
-                    f"refusing to mix x{factor} rows into it — pass a "
-                    f"different --out or delete the file."
-                )
             results = prior.get("queries", {})
+            if prior.get("factor") not in (None, factor) or any(
+                "wall_s" not in r.get("base", {}) for r in results.values()
+            ):
+                sys.exit(
+                    f"{out_name} was written with factor={prior.get('factor')} "
+                    f"or an older row format; refusing to mix x{factor} rows "
+                    f"into it — pass a different --out or delete the file."
+                )
         except (OSError, ValueError):
             results = {}
     for name in names:
@@ -128,32 +102,24 @@ def main() -> int:
         row: dict = {}
         for tier, sf_dir in (("base", base_dir), (tier_label, sf1_dir)):
             best = None
-            shuffle = input_b = 0
             for _ in range(rounds):
                 release_all_persisted(spark)
-                sw0, si0 = _shuffle_totals()
-                t0 = time.time()
-                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                elapsed = time.time() - t0
-                sw1, si1 = _shuffle_totals()
-                if best is None or elapsed < best:
-                    best = elapsed
-                    shuffle, input_b = sw1 - sw0, si1 - si0
-            row[tier] = {
-                "wall_sec": round(best, 3),
-                "shuffle_write_bytes": shuffle,
-                "input_bytes": input_b,
-            }
+                with measure(spark, f"{name}@{tier}") as m:
+                    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                if best is None or m["wall_s"] < best["wall_s"]:
+                    best = {k: m[k] for k in TIER_FIELDS}
+            row[tier] = best
             print(
-                f"{name} [{tier}]: {row[tier]['wall_sec']}s "
-                f"shuffle={shuffle/1e6:.1f}MB input={input_b/1e6:.1f}MB"
+                f"{name} [{tier}]: {best['wall_s']}s "
+                f"shuffle={best['shuffle_mb']:.1f}MB input={best['input_mb']:.1f}MB "
+                f"cpu={best['cpu_s']:.1f}s"
             )
         row["wall_scale"] = round(
-            row[tier_label]["wall_sec"] / max(row["base"]["wall_sec"], 1e-9), 2
+            row[tier_label]["wall_s"] / max(row["base"]["wall_s"], 1e-9), 2
         )
-        sb = row["base"]["shuffle_write_bytes"]
+        sb = row["base"]["shuffle_mb"]
         row["shuffle_scale"] = (
-            round(row[tier_label]["shuffle_write_bytes"] / sb, 2) if sb else None
+            round(row[tier_label]["shuffle_mb"] / sb, 2) if sb else None
         )
         # N× data: >N× wall = super-linear (red flag at 100 TB);
         # allow fixed per-job overhead to damp the ratio at small sizes.

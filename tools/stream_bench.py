@@ -3,14 +3,18 @@
 (round-15, VERDICT r14 item #7 — the streaming operators had
 correctness/fuzz certificates but zero repeatable TIMED coverage).
 
-Runs the three streaming paths over a tier's `events` table with the
-availableNow trigger (same methodology as tools/streaming_scale.py) but
-BEST-OF-N per path, and records wall seconds, rows/sec and the state
-store's own row/byte accounting. Results are merged into
-STREAM_BENCH.json under a `--label` section so successive rounds are
-comparable side by side:
+Runs the three streaming paths over a tier's `events` table as real
+Structured Streaming queries (availableNow trigger, parquet source,
+checkpointed noop sink), BEST-OF-N per path, and records wall seconds,
+rows/sec and, from every progress event of the run
+(``tools.metrics.stream_totals``), the batch count, the input rows over
+all batches and the state store's peak rows and bytes per operator.
+Results are merged into STREAM_BENCH.json under a `--label` section so
+successive rounds are comparable side by side:
 
     python tools/stream_bench.py [tier_dir] --label r15_start [--rounds 3]
+
+A single scale datapoint for a tier is ``--rounds 1 --label <tier>``.
 
 Deliberately NOT part of bench.py's battery: the driver's bench
 contract is additions-only on the batch queries and a structured
@@ -30,18 +34,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from ska_src_maltopuft_etl_spark.engine import get_spark  # noqa: E402
-
-
-def state_metrics(query) -> list[dict]:
-    prog = query.lastProgress or {}
-    return [
-        {
-            "operator": op.get("operatorName"),
-            "state_rows": op.get("numRowsTotal"),
-            "state_bytes": op.get("memoryUsedBytes"),
-        }
-        for op in prog.get("stateOperators", [])
-    ]
+from tools.metrics import stream_totals  # noqa: E402
 
 
 def run_once(spark, df, name: str) -> dict:
@@ -55,12 +48,7 @@ def run_once(spark, df, name: str) -> dict:
         .start()
     )
     q.awaitTermination()
-    wall = round(time.time() - t0, 3)
-    rec = {
-        "wall_sec": wall,
-        "rows_in": (q.lastProgress or {}).get("numInputRows"),
-        "state": state_metrics(q),
-    }
+    rec = {"wall_sec": round(time.time() - t0, 3), **stream_totals(q)}
     shutil.rmtree(ckpt, ignore_errors=True)
     return rec
 
@@ -96,8 +84,11 @@ def main() -> int:
     def load_stream():
         s = spark.readStream.schema(batch.schema).parquet(stage)
         if has_nanos:
+            # integer div: float division corrupts µs above 2^53 (NOTES)
             s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif dict(batch.dtypes).get("ts") == "timestamp_ntz":
+            # make_sfN tiers write naive µs timestamps; watermarks
+            # require TimestampType (session tz is pinned UTC).
             s = s.withColumn("ts", F.col("ts").cast("timestamp"))
         return s
 
@@ -162,7 +153,9 @@ def main() -> int:
         "tier_dir": tier,
         "rows": n_rows,
         "rounds": rounds,
-        "state_store": "rocksdb (engine default)",
+        "state_store": spark.conf.get(
+            "spark.sql.streaming.stateStore.providerClass"
+        ).rsplit(".", 1)[-1],
         "paths": results,
     }
     with open(out_path, "w") as f:
