@@ -145,19 +145,20 @@ _UTC_FMT = "yyyy-MM-dd'_'HH:mm:ss"
 _SB_START_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSSXXX"
 
 
-def read_run_summaries(
-    spark: SparkSession, directory: str, dedup_content: bool = True
-) -> DataFrame:
+def read_run_summaries(spark: SparkSession, directory: str) -> DataFrame:
     """Scan ``<directory>/**/*run_summary.json`` into the flat prefixed
     frame the observation transform consumes.
 
     ``filename`` is ``<candidate_dir>/<file stem>`` exactly as the
-    reference builds it (observation/extract.py:47-57). Corrupt files are
-    quarantined (dropped + available via ``_corrupt_record`` if needed)
-    rather than aborting the scan.
+    reference builds it (observation/extract.py:47-57). Each file is one
+    JSON document, compact or pretty-printed, as the reference's
+    ``json.load`` accepts. Corrupt files are quarantined (dropped +
+    available via ``_corrupt_record`` if needed) rather than aborting the
+    scan.
     """
     raw = (
         spark.read.schema(RUN_SUMMARY_SCHEMA)
+        .option("multiLine", "true")
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*run_summary.json")
         .option("mode", "PERMISSIVE")
@@ -205,8 +206,6 @@ def read_run_summaries(
         F.col("version_info").alias("version_info"),
     )
 
-    if not dedup_content:
-        return flat
     # S4 content dedup: identical summaries shared by many candidate dirs
     # collapse to one row; deterministic winner = lexicographically first
     # filename (the reference's winner is thread-timing dependent).

@@ -65,6 +65,7 @@ def stream_run_summaries(
 
     raw = (
         spark.readStream.schema(RUN_SUMMARY_SCHEMA)
+        .option("multiLine", "true")
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*run_summary.json")
         .option("maxFilesPerTrigger", "1000")

@@ -115,23 +115,30 @@ def spccl_line(m: float, dm: float, width: float, snr: float, beam: int,
     return "\t".join(fields) + "\n"
 
 
-@pytest.fixture(scope="module")
-def pipeline_output(spark, tmp_path_factory):
-    data = tmp_path_factory.mktemp("meertrap_data")
+def write_tree(data: Path, pretty=lambda i: False) -> None:
+    """Write the candidate-directory tree; the i-th run summary is
+    pretty-printed when ``pretty(i)``, compact otherwise."""
     ts0 = 1700000000
+    summaries = 0
 
     def cand_dir(host: str, offset: int) -> Path:
         d = data / f"{host}_{ts0 + offset}"
         d.mkdir(exist_ok=True)
         return d
 
+    def write_summary(d: Path, host: str, summary: dict) -> None:
+        nonlocal summaries
+        indent = 2 if pretty(summaries) else None
+        summaries += 1
+        (d / f"t{ts0}_{host}_run_summary.json").write_text(
+            json.dumps(summary, indent=indent))
+
     n_dirs = 0
     for i, (sb, start, stop) in enumerate(OBS):
         for host in HOST_BEAMS:
             d = cand_dir(host, n_dirs)
             n_dirs += 1
-            summary = run_summary(sb, start, stop, host)
-            (d / f"t{ts0}_{host}_run_summary.json").write_text(json.dumps(summary))
+            write_summary(d, host, run_summary(sb, start, stop, host))
             beams = HOST_BEAMS[host]
             # one candidate 0.3 s after obs start (exercises 1 s rounding),
             # one later
@@ -146,15 +153,23 @@ def pipeline_output(spark, tmp_path_factory):
                            "C" if b1["coherent"] else "I", b1["ra_hms"], b1["dec_dms"]))
 
     # duplicate candidate in a later-processed dir (dedup keeps first)
-    dup_src = run_summary(*OBS[0], "tpn-0-37")
     d_late = cand_dir("tpn-0-37", 999)
-    (d_late / f"t{ts0}_tpn-0-37_run_summary.json").write_text(json.dumps(dup_src))
+    write_summary(d_late, "tpn-0-37", run_summary(*OBS[0], "tpn-0-37"))
     t1 = OBS[0][1] + dt.timedelta(seconds=0.3)
     (d_late / "candA_beam.spccl.log").write_text(
         spccl_line(mjd(t1), 123.45, 4.2, 9.7, 0, "C", "4:40:17.07", "-43:33:09.0"))
 
+
+def run_tables(spark, data: Path) -> dict[str, list]:
     tables = meertrap_run(spark, str(data), partition_key="2023-11-20")
     return {name: df.collect() for name, df in tables.items()}
+
+
+@pytest.fixture(scope="module")
+def pipeline_output(spark, tmp_path_factory):
+    data = tmp_path_factory.mktemp("meertrap_data")
+    write_tree(data)
+    return run_tables(spark, data)
 
 
 def test_schedule_block(pipeline_output):
@@ -240,6 +255,17 @@ def test_sp_candidate(pipeline_output):
     assert len(sps) == 12
     assert all(s["plot_path"].startswith("data/2023-11-20/") for s in sps)
     assert all(s["candidate_id"] is not None for s in sps)
+
+
+def test_pretty_printed_summaries_parse(spark, tmp_path, pipeline_output):
+    """The reference reads each summary with ``json.load``, which takes
+    pretty-printed and compact files alike; a tree mixing both yields the
+    same tables as the all-compact one."""
+    write_tree(tmp_path, pretty=lambda i: i % 2 == 0)
+    got = run_tables(spark, tmp_path)
+    assert got.keys() == pipeline_output.keys()
+    for name, rows in pipeline_output.items():
+        assert sorted(map(repr, got[name])) == sorted(map(repr, rows)), name
 
 
 def test_cand_obs_count_asset(spark):
