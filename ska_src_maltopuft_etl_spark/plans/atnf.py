@@ -72,8 +72,8 @@ def transform(df: DataFrame) -> DataFrame:
     through :func:`~ska_src_maltopuft_etl_spark.sinks.incremental_load`
     (as the CLI does), which assigns each new visit an id above the
     existing table's max and remaps ``known_pulsar.catalogue_visit_id``
-    accordingly — a raw ``load_targets`` append would collide every
-    visit onto id 1 and silently anti-join the new pulsar rows away.
+    accordingly — appending the batch-local ids as they are would
+    collide every visit onto id 1.
     """
     return (
         df.withColumns(

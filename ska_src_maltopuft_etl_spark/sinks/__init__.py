@@ -22,7 +22,6 @@ from ska_src_maltopuft_etl_spark.sinks.relational import (
     MEERTRAP_TARGETS,
     incremental_load,
     TargetInformation,
-    load_targets,
     load_targets_on_conflict,
     prepare_data_for_insert,
 )
@@ -50,7 +49,6 @@ __all__ = [
     "MEERTRAP_TARGETS",
     "TargetInformation",
     "incremental_load",
-    "load_targets",
     "load_targets_on_conflict",
     "prepare_data_for_insert",
     "execute_jdbc_sql",

@@ -103,8 +103,8 @@ def update_inverted_index(
     """Idempotently append a document batch to an existing index.
 
     Already-indexed doc ids are dropped with an anti join (the same
-    idempotence contract as ``sinks/relational.merge_append`` and the
-    near-dup band index), new postings/doclens append to the
+    idempotence contract as ``sinks/relational.incremental_load`` and
+    the near-dup band index), new postings/doclens append to the
     partitioned layout, and the tiny stats table is recomputed from
     doclens. Returns the number of newly indexed documents. Safe to
     re-run on the same batch — the second run is a no-op.

@@ -17,9 +17,10 @@ dicts cannot scale, so
 - FK remap from pre-existing rows is a broadcast join
   (operators/joins.py remap_keys), not a dict.
 
-Two backends: parquet directories (tests / lakehouse) and JDBC
-(``mode="append"`` after the anti-join; the merge-window race is handled
-by the target's unique constraint, as in the reference).
+Two sinks: :func:`incremental_load` for parquet directories (tests /
+lakehouse), which also reconciles ids and remaps FKs across batches, and
+:func:`load_targets_on_conflict` for JDBC, which stages the batch and
+resolves conflicts inside the database, as the reference does.
 """
 
 from __future__ import annotations
@@ -92,101 +93,6 @@ def _null_safe_key_condition(left_cols: Sequence[str], right_cols: Sequence[str]
         e = F.col(lc).eqNullSafe(F.col(rc))
         cond = e if cond is None else (cond & e)
     return cond
-
-
-def merge_append(
-    new_rows: DataFrame,
-    existing: DataFrame | None,
-    unique_key: Sequence[str] | Sequence[Sequence[str]],
-) -> DataFrame:
-    """Rows of ``new_rows`` whose natural key is absent from ``existing``
-    (the MERGE WHEN NOT MATCHED INSERT half, K3/K4 semantics).
-
-    ``unique_key`` may be one column set or several (a sequence of
-    sequences): a row is dropped when it conflicts on ANY of the sets —
-    the reference's effective ON CONFLICT behavior when a table carries
-    multiple unique constraints (one anti-join per set; each is a keyed
-    equi-join AQE plans independently).
-
-    NULL-valued key columns match null-safely, and the join strategy is
-    left to AQE — the existing table grows without bound across runs, so
-    a forced broadcast would eventually OOM.
-    """
-    if existing is None or not unique_key:
-        return new_rows
-    key_sets: list[list[str]]
-    if unique_key and isinstance(unique_key[0], str):
-        key_sets = [list(unique_key)]  # type: ignore[arg-type]
-    else:
-        key_sets = [list(k) for k in unique_key]  # type: ignore[union-attr]
-    out = new_rows
-    for ks in key_sets:
-        aliased = [f"__nk_{i}" for i in range(len(ks))]
-        keys = existing.select(
-            *[F.col(c).alias(a) for c, a in zip(ks, aliased)]
-        ).dropDuplicates()
-        out = out.join(
-            keys, on=_null_safe_key_condition(ks, aliased), how="left_anti"
-        )
-    return out
-
-
-def load_targets(
-    spark: SparkSession,
-    tables: dict[str, DataFrame],
-    targets: Sequence[TargetInformation],
-    output_dir: str | None = None,
-    jdbc_url: str | None = None,
-    jdbc_properties: dict[str, str] | None = None,
-) -> dict[str, DataFrame]:
-    """Load tables in FK-dependency order (meertrap/meertrap.py:173-197).
-
-    Parquet mode: merge-append against any existing table directory.
-    JDBC mode: anti-join against the current table contents then append —
-    one statement per table, never per row.
-
-    .. warning::
-       ``load_targets`` appends rows with their *batch-local* surrogate
-       pks and does NOT remap child FKs to surviving existing parents.
-       It is therefore re-run-idempotent **only for identical batches**
-       (an exact re-run anti-joins every row away). A batch that
-       partially overlaps existing data would drop matched parents while
-       children still reference batch-local ids — use
-       :func:`incremental_load`, which reconciles ids above the existing
-       max and remaps FKs through per-table keymaps, for any overlapping
-       or multi-run workflow.
-    """
-    loaded: dict[str, DataFrame] = {}
-    for target in targets:
-        df = tables[target.table_name]
-        existing = None
-        if output_dir is not None:
-            path = f"{output_dir}/{target.table_name}.parquet"
-            try:
-                existing = spark.read.parquet(path)
-            except Exception:
-                existing = None
-            novel = merge_append(df, existing, target.all_unique_keys)
-            novel.write.mode("append").option("compression", "gzip").parquet(path)
-            loaded[target.table_name] = spark.read.parquet(path)
-        elif jdbc_url is not None:
-            try:
-                existing = spark.read.jdbc(
-                    jdbc_url, target.table_name, properties=jdbc_properties or {}
-                )
-            except Exception:
-                existing = None
-            novel = merge_append(df, existing, target.all_unique_keys)
-            novel.write.jdbc(
-                jdbc_url,
-                target.table_name,
-                mode="append",
-                properties=jdbc_properties or {},
-            )
-            loaded[target.table_name] = novel
-        else:
-            loaded[target.table_name] = merge_append(df, None, target.all_unique_keys)
-    return loaded
 
 
 #: MeerTRAP load order = the FK dependency DAG (meertrap/meertrap.py:173-197).
@@ -277,7 +183,7 @@ def incremental_load(
         except Exception:
             existing = None
 
-        # Match against EVERY unique constraint, like load_targets /
+        # Match against EVERY unique constraint, like
         # load_targets_on_conflict — a table with extra_unique_keys must
         # not get weaker dedup on the incremental path. The first set
         # that matches wins (coalesce order = constraint declaration
@@ -345,10 +251,9 @@ def load_targets_on_conflict(
     """Executable twin of the reference's ``INSERT .. ON CONFLICT DO
     NOTHING`` round trip (reference core/insert.py:76-119), set-based.
 
-    Where :func:`load_targets`'s JDBC branch resolves conflicts in Spark
-    (anti-join against a snapshot read of the target, then append), this
-    variant resolves them **inside the database**, closing the
-    read-modify-write race window between the snapshot and the append:
+    Conflicts are resolved **inside the database**, so there is no
+    read-modify-write race window between a snapshot read of the target
+    and the append:
 
     1. the batch is staged with ``DataFrameWriter.jdbc`` (bulk write,
        Spark-parallel — never per-row statements);
@@ -372,9 +277,9 @@ def load_targets_on_conflict(
       run, on both backends. The vanilla ``NOT EXISTS`` guard uses plain
       equality (NULL comparisons are unknown → the guard passes), and
       the Spark-side intra-batch dedup skips NULL-keyed rows to match.
-      Callers who need NULL-keyed idempotency should use the anti-join
-      sinks (:func:`load_targets` / :func:`incremental_load`), whose
-      null-safe matching is documented there.
+      Callers who need NULL-keyed idempotency should use
+      :func:`incremental_load`, whose null-safe matching is documented
+      there.
     - **any unique constraint conflicts, including the primary key**:
       the vanilla branch also guards on the PK so a staged row that
       collides only on its PK is skipped like any other conflict instead

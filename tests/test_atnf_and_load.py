@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from ska_src_maltopuft_etl_spark.plans.atnf import atnf_run
 from ska_src_maltopuft_etl_spark.sinks import (
     TargetInformation,
-    load_targets,
     prepare_data_for_insert,
 )
 
@@ -57,24 +56,10 @@ def test_prepare_data_for_insert(spark):
     assert out.count() == 2
 
 
-def test_load_targets_idempotent(spark, tmp_path):
-    out = str(tmp_path / "db")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
-    targets = (TargetInformation("t1", "", "id", (), ("name",)),)
-    load_targets(spark, {"t1": df}, targets, output_dir=out)
-    # same rows again → no duplicates (merge semantics)
-    load_targets(spark, {"t1": df}, targets, output_dir=out)
-    # one new row → appended once
-    df2 = spark.createDataFrame([(1, "a"), (3, "c")], "id int, name string")
-    load_targets(spark, {"t1": df2}, targets, output_dir=out)
-    final = spark.read.parquet(f"{out}/t1.parquet")
-    assert sorted(r["name"] for r in final.collect()) == ["a", "b", "c"]
-
-
 def test_atnf_two_visits_incremental(spark, tmp_path):
     """Second ATNF run must get a FRESH catalogue_visit id and keep its
     known_pulsar rows (ADVICE round 1: batch-local visit id=1 collided
-    with the first visit's rows under a plain load_targets append)."""
+    with the first visit's rows under a plain append)."""
     from ska_src_maltopuft_etl_spark.sinks import ATNF_TARGETS, incremental_load
 
     out = str(tmp_path / "db")
@@ -104,20 +89,6 @@ def test_atnf_two_visits_incremental(spark, tmp_path):
     assert by_visit[1] == by_visit[2] == {"J0437-4715", "J0534+2200"}
     # pulsar ids unique across visits
     assert len({p["id"] for p in ps}) == 4
-
-
-def test_merge_append_null_safe_keys(spark, tmp_path):
-    """NULL natural-key columns must match on re-run (eqNullSafe), not
-    re-append every time."""
-    out = str(tmp_path / "db")
-    df = spark.createDataFrame(
-        [(1, None), (2, "b.png")], "id int, plot_path string"
-    )
-    targets = (TargetInformation("sp", "", "id", {}, ("plot_path",)),)
-    load_targets(spark, {"sp": df}, targets, output_dir=out)
-    load_targets(spark, {"sp": df}, targets, output_dir=out)
-    final = spark.read.parquet(f"{out}/sp.parquet")
-    assert final.count() == 2
 
 
 def test_incremental_load_null_safe_keys(spark, tmp_path):

@@ -2,11 +2,12 @@
 
 The reference's operative sink is a live relational database
 (reference core/insert.py:26-119 — INSERT with conflict fallback inside
-a transaction). The JDBC branch of :func:`load_targets` was previously
-untested because the sandbox has no Postgres; Derby ships inside Spark's
-own jars and runs embedded in the same JVM, so this exercises the REAL
-``spark.read.jdbc`` / ``DataFrameWriter.jdbc`` code path: table
-creation, append, and the anti-join idempotency contract.
+a transaction). Derby ships inside Spark's own jars and runs embedded in
+the same JVM, so this exercises the REAL ``spark.read.jdbc`` /
+``DataFrameWriter.jdbc`` code path of :func:`load_targets_on_conflict`
+on tables Spark creates itself (no declared constraints): table
+creation, staged merge, and the ON CONFLICT DO NOTHING idempotency
+contract.
 
 Set ``MALTOPUFT_JDBC_URL`` (+ optional ``MALTOPUFT_JDBC_DRIVER``) to
 point the same test at an external database (e.g. Postgres) instead.
@@ -21,7 +22,7 @@ import pytest
 
 from ska_src_maltopuft_etl_spark.sinks.relational import (
     TargetInformation,
-    load_targets,
+    load_targets_on_conflict,
 )
 
 TARGETS = (
@@ -51,7 +52,7 @@ def jdbc(tmp_path):
     )
 
 
-def _tables(spark, extra_minute: int = 0):
+def _tables(spark, extra_minute: int = 0, obs_id_offset: int = 0):
     sb = spark.createDataFrame(
         [
             (1, dt.datetime(2023, 11, 20, 21, 0)),
@@ -61,8 +62,8 @@ def _tables(spark, extra_minute: int = 0):
     )
     obs = spark.createDataFrame(
         [
-            (1, 1, dt.datetime(2023, 11, 20, 21, 5 + extra_minute)),
-            (2, 2, dt.datetime(2023, 11, 20, 22, 5 + extra_minute)),
+            (1 + obs_id_offset, 1, dt.datetime(2023, 11, 20, 21, 5 + extra_minute)),
+            (2 + obs_id_offset, 2, dt.datetime(2023, 11, 20, 22, 5 + extra_minute)),
         ],
         "id long, schedule_block_id long, t_min timestamp",
     )
@@ -72,21 +73,25 @@ def _tables(spark, extra_minute: int = 0):
 def test_jdbc_load_roundtrip_idempotent(spark, jdbc):
     url, props = jdbc
     tables = _tables(spark)
-    load_targets(spark, tables, TARGETS, jdbc_url=url, jdbc_properties=props)
+    load_targets_on_conflict(spark, tables, TARGETS, url, jdbc_properties=props)
 
     got = spark.read.jdbc(url, "jdbc_schedule_block", properties=props)
     assert got.count() == 2
     obs = spark.read.jdbc(url, "jdbc_observation", properties=props)
     assert {r["schedule_block_id"] for r in obs.collect()} == {1, 2}
 
-    # exact re-run: the anti-join on the natural key drops every row —
-    # the reference's ON CONFLICT DO NOTHING semantics (core/insert.py).
-    load_targets(spark, tables, TARGETS, jdbc_url=url, jdbc_properties=props)
+    # exact re-run: every row conflicts and is skipped — the reference's
+    # ON CONFLICT DO NOTHING semantics (core/insert.py).
+    load_targets_on_conflict(spark, tables, TARGETS, url, jdbc_properties=props)
     assert spark.read.jdbc(url, "jdbc_schedule_block", properties=props).count() == 2
     assert spark.read.jdbc(url, "jdbc_observation", properties=props).count() == 2
 
-    # overlapping batch: only the genuinely new natural keys append.
-    tables2 = _tables(spark, extra_minute=1)
-    load_targets(spark, tables2, TARGETS, jdbc_url=url, jdbc_properties=props)
+    # overlapping batch: only the genuinely new natural keys append (the
+    # new observations carry fresh ids, as Spark-side surrogate keys do).
+    tables2 = _tables(spark, extra_minute=1, obs_id_offset=2)
+    load_targets_on_conflict(spark, tables2, TARGETS, url, jdbc_properties=props)
     assert spark.read.jdbc(url, "jdbc_schedule_block", properties=props).count() == 2
     assert spark.read.jdbc(url, "jdbc_observation", properties=props).count() == 4
+    obs = spark.read.jdbc(url, "jdbc_observation", properties=props).collect()
+    assert sorted(r["id"] for r in obs) == [1, 2, 3, 4]
+    assert {r["schedule_block_id"] for r in obs} == {1, 2}

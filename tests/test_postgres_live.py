@@ -9,10 +9,10 @@ embedded-Derby twin can only emulate:
   branch of :func:`load_targets_on_conflict` (conflict on ANY unique
   index, including the PK's, resolved inside the database);
 - Postgres NULLS DISTINCT: NULL-keyed rows insert on EVERY run;
-- the anti-join MERGE + id-reconciliation path of :func:`load_targets`
-  (the engine's deterministic-surrogate replacement for the reference's
-  ``INSERT .. RETURNING`` id round-trip: re-loading an overlapping batch
-  must keep existing ids and leave FKs consistent).
+- the engine's deterministic-surrogate replacement for the reference's
+  ``INSERT .. RETURNING`` id round-trip: replaying a batch through
+  :func:`load_targets_on_conflict` must keep existing ids and leave FKs
+  consistent.
 
 Gating: set ``MALTOPUFT_PG_URL`` (a ``jdbc:postgresql://...`` URL — see
 ``docker-compose.postgres.yml`` for the one-command backend) and, unless
@@ -240,25 +240,23 @@ def test_on_conflict_nulls_distinct_inserts_every_run(pg_spark, pg):
         )
 
 
-def test_load_targets_jdbc_reconciles_ids(pg_spark, pg):
-    """The anti-join MERGE path (the engine's replacement for the
-    reference's INSERT..RETURNING id round-trip): re-loading an
-    overlapping batch keeps existing ids and FKs stay consistent."""
-    from ska_src_maltopuft_etl_spark.sinks import load_targets
+def test_on_conflict_replay_keeps_ids_and_fks(pg_spark, pg):
+    """Replaying a batch keeps the existing ids (surrogate keys are
+    Spark-side and deterministic, so no id comes back from the database)
+    and every FK still resolves."""
+    from ska_src_maltopuft_etl_spark.sinks import load_targets_on_conflict
 
     url, props = pg
-    loaded1 = load_targets(
-        pg_spark, _batch(pg_spark), _targets(), jdbc_url=url,
-        jdbc_properties=props,
+    loaded1 = load_targets_on_conflict(
+        pg_spark, _batch(pg_spark), _targets(), url, jdbc_properties=props
     )
     ids1 = {
         (r["start_at"], r["est_end_at"]): r["id"]
         for r in loaded1["pg_schedule_block"].collect()
     }
     # same natural keys again: no new rows, ids unchanged
-    loaded2 = load_targets(
-        pg_spark, _batch(pg_spark), _targets(), jdbc_url=url,
-        jdbc_properties=props,
+    loaded2 = load_targets_on_conflict(
+        pg_spark, _batch(pg_spark), _targets(), url, jdbc_properties=props
     )
     ids2 = {
         (r["start_at"], r["est_end_at"]): r["id"]
