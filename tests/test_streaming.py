@@ -14,13 +14,15 @@ def test_stream_run_summaries_dedup(spark, tmp_path):
     from tests.test_meertrap_pipeline import OBS, run_summary
 
     data = tmp_path / "stream_data"
-    # two dirs share an identical summary (dup), one differs
+    # two dirs share an identical summary (dup), one differs and is
+    # pretty-printed (the reference's json.load takes both forms)
     for i, host in enumerate(["tpn-0-37", "tpn-0-37", "tpn-0-38"]):
         d = data / f"{host}_{1700000000 + i}"
         d.mkdir(parents=True)
         sb, start, stop = OBS[0] if host == "tpn-0-37" else OBS[1]
         (d / f"t0_{host}_run_summary.json").write_text(
-            json.dumps(run_summary(sb, start, stop, host))
+            json.dumps(run_summary(sb, start, stop, host),
+                       indent=2 if host == "tpn-0-38" else None)
         )
 
     stream = stream_run_summaries(spark, str(data))
@@ -37,6 +39,7 @@ def test_stream_run_summaries_dedup(spark, tmp_path):
     # 3 files, 2 identical → 2 survivors
     assert len(rows) == 2
     assert {r["meerkat_id"] for r in rows} == {79119}
+    assert all(r["utc_start"] is not None for r in rows)
 
 
 def test_sessionize_events_stateful(spark, tmp_path):

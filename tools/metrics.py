@@ -117,8 +117,6 @@ def measure(spark: SparkSession, label: str) -> Iterator[dict[str, float]]:
     sc = spark.sparkContext
     first = _next_job_id(_store(spark))
     group = f"{label}#{next(_groups)}"
-    outer = (sc.getLocalProperty("spark.jobGroup.id"),
-             sc.getLocalProperty("spark.job.description"))
     sc.setJobGroup(group, label)
     rec: dict[str, float] = {}
     t0 = time.perf_counter()
@@ -126,8 +124,8 @@ def measure(spark: SparkSession, label: str) -> Iterator[dict[str, float]]:
         yield rec
     finally:
         wall = time.perf_counter() - t0
-        sc.setLocalProperty("spark.jobGroup.id", outer[0])
-        sc.setLocalProperty("spark.job.description", outer[1])
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     store = _store(spark)
     ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
     # every job started since the block opened must still be held, or
