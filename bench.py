@@ -34,10 +34,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ska_src_maltopuft_etl_spark.config import load_harness_config  # noqa: E402
-from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted  # noqa: E402
-from ska_src_maltopuft_etl_spark.plans import QUERIES  # noqa: E402
-from tools.metrics import STATUS_CONF, measure  # noqa: E402
+from ska_src_maltopuft_etl_spark.config import load_harness_config
+from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted
+from ska_src_maltopuft_etl_spark.plans import QUERIES
+from tools.metrics import STATUS_CONF, measure
 
 #: per-query fields kept from the best round's accounting
 QUERY_FIELDS = ("wall_s", "jobs", "run_s", "cpu_s", "shuffle_mb", "spill_mb")

@@ -19,11 +19,11 @@ raises. Sessions that ``measure`` many queries should be built with
 
 from __future__ import annotations
 
-import itertools
 import time
 from contextlib import contextmanager
 from typing import Iterable, Iterator
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 #: Keep every job and stage in the status store; at the default of 1000,
@@ -41,7 +41,6 @@ TOTALS = (
 )
 
 _MB = 1e6
-_groups = itertools.count()
 
 
 def _store(spark: SparkSession):
@@ -67,7 +66,7 @@ def _next_job_id(store) -> int:
 def _job(store, job_id: int):
     try:
         return store.job(job_id)
-    except Exception as e:  # py4j wraps the store's NoSuchElementException
+    except Py4JJavaError as e:  # the store's NoSuchElementException
         raise LookupError(
             f"job {job_id} is not in the status store (evicted or never run)"
         ) from e
@@ -84,16 +83,17 @@ def job_totals(spark: SparkSession, job_ids: Iterable[int]) -> dict[str, float]:
         stage_ids.update(int(s) for s in _seq(_job(store, jid).stageIds()))
     gw = spark.sparkContext._gateway  # noqa: SLF001
     no_quantiles = gw.new_array(gw.jvm.double, 0)
-    t = dict.fromkeys(TOTALS, 0.0)
+    t = dict.fromkeys(TOTALS, 0)
     for sid in stage_ids:
         try:
             attempts = store.stageData(sid, False, None, False, no_quantiles)
-        except Exception as e:
+        except Py4JJavaError as e:
             raise LookupError(f"stage {sid} is not in the status store") from e
         ran = False
         for st in _seq(attempts):
-            ran = ran or st.numCompleteTasks() > 0
-            t["tasks"] += st.numCompleteTasks()
+            n = st.numCompleteTasks()
+            ran = ran or n > 0
+            t["tasks"] += n
             t["run_s"] += st.executorRunTime() / 1e3
             t["cpu_s"] += st.executorCpuTime() / 1e9
             t["gc_s"] += st.jvmGcTime() / 1e3
@@ -116,7 +116,9 @@ def measure(spark: SparkSession, label: str) -> Iterator[dict[str, float]]:
     any job started inside the block."""
     sc = spark.sparkContext
     first = _next_job_id(_store(spark))
-    group = f"{label}#{next(_groups)}"
+    # blocks that run jobs open at distinct next-job ids, so no earlier
+    # block's jobs share this group
+    group = f"{label}@{first}"
     sc.setJobGroup(group, label)
     rec: dict[str, float] = {}
     t0 = time.perf_counter()
@@ -130,8 +132,9 @@ def measure(spark: SparkSession, label: str) -> Iterator[dict[str, float]]:
     ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
     # every job started since the block opened must still be held, or
     # the group's own list may be missing the evicted ones
-    for jid in range(first, ids[-1] + 1 if ids else first):
-        _job(store, jid)
+    if ids:
+        for jid in range(first, ids[-1] + 1):
+            _job(store, jid)
     rec.update(wall_s=round(wall, 3), jobs=len(ids), **job_totals(spark, ids))
 
 

@@ -28,9 +28,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted  # noqa: E402
-from ska_src_maltopuft_etl_spark.plans import QUERIES  # noqa: E402
-from tools.metrics import STATUS_CONF, measure  # noqa: E402
+from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted
+from ska_src_maltopuft_etl_spark.plans import QUERIES
+from tools.metrics import STATUS_CONF, measure
 
 DEFAULT_QUERIES = [
     "dedup_connected_components",
