@@ -20,6 +20,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Largest default driver heap; SPARK_GRAFT_DRIVER_MEM sets larger ones.
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def box_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: two thirds of the box's
+    ``MemTotal``, capped at 16g, leaving the rest for off-heap buffers,
+    the Python workers and the OS. A heap sized past physical memory
+    gets the JVM killed by the kernel instead of raising an OOM. Falls
+    back to the cap where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(total_kb * 2 // 3 // 1024, _DRIVER_MEM_CAP_MB)}m"
+
+
 _DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -46,9 +64,11 @@ _DEFAULTS: dict[str, str] = {
     # test SFs, but the x100 stress tier measurably starves partial hash
     # aggregates at that ratio (AGGREGATE_OUT_OF_MEMORY: a task that
     # cannot acquire its first page cannot even fall back to sort-spill).
-    # On a real cluster this is the executor-memory/cores knob; here the
-    # env var lets the scale harness provision per tier.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # The default is sized to the box (box_driver_memory): a 16g heap on
+    # a 15.7 GB VM was OOM-killed by the kernel at 15.9 GB RSS in a ×10
+    # sweep. On a real cluster this is the executor-memory/cores knob;
+    # here the env var lets the scale harness provision per tier.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", box_driver_memory()),
     # Shuffle-file lifetime: ContextCleaner only removes a finished
     # query's shuffle files after a driver GC notices the dereferenced
     # RDDs, and its fallback periodic GC fires every 30 MINUTES by

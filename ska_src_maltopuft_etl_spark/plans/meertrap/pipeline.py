@@ -37,8 +37,10 @@ def meertrap_run(
     """
     from pyspark import StorageLevel
 
-    # Nine downstream tables re-traverse these frames; cache once.
-    obs_raw = read_run_summaries(spark, data_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    # Every observation table, check and the candidate as-of input derive
+    # from the parsed summaries: checkpoint them so none re-plans the
+    # JSON scan. The candidate frame is fact-sized and only cached.
+    obs_raw = read_run_summaries(spark, data_dir).localCheckpoint()
     cand_raw = read_spccl(spark, data_dir).persist(StorageLevel.MEMORY_AND_DISK)
 
     obs_tables = transform_observation(obs_raw, validate=validate)

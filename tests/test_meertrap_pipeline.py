@@ -12,7 +12,9 @@ from pathlib import Path
 
 import pytest
 
-from ska_src_maltopuft_etl_spark.plans.meertrap import meertrap_run
+from ska_src_maltopuft_etl_spark.plans.meertrap import meertrap_run, transform_observation
+from ska_src_maltopuft_etl_spark.plans.meertrap.observation import UnexpectedShapeError
+from ska_src_maltopuft_etl_spark.sources.run_summary import read_run_summaries
 
 UTC = dt.timezone.utc
 EPOCH = dt.datetime(1970, 1, 1, tzinfo=UTC)
@@ -115,9 +117,10 @@ def spccl_line(m: float, dm: float, width: float, snr: float, beam: int,
     return "\t".join(fields) + "\n"
 
 
-def write_tree(data: Path, pretty=lambda i: False) -> None:
-    """Write the candidate-directory tree; the i-th run summary is
-    pretty-printed when ``pretty(i)``, compact otherwise."""
+def write_tree(data: Path, pretty=lambda i: False, obs=OBS) -> None:
+    """Write the candidate-directory tree of the observations ``obs``;
+    the i-th run summary is pretty-printed when ``pretty(i)``, compact
+    otherwise."""
     ts0 = 1700000000
     summaries = 0
 
@@ -134,7 +137,7 @@ def write_tree(data: Path, pretty=lambda i: False) -> None:
             json.dumps(summary, indent=indent))
 
     n_dirs = 0
-    for i, (sb, start, stop) in enumerate(OBS):
+    for i, (sb, start, stop) in enumerate(obs):
         for host in HOST_BEAMS:
             d = cand_dir(host, n_dirs)
             n_dirs += 1
@@ -166,10 +169,15 @@ def run_tables(spark, data: Path) -> dict[str, list]:
 
 
 @pytest.fixture(scope="module")
-def pipeline_output(spark, tmp_path_factory):
+def pipeline_tree(tmp_path_factory) -> Path:
     data = tmp_path_factory.mktemp("meertrap_data")
     write_tree(data)
-    return run_tables(spark, data)
+    return data
+
+
+@pytest.fixture(scope="module")
+def pipeline_output(spark, pipeline_tree):
+    return run_tables(spark, pipeline_tree)
 
 
 def test_schedule_block(pipeline_output):
@@ -266,6 +274,33 @@ def test_pretty_printed_summaries_parse(spark, tmp_path, pipeline_output):
     assert got.keys() == pipeline_output.keys()
     for name, rows in pipeline_output.items():
         assert sorted(map(repr, got[name])) == sorted(map(repr, rows)), name
+
+
+def test_observation_frames_read_checkpoints(spark, pipeline_tree):
+    """Every observation table and the candidate as-of input plan against
+    materialized dimension frames: no frame replays the JSON scan or the
+    dedup, numbering and ``lead`` windows behind it."""
+    tables = transform_observation(read_run_summaries(spark, str(pipeline_tree)))
+    frames = {**tables.as_dict(), "beam_obs": tables.beam_obs}
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" in plan, (name, plan)
+        assert "Window" not in plan and "FileScan" not in plan, (name, plan)
+
+
+def test_orphan_observation(spark, tmp_path):
+    """An observation starting more than 1 h after its block's estimated
+    end has no parent block: the null-FK check raises, and without
+    validation the observation keeps a NULL schedule_block_id."""
+    orphan_start = dt.datetime(2023, 11, 20, 22, 50, 0, tzinfo=UTC)  # SB1 ends 21:47:42
+    write_tree(tmp_path, obs=OBS + [(SB1, orphan_start, None)])
+    with pytest.raises(UnexpectedShapeError, match="1 null schedule_block_id"):
+        meertrap_run(spark, str(tmp_path), validate=True)
+    tables = meertrap_run(spark, str(tmp_path), validate=False)
+    rows = {r["t_min"]: r["schedule_block_id"] for r in tables["observation"].collect()}
+    assert len(rows) == 4
+    assert rows.pop(orphan_start.replace(tzinfo=None)) is None
+    assert sorted(rows.values()) == [1, 1, 2]
 
 
 def test_cand_obs_count_asset(spark):
