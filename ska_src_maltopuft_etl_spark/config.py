@@ -4,10 +4,9 @@ cfg/config.default.yml).
 The reference reads ``cfg/config.yml`` (falling back to
 ``cfg/config.default.yml``) into a pydantic model carrying the pipeline
 paths plus derived checkpoint-file names. Spark twin: a plain frozen
-dataclass with the SAME keys and derived properties — no pydantic
-dependency, and the checkpoint paths are parquet *directories* (Spark
-writers produce directories, not single files; the memoization itself is
-:mod:`~.sources.checkpoint`).
+dataclass with the SAME keys — no pydantic dependency. The stage
+checkpoint names are not derived: ``meertrap_run`` does not memoize its
+stages, it writes only the final tables under ``output_path``.
 
 Unknown keys raise (the reference's pydantic model rejects extras the
 same way) so a typo in a user's config fails loudly instead of being
@@ -24,9 +23,8 @@ from pathlib import Path
 class PipelineConfig:
     """Reference ``Config`` twin (core/config.py:39-60).
 
-    ``save_output`` gates checkpoint parquet writes; ``partition_key``
-    selects the run partition (e.g. a date directory) and prefixes every
-    checkpoint artifact, exactly as the reference's ``output_prefix``.
+    ``save_output`` gates the parquet table writes; ``partition_key``
+    selects the run partition (e.g. a date directory).
     """
 
     output_path: Path
@@ -38,26 +36,6 @@ class PipelineConfig:
     @property
     def partition_data_path(self) -> Path:
         return self.data_path / self.partition_key
-
-    @property
-    def output_prefix(self) -> str:
-        return f"{self.partition_key}_" if self.partition_key else ""
-
-    @property
-    def raw_obs_data_path(self) -> Path:
-        return self.output_path / f"{self.output_prefix}obs_raw.parquet"
-
-    @property
-    def raw_cand_data_path(self) -> Path:
-        return self.output_path / f"{self.output_prefix}cand_raw.parquet"
-
-    @property
-    def transformed_obs_data_path(self) -> Path:
-        return self.output_path / f"{self.output_prefix}obs_transformed.parquet"
-
-    @property
-    def transformed_cand_data_path(self) -> Path:
-        return self.output_path / f"{self.output_prefix}cand_transformed.parquet"
 
 
 def load_config(

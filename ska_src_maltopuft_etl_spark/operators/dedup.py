@@ -25,7 +25,6 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def _order_cols(order_by: Sequence[Column | str]) -> list[Column]:
@@ -74,7 +73,6 @@ def surrogate_key(
     order_by: Sequence[Column | str],
     offset: int = 1,
     scalable: bool = False,
-    storage_level: StorageLevel | None = None,
 ) -> DataFrame:
     """Add a contiguous ``offset``-based integer key following a
     deterministic global order (reference W5 ``with_row_index``).
@@ -85,20 +83,12 @@ def surrogate_key(
       prefix-sum of partition counts (the classic zipWithIndex technique
       done in the DataFrame API via ``monotonically_increasing_id``): no
       single-partition window, suitable for billions of rows.
-    - ``storage_level``: storage for the scalable path's one-time
-      materialization of the sorted fact (``localCheckpoint`` pins the
-      FULL fact on executor storage until released). ``None`` uses
-      Spark's default (memory-and-disk); pass
-      ``StorageLevel.DISK_ONLY`` to trade latency for headroom when the
-      fact dwarfs executor memory. Ignored for the window path.
     """
     ordered = _order_cols(order_by)
     if not scalable:
         w = Window.orderBy(*ordered)
         return df.withColumn(name, (F.row_number().over(w) + offset - 1).cast("long"))
-    out, _n = surrogate_key_with_count(
-        df, name, order_by, offset=offset, storage_level=storage_level
-    )
+    out, _n = surrogate_key_with_count(df, name, order_by, offset=offset)
     return out
 
 
@@ -107,7 +97,6 @@ def surrogate_key_with_count(
     name: str,
     order_by: Sequence[Column | str],
     offset: int = 1,
-    storage_level: StorageLevel | None = None,
 ) -> tuple[DataFrame, int]:
     """``surrogate_key(..., scalable=True)`` that also returns the total
     row count. The scalable path collects per-partition sizes anyway
@@ -141,7 +130,7 @@ def surrogate_key_with_count(
     # both downstream branches read the same pinned RDD blocks.
     local = sorted_df.withColumn(
         "__mid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=False, storageLevel=storage_level)
+    ).localCheckpoint(eager=False)
     pid = F.shiftright("__mid", 33)
     # Per-partition sizes: one tiny aggregate (a row per partition),
     # collected to the driver for the exclusive prefix sum.
@@ -201,7 +190,6 @@ def surrogate_key_dense_int(
     key_col: str,
     key_max: int,
     offset: int = 1,
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Contiguous ``offset``-based numbering of rows by an existing
     UNIQUE integer key column with values in ``[1, key_max]`` (a
@@ -220,14 +208,14 @@ def surrogate_key_dense_int(
       per-bucket counts and the final rank — are deterministic in the
       key set, not in partitioning or sampling),
     - NO driver-side action at all: the exclusive prefix sum runs as a
-      window over the per-bucket COUNTS (≤ ``num_buckets`` rows — the
-      only single-partition exchange, bucket-count-sized, never
+      window over the per-bucket COUNTS (≤ ``defaultParallelism`` rows
+      — the only single-partition exchange, bucket-count-sized, never
       fact-sized), so the whole pass stays lazy and plans into the
       caller's next action instead of forcing the upstream pipeline at
       build time, and
     - ONE fact-sized hash exchange + in-partition sort (the rank
       window), per-task state bounded by ``w = ceil(key_max /
-      num_buckets)`` rows.
+      defaultParallelism)`` rows.
 
     The caller must ensure the key set is stable across recomputation
     (our callers number a checkpointed/persisted frame). Used by the
@@ -236,9 +224,8 @@ def surrogate_key_dense_int(
     """
     import math
 
-    spark = df.sparkSession
-    n_b = num_buckets or spark.sparkContext.defaultParallelism
-    w = max(1, math.ceil(key_max / max(1, n_b)))
+    n_b = df.sparkSession.sparkContext.defaultParallelism
+    w = max(1, math.ceil(key_max / n_b))
     key = "`" + key_col.replace("`", "``") + "`"
     with_b = df.withColumn("__skb", F.expr(f"({key} - 1) DIV {w}"))
     counts = with_b.groupBy("__skb").agg(F.count(F.lit(1)).alias("__cnt"))

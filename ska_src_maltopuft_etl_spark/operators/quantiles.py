@@ -37,7 +37,6 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ska_src_maltopuft_etl_spark.operators.dedup import surrogate_key
 
@@ -48,7 +47,6 @@ def exact_percentiles(
     probs: Sequence[float],
     by: Sequence[str] = (),
     out_col: str = "value",
-    storage_level: StorageLevel | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles, distributed.
 
@@ -78,10 +76,7 @@ def exact_percentiles(
     ).where(F.col(value_col).isNotNull())
 
     order = [F.col(c).asc() for c in by] + [F.col("__v").asc()]
-    ranked = surrogate_key(
-        vals, "__gpos", order_by=order, offset=0, scalable=True,
-        storage_level=storage_level,
-    )
+    ranked = surrogate_key(vals, "__gpos", order_by=order, offset=0, scalable=True)
 
     # Group-major range partitioning => a group's local rank is its
     # global position minus the group's first position. One keyed agg.

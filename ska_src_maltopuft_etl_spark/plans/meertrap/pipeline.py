@@ -1,10 +1,11 @@
 """MeerTRAP end-to-end pipeline (reference: meertrap/meertrap.py:70-205,
 meertrap/main.py:6-10).
 
-parse → transform → load, with parquet stage checkpoints playing the
-same memoization role as the reference's read_or_parse_parquet
-(meertrap.py:33-67). The relational load goes through the idempotent
-sink in sinks/relational.py; parquet mode needs no database.
+parse → transform → load. Unlike the reference's read_or_parse_parquet
+(meertrap.py:33-67), stages are not memoized on disk: every run parses
+the partition afresh and only the final tables are written. The
+relational load goes through the idempotent sink in sinks/relational.py;
+parquet mode needs no database.
 """
 
 from __future__ import annotations

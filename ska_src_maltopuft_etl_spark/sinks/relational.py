@@ -8,9 +8,10 @@ remaps local → DB keys through a driver-side dict
 Spark-first redesign (SURVEY.md §4.3): per-row statements and driver
 dicts cannot scale, so
 
-- surrogate keys are computed deterministically *in Spark* before the
-  sink (operators/dedup.py surrogate_key) — ids never come back from the
-  database;
+- surrogate keys are computed deterministically *in Spark* — batch-local
+  ids before the sink (operators/dedup.py surrogate_key), final ids for
+  novel rows inside :func:`incremental_load` by a ``row_number`` above the
+  existing max — ids never come back from the database;
 - idempotency is a MERGE-shaped upsert: anti-join new rows against the
   existing natural keys, append only the novel ones (exactly the
   semantics of ``INSERT ... ON CONFLICT DO NOTHING``);
@@ -28,6 +29,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
@@ -158,14 +160,21 @@ def incremental_load(
        (broadcast joins — J9);
     2. match rows against the existing table on the natural key
        (broadcast anti/left join) — matches adopt the existing id;
-    3. novel rows get fresh contiguous ids above the existing max;
-    4. the (local id → final id) keymap feeds children;
+    3. novel rows get fresh contiguous ids above the existing max, in
+       local-id order (a ``row_number`` window); each row's final id —
+       existing or fresh — is pinned ONCE per table with
+       ``localCheckpoint``;
+    4. the (local id → final id) keymap that feeds children and the
+       append below are both plain projections of that one pinned frame;
     5. only novel rows are appended (merge semantics — K3/K4).
+
+    A missing table is a first load; a table that exists but cannot be
+    read raises rather than being renumbered from 1.
 
     Re-running the same batch is a no-op; partially-overlapping batches
     append only the new rows, with FKs pointing at the surviving ids.
     """
-    from ska_src_maltopuft_etl_spark.operators import remap_keys, surrogate_key
+    from ska_src_maltopuft_etl_spark.operators import remap_keys
 
     keymaps: dict[str, DataFrame] = {}
     loaded: dict[str, DataFrame] = {}
@@ -180,7 +189,11 @@ def incremental_load(
         path = f"{output_dir}/{name}.parquet"
         try:
             existing = spark.read.parquet(path)
-        except Exception:
+        except AnalysisException as e:
+            # Only a missing table is a first load: an unreadable one
+            # must raise, not be renumbered from 1 beside its old files.
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             existing = None
 
         # Match against EVERY unique constraint, like
@@ -218,24 +231,22 @@ def incremental_load(
             df = df.withColumn("__existing_id", F.lit(None).cast("long"))
             offset = 0
 
-        novel = df.where(F.col("__existing_id").isNull())
-        novel = surrogate_key(novel, "__new_id", [pk], offset=offset + 1, scalable=True)
-        keymap = (
-            df.where(F.col("__existing_id").isNotNull())
-            .select(F.col(pk).alias("old"), F.col("__existing_id").alias("new"))
-            .unionByName(
-                novel.select(F.col(pk).alias("old"), F.col("__new_id").alias("new"))
-            )
-        )
-        # Keymaps are small but their lineage drags the ENTIRE upstream
-        # pipeline DAG into every child table's plan — after a few tables
-        # the combined plan string alone can OOM the driver. Eagerly
+        is_novel = F.col("__existing_id").isNull()
+        novel_id = F.row_number().over(Window.partitionBy(is_novel).orderBy(pk)) + offset
+        # The keymap's lineage would drag the ENTIRE upstream pipeline
+        # DAG into every child table's plan — after a few tables the
+        # combined plan string alone can OOM the driver. Eagerly
         # localCheckpoint to truncate lineage at each table boundary.
-        keymaps[name] = keymap.dropDuplicates(["old"]).localCheckpoint(eager=True)
-
-        out_cols = [c for c in tables[name].columns]
-        novel_final = novel.withColumn(pk, F.col("__new_id")).select(*out_cols)
-        novel_final.write.mode("append").option("compression", "gzip").parquet(path)
+        numbered = df.withColumn(
+            "__final_id", F.coalesce("__existing_id", novel_id.cast("long"))
+        ).localCheckpoint()
+        keymaps[name] = numbered.select(
+            F.col(pk).alias("old"), F.col("__final_id").alias("new")
+        )
+        novel = numbered.where(is_novel).withColumn(pk, F.col("__final_id"))
+        novel.select(*tables[name].columns).write.mode("append").option(
+            "compression", "gzip"
+        ).parquet(path)
         loaded[name] = spark.read.parquet(path)
     return loaded
 

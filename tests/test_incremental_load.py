@@ -116,3 +116,55 @@ def test_incremental_load_matches_on_every_unique_set(spark, tmp_path):
     # carol appended above the existing max id.
     assert loaded["account"].count() == 3
     assert rows == {"alice": 1, "bob": 2, "carol": 3}
+
+    # Gappy local ids, a matched row among them: novel rows get
+    # contiguous ids above the existing max, in local-id order.
+    b3 = spark.createDataFrame(
+        [
+            (1, "d@x.io", "dave"),
+            (2, "b@x.io", "bob"),
+            (7, "f@x.io", "frank"),
+            (5, "e@x.io", "erin"),
+        ],
+        "id long, email string, username string",
+    )
+    loaded = incremental_load(spark, {"account": b3}, [target], out)
+    rows = {r["username"]: r["id"] for r in loaded["account"].collect()}
+    assert loaded["account"].count() == 6
+    assert rows == {"alice": 1, "bob": 2, "carol": 3, "dave": 4, "erin": 5, "frank": 6}
+
+
+def test_incremental_load_raises_on_unreadable_table(spark, tmp_path):
+    """A table that exists but cannot be read is not a first load: the
+    load raises and leaves the table's files as they were, instead of
+    renumbering from 1 beside them."""
+    from ska_src_maltopuft_etl_spark.sinks import TargetInformation
+
+    out = tmp_path / "wh"
+    target = TargetInformation("account", "", "id", unique_key=("email",))
+    batch = spark.createDataFrame([(1, "a@x.io")], "id long, email string")
+    incremental_load(spark, {"account": batch}, [target], str(out))
+    table = out / "account.parquet"
+    for f in table.glob("part-*"):
+        f.write_bytes(b"not parquet")
+    files = sorted(p.name for p in table.iterdir())
+
+    with pytest.raises(Exception):
+        incremental_load(spark, {"account": batch}, [target], str(out))
+    assert sorted(p.name for p in table.iterdir()) == files
+
+
+def test_incremental_load_pins_one_frame_per_table(spark, tmp_path):
+    """Each table pins one frame, its rows' final ids; the keymap and the
+    append are projections of it."""
+    batch, stage = tmp_path / "p1", str(tmp_path / "stage")
+    _write_batch(batch, OBS[:2], 0)
+    meertrap_run(spark, str(batch), output_dir=stage)
+    tables = {
+        t.table_name: spark.read.parquet(f"{stage}/{t.table_name}.parquet")
+        for t in MEERTRAP_TARGETS
+    }
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    before = jsc.getPersistentRDDs().size()
+    incremental_load(spark, tables, MEERTRAP_TARGETS, str(tmp_path / "wh"))
+    assert jsc.getPersistentRDDs().size() - before <= len(MEERTRAP_TARGETS)

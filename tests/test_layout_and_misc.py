@@ -1,5 +1,4 @@
-"""Tests for layout CLIs (O4), checkpoint memoization (S7), and the
-salted join."""
+"""Tests for layout CLIs (O4) and the salted join."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import tarfile
 from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark.operators.skew import salted_join
-from ska_src_maltopuft_etl_spark.sources.checkpoint import read_or_create_parquet
 from ska_src_maltopuft_etl_spark.sources.layout import (
     delete_empty_candidate_dirs,
     reorganise_candidate_dirs,
@@ -43,20 +41,6 @@ def test_untar_and_reorg_and_cleanup(tmp_path):
     (data / "empty1" / "empty2").mkdir(parents=True)
     removed = delete_empty_candidate_dirs(data)
     assert any("empty2" in r for r in removed) and any("empty1" in r for r in removed)
-
-
-def test_read_or_create_parquet(spark, tmp_path):
-    path = str(tmp_path / "ckpt.parquet")
-    calls = []
-
-    def build():
-        calls.append(1)
-        return spark.range(5).withColumnRenamed("id", "v")
-
-    a = read_or_create_parquet(spark, path, build)
-    b = read_or_create_parquet(spark, path, build)
-    assert a.count() == 5 and b.count() == 5
-    assert len(calls) == 1  # second read memoized
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -335,7 +319,7 @@ def test_cluster_parquet_nonoverlapping_ranges(spark, tmp_path):
 
 def test_pipeline_config_contract(tmp_path):
     """YAML config twin of reference core/config.py:39-139 — default file
-    + override file + CLI overrides, derived paths, unknown-key and
+    + override file + CLI overrides, the derived data path, unknown-key and
     missing-key failure modes."""
     import pytest
 
@@ -351,8 +335,6 @@ def test_pipeline_config_contract(tmp_path):
     cfg = load_config(default_cfg_path=default)
     assert cfg.data_path == __import__("pathlib").Path("./data")
     assert cfg.output_path.exists()  # created eagerly, as the reference does
-    assert cfg.output_prefix == ""
-    assert cfg.raw_obs_data_path.name == "obs_raw.parquet"
 
     # cfg file wins over default; CLI overrides win over both.
     override = tmp_path / "config.yml"
@@ -360,10 +342,9 @@ def test_pipeline_config_contract(tmp_path):
     cfg = load_config(override, default_cfg_path=default)
     assert cfg.partition_key == "2023-11-20"
     assert cfg.partition_data_path.name == "2023-11-20"
-    assert cfg.transformed_cand_data_path.name == "2023-11-20_cand_transformed.parquet"
     cfg = load_config(override, default_cfg_path=default,
                       overrides={"partition_key": "2024-01-01"})
-    assert cfg.output_prefix == "2024-01-01_"
+    assert cfg.partition_key == "2024-01-01"
 
     with pytest.raises(ValueError, match="unknown config keys"):
         load_config(default_cfg_path=default, overrides={"outptu_path": "x"})
