@@ -2,7 +2,7 @@
 click/*.py).
 
     python -m ska_src_maltopuft_etl_spark meertrap [DATA_DIR] [--config YML]
-        [--output DIR] [--partition-key KEY] [--no-validate] [--incremental]
+        [--output DIR] [--partition-key KEY] [--incremental]
     python -m ska_src_maltopuft_etl_spark atnf --output DIR
     python -m ska_src_maltopuft_etl_spark untar SRC DEST
     python -m ska_src_maltopuft_etl_spark reorg DATA_DIR
@@ -29,7 +29,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     mt.add_argument("--output", default=None)
     mt.add_argument("--partition-key", default=None)
-    mt.add_argument("--no-validate", action="store_true")
     mt.add_argument(
         "--incremental", action="store_true",
         help="reconcile ids against existing --output tables instead of overwriting",
@@ -114,7 +113,6 @@ def main(argv: list[str] | None = None) -> int:
                 tables = meertrap_run(
                     spark, args.data_dir,
                     partition_key=args.partition_key,
-                    validate=not args.no_validate,
                 )
                 loaded = incremental_load(spark, tables, MEERTRAP_TARGETS, args.output)
                 for name, df in loaded.items():
@@ -124,7 +122,6 @@ def main(argv: list[str] | None = None) -> int:
                     spark, args.data_dir,
                     output_dir=args.output,
                     partition_key=args.partition_key,
-                    validate=not args.no_validate,
                 )
                 for name, df in tables.items():
                     print(f"{name}: {df.count()} rows")

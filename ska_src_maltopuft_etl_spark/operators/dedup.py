@@ -13,8 +13,8 @@ Reference semantics:
 Scale notes: keep-first dedup is a window row_number over the subset —
 one shuffle on the subset keys, map-side partial skipping via AQE.
 Surrogate keys over a *global* order are inherently sequential; at
-reference scale a single-partition window is fine, and
-``surrogate_key(..., scalable=True)`` switches to the partition-offset
+reference scale a single-partition window (``surrogate_key``) is fine,
+and ``surrogate_key_with_count`` uses the partition-offset
 (zipWithIndex-style) technique: two narrow passes, no single-partition
 bottleneck, same contiguous 1-based numbering.
 """
@@ -72,24 +72,14 @@ def surrogate_key(
     name: str,
     order_by: Sequence[Column | str],
     offset: int = 1,
-    scalable: bool = False,
 ) -> DataFrame:
     """Add a contiguous ``offset``-based integer key following a
-    deterministic global order (reference W5 ``with_row_index``).
-
-    - default: ``row_number`` over a global window — exact parity, fine
-      at dimension-table scale (the reference's frames);
-    - ``scalable=True``: sort, then per-partition row numbers + exclusive
-      prefix-sum of partition counts (the classic zipWithIndex technique
-      done in the DataFrame API via ``monotonically_increasing_id``): no
-      single-partition window, suitable for billions of rows.
+    deterministic global order (reference W5 ``with_row_index``): a
+    global ``row_number`` window, fine at dimension-table scale (the
+    reference's frames). Fact-sized frames use surrogate_key_with_count.
     """
-    ordered = _order_cols(order_by)
-    if not scalable:
-        w = Window.orderBy(*ordered)
-        return df.withColumn(name, (F.row_number().over(w) + offset - 1).cast("long"))
-    out, _n = surrogate_key_with_count(df, name, order_by, offset=offset)
-    return out
+    w = Window.orderBy(*_order_cols(order_by))
+    return df.withColumn(name, (F.row_number().over(w) + offset - 1).cast("long"))
 
 
 def surrogate_key_with_count(
@@ -98,12 +88,12 @@ def surrogate_key_with_count(
     order_by: Sequence[Column | str],
     offset: int = 1,
 ) -> tuple[DataFrame, int]:
-    """``surrogate_key(..., scalable=True)`` that also returns the total
-    row count. The scalable path collects per-partition sizes anyway
-    (the exclusive prefix sum), so the count is free — callers that
-    number a frame and then need its cardinality (e.g. to derive
-    downstream bucket widths, see :func:`surrogate_key_dense_int`) avoid
-    a separate count job over the fact.
+    """:func:`surrogate_key` without its single-partition window, for
+    billions of rows: sort, then per-partition row numbers + an exclusive
+    prefix sum of partition counts (zipWithIndex via
+    ``monotonically_increasing_id``). Also returns the total row count,
+    which the prefix sum collects anyway: callers that need it (e.g. for
+    :func:`surrogate_key_dense_int`'s bucket width) run no count job.
     """
     ordered = _order_cols(order_by)
     sorted_df = df.repartitionByRange(*ordered).sortWithinPartitions(*ordered)
@@ -155,11 +145,11 @@ def surrogate_key_with_count(
         local_max = r["__maxmid"] - (r["__pid"] << 33)
         if local_max + 1 != r["__cnt"]:
             raise RuntimeError(
-                "surrogate_key(scalable=True): monotonically_increasing_id "
+                "surrogate_key_with_count: monotonically_increasing_id "
                 f"is no longer a consecutive per-partition counter (pid "
                 f"{r['__pid']}: max local id {local_max}, count "
                 f"{r['__cnt']}). Refusing to emit non-contiguous ids; use "
-                "scalable=False or restore the row_number fallback."
+                "surrogate_key or restore the row_number fallback."
             )
         rows.append((r["__pid"], running))
         running += r["__cnt"]
@@ -196,7 +186,7 @@ def surrogate_key_dense_int(
     surrogate key assigned upstream — gaps from filtering/dedup are
     fine; the output follows ascending ``key_col`` order).
 
-    The cheap second-pass twin of ``surrogate_key(scalable=True)``
+    The cheap second-pass twin of :func:`surrogate_key_with_count`
     (guide §2.4 — remove shuffles outright): when rows already carry a
     bounded integer order key, the global sort order can be recovered
     from equal-width ordered key-range buckets instead of a sampled

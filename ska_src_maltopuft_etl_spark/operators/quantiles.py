@@ -9,8 +9,8 @@ interpolated percentiles via the classic distributed sort-rank plan:
 1. range-partition + sort the (group, value) pairs (one full shuffle —
    the same shuffle any total sort pays);
 2. global 0-based positions from per-partition offsets
-   (:func:`~ska_src_maltopuft_etl_spark.operators.dedup.surrogate_key`
-   with ``scalable=True`` — no single-partition window anywhere);
+   (:func:`~ska_src_maltopuft_etl_spark.operators.dedup.surrogate_key_with_count`
+   — no single-partition window anywhere);
 3. per-group start offsets and counts from ONE keyed aggregate (range
    partitioning is group-major, so a group's rank is just
    ``global_pos - min(global_pos)``);
@@ -24,7 +24,7 @@ interpolated percentiles via the classic distributed sort-rank plan:
 
 Peak per-task memory is one sorted partition (spillable), never one
 group. The only driver-side state is the per-partition size list that
-``surrogate_key`` already collects (a row per partition, not per value).
+``surrogate_key_with_count`` collects (a row per partition, not per value).
 
 Reference: the reference's pandas/Polars quantiles are single-node
 in-memory sorts (no counterpart file — this operator exists for the
@@ -38,7 +38,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ska_src_maltopuft_etl_spark.operators.dedup import surrogate_key
+from ska_src_maltopuft_etl_spark.operators.dedup import surrogate_key_with_count
 
 
 def exact_percentiles(
@@ -76,7 +76,7 @@ def exact_percentiles(
     ).where(F.col(value_col).isNotNull())
 
     order = [F.col(c).asc() for c in by] + [F.col("__v").asc()]
-    ranked = surrogate_key(vals, "__gpos", order_by=order, offset=0, scalable=True)
+    ranked = surrogate_key_with_count(vals, "__gpos", order_by=order, offset=0)[0]
 
     # Group-major range partitioning => a group's local rank is its
     # global position minus the group's first position. One keyed agg.

@@ -2,8 +2,8 @@
 
 A plain ``row_number().over(Window.partitionBy(group))`` ranks each
 group inside ONE shuffle partition — correct, but a dominant group
-serializes onto a single task (the same cliff `surrogate_key` solves
-with ``scalable=True``). The two-phase form here:
+serializes onto a single task (the same cliff
+`surrogate_key_with_count` avoids). The two-phase form here:
 
 1. **Local pre-filter** (no shuffle): each input partition keeps at
    most k rows per group, maintained incrementally over Arrow batches

@@ -32,6 +32,7 @@ from ska_src_maltopuft_etl_spark.operators import (
 )
 from ska_src_maltopuft_etl_spark.plans.meertrap.observation import (
     UnexpectedShapeError,
+    observed,
 )
 
 
@@ -44,18 +45,18 @@ class CandidateTables:
     #: are projections of this one frame (1:1 on candidate_id by
     #: construction), so a consumer needing columns from BOTH — the
     #: driver-oracle certification query — reads this instead of
-    #: re-joining two projections of the same persisted frame (at scale
+    #: re-joining two projections of the same checkpointed frame (at scale
     #: that join shuffles or broadcasts a fact-sized table for rows
     #: that were never separated; guide §2.4).
     sp_candidate_wide: DataFrame | None = None
+    #: candidates the beam-id as-of join left without a beam
+    unmatched_beams: int = 0
 
     def as_dict(self) -> dict[str, DataFrame]:
         return {"candidate": self.candidate, "sp_candidate": self.sp_candidate}
 
 
-def transform_candidate(
-    cand_df: DataFrame, beam_obs: DataFrame, validate: bool = True
-) -> tuple[DataFrame, int]:
+def transform_candidate(cand_df: DataFrame, beam_obs: DataFrame) -> tuple[DataFrame, int]:
     """Candidate rows with coordinates, observed_at, pos and beam_id
     (candidate/transform.py:87-202). Returns ``(frame, n_candidates)``
     — the numbering pass collects per-partition sizes anyway, so the
@@ -82,7 +83,6 @@ def transform_candidate(
         .withColumn("cand_pos", K.pos_string("cand_ra", "cand_dec"))
     )
 
-    n_cand = cand.count() if validate else None
     # As-of: latest observation started at-or-before the (1s-rounded)
     # detection time, within the same (beam number, coherence) group.
     cand = cand.withColumn("__obs_round", K.round_timestamp_seconds("cand_observed_at"))
@@ -100,13 +100,6 @@ def transform_candidate(
         by=["cand_beam", "cand_coherent"],
         right_tiebreak=["beam_id"],
     ).drop("__obs_round", "obs_t_min")
-
-    if validate:
-        bad = joined.where(F.col("beam_id").isNull()).limit(1).count()
-        if bad or joined.count() != n_cand:
-            raise UnexpectedShapeError(
-                "Unexpected number of candidates after beam-id as-of join."
-            )
     return joined.drop("cand_beam", "cand_coherent"), n_total
 
 
@@ -169,21 +162,23 @@ def transform_spccl(
     beam_obs: DataFrame,
     remote_file_root_path: str = "data",
     partition_key: str = "",
-    validate: bool = True,
 ) -> CandidateTables:
-    """Candidate transformation entrypoint (candidate/transform.py:230-237)."""
-    cand, n_candidates = transform_candidate(cand_df, beam_obs, validate=validate)
-    # deduped candidates feed both output tables; cache post-dedup.
-    # filename is consumed by the dedup (processed_at + tie-break) and
-    # referenced nowhere below — drop it before the persist so the
-    # pinned blocks carry only live columns (guide §5).
-    from pyspark import StorageLevel
-
-    cand = (
-        deduplicate_candidates(cand)
-        .drop("filename")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    """Candidate transformation entrypoint (candidate/transform.py:230-237).
+    Raises if the as-of join changed the candidate count; candidates it
+    left without a beam are counted in ``unmatched_beams``."""
+    cand, n_candidates = transform_candidate(cand_df, beam_obs)
+    # The deduped candidates feed both output tables: checkpoint them,
+    # and observe the as-of output inside that checkpoint's job. filename
+    # is consumed by the dedup (processed_at + tie-break) and referenced
+    # nowhere below — drop it before the checkpoint so the pinned blocks
+    # carry only live columns (guide §5).
+    cand, asof_seen = observed(cand, unmatched=F.count_if(F.col("beam_id").isNull()))
+    cand = deduplicate_candidates(cand).drop("filename").localCheckpoint()
+    asof_n = asof_seen.get
+    if asof_n["rows"] != n_candidates:
+        raise UnexpectedShapeError(
+            "Unexpected number of candidates after beam-id as-of join."
+        )
     sp = transform_sp_candidate(
         cand, remote_file_root_path, partition_key, n_candidates
     )
@@ -205,5 +200,8 @@ def transform_spccl(
         F.col("candidate_id"),
     )
     return CandidateTables(
-        candidate=candidate, sp_candidate=sp_candidate, sp_candidate_wide=sp
+        candidate=candidate,
+        sp_candidate=sp_candidate,
+        sp_candidate_wide=sp,
+        unmatched_beams=asof_n["unmatched"],
     )

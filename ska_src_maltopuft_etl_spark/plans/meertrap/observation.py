@@ -5,8 +5,9 @@ Faithful re-derivation of the reference's observation dataflow
 row-order-dependent idioms replaced by explicit keys (SURVEY.md §7.3
 risk 1):
 
-- both positional hstacks (transform.py:45, :368-369) become validated
-  key joins on ``sb_start_at`` / ``obs_t_min``;
+- both positional hstacks (transform.py:45, :368-369) become key joins
+  on ``sb_start_at`` / ``obs_t_min``, each asserted m:1 from row counts
+  that the checkpoint jobs observe (no check runs a job of its own);
 - every ``with_row_index`` surrogate key becomes a ``row_number`` over a
   deterministic total order (the reference's unordered ``unique()`` makes
   several of its ids thread/hash-order dependent — here they are stable);
@@ -30,20 +31,23 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark import functions as K
 from ska_src_maltopuft_etl_spark.operators import (
+    CardinalityError,
     dedup_keep_first,
     interval_join,
     surrogate_key,
-    validated_join,
 )
 
 # Reference constants (observation/constants.py:3-4).
 SPEED_OF_LIGHT_M_PER_S = 299_792_458.0
 MHZ_TO_HZ = 1e6
+
+CB_KEYS = ["cb_angle", "cb_fraction_overlap", "cb_x", "cb_y"]
+HOST_KEYS = ["host_ip_address", "host_hostname", "host_port"]
 
 
 class UnexpectedShapeError(RuntimeError):
@@ -152,18 +156,11 @@ def get_sb_df(df: DataFrame) -> DataFrame:
     )
 
 
-def get_obs_df(
-    obs_uniq: DataFrame, sb_df: DataFrame, validate: bool = True
-) -> DataFrame:
+def get_obs_df(obs_uniq: DataFrame, sb_df: DataFrame) -> DataFrame:
     """Unique observation rows (transform.py:243-344): em band, pol enums,
     parent schedule block via interval join, t_max lead-imputation."""
-    base = _join(
-        validate,
-        obs_uniq,
-        sb_df.select("sb_start_at", "sb_est_end_at"),
-        on="sb_start_at",
-        how="left",
-        expect="m:1",
+    base = obs_uniq.join(
+        sb_df.select("sb_start_at", "sb_est_end_at"), "sb_start_at", "left"
     )
     obs = base.select(
         "obs_t_min",
@@ -212,48 +209,26 @@ def get_obs_df(
     return obs.drop("__next_t_min", "sb_est_end_at")
 
 
-def get_coherent_beam_config_df(
-    obs_uniq: DataFrame, validate: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def get_coherent_beam_config_df(obs_uniq: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Unique coherent-beam configs + per-observation mapping
     (transform.py:179-200). Returns (config table, t_min→config_id map)."""
-    per_obs = obs_uniq.select(
-        "obs_t_min", "cb_angle", "cb_fraction_overlap", "cb_x", "cb_y"
+    per_obs = obs_uniq.select("obs_t_min", *CB_KEYS)
+    uniq = per_obs.select(*CB_KEYS).dropDuplicates()
+    uniq = surrogate_key(uniq, "coherent_beam_config_id", CB_KEYS)
+    mapping = per_obs.join(uniq, CB_KEYS, "left").select(
+        "obs_t_min", "coherent_beam_config_id"
     )
-    uniq = per_obs.select("cb_angle", "cb_fraction_overlap", "cb_x", "cb_y").dropDuplicates()
-    uniq = surrogate_key(
-        uniq,
-        "coherent_beam_config_id",
-        ["cb_angle", "cb_fraction_overlap", "cb_x", "cb_y"],
-    )
-    mapping = _join(
-        validate,
-        per_obs,
-        uniq,
-        on=["cb_angle", "cb_fraction_overlap", "cb_x", "cb_y"],
-        how="left",
-        expect="m:1",
-    ).select("obs_t_min", "coherent_beam_config_id")
     return uniq, mapping
 
 
-def get_tiling_config_df(
-    obs_uniq: DataFrame, obs_df: DataFrame, validate: bool = True
-) -> DataFrame:
+def get_tiling_config_df(obs_uniq: DataFrame, obs_df: DataFrame) -> DataFrame:
     """Tiling configs: explode the typed array, split the target field,
     convert coordinates (transform.py:347-437). Position-stable ids via
     posexplode instead of the reference's row index."""
     tiles = obs_uniq.select(
         "obs_t_min", F.posexplode("beams_tilings").alias("__pos", "__tile")
     )
-    tiles = _join(
-        validate,
-        tiles,
-        obs_df.select("obs_t_min", "observation_id"),
-        on="obs_t_min",
-        how="left",
-        expect="m:1",
-    )
+    tiles = tiles.join(obs_df.select("obs_t_min", "observation_id"), "obs_t_min", "left")
     target_parts = F.split(F.col("__tile.target"), ",")
     tiles = tiles.select(
         "observation_id",
@@ -331,88 +306,102 @@ def get_beam_df(wide: DataFrame) -> DataFrame:
 
 def get_host_df(beam_df: DataFrame) -> DataFrame:
     """Unique hosts (transform.py:519-527)."""
-    hosts = beam_df.select("host_ip_address", "host_hostname", "host_port").dropDuplicates()
+    hosts = beam_df.select(*HOST_KEYS).dropDuplicates()
     return surrogate_key(hosts, "host_id", ["host_hostname", "host_ip_address", "host_port"])
 
 
-def _join(validate: bool, left: DataFrame, right: DataFrame, on, how="inner",
-          expect="m:m") -> DataFrame:
-    if validate:
-        return validated_join(left, right, on, how=how, expect=expect)
-    on_list = [on] if isinstance(on, str) else list(on)
-    return left.join(right, on_list, how)
+def observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count (``rows``) and ``metrics`` observed by the
+    eager ``localCheckpoint`` every caller feeds it into. Read ``.get``
+    only after that job: on a frame that never runs it blocks forever."""
+    seen = Observation()
+    return df.observe(
+        seen,
+        F.count(F.lit(1)).alias("rows"),
+        *(c.alias(name) for name, c in metrics.items()),
+    ), seen
 
 
-def transform_observation(df: DataFrame, validate: bool = True) -> ObservationTables:
+def _pinned(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """``df`` checkpointed, with the counts its checkpoint job observed."""
+    df, seen = observed(df, **metrics)
+    return df.localCheckpoint(), seen.get
+
+
+# The reference's Polars joins assert validate="m:1"; each m:1 LEFT join
+# here asserts that its output keeps the left row count. That fails on
+# every duplicated right key some left row matches. No duplicate goes
+# unmatched: sb_df is built from rows of ``df``, which the wide frame's
+# sb_start_at join holds whole; the config and host maps deduplicate
+# their left side's key columns; obs_df is unique on obs_t_min by its
+# dedup (one row per ``obs_uniq`` row once the first check holds).
+def _assert_m1(on: list[str], left_rows: int, joined_rows: int) -> None:
+    if joined_rows != left_rows:
+        raise CardinalityError(f"join keys {on} not unique on right side (expect=m:1)")
+
+
+def transform_observation(df: DataFrame) -> ObservationTables:
     """Observation transform entrypoint (transform.py:26-105).
 
     Each dimension frame is checkpointed as it is built, so every later
-    check and consumer reads the materialized rows rather than the
-    frame's lineage. The returned tables read those checkpoints, which
+    consumer reads the materialized rows rather than the frame's
+    lineage. The reference's runtime assertions (m:1 joins, null FKs)
+    read row and NULL counts that those checkpoint jobs observe, so
+    they cost no job. The returned tables read the checkpoints, which
     cannot be recomputed: consume them before ``release_all_persisted``.
-
-    ``validate=False`` skips the cardinality checks and null-FK count
-    jobs (each an extra Spark action) that mirror the reference's
-    runtime assertions. With the frames materialized they are cheap: a
-    ``meertrap_run`` over the 245-directory benchmark tree (seed 1,
-    4-vCPU VM, 3 fresh sessions each) took 23.0–32.8 s (median 25.5 s)
-    validated and 19.5–22.8 s (median 22.0 s) without.
     """
     sb_df = get_sb_df(df).localCheckpoint()
 
-    obs_uniq = dedup_keep_first(
-        df, ["obs_t_min"], [F.col("obs_t_max").asc_nulls_last(), "filename"]
-    ).localCheckpoint()
-    obs_df = get_obs_df(obs_uniq, sb_df, validate=validate).localCheckpoint()
-    cb_table, cb_map = get_coherent_beam_config_df(obs_uniq, validate=validate)
-    cb_table, cb_map = cb_table.localCheckpoint(), cb_map.localCheckpoint()
-    tiling_df = get_tiling_config_df(obs_uniq, obs_df, validate=validate).localCheckpoint()
-
-    if validate:
-        # Null-FK invariant (transform.py:98-104): every observation must
-        # sit inside a schedule block (+1h grace).
-        n_orphans = obs_df.where(F.col("schedule_block_id").isNull()).count()
-        if n_orphans:
-            raise UnexpectedShapeError(
-                f"Merge resulted in {n_orphans} null schedule_block_id."
-            )
-
-    # Wide frame: one row per input file, annotated with every id.
-    base = df.select("filename", "sb_start_at", "obs_t_min", "obs_t_max", "beams_host_beams")
-    wide = _join(
-        validate,
-        base,
-        sb_df.select("sb_start_at", "schedule_block_id", "meerkat_schedule_block_id"),
-        on="sb_start_at",
-        how="left",
-        expect="m:1",
+    obs_uniq, uniq_n = _pinned(
+        dedup_keep_first(df, ["obs_t_min"], [F.col("obs_t_max").asc_nulls_last(), "filename"]),
+        # get_tiling_config_df's posexplode rows (size is -1 or NULL on NULL)
+        tiles=F.sum(F.greatest(F.size("beams_tilings"), F.lit(0))),
     )
-    wide = _join(
-        validate,
-        wide,
-        obs_df.select("obs_t_min", "observation_id").join(
-            F.broadcast(cb_map), "obs_t_min", "left"
-        ),
-        on="obs_t_min",
-        how="left",
-        expect="m:1",
-    ).drop(base["obs_t_max"])
+    obs_df, obs_n = _pinned(
+        get_obs_df(obs_uniq, sb_df), orphans=F.count_if(F.col("schedule_block_id").isNull())
+    )
+    _assert_m1(["sb_start_at"], uniq_n["rows"], obs_n["rows"])
+    cb_table, cb_map = get_coherent_beam_config_df(obs_uniq)
+    cb_table = cb_table.localCheckpoint()
+    cb_map, cb_n = _pinned(cb_map)
+    _assert_m1(CB_KEYS, uniq_n["rows"], cb_n["rows"])
+    tiling_df, tiling_n = _pinned(get_tiling_config_df(obs_uniq, obs_df))
+    _assert_m1(["obs_t_min"], uniq_n["tiles"] or 0, tiling_n["rows"])
 
-    beam_df = get_beam_df(wide).localCheckpoint()
+    # Null-FK invariant (transform.py:98-104): every observation must
+    # sit inside a schedule block (+1h grace).
+    if obs_n["orphans"]:
+        raise UnexpectedShapeError(
+            f"Merge resulted in {obs_n['orphans']} null schedule_block_id."
+        )
+
+    # Wide frame: one row per input file, annotated with every id. The
+    # beam checkpoint reads it once and so observes its counts.
+    sb_ids = sb_df.select("sb_start_at", "schedule_block_id", "meerkat_schedule_block_id")
+    obs_ids = obs_df.select("obs_t_min", "observation_id").join(
+        F.broadcast(cb_map), "obs_t_min", "left"
+    )
+    base, base_seen = observed(
+        df.select("filename", "sb_start_at", "obs_t_min", "obs_t_max", "beams_host_beams")
+    )
+    wide, sb_seen = observed(base.join(sb_ids, "sb_start_at", "left"))
+    wide, ids_seen = observed(
+        wide.join(obs_ids, "obs_t_min", "left").drop(base["obs_t_max"]),
+        orphans=F.count_if(F.col("observation_id").isNull()),
+    )
+
+    beam_df, beam_n = _pinned(get_beam_df(wide))
+    _assert_m1(["sb_start_at"], base_seen.get["rows"], sb_seen.get["rows"])
+    _assert_m1(["obs_t_min"], sb_seen.get["rows"], ids_seen.get["rows"])
     host_df = get_host_df(beam_df).localCheckpoint()
-    beam_df = _join(
-        validate,
-        beam_df,
-        host_df,
-        on=["host_ip_address", "host_hostname", "host_port"],
-        how="left",
-        expect="m:1",
-    ).localCheckpoint()
+    beam_df, hosted_n = _pinned(
+        beam_df.join(host_df, HOST_KEYS, "left"), orphans=F.count_if(F.col("host_id").isNull())
+    )
+    _assert_m1(HOST_KEYS, beam_n["rows"], hosted_n["rows"])
 
-    if validate:
-        for frame, col in ((wide, "observation_id"), (beam_df, "host_id")):
-            if frame.where(F.col(col).isNull()).limit(1).count():
-                raise UnexpectedShapeError(f"Merge resulted in null {col}.")
+    for col, n in (("observation_id", ids_seen.get["orphans"]), ("host_id", hosted_n["orphans"])):
+        if n:
+            raise UnexpectedShapeError(f"Merge resulted in null {col}.")
 
     # s_ra/s_dec on the observation = first tiling's coordinates
     # (deterministic stand-in for the reference's join-order-dependent

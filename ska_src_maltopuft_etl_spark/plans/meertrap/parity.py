@@ -196,7 +196,7 @@ def _wide_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 def meertrap_observation(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = _wide_fixture(spark, sf_dir)
     sb = get_sb_df(wide)
-    obs = get_obs_df(wide, sb, validate=False)
+    obs = get_obs_df(wide, sb)
     return obs.select(
         "observation_id",
         "schedule_block_id",
@@ -366,9 +366,8 @@ def meertrap_sp_candidate(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_obs,
         remote_file_root_path="data",
         partition_key="2023-11-20",
-        validate=False,
     )
-    # The two tables are projections of ONE persisted frame, 1:1 on
+    # The two tables are projections of ONE checkpointed frame, 1:1 on
     # candidate_id; read the fused shape instead of re-joining them —
     # the join re-attached rows that were never separated, and at scale
     # it broadcast/shuffled a fact-sized side for nothing (guide §2.4).

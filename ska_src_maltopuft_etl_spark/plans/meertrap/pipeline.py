@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ska_src_maltopuft_etl_spark.plans.meertrap.candidate import transform_spccl
 from ska_src_maltopuft_etl_spark.plans.meertrap.observation import (
+    UnexpectedShapeError,
     transform_observation,
 )
 from ska_src_maltopuft_etl_spark.sources.run_summary import read_run_summaries
@@ -28,7 +29,6 @@ def meertrap_run(
     output_dir: str | None = None,
     remote_file_root_path: str = "data",
     partition_key: str = "",
-    validate: bool = True,
 ) -> dict[str, DataFrame]:
     """Run the MeerTRAP pipeline over one partition directory.
 
@@ -44,14 +44,15 @@ def meertrap_run(
     obs_raw = read_run_summaries(spark, data_dir).localCheckpoint()
     cand_raw = read_spccl(spark, data_dir).persist(StorageLevel.MEMORY_AND_DISK)
 
-    obs_tables = transform_observation(obs_raw, validate=validate)
+    obs_tables = transform_observation(obs_raw)
     cand_tables = transform_spccl(
         cand_raw,
         obs_tables.beam_obs,
         remote_file_root_path=remote_file_root_path,
         partition_key=partition_key or os.path.basename(data_dir.rstrip("/")),
-        validate=validate,
     )
+    if cand_tables.unmatched_beams:  # null beam_id (candidate/transform.py:138-143)
+        raise UnexpectedShapeError("Unexpected number of candidates after beam-id as-of join.")
 
     tables = {**obs_tables.as_dict(), **cand_tables.as_dict()}
     if output_dir:

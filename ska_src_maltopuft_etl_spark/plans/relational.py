@@ -21,6 +21,7 @@ from ska_src_maltopuft_etl_spark.operators import (
     interval_overlap_join,
     remap_keys,
     surrogate_key,
+    surrogate_key_with_count,
     validated_join,
 )
 from ska_src_maltopuft_etl_spark.plans.registry import register
@@ -690,7 +691,7 @@ def surrogate_key_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def surrogate_key_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select("o_orderkey")
-    return surrogate_key(o, "order_sk", ["o_orderkey"], scalable=True).select(
+    return surrogate_key_with_count(o, "order_sk", ["o_orderkey"])[0].select(
         "order_sk", "o_orderkey"
     )
 

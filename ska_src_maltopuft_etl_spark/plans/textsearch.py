@@ -2264,7 +2264,7 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis. Every term is an exact BIGINT (cents, ranks over a total
     order); the closed-form Gini needs one division. The global
     row_number is the local formulation — at scale use the
-    partition-offset ranking `surrogate_key(scalable=True)` provides.
+    partition-offset ranking `surrogate_key_with_count` provides.
     """
     o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(

@@ -192,9 +192,9 @@ def test_cli_parser():
     from ska_src_maltopuft_etl_spark.cli import build_parser
 
     p = build_parser()
-    a = p.parse_args(["meertrap", "/data/x", "--output", "/out", "--no-validate",
+    a = p.parse_args(["meertrap", "/data/x", "--output", "/out",
                       "--incremental", "--partition-key", "2023-11-20"])
-    assert a.command == "meertrap" and a.no_validate and a.incremental
+    assert a.command == "meertrap" and a.incremental
     a = p.parse_args(["untar", "src", "dst", "--remove-archives"])
     assert a.command == "untar" and a.remove_archives
     a = p.parse_args(["reorg", "/data"])

@@ -12,9 +12,11 @@ from pathlib import Path
 
 import pytest
 
+from ska_src_maltopuft_etl_spark.operators import CardinalityError
 from ska_src_maltopuft_etl_spark.plans.meertrap import meertrap_run, transform_observation
 from ska_src_maltopuft_etl_spark.plans.meertrap.observation import UnexpectedShapeError
 from ska_src_maltopuft_etl_spark.sources.run_summary import read_run_summaries
+from tools.metrics import measure
 
 UTC = dt.timezone.utc
 EPOCH = dt.datetime(1970, 1, 1, tzinfo=UTC)
@@ -74,7 +76,7 @@ OBS = [
 
 
 def run_summary(sb: dict, utc_start: dt.datetime, utc_stop: dt.datetime | None,
-                host: str) -> dict:
+                host: str, hosts: dict = HOST_BEAMS) -> dict:
     return {
         "beams": {
             "ca_target_request": {
@@ -97,7 +99,7 @@ def run_summary(sb: dict, utc_start: dt.datetime, utc_stop: dt.datetime | None,
             "coherent_beam_shape": {"angle": -54.52, "overlap": 0.25,
                                     "x": 0.00813, "y": 0.00749},
             "ib_antennas": ["m000"],
-            "list": HOST_BEAMS[host],
+            "list": hosts[host],
         },
         "data": {"bw": 856.0, "cfreq": 1284.0, "nbeam": 780, "nbit": 8,
                  "nchan": 1024, "npol": 1, "sync_time": 1697000000.0,
@@ -117,10 +119,12 @@ def spccl_line(m: float, dm: float, width: float, snr: float, beam: int,
     return "\t".join(fields) + "\n"
 
 
-def write_tree(data: Path, pretty=lambda i: False, obs=OBS) -> None:
-    """Write the candidate-directory tree of the observations ``obs``;
-    the i-th run summary is pretty-printed when ``pretty(i)``, compact
-    otherwise."""
+def write_tree(data: Path, pretty=lambda i: False, obs=OBS, hosts=HOST_BEAMS,
+               late_beam: int = 0) -> None:
+    """Write the candidate-directory tree of the observations ``obs`` on
+    the host beams ``hosts``; the i-th run summary is pretty-printed when
+    ``pretty(i)``. A later directory repeats the first candidate on beam
+    ``late_beam`` (a duplicate on beam 0)."""
     ts0 = 1700000000
     summaries = 0
 
@@ -138,11 +142,10 @@ def write_tree(data: Path, pretty=lambda i: False, obs=OBS) -> None:
 
     n_dirs = 0
     for i, (sb, start, stop) in enumerate(obs):
-        for host in HOST_BEAMS:
+        for host, beams in hosts.items():
             d = cand_dir(host, n_dirs)
             n_dirs += 1
-            write_summary(d, host, run_summary(sb, start, stop, host))
-            beams = HOST_BEAMS[host]
+            write_summary(d, host, run_summary(sb, start, stop, host, hosts))
             # one candidate 0.3 s after obs start (exercises 1 s rounding),
             # one later
             t1 = start + dt.timedelta(seconds=0.3)
@@ -157,10 +160,10 @@ def write_tree(data: Path, pretty=lambda i: False, obs=OBS) -> None:
 
     # duplicate candidate in a later-processed dir (dedup keeps first)
     d_late = cand_dir("tpn-0-37", 999)
-    write_summary(d_late, "tpn-0-37", run_summary(*OBS[0], "tpn-0-37"))
+    write_summary(d_late, "tpn-0-37", run_summary(*OBS[0], "tpn-0-37", hosts))
     t1 = OBS[0][1] + dt.timedelta(seconds=0.3)
     (d_late / "candA_beam.spccl.log").write_text(
-        spccl_line(mjd(t1), 123.45, 4.2, 9.7, 0, "C", "4:40:17.07", "-43:33:09.0"))
+        spccl_line(mjd(t1), 123.45, 4.2, 9.7, late_beam, "C", "4:40:17.07", "-43:33:09.0"))
 
 
 def run_tables(spark, data: Path) -> dict[str, list]:
@@ -288,19 +291,37 @@ def test_observation_frames_read_checkpoints(spark, pipeline_tree):
         assert "Window" not in plan and "FileScan" not in plan, (name, plan)
 
 
-def test_orphan_observation(spark, tmp_path):
-    """An observation starting more than 1 h after its block's estimated
-    end has no parent block: the null-FK check raises, and without
-    validation the observation keeps a NULL schedule_block_id."""
-    orphan_start = dt.datetime(2023, 11, 20, 22, 50, 0, tzinfo=UTC)  # SB1 ends 21:47:42
-    write_tree(tmp_path, obs=OBS + [(SB1, orphan_start, None)])
-    with pytest.raises(UnexpectedShapeError, match="1 null schedule_block_id"):
-        meertrap_run(spark, str(tmp_path), validate=True)
-    tables = meertrap_run(spark, str(tmp_path), validate=False)
-    rows = {r["t_min"]: r["schedule_block_id"] for r in tables["observation"].collect()}
-    assert len(rows) == 4
-    assert rows.pop(orphan_start.replace(tzinfo=None)) is None
-    assert sorted(rows.values()) == [1, 1, 2]
+SB3 = {**SB2, "id": 79121, "id_code": "20231120-0003"}  # SB2's start time
+NULL_IP = {**HOST_BEAMS, "tpn-0-38": [{**b, "mc_ip": None} for b in HOST_BEAMS["tpn-0-38"]]}
+
+
+@pytest.mark.parametrize(
+    "tree, error, match",
+    [
+        # more than 1 h after SB1's estimated end (21:47:42): no parent
+        ({"obs": OBS + [(SB1, dt.datetime(2023, 11, 20, 22, 50, 0, tzinfo=UTC), None)]},
+         UnexpectedShapeError, "1 null schedule_block_id"),
+        ({"obs": OBS + [(SB3, dt.datetime(2023, 11, 20, 23, 20, 0, tzinfo=UTC), None)]},
+         CardinalityError, r"\['sb_start_at'\] not unique on right side"),
+        ({"hosts": NULL_IP}, UnexpectedShapeError, "null host_id"),
+        ({"late_beam": 99}, UnexpectedShapeError, "after beam-id as-of join"),
+    ],
+    ids=["orphan_observation", "duplicate_sb_start", "null_host_ip", "unmatched_beam"],
+)
+def test_invariant_violation_raises(spark, tmp_path, tree, error, match):
+    """Each of the reference's runtime invariants (null FKs, m:1 joins,
+    the as-of beam match) raises its error on a tree that breaks it."""
+    write_tree(tmp_path, **tree)
+    with pytest.raises(error, match=match):
+        meertrap_run(spark, str(tmp_path))
+
+
+def test_invariants_run_no_job_of_their_own(spark, pipeline_tree):
+    """The checks read counts that the checkpoint jobs observe (a run
+    took 87-88 jobs when each check ran its own)."""
+    with measure(spark, "meertrap_run") as m:
+        meertrap_run(spark, str(pipeline_tree))
+    assert m["jobs"] <= 55, m
 
 
 def test_cand_obs_count_asset(spark):

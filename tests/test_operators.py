@@ -15,6 +15,7 @@ from ska_src_maltopuft_etl_spark.operators import (
     interval_join,
     remap_keys,
     surrogate_key,
+    surrogate_key_with_count,
     validated_join,
 )
 
@@ -148,7 +149,7 @@ def test_surrogate_key_modes(spark):
     assert {(r["c"], r["id"]) for r in simple.collect()} == {
         ("a", 1), ("b", 2), ("c", 3), ("d", 4),
     }
-    scalable = surrogate_key(df, "id", ["c"], scalable=True)
+    scalable = surrogate_key_with_count(df, "id", ["c"])[0]
     assert {(r["c"], r["id"]) for r in scalable.collect()} == {
         ("a", 1), ("b", 2), ("c", 3), ("d", 4),
     }
@@ -157,7 +158,7 @@ def test_surrogate_key_modes(spark):
 def test_surrogate_key_scalable_large(spark):
     n = 10_000
     df = spark.range(n).select((F.col("id") * 37 % n).alias("k"))
-    out = surrogate_key(df, "sk", ["k"], scalable=True)
+    out = surrogate_key_with_count(df, "sk", ["k"])[0]
     rows = out.orderBy("sk").collect()
     assert [r["sk"] for r in rows] == list(range(1, n + 1))
     assert [r["k"] for r in rows] == sorted(r["k"] for r in rows)
@@ -166,7 +167,7 @@ def test_surrogate_key_scalable_large(spark):
 def test_surrogate_key_dense_int_matches_scalable(spark):
     """The dense-int second-pass numbering (round 15: fuses the MeerTRAP
     sp_candidate pass onto the candidate_id key) must reproduce
-    surrogate_key(scalable=True) ids exactly on a gappy key subset —
+    surrogate_key_with_count ids exactly on a gappy key subset —
     including keys at bucket boundaries, an empty-bucket key range, and
     n < num_buckets degenerate splits."""
     from ska_src_maltopuft_etl_spark.operators import surrogate_key_dense_int
@@ -178,7 +179,7 @@ def test_surrogate_key_dense_int_matches_scalable(spark):
         ((F.col("cid") % 3) == 1) & ~F.col("cid").between(2_000, 4_000)
     )
     got = surrogate_key_dense_int(kept, "sk", "cid", key_max=n)
-    want = surrogate_key(kept, "sk", ["cid"], scalable=True)
+    want = surrogate_key_with_count(kept, "sk", ["cid"])[0]
     assert got.orderBy("sk").collect() == want.orderBy("sk").collect()
     # degenerate: fewer rows than buckets, offset respected
     tiny = spark.createDataFrame([(7,), (9_999,)], "cid long")
@@ -221,7 +222,7 @@ def test_surrogate_key_scalable_counter_invariant(spark):
         F.when(F.col("id") < 15_000, F.lit(0)).otherwise(F.col("id")).alias("k"),
         F.col("id").alias("tie"),
     )
-    out = surrogate_key(df, "sk", ["k", "tie"], scalable=True)
+    out = surrogate_key_with_count(df, "sk", ["k", "tie"])[0]
     assert out.count() == 20_000
     agg = out.agg(
         F.min("sk").alias("lo"), F.max("sk").alias("hi"),
@@ -247,7 +248,7 @@ def test_surrogate_key_scalable_plan_no_global_window(spark):
         return buf.getvalue()
 
     dense_plan = plan(surrogate_key(df, "sk", ["k"]))
-    scal_plan = plan(surrogate_key(df, "sk", ["k"], scalable=True))
+    scal_plan = plan(surrogate_key_with_count(df, "sk", ["k"])[0])
     # dense mode is the single-partition shape (what the pipeline must avoid)
     assert "SinglePartition" in dense_plan
     # scalable mode materializes the range-partitioned sort via

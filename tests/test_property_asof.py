@@ -13,7 +13,7 @@ from hypothesis import strategies as st
 from ska_src_maltopuft_etl_spark.operators import (
     asof_join,
     dedup_keep_first,
-    surrogate_key,
+    surrogate_key_with_count,
 )
 
 # Times as small ints (the as-of join works on any orderable type);
@@ -90,7 +90,7 @@ def test_dedup_and_surrogate_deterministic_under_partitioning(spark, data):
         )
         assert got == [(k, v, r) for k, v, r in expected]
 
-        sk = surrogate_key(shuffled, "sk", ["v", "rid"], scalable=True)
+        sk = surrogate_key_with_count(shuffled, "sk", ["v", "rid"])[0]
         ordered = [r["rid"] for r in sk.orderBy("sk").collect()]
         expected_order = list(pdf.sort_values(["v", "rid"])["rid"])
         assert ordered == expected_order
