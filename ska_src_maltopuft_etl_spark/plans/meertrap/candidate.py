@@ -48,7 +48,7 @@ class CandidateTables:
     #: re-joining two projections of the same checkpointed frame (at scale
     #: that join shuffles or broadcasts a fact-sized table for rows
     #: that were never separated; guide §2.4).
-    sp_candidate_wide: DataFrame | None = None
+    sp_candidate_wide: DataFrame
     #: candidates the beam-id as-of join left without a beam
     unmatched_beams: int = 0
 

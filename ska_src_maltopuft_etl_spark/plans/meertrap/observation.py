@@ -11,6 +11,9 @@ risk 1):
 - every ``with_row_index`` surrogate key becomes a ``row_number`` over a
   deterministic total order (the reference's unordered ``unique()`` makes
   several of its ids thread/hash-order dependent — here they are stable);
+- the coherent-beam-config and host ids are a ``dense_rank`` over the
+  rows' own key columns, not ``unique()`` + ``with_row_index`` + a join
+  back (transform.py:179-200, 519-527);
 - the per-row Python interval lookup (transform.py:203-221) becomes a
   broadcast range join with a smallest-id tie-break;
 - ``beams_tilings`` / ``beams_host_beams`` are real ArrayType(Struct)
@@ -20,16 +23,19 @@ risk 1):
 Scale: schedule-block and observation frames are dimension-sized —
 broadcast joins; the wide frame and beam explode are the fact path and
 stay shuffle-partitioned by their join keys. ``transform_observation``
-materializes each dimension frame once (``localCheckpoint``), so the
-checks, the table writes and the candidate as-of join read a few
-hundred rows instead of re-running the JSON scan, the dedup and
-numbering windows and the interval join behind them. The candidate
-(fact) path is not materialized here.
+materializes the schedule-block, unique- and numbered-observation,
+tiling and beam frames once each (``localCheckpoint``), so the checks,
+the table writes and the candidate as-of join read a few hundred rows
+instead of re-running the JSON scan, the dedup and numbering windows and
+the interval join behind them. The candidate (fact) path is not
+materialized here.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -47,7 +53,7 @@ SPEED_OF_LIGHT_M_PER_S = 299_792_458.0
 MHZ_TO_HZ = 1e6
 
 CB_KEYS = ["cb_angle", "cb_fraction_overlap", "cb_x", "cb_y"]
-HOST_KEYS = ["host_ip_address", "host_hostname", "host_port"]
+HOST_KEYS = ["host_hostname", "host_ip_address", "host_port"]
 
 
 class UnexpectedShapeError(RuntimeError):
@@ -209,18 +215,6 @@ def get_obs_df(obs_uniq: DataFrame, sb_df: DataFrame) -> DataFrame:
     return obs.drop("__next_t_min", "sb_est_end_at")
 
 
-def get_coherent_beam_config_df(obs_uniq: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Unique coherent-beam configs + per-observation mapping
-    (transform.py:179-200). Returns (config table, t_min→config_id map)."""
-    per_obs = obs_uniq.select("obs_t_min", *CB_KEYS)
-    uniq = per_obs.select(*CB_KEYS).dropDuplicates()
-    uniq = surrogate_key(uniq, "coherent_beam_config_id", CB_KEYS)
-    mapping = per_obs.join(uniq, CB_KEYS, "left").select(
-        "obs_t_min", "coherent_beam_config_id"
-    )
-    return uniq, mapping
-
-
 def get_tiling_config_df(obs_uniq: DataFrame, obs_df: DataFrame) -> DataFrame:
     """Tiling configs: explode the typed array, split the target field,
     convert coordinates (transform.py:347-437). Position-stable ids via
@@ -258,11 +252,13 @@ def get_tiling_config_df(obs_uniq: DataFrame, obs_df: DataFrame) -> DataFrame:
 
 def get_beam_df(wide: DataFrame) -> DataFrame:
     """Beam rows: hostname from filename, explode host beams, coordinates
-    to degrees, dedup (transform.py:440-516)."""
+    to degrees, dedup (transform.py:440-516). ``obs_t_min``, which
+    follows from ``observation_id``, rides along for the as-of join."""
     beams = wide.select(
-        "filename", "observation_id", F.explode("beams_host_beams").alias("__b")
+        "filename", "observation_id", "obs_t_min", F.explode("beams_host_beams").alias("__b")
     ).select(
         "observation_id",
+        "obs_t_min",
         F.regexp_extract("filename", r"(tpn-\d+-\d+)", 1).alias("host_hostname"),
         F.col("__b.absnum").alias("beam_number"),
         F.col("__b.coherent").alias("beam_coherent"),
@@ -304,12 +300,6 @@ def get_beam_df(wide: DataFrame) -> DataFrame:
     )
 
 
-def get_host_df(beam_df: DataFrame) -> DataFrame:
-    """Unique hosts (transform.py:519-527)."""
-    hosts = beam_df.select(*HOST_KEYS).dropDuplicates()
-    return surrogate_key(hosts, "host_id", ["host_hostname", "host_ip_address", "host_port"])
-
-
 def observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
     """``df`` with its row count (``rows``) and ``metrics`` observed by the
     eager ``localCheckpoint`` every caller feeds it into. Read ``.get``
@@ -328,12 +318,24 @@ def _pinned(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     return df.localCheckpoint(), seen.get
 
 
+def _keys_present(keys: list[str]) -> Column:
+    return reduce(operator.and_, (F.col(c).isNotNull() for c in keys))
+
+
+def _key_id(keys: list[str]) -> Column:
+    """Each row's id for its ``keys`` tuple, numbered as
+    :func:`surrogate_key` numbers the distinct tuples in ``keys`` order:
+    a ``dense_rank`` over an order equals a ``row_number`` over the
+    distinct tuples in that order, and both treat NULL keys as equal."""
+    w = Window.orderBy(*(F.col(c).asc_nulls_last() for c in keys))
+    return F.dense_rank().over(w).cast("long")
+
+
 # The reference's Polars joins assert validate="m:1"; each m:1 LEFT join
 # here asserts that its output keeps the left row count. That fails on
 # every duplicated right key some left row matches. No duplicate goes
 # unmatched: sb_df is built from rows of ``df``, which the wide frame's
-# sb_start_at join holds whole; the config and host maps deduplicate
-# their left side's key columns; obs_df is unique on obs_t_min by its
+# sb_start_at join holds whole, and obs_df is unique on obs_t_min by its
 # dedup (one row per ``obs_uniq`` row once the first check holds).
 def _assert_m1(on: list[str], left_rows: int, joined_rows: int) -> None:
     if joined_rows != left_rows:
@@ -345,15 +347,18 @@ def transform_observation(df: DataFrame) -> ObservationTables:
 
     Each dimension frame is checkpointed as it is built, so every later
     consumer reads the materialized rows rather than the frame's
-    lineage. The reference's runtime assertions (m:1 joins, null FKs)
-    read row and NULL counts that those checkpoint jobs observe, so
-    they cost no job. The returned tables read the checkpoints, which
-    cannot be recomputed: consume them before ``release_all_persisted``.
+    lineage. The config and host ids are numbered inside the observation
+    and beam checkpoints (:func:`_key_id`). The reference's runtime
+    assertions (m:1 joins, null FKs) read row and NULL counts that those
+    checkpoint jobs observe, so they cost no job. The returned tables
+    read the checkpoints, which cannot be recomputed: consume them
+    before ``release_all_persisted``.
     """
     sb_df = get_sb_df(df).localCheckpoint()
 
+    uniq = dedup_keep_first(df, ["obs_t_min"], [F.col("obs_t_max").asc_nulls_last(), "filename"])
     obs_uniq, uniq_n = _pinned(
-        dedup_keep_first(df, ["obs_t_min"], [F.col("obs_t_max").asc_nulls_last(), "filename"]),
+        uniq.withColumn("coherent_beam_config_id", _key_id(CB_KEYS)),
         # get_tiling_config_df's posexplode rows (size is -1 or NULL on NULL)
         tiles=F.sum(F.greatest(F.size("beams_tilings"), F.lit(0))),
     )
@@ -361,10 +366,6 @@ def transform_observation(df: DataFrame) -> ObservationTables:
         get_obs_df(obs_uniq, sb_df), orphans=F.count_if(F.col("schedule_block_id").isNull())
     )
     _assert_m1(["sb_start_at"], uniq_n["rows"], obs_n["rows"])
-    cb_table, cb_map = get_coherent_beam_config_df(obs_uniq)
-    cb_table = cb_table.localCheckpoint()
-    cb_map, cb_n = _pinned(cb_map)
-    _assert_m1(CB_KEYS, uniq_n["rows"], cb_n["rows"])
     tiling_df, tiling_n = _pinned(get_tiling_config_df(obs_uniq, obs_df))
     _assert_m1(["obs_t_min"], uniq_n["tiles"] or 0, tiling_n["rows"])
 
@@ -378,28 +379,23 @@ def transform_observation(df: DataFrame) -> ObservationTables:
     # Wide frame: one row per input file, annotated with every id. The
     # beam checkpoint reads it once and so observes its counts.
     sb_ids = sb_df.select("sb_start_at", "schedule_block_id", "meerkat_schedule_block_id")
-    obs_ids = obs_df.select("obs_t_min", "observation_id").join(
-        F.broadcast(cb_map), "obs_t_min", "left"
-    )
     base, base_seen = observed(
-        df.select("filename", "sb_start_at", "obs_t_min", "obs_t_max", "beams_host_beams")
+        df.select("filename", "sb_start_at", "obs_t_min", "beams_host_beams")
     )
     wide, sb_seen = observed(base.join(sb_ids, "sb_start_at", "left"))
     wide, ids_seen = observed(
-        wide.join(obs_ids, "obs_t_min", "left").drop(base["obs_t_max"]),
+        wide.join(obs_df.select("obs_t_min", "observation_id"), "obs_t_min", "left"),
         orphans=F.count_if(F.col("observation_id").isNull()),
     )
 
-    beam_df, beam_n = _pinned(get_beam_df(wide))
+    beam_df, beam_n = _pinned(
+        get_beam_df(wide).withColumn("host_id", _key_id(HOST_KEYS)),
+        hostless=F.count_if(~_keys_present(HOST_KEYS)),
+    )
     _assert_m1(["sb_start_at"], base_seen.get["rows"], sb_seen.get["rows"])
     _assert_m1(["obs_t_min"], sb_seen.get["rows"], ids_seen.get["rows"])
-    host_df = get_host_df(beam_df).localCheckpoint()
-    beam_df, hosted_n = _pinned(
-        beam_df.join(host_df, HOST_KEYS, "left"), orphans=F.count_if(F.col("host_id").isNull())
-    )
-    _assert_m1(HOST_KEYS, beam_n["rows"], hosted_n["rows"])
 
-    for col, n in (("observation_id", ids_seen.get["orphans"]), ("host_id", hosted_n["orphans"])):
+    for col, n in (("observation_id", ids_seen.get["orphans"]), ("host_id", beam_n["hostless"])):
         if n:
             raise UnexpectedShapeError(f"Merge resulted in null {col}.")
 
@@ -411,7 +407,11 @@ def transform_observation(df: DataFrame) -> ObservationTables:
         F.col("tiling_ra").alias("obs_s_ra"),
         F.col("tiling_dec").alias("obs_s_dec"),
     )
-    obs_full = obs_df.join(F.broadcast(cb_map), "obs_t_min", "left").join(
+    # A NULL config key gets a NULL id on the observation, as from the
+    # reference's equi-join; the config table keeps that row and its id.
+    cb_id = F.when(_keys_present(CB_KEYS), F.col("coherent_beam_config_id"))
+    cb_ids = obs_uniq.select("obs_t_min", cb_id.alias("coherent_beam_config_id"))
+    obs_full = obs_df.join(F.broadcast(cb_ids), "obs_t_min", "left").join(
         first_tile, "observation_id", "left"
     )
 
@@ -445,19 +445,19 @@ def transform_observation(df: DataFrame) -> ObservationTables:
         F.col("mk_sb_proposal_id").alias("proposal_id"),
         "schedule_block_id",
     )
-    host = host_df.select(
+    host = beam_df.select(
         F.col("host_id").alias("id"),
         F.col("host_ip_address").alias("ip_address"),
         F.col("host_hostname").alias("hostname"),
         F.col("host_port").alias("port"),
-    )
-    coherent_beam_config = cb_table.select(
+    ).dropDuplicates()
+    coherent_beam_config = obs_uniq.select(
         F.col("coherent_beam_config_id").alias("id"),
         F.col("cb_angle").alias("angle"),
         F.col("cb_fraction_overlap").alias("fraction_overlap"),
         F.col("cb_x").alias("x"),
         F.col("cb_y").alias("y"),
-    )
+    ).dropDuplicates()
     tiling_config = tiling_df.select(
         F.col("tiling_config_id").alias("id"),
         F.col("tiling_coordinate_type").alias("coordinate_type"),
@@ -482,9 +482,7 @@ def transform_observation(df: DataFrame) -> ObservationTables:
         "observation_id",
         "host_id",
     )
-    beam_obs = beam_df.join(
-        F.broadcast(obs_df.select("observation_id", "obs_t_min")), "observation_id"
-    ).select("beam_number", "beam_coherent", "obs_t_min", "beam_id")
+    beam_obs = beam_df.select("beam_number", "beam_coherent", "obs_t_min", "beam_id")
 
     return ObservationTables(
         schedule_block=schedule_block,

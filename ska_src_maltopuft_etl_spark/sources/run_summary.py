@@ -8,10 +8,10 @@ meertrap/observation/models.py:292-383).
 
 Spark-first differences (SURVEY.md §1.3/§2.1):
 
-- one declarative ``spark.read.schema(...).json`` scan with
-  ``recursiveFileLookup`` — per-file parallelism is the task scheduler's
-  job, and malformed files surface via PERMISSIVE ``_corrupt_record``
-  instead of a skipped thread future;
+- one declarative json scan with ``recursiveFileLookup``
+  (``scan_run_summaries``, shared with the streaming source) — per-file
+  parallelism is the task scheduler's job, and malformed files surface
+  via PERMISSIVE ``_corrupt_record`` instead of a skipped thread future;
 - nested arrays (tilings, host beams, targets) stay
   ``ArrayType(StructType)`` end-to-end — never Python-repr strings;
 - content dedup is a deterministic keep-first over a content hash
@@ -25,8 +25,9 @@ convention, no backtick quoting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -145,37 +146,46 @@ _UTC_FMT = "yyyy-MM-dd'_'HH:mm:ss"
 _SB_START_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSSXXX"
 
 
-def read_run_summaries(spark: SparkSession, directory: str) -> DataFrame:
-    """Scan ``<directory>/**/*run_summary.json`` into the flat prefixed
-    frame the observation transform consumes.
-
-    ``filename`` is ``<candidate_dir>/<file stem>`` exactly as the
-    reference builds it (observation/extract.py:47-57). Each file is one
-    JSON document, compact or pretty-printed, as the reference's
-    ``json.load`` accepts. Corrupt files are quarantined (dropped +
-    available via ``_corrupt_record`` if needed) rather than aborting the
-    scan.
+def scan_run_summaries(reader: DataFrameReader | DataStreamReader, directory: str) -> DataFrame:
+    """Every ``<directory>/**/*run_summary.json`` file as
+    ``RUN_SUMMARY_SCHEMA`` columns, plus ``filename``:
+    ``<candidate_dir>/<file stem>`` exactly as the reference builds it
+    (observation/extract.py:47-57). Each file is one JSON document,
+    compact or pretty-printed, as the reference's ``json.load`` accepts;
+    a file that does not parse has NULL fields and its text in
+    ``_corrupt_record``. ``reader`` is ``spark.read`` or
+    ``spark.readStream``, so the batch and streaming sources read the
+    files alike.
     """
-    raw = (
-        spark.read.schema(RUN_SUMMARY_SCHEMA)
+    path = F.input_file_name()
+    filename = F.concat_ws(
+        "/",
+        F.regexp_extract(path, r"([^/]+)/[^/]+$", 1),
+        F.regexp_replace(F.regexp_extract(path, r"([^/]+)$", 1), r"\.json$", ""),
+    )
+    return (
+        reader.schema(RUN_SUMMARY_SCHEMA)
         .option("multiLine", "true")
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*run_summary.json")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(directory)
-        .withColumn("__path", F.input_file_name())
+        .withColumn("filename", filename)
     )
+
+
+def read_run_summaries(spark: SparkSession, directory: str) -> DataFrame:
+    """Scan ``<directory>/**/*run_summary.json`` into the flat prefixed
+    frame the observation transform consumes. Corrupt files are
+    quarantined (dropped + available via ``_corrupt_record`` if needed)
+    rather than aborting the scan.
+    """
+    raw = scan_run_summaries(spark.read, directory)
     ok = raw.where(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
 
-    filename = F.concat_ws(
-        "/",
-        F.regexp_extract(F.col("__path"), r"([^/]+)/[^/]+$", 1),
-        F.regexp_replace(F.regexp_extract(F.col("__path"), r"([^/]+)$", 1), r"\.json$", ""),
-    )
-
     flat = ok.select(
-        filename.alias("filename"),
+        "filename",
         F.col("beams.ca_target_request.beams").alias("beams_beams"),
         F.col("beams.ca_target_request.tilings").alias("beams_tilings"),
         F.col("beams.coherent_beam_shape.angle").alias("cb_angle"),

@@ -4,15 +4,17 @@ One tab-separated line per file; field 0 is a throwaway index; ``.jpg`` /
 ``.fil`` values get the candidate-directory prefix
 (reference: meertrap/candidate/extract.py:25-117).
 
-Spark-first: one ``spark.read.csv`` scan with an explicit schema replaces
-the per-file thread pool; ``input_file_name()`` supplies the candidate
-directory for path prefixing and the ``filename`` column.
+Spark-first: one csv scan with an explicit schema (``scan_spccl``, shared
+with the streaming source) replaces the per-file thread pool;
+``input_file_name()`` supplies the ``filename`` column, whose candidate
+directory prefixes the paths.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -42,30 +44,41 @@ SPCCL_SCHEMA = StructType(
 )
 
 
+def scan_spccl(reader: DataFrameReader | DataStreamReader, directory: str) -> DataFrame:
+    """Every ``<directory>/**/*spccl*`` line as ``SPCCL_SCHEMA`` columns,
+    plus ``filename``: ``<candidate dir>/<file stem>``, as the reference
+    names it. ``reader`` is ``spark.read`` or ``spark.readStream``, so the
+    batch and streaming sources read the files alike."""
+    path = F.input_file_name()
+    filename = F.concat_ws(
+        "/",
+        F.regexp_extract(path, r"([^/]+)/[^/]+$", 1),
+        F.regexp_replace(F.regexp_extract(path, r"([^/]+)$", 1), r"\.[^.]*$", ""),
+    )
+    return (
+        reader.schema(SPCCL_SCHEMA)
+        .option("sep", "\t")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*spccl*")
+        .csv(directory)
+        .withColumn("filename", filename)
+    )
+
+
 def read_spccl(spark: SparkSession, directory: str) -> DataFrame:
     """Scan ``<directory>/**/*spccl*`` into the prefixed candidate frame.
 
     Output columns follow the reference's rename map
     (cand_*, sp_cand_plot_path, label, probability, fil_file, filename).
     """
-    raw = (
-        spark.read.schema(SPCCL_SCHEMA)
-        .option("sep", "\t")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*spccl*")
-        .csv(directory)
-        .withColumn("__path", F.input_file_name())
-    )
-    cand_dir = F.regexp_extract(F.col("__path"), r"([^/]+)/[^/]+$", 1)
-    stem = F.regexp_replace(
-        F.regexp_extract(F.col("__path"), r"([^/]+)$", 1), r"\.[^.]*$", ""
-    )
+    raw = scan_spccl(spark.read, directory)
+    cand_dir = F.substring_index("filename", "/", 1)
 
     def prefixed(col: str):
         return F.concat_ws("/", cand_dir, F.col(col))
 
     return raw.select(
-        F.concat_ws("/", cand_dir, stem).alias("filename"),
+        "filename",
         F.col("mjd").alias("cand_mjd"),
         F.col("dm").alias("cand_dm"),
         F.col("width").alias("cand_width"),

@@ -20,25 +20,15 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ska_src_maltopuft_etl_spark import functions as K
 from ska_src_maltopuft_etl_spark.operators import asof_join
-from ska_src_maltopuft_etl_spark.sources.spccl import SPCCL_SCHEMA
+from ska_src_maltopuft_etl_spark.sources.spccl import scan_spccl
 
 
 def stream_spccl(spark: SparkSession, directory: str) -> DataFrame:
-    """File-arrival stream of SPCCL candidate lines (streaming S5)."""
-    raw = (
-        spark.readStream.schema(SPCCL_SCHEMA)
-        .option("sep", "\t")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*spccl*")
-        .option("maxFilesPerTrigger", "1000")
-        .csv(directory)
-        .withColumn("__path", F.input_file_name())
-    )
-    cand_dir = F.regexp_extract(F.col("__path"), r"([^/]+)/[^/]+$", 1)
+    """File-arrival stream of SPCCL candidate lines (streaming S5), read
+    as :func:`read_spccl` reads them."""
+    raw = scan_spccl(spark.readStream.option("maxFilesPerTrigger", "1000"), directory)
     return raw.select(
-        F.concat_ws("/", cand_dir, F.regexp_extract(F.col("__path"), r"([^/]+)$", 1)).alias(
-            "filename"
-        ),
+        "filename",
         F.col("mjd").alias("cand_mjd"),
         F.col("dm").alias("cand_dm"),
         F.col("snr").alias("cand_snr"),

@@ -56,26 +56,16 @@ def stream_run_summaries(
 ) -> DataFrame:
     """File-arrival stream of run summaries with content dedup.
 
-    Reuses the batch source's schema + flattening (sources/run_summary)
-    via a thin readStream; event time is the observation start.
+    Reads the files as the batch source does (``scan_run_summaries``);
+    event time is the observation start.
     """
-    from ska_src_maltopuft_etl_spark.sources.run_summary import (
-        RUN_SUMMARY_SCHEMA,
-    )
+    from ska_src_maltopuft_etl_spark.sources.run_summary import scan_run_summaries
 
-    raw = (
-        spark.readStream.schema(RUN_SUMMARY_SCHEMA)
-        .option("multiLine", "true")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*run_summary.json")
-        .option("maxFilesPerTrigger", "1000")
-        .json(directory)
-        .withColumn("__path", F.input_file_name())
-    )
+    raw = scan_run_summaries(spark.readStream.option("maxFilesPerTrigger", "1000"), directory)
     # minimal projection for streaming consumers; the full flatten is the
     # batch path's job once files land in bronze.
     flat = raw.select(
-        F.col("__path").alias("path"),
+        F.input_file_name().alias("path"),
         F.to_timestamp(F.col("utc_start"), "yyyy-MM-dd'_'HH:mm:ss").alias("utc_start"),
         F.md5(F.to_json(F.struct("beams", "data", "sb_details", "utc_start", "utc_stop"))).alias(
             "content_hash"

@@ -291,6 +291,24 @@ def test_observation_frames_read_checkpoints(spark, pipeline_tree):
         assert "Window" not in plan and "FileScan" not in plan, (name, plan)
 
 
+def test_null_coherent_beam_config_key(spark, tmp_path):
+    """An observation whose summaries hold no ``coherent_beam_shape`` gets
+    a NULL config id, as from the reference's equi-join back to the
+    configs, and the config table still holds the NULL-key row and id."""
+    write_tree(tmp_path)
+    for path in tmp_path.glob("*/*run_summary.json"):
+        summary = json.loads(path.read_text())
+        if summary["utc_start"] == fmt_utc(OBS[2][1]):
+            del summary["beams"]["coherent_beam_shape"]
+            path.write_text(json.dumps(summary))
+    got = run_tables(spark, tmp_path)
+    obs = sorted(got["observation"], key=lambda r: r["id"])
+    assert [r["coherent_beam_config_id"] for r in obs] == [1, 1, None]
+    configs = sorted(got["coherent_beam_config"], key=lambda r: r["id"])
+    assert [(r["id"], r["angle"], r["x"]) for r in configs] == [
+        (1, pytest.approx(-54.52), pytest.approx(0.00813)), (2, None, None)]
+
+
 SB3 = {**SB2, "id": 79121, "id_code": "20231120-0003"}  # SB2's start time
 NULL_IP = {**HOST_BEAMS, "tpn-0-38": [{**b, "mc_ip": None} for b in HOST_BEAMS["tpn-0-38"]]}
 
@@ -318,10 +336,16 @@ def test_invariant_violation_raises(spark, tmp_path, tree, error, match):
 
 def test_invariants_run_no_job_of_their_own(spark, pipeline_tree):
     """The checks read counts that the checkpoint jobs observe (a run
-    took 87-88 jobs when each check ran its own)."""
+    took 87-88 jobs when each check ran its own), and the config and host
+    ids ride the observation and beam checkpoints (52 jobs and 12-13 pins
+    when each had its own table, map and join back)."""
+    sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+    pins = sc.getPersistentRDDs().size()
     with measure(spark, "meertrap_run") as m:
         meertrap_run(spark, str(pipeline_tree))
-    assert m["jobs"] <= 55, m
+    assert m["jobs"] <= 39, m
+    # ContextCleaner may drop pins that are garbage, never add any
+    assert sc.getPersistentRDDs().size() - pins <= 9
 
 
 def test_cand_obs_count_asset(spark):

@@ -95,6 +95,7 @@ def test_streaming_candidate_beam_resolution(spark, tmp_path):
     """SPCCL arrival stream → foreachBatch as-of join → resolved beams."""
     import datetime as dt
 
+    from ska_src_maltopuft_etl_spark.sources.spccl import read_spccl
     from ska_src_maltopuft_etl_spark.streaming import resolve_beams_stream
 
     # static beam/observation dimension
@@ -130,6 +131,9 @@ def test_streaming_candidate_beam_resolution(spark, tmp_path):
     assert len(collected) == 2
     by_dm = {round(r["cand_dm"], 1): r["beam_id"] for r in collected}
     assert by_dm == {1.5: 101, 2.5: 102}
+    # the stream names each file as the batch source does (extension cut)
+    batch = read_spccl(spark, str(data)).collect()
+    assert sorted(r["filename"] for r in collected) == sorted(r["filename"] for r in batch)
 
 
 def test_streaming_aggregate_state_maintenance(spark, tmp_path):
