@@ -85,6 +85,7 @@ def main(argv: list[str] | None = None) -> int:
 
             # --config carries the reference's YAML contract
             # (core/config.py:130-139); explicit flags override it.
+            remote_file_root_path = "data"
             if args.config:
                 from ska_src_maltopuft_etl_spark.config import load_config
 
@@ -100,6 +101,7 @@ def main(argv: list[str] | None = None) -> int:
                 if args.output is None and cfg.save_output:
                     args.output = str(cfg.output_path)
                 args.partition_key = cfg.partition_key
+                remote_file_root_path = cfg.remote_file_root_path
             if args.data_dir is None:
                 raise SystemExit("meertrap: DATA_DIR or --config required")
             args.partition_key = args.partition_key or ""
@@ -112,6 +114,7 @@ def main(argv: list[str] | None = None) -> int:
 
                 tables = meertrap_run(
                     spark, args.data_dir,
+                    remote_file_root_path=remote_file_root_path,
                     partition_key=args.partition_key,
                 )
                 loaded = incremental_load(spark, tables, MEERTRAP_TARGETS, args.output)
@@ -121,6 +124,7 @@ def main(argv: list[str] | None = None) -> int:
                 tables = meertrap_run(
                     spark, args.data_dir,
                     output_dir=args.output,
+                    remote_file_root_path=remote_file_root_path,
                     partition_key=args.partition_key,
                 )
                 for name, df in tables.items():

@@ -8,9 +8,10 @@ from ska_src_maltopuft_etl_spark.operators.joins import (
 )
 from ska_src_maltopuft_etl_spark.operators.dedup import (
     dedup_keep_first,
+    first_in_group,
     surrogate_key,
-    surrogate_key_dense_int,
     surrogate_key_with_count,
+    surrogate_key_with_subset,
 )
 from ska_src_maltopuft_etl_spark.operators.graph import (
     connected_components,
@@ -71,13 +72,14 @@ __all__ = [
     "dedup_clusters",
     "dedup_keep_first",
     "exact_percentiles",
+    "first_in_group",
     "interval_join",
     "interval_overlap_join",
     "kmeans_fixed_point",
     "pagerank_fixed_point",
     "remap_keys",
     "surrogate_key",
-    "surrogate_key_dense_int",
     "surrogate_key_with_count",
+    "surrogate_key_with_subset",
     "validated_join",
 ]

@@ -13,7 +13,13 @@ Spark-first notes:
   reference does to absorb candidates in the first 500 ms of an
   observation (candidate/transform.py:113-121);
 - candidate ids are deterministic row numbers over (mjd, filename)
-  rather than the reference's file-scan order.
+  rather than the reference's file-scan order. The dedup flags the
+  first-processed copies instead of dropping the others, so one range
+  sort and one checkpoint give every candidate its ``candidate_id`` and
+  every kept one its ``sp_candidate_id`` (the reference numbers before
+  and after its dedup, candidate/transform.py:166, :215-218);
+- the batch and streaming paths resolve beams with the one
+  :func:`resolve_beams`.
 """
 
 from __future__ import annotations
@@ -26,13 +32,8 @@ from pyspark.sql import functions as F
 from ska_src_maltopuft_etl_spark import functions as K
 from ska_src_maltopuft_etl_spark.operators import (
     asof_join,
-    dedup_keep_first,
-    surrogate_key_dense_int,
-    surrogate_key_with_count,
-)
-from ska_src_maltopuft_etl_spark.plans.meertrap.observation import (
-    UnexpectedShapeError,
-    observed,
+    first_in_group,
+    surrogate_key_with_subset,
 )
 
 
@@ -56,20 +57,40 @@ class CandidateTables:
         return {"candidate": self.candidate, "sp_candidate": self.sp_candidate}
 
 
-def transform_candidate(cand_df: DataFrame, beam_obs: DataFrame) -> tuple[DataFrame, int]:
-    """Candidate rows with coordinates, observed_at, pos and beam_id
-    (candidate/transform.py:87-202). Returns ``(frame, n_candidates)``
-    — the numbering pass collects per-partition sizes anyway, so the
-    total comes free and seeds the second numbering pass's bucket width
-    (see :func:`transform_sp_candidate`)."""
-    # (cand_mjd, filename) is a total order over candidate rows, so the
-    # partition-offset mode produces ids identical to the global-window
-    # mode — without the single-partition exchange that would bottleneck
-    # the fact-sized candidate table at cluster scale.
-    cand, n_total = surrogate_key_with_count(
-        cand_df, "candidate_id", ["cand_mjd", "filename"]
+def resolve_beams(cand: DataFrame, beam_obs: DataFrame) -> DataFrame:
+    """``cand`` with the ``beam_id`` of the latest observation started
+    at or before each candidate's 1 s-rounded ``cand_observed_at``, within
+    its (``cand_beam``, ``cand_coherent``) group; NULL where none did
+    (candidate/transform.py:107-136). ``beam_obs`` is the observation
+    transform's (beam_number, beam_coherent, obs_t_min, beam_id) frame."""
+    right = beam_obs.select(
+        F.col("beam_number").alias("cand_beam"),
+        F.col("beam_coherent").alias("cand_coherent"),
+        "obs_t_min",
+        "beam_id",
     )
-    cand = cand.withColumns(
+    return asof_join(
+        cand.withColumn("__obs_round", K.round_timestamp_seconds("cand_observed_at")),
+        right,
+        left_on="__obs_round",
+        right_on="obs_t_min",
+        by=["cand_beam", "cand_coherent"],
+        right_tiebreak=["beam_id"],
+    ).drop("__obs_round", "obs_t_min")
+
+
+def transform_candidate(cand_df: DataFrame, beam_obs: DataFrame) -> tuple[DataFrame, int]:
+    """The first-processed candidate of each attribute set, with
+    coordinates, observed_at, pos, beam_id, ``candidate_id`` and
+    ``sp_candidate_id`` (candidate/transform.py:16-202, :215-218).
+
+    Both ids come from one range sort on (cand_mjd, filename), a total
+    order, so they equal global-window ids: ``candidate_id`` is the
+    position among all candidates, before the dedup, and
+    ``sp_candidate_id`` the position among the kept ones. Returns (kept
+    candidates, candidates left without a beam); the numbering's sizes
+    job counts the latter."""
+    cand = cand_df.withColumns(
         {
             "cand_coherent": F.col("cand_beam_mode") == "C",
             "cand_observed_at": K.mjd_to_timestamp("cand_mjd"),
@@ -78,75 +99,54 @@ def transform_candidate(cand_df: DataFrame, beam_obs: DataFrame) -> tuple[DataFr
         }
     )
     cand = (
-        cand.drop("cand_mjd", "cand_beam_mode", "cand_ra", "cand_dec")
+        cand.drop("cand_beam_mode", "cand_ra", "cand_dec")
         .withColumnsRenamed({"cand_ra_deg": "cand_ra", "cand_dec_deg": "cand_dec"})
         .withColumn("cand_pos", K.pos_string("cand_ra", "cand_dec"))
     )
-
-    # As-of: latest observation started at-or-before the (1s-rounded)
-    # detection time, within the same (beam number, coherence) group.
-    cand = cand.withColumn("__obs_round", K.round_timestamp_seconds("cand_observed_at"))
-    right = beam_obs.select(
-        F.col("beam_number").alias("cand_beam"),
-        F.col("beam_coherent").alias("cand_coherent"),
-        "obs_t_min",
-        "beam_id",
+    cand = deduplicate_candidates(
+        resolve_beams(cand, beam_obs).drop("cand_beam", "cand_coherent")
     )
-    joined = asof_join(
+    kept, seen = surrogate_key_with_subset(
         cand,
-        right,
-        left_on="__obs_round",
-        right_on="obs_t_min",
-        by=["cand_beam", "cand_coherent"],
-        right_tiebreak=["beam_id"],
-    ).drop("__obs_round", "obs_t_min")
-    return joined.drop("cand_beam", "cand_coherent"), n_total
+        "candidate_id",
+        ["cand_mjd", "filename"],
+        "cand_first",
+        "sp_candidate_id",
+        unmatched=F.count_if(F.col("beam_id").isNull()),
+    )
+    return kept, seen["unmatched"]
 
 
 def deduplicate_candidates(cand: DataFrame) -> DataFrame:
-    """Keep the first-processed candidate per attribute set
-    (candidate/transform.py:16-68). processed_at is the unix timestamp
+    """Flag (``cand_first``) the first-processed candidate per attribute
+    set (candidate/transform.py:16-68). processed_at is the unix timestamp
     embedded in the candidate directory name <hostname>_<unix_ts>/."""
     processed_at = (
         F.split(F.split(F.col("filename"), "_").getItem(1), "/").getItem(0).cast("long")
     )
-    cand = cand.withColumn("processed_at", processed_at)
-    return dedup_keep_first(
-        cand,
-        [
-            "cand_dm",
-            "cand_snr",
-            "cand_ra",
-            "cand_dec",
-            "cand_width",
-            "cand_observed_at",
-            "beam_id",
-        ],
-        ["processed_at", "filename"],
-    ).drop("processed_at")
+    return cand.withColumn(
+        "cand_first",
+        first_in_group(
+            [
+                "cand_dm",
+                "cand_snr",
+                "cand_ra",
+                "cand_dec",
+                "cand_width",
+                "cand_observed_at",
+                "beam_id",
+            ],
+            [processed_at.asc_nulls_last(), "filename"],
+        ),
+    )
 
 
 def transform_sp_candidate(
-    cand: DataFrame,
-    remote_file_root_path: str,
-    partition_key: str,
-    n_candidates: int,
+    cand: DataFrame, remote_file_root_path: str, partition_key: str
 ) -> DataFrame:
     """sp_candidate rows: plot path prefixed with the remote root and
-    partition (candidate/transform.py:205-227).
-
-    The numbering follows ``candidate_id`` — the dense 1-based key the
-    FIRST scalable pass assigned — so instead of a second full
-    range-partitioning pass (sampling job + range shuffle + fact-sized
-    localCheckpoint pin + sizes collect), the rank is recovered from
-    ``candidate_id``'s known range via :func:`surrogate_key_dense_int`:
-    one hash exchange, one tiny counts collect, nothing pinned
-    (VERDICT r14 #1 — fuse the two key assignments onto one sorted
-    lineage)."""
-    sp = surrogate_key_dense_int(
-        cand, "sp_candidate_id", "candidate_id", key_max=n_candidates
-    )
-    return sp.withColumn(
+    partition (candidate/transform.py:205-227)."""
+    return cand.withColumn(
         "sp_cand_plot_path",
         F.concat_ws(
             "/",
@@ -164,24 +164,10 @@ def transform_spccl(
     partition_key: str = "",
 ) -> CandidateTables:
     """Candidate transformation entrypoint (candidate/transform.py:230-237).
-    Raises if the as-of join changed the candidate count; candidates it
-    left without a beam are counted in ``unmatched_beams``."""
-    cand, n_candidates = transform_candidate(cand_df, beam_obs)
-    # The deduped candidates feed both output tables: checkpoint them,
-    # and observe the as-of output inside that checkpoint's job. filename
-    # is consumed by the dedup (processed_at + tie-break) and referenced
-    # nowhere below — drop it before the checkpoint so the pinned blocks
-    # carry only live columns (guide §5).
-    cand, asof_seen = observed(cand, unmatched=F.count_if(F.col("beam_id").isNull()))
-    cand = deduplicate_candidates(cand).drop("filename").localCheckpoint()
-    asof_n = asof_seen.get
-    if asof_n["rows"] != n_candidates:
-        raise UnexpectedShapeError(
-            "Unexpected number of candidates after beam-id as-of join."
-        )
-    sp = transform_sp_candidate(
-        cand, remote_file_root_path, partition_key, n_candidates
-    )
+    Candidates the as-of join left without a beam are counted in
+    ``unmatched_beams``."""
+    cand, unmatched = transform_candidate(cand_df, beam_obs)
+    sp = transform_sp_candidate(cand, remote_file_root_path, partition_key)
 
     candidate = cand.select(
         F.col("candidate_id").alias("id"),
@@ -203,5 +189,5 @@ def transform_spccl(
         candidate=candidate,
         sp_candidate=sp_candidate,
         sp_candidate_wide=sp,
-        unmatched_beams=asof_n["unmatched"],
+        unmatched_beams=unmatched,
     )

@@ -6,8 +6,9 @@ row-order-dependent idioms replaced by explicit keys (SURVEY.md §7.3
 risk 1):
 
 - both positional hstacks (transform.py:45, :368-369) become key joins
-  on ``sb_start_at`` / ``obs_t_min``, each asserted m:1 from row counts
-  that the checkpoint jobs observe (no check runs a job of its own);
+  on ``sb_start_at`` / ``obs_t_min``: the ``sb_start_at`` ones asserted
+  m:1 from row counts that the checkpoint jobs observe (no check runs a
+  job of its own), the ``obs_t_min`` ones m:1 by construction;
 - every ``with_row_index`` surrogate key becomes a ``row_number`` over a
   deterministic total order (the reference's unordered ``unique()`` makes
   several of its ids thread/hash-order dependent — here they are stable);
@@ -331,12 +332,15 @@ def _key_id(keys: list[str]) -> Column:
     return F.dense_rank().over(w).cast("long")
 
 
-# The reference's Polars joins assert validate="m:1"; each m:1 LEFT join
-# here asserts that its output keeps the left row count. That fails on
-# every duplicated right key some left row matches. No duplicate goes
-# unmatched: sb_df is built from rows of ``df``, which the wide frame's
-# sb_start_at join holds whole, and obs_df is unique on obs_t_min by its
-# dedup (one row per ``obs_uniq`` row once the first check holds).
+# The reference's Polars joins assert validate="m:1"; each sb_start_at
+# LEFT join here asserts that its output keeps the left row count. That
+# fails on every duplicated right key some left row matches, and no
+# duplicate goes unmatched: sb_df is built from rows of ``df``, which the
+# wide frame's join holds whole. The two obs_t_min joins need no check:
+# ``obs_uniq`` is unique on obs_t_min by its dedup; once the first
+# sb_start_at check holds, get_obs_df keeps one row per ``obs_uniq`` row,
+# as its interval_join with a tie_break keeps one row per left row. So
+# obs_df is unique on obs_t_min too.
 def _assert_m1(on: list[str], left_rows: int, joined_rows: int) -> None:
     if joined_rows != left_rows:
         raise CardinalityError(f"join keys {on} not unique on right side (expect=m:1)")
@@ -357,17 +361,12 @@ def transform_observation(df: DataFrame) -> ObservationTables:
     sb_df = get_sb_df(df).localCheckpoint()
 
     uniq = dedup_keep_first(df, ["obs_t_min"], [F.col("obs_t_max").asc_nulls_last(), "filename"])
-    obs_uniq, uniq_n = _pinned(
-        uniq.withColumn("coherent_beam_config_id", _key_id(CB_KEYS)),
-        # get_tiling_config_df's posexplode rows (size is -1 or NULL on NULL)
-        tiles=F.sum(F.greatest(F.size("beams_tilings"), F.lit(0))),
-    )
+    obs_uniq, uniq_n = _pinned(uniq.withColumn("coherent_beam_config_id", _key_id(CB_KEYS)))
     obs_df, obs_n = _pinned(
         get_obs_df(obs_uniq, sb_df), orphans=F.count_if(F.col("schedule_block_id").isNull())
     )
     _assert_m1(["sb_start_at"], uniq_n["rows"], obs_n["rows"])
-    tiling_df, tiling_n = _pinned(get_tiling_config_df(obs_uniq, obs_df))
-    _assert_m1(["obs_t_min"], uniq_n["tiles"] or 0, tiling_n["rows"])
+    tiling_df = get_tiling_config_df(obs_uniq, obs_df).localCheckpoint()
 
     # Null-FK invariant (transform.py:98-104): every observation must
     # sit inside a schedule block (+1h grace).
@@ -393,7 +392,6 @@ def transform_observation(df: DataFrame) -> ObservationTables:
         hostless=F.count_if(~_keys_present(HOST_KEYS)),
     )
     _assert_m1(["sb_start_at"], base_seen.get["rows"], sb_seen.get["rows"])
-    _assert_m1(["obs_t_min"], sb_seen.get["rows"], ids_seen.get["rows"])
 
     for col, n in (("observation_id", ids_seen.get["orphans"]), ("host_id", beam_n["hostless"])):
         if n:

@@ -36,17 +36,15 @@ def meertrap_run(
     ``output_dir`` when given (K1 checkpoint role, gzip like the
     reference's stage outputs, meertrap.py:64).
     """
-    from pyspark import StorageLevel
-
     # Every observation table, check and the candidate as-of input derive
     # from the parsed summaries: checkpoint them so none re-plans the
-    # JSON scan. The candidate frame is fact-sized and only cached.
+    # JSON scan. The candidate scan is read once, by the as-of exchange
+    # below the candidate numbering's checkpoint.
     obs_raw = read_run_summaries(spark, data_dir).localCheckpoint()
-    cand_raw = read_spccl(spark, data_dir).persist(StorageLevel.MEMORY_AND_DISK)
 
     obs_tables = transform_observation(obs_raw)
     cand_tables = transform_spccl(
-        cand_raw,
+        read_spccl(spark, data_dir),
         obs_tables.beam_obs,
         remote_file_root_path=remote_file_root_path,
         partition_key=partition_key or os.path.basename(data_dir.rstrip("/")),

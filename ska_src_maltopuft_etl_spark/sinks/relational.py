@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 from typing import Sequence
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -166,7 +166,8 @@ def incremental_load(
        ``localCheckpoint``;
     4. the (local id → final id) keymap that feeds children and the
        append below are both plain projections of that one pinned frame;
-    5. only novel rows are appended (merge semantics — K3/K4).
+    5. only novel rows are appended (merge semantics — K3/K4); a table
+       that gains none gets no file.
 
     A missing table is a first load; a table that exists but cannot be
     read raises rather than being renumbered from 1.
@@ -236,17 +237,24 @@ def incremental_load(
         # The keymap's lineage would drag the ENTIRE upstream pipeline
         # DAG into every child table's plan — after a few tables the
         # combined plan string alone can OOM the driver. Eagerly
-        # localCheckpoint to truncate lineage at each table boundary.
-        numbered = df.withColumn(
-            "__final_id", F.coalesce("__existing_id", novel_id.cast("long"))
-        ).localCheckpoint()
+        # localCheckpoint to truncate lineage at each table boundary; its
+        # job also counts the novel rows.
+        seen = Observation()
+        numbered = (
+            df.withColumn("__final_id", F.coalesce("__existing_id", novel_id.cast("long")))
+            .observe(seen, F.count_if(is_novel).alias("novel"))
+            .localCheckpoint()
+        )
         keymaps[name] = numbered.select(
             F.col(pk).alias("old"), F.col("__final_id").alias("new")
         )
-        novel = numbered.where(is_novel).withColumn(pk, F.col("__final_id"))
-        novel.select(*tables[name].columns).write.mode("append").option(
-            "compression", "gzip"
-        ).parquet(path)
+        # A rerun appends nothing: skip the empty file. A missing table
+        # is still written, so an empty first batch creates it.
+        if existing is None or seen.get["novel"]:
+            novel = numbered.where(is_novel).withColumn(pk, F.col("__final_id"))
+            novel.select(*tables[name].columns).write.mode("append").option(
+                "compression", "gzip"
+            ).parquet(path)
         loaded[name] = spark.read.parquet(path)
     return loaded
 

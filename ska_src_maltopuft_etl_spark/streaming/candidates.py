@@ -2,11 +2,11 @@
 candidate rows.
 
 The batch pipeline resolves each candidate's beam with the backward
-as-of join (plans/meertrap/candidate.py). Streams can't run window
-functions, so the idiomatic composition is ``foreachBatch``: each
-micro-batch is a bounded DataFrame that reuses the *batch* operator
-verbatim against the (slowly-changing, broadcastable) beam/observation
-dimension. Exactly-once lands on the idempotent merge sink — the same
+as-of join (plans/meertrap/candidate.py ``resolve_beams``). Streams
+can't run window functions, so the idiomatic composition is
+``foreachBatch``: each micro-batch is a bounded DataFrame that runs that
+same function against the (slowly-changing, broadcastable)
+beam/observation dimension. Exactly-once lands on the idempotent merge sink — the same
 recipe the reference achieves with re-runs + ON CONFLICT.
 """
 
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ska_src_maltopuft_etl_spark import functions as K
-from ska_src_maltopuft_etl_spark.operators import asof_join
+from ska_src_maltopuft_etl_spark.plans.meertrap.candidate import resolve_beams
 from ska_src_maltopuft_etl_spark.sources.spccl import scan_spccl
 
 
@@ -54,28 +54,11 @@ def resolve_beams_stream(
     dimension from the observation transform — dimension-sized, so the
     per-batch join broadcasts it.
     """
-    stream = stream_spccl(spark, directory)
-    right = beam_obs.select(
-        F.col("beam_number").alias("cand_beam"),
-        F.col("beam_coherent").alias("cand_coherent"),
-        "obs_t_min",
-        "beam_id",
-    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        withround = batch_df.withColumn(
-            "__obs_round", K.round_timestamp_seconds("cand_observed_at")
-        )
-        resolved = asof_join(
-            withround,
-            right,
-            left_on="__obs_round",
-            right_on="obs_t_min",
-            by=["cand_beam", "cand_coherent"],
-            right_tiebreak=["beam_id"],
-        ).drop("__obs_round", "obs_t_min")
-        sink(resolved, batch_id)
+        sink(resolve_beams(batch_df, beam_obs), batch_id)
 
+    stream = stream_spccl(spark, directory)
     writer = stream.writeStream.foreachBatch(process).outputMode("append")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)

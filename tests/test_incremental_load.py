@@ -168,3 +168,40 @@ def test_incremental_load_pins_one_frame_per_table(spark, tmp_path):
     before = jsc.getPersistentRDDs().size()
     incremental_load(spark, tables, MEERTRAP_TARGETS, str(tmp_path / "wh"))
     assert jsc.getPersistentRDDs().size() - before <= len(MEERTRAP_TARGETS)
+
+
+def test_incremental_load_rerun_writes_no_file(spark, tmp_path):
+    """Rerunning a loaded batch appends nothing, so it leaves every
+    table's files and the returned frames as they were; an empty first
+    batch still creates its table."""
+    from ska_src_maltopuft_etl_spark.sinks import TargetInformation
+
+    out = tmp_path / "wh"
+    targets = [
+        TargetInformation("account", "", "id", unique_key=("email",)),
+        TargetInformation("login", "", "id", {"account_id": "account"}, ("at", "account_id")),
+        TargetInformation("note", "", "id", unique_key=("text",)),
+    ]
+    tables = {
+        "account": spark.createDataFrame(
+            [(1, "a@x.io"), (2, "b@x.io")], "id long, email string"
+        ),
+        "login": spark.createDataFrame([(1, 10, 2), (2, 11, 1)], "id long, at long, account_id long"),
+        "note": spark.createDataFrame([], "id long, text string"),
+    }
+
+    def files() -> dict[str, list[str]]:
+        return {
+            t.table_name: sorted(p.name for p in (out / f"{t.table_name}.parquet").iterdir())
+            for t in targets
+        }
+
+    def rows(loaded) -> dict[str, list]:
+        return {name: sorted(df.collect()) for name, df in loaded.items()}
+
+    first = rows(incremental_load(spark, tables, targets, str(out)))
+    assert first["note"] == [] and len(first["login"]) == 2
+    before = files()
+    again = rows(incremental_load(spark, tables, targets, str(out)))
+    assert files() == before
+    assert again == first

@@ -336,16 +336,43 @@ def test_invariant_violation_raises(spark, tmp_path, tree, error, match):
 
 def test_invariants_run_no_job_of_their_own(spark, pipeline_tree):
     """The checks read counts that the checkpoint jobs observe (a run
-    took 87-88 jobs when each check ran its own), and the config and host
+    took 87-88 jobs when each check ran its own), the config and host
     ids ride the observation and beam checkpoints (52 jobs and 12-13 pins
-    when each had its own table, map and join back)."""
+    when each had its own table, map and join back), and both candidate
+    ids come from one sorted checkpoint (36 jobs and 9 pins with a cached
+    scan and a second numbering pass over a second checkpoint)."""
     sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
     pins = sc.getPersistentRDDs().size()
     with measure(spark, "meertrap_run") as m:
         meertrap_run(spark, str(pipeline_tree))
-    assert m["jobs"] <= 39, m
+    assert m["jobs"] <= 35, m
     # ContextCleaner may drop pins that are garbage, never add any
-    assert sc.getPersistentRDDs().size() - pins <= 9
+    assert sc.getPersistentRDDs().size() - pins <= 7
+
+
+@pytest.mark.parametrize("incremental", [False, True], ids=["overwrite", "incremental"])
+def test_cli_config_remote_root(spark, tmp_path, monkeypatch, incremental):
+    """``meertrap --config`` prefixes plot paths with the config's
+    ``remote_file_root_path``, on the overwrite and incremental paths."""
+    from ska_src_maltopuft_etl_spark.cli import main
+
+    data = tmp_path / "data" / "2023-11-20"
+    data.mkdir(parents=True)
+    write_tree(data)
+    out = tmp_path / "out"
+    cfg = tmp_path / "config.yml"
+    cfg.write_text(
+        f"data_path: {tmp_path / 'data'}\n"
+        "partition_key: 2023-11-20\n"
+        f"output_path: {out}\n"
+        "remote_file_root_path: s3://bucket/cands\n"
+    )
+    # main stops its session when done; keep the shared test session
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    assert main(["meertrap", "--config", str(cfg)] + ["--incremental"] * incremental) == 0
+    paths = [r["plot_path"] for r in spark.read.parquet(f"{out}/sp_candidate.parquet").collect()]
+    assert len(paths) == 12
+    assert all(p.startswith("s3://bucket/cands/2023-11-20/") for p in paths), paths
 
 
 def test_cand_obs_count_asset(spark):

@@ -164,49 +164,65 @@ def test_surrogate_key_scalable_large(spark):
     assert [r["k"] for r in rows] == sorted(r["k"] for r in rows)
 
 
-def test_surrogate_key_dense_int_matches_scalable(spark):
-    """The dense-int second-pass numbering (round 15: fuses the MeerTRAP
-    sp_candidate pass onto the candidate_id key) must reproduce
-    surrogate_key_with_count ids exactly on a gappy key subset —
-    including keys at bucket boundaries, an empty-bucket key range, and
-    n < num_buckets degenerate splits."""
-    from ska_src_maltopuft_etl_spark.operators import surrogate_key_dense_int
+def test_surrogate_key_subset_matches_scalable(spark):
+    """surrogate_key_with_subset numbers a flagged subset from the sort
+    that numbers all rows: on a gappy keep pattern, each kept row's
+    subset id equals surrogate_key_with_count over the kept rows and its
+    all-row id equals surrogate_key_with_count over all rows — across
+    range partitions (a whole one without a kept row) and on fewer rows
+    than partitions."""
+    from ska_src_maltopuft_etl_spark.operators import surrogate_key_with_subset
 
-    n = 10_000
-    base = spark.range(1, n + 1).select(F.col("id").alias("cid"))
-    # keep ~1/3 of keys, biased gaps: drop whole ranges plus a modulus
-    kept = base.where(
-        ((F.col("cid") % 3) == 1) & ~F.col("cid").between(2_000, 4_000)
-    )
-    got = surrogate_key_dense_int(kept, "sk", "cid", key_max=n)
-    want = surrogate_key_with_count(kept, "sk", ["cid"])[0]
-    assert got.orderBy("sk").collect() == want.orderBy("sk").collect()
-    # degenerate: fewer rows than buckets, offset respected
-    tiny = spark.createDataFrame([(7,), (9_999,)], "cid long")
-    rows = (
-        surrogate_key_dense_int(tiny, "sk", "cid", key_max=n, offset=5)
-        .orderBy("sk")
-        .collect()
-    )
-    assert [(r["cid"], r["sk"]) for r in rows] == [(7, 5), (9_999, 6)]
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    # one range partition per shuffle partition, so the per-partition
+    # offsets are exercised instead of AQE coalescing into one
+    spark.conf.set(coalesce, "false")
+    try:
+        n = 10_000
+        base = spark.range(1, n + 1).select(
+            F.col("id").alias("cid"),
+            # keep ~1/3 of keys, biased gaps: drop whole ranges plus a modulus
+            (((F.col("id") % 3) == 1) & ~F.col("id").between(2_000, 4_000)).alias("keep"),
+        )
+        got, seen = surrogate_key_with_subset(
+            base, "sk", ["cid"], "keep", "ksk", n_kept=F.count_if("keep")
+        )
+        assert got.select(F.spark_partition_id()).distinct().count() > 1
+        kept = base.where("keep")
+        want_all = surrogate_key_with_count(base, "sk", ["cid"])[0].where("keep")
+        want_kept = surrogate_key_with_count(kept, "ksk", ["cid"])[0]
+        want = want_all.join(want_kept.select("cid", "ksk"), "cid")
+        cols = ["cid", "keep", "sk", "ksk"]
+        assert (
+            got.select(cols).orderBy("cid").collect()
+            == want.select(cols).orderBy("cid").collect()
+        )
+        assert seen == {"n_kept": kept.count()}
+        # degenerate: fewer rows than partitions, the first row not kept
+        tiny = spark.createDataFrame(
+            [(9_999, True), (7, True), (3, False)], "cid long, keep boolean"
+        )
+        rows, seen = surrogate_key_with_subset(tiny, "sk", ["cid"], "keep", "ksk")
+        assert seen == {}
+        assert sorted((r["cid"], r["sk"], r["ksk"]) for r in rows.collect()) == [
+            (7, 2, 1), (9_999, 3, 2)]
+    finally:
+        spark.conf.set(coalesce, prev)
 
 
-@pytest.mark.parametrize("key_col", ["cand-id", "cand.id", "cand`id"])
-def test_surrogate_key_dense_int_quotes_key_col(spark, key_col):
-    """A key column whose name is not a bare SQL identifier is numbered
+@pytest.mark.parametrize("odd", ["cand-id", "cand.id", "cand`id"])
+def test_surrogate_key_subset_quotes_names(spark, odd):
+    """A flag column and key names that are not bare SQL identifiers work
     like any other."""
-    from ska_src_maltopuft_etl_spark.operators import surrogate_key_dense_int
+    from ska_src_maltopuft_etl_spark.operators import surrogate_key_with_subset
 
-    df = spark.createDataFrame([(9,), (3,), (5,)], "k long").withColumnRenamed(
-        "k", key_col
-    )
-    # The keys must span more than one of the defaultParallelism buckets,
-    # or the per-bucket offsets go unexercised.
-    w = -(-10 // spark.sparkContext.defaultParallelism)
-    assert len({(k - 1) // w for k in (3, 5, 9)}) > 1
-    out = surrogate_key_dense_int(df, "sk", key_col, key_max=10)
-    rows = sorted(tuple(r) for r in out.collect())
-    assert rows == [(3, 1), (5, 2), (9, 3)]
+    df = spark.createDataFrame(
+        [(9, True), (3, False), (5, True), (1, True)], "k long, f boolean"
+    ).withColumnRenamed("f", odd)
+    out, _ = surrogate_key_with_subset(df, f"{odd}_all", ["k"], odd, f"{odd}_kept")
+    rows = sorted((r["k"], r[f"{odd}_all"], r[f"{odd}_kept"]) for r in out.collect())
+    assert rows == [(1, 1, 1), (5, 3, 2), (9, 4, 3)]
 
 
 def test_surrogate_key_scalable_counter_invariant(spark):
