@@ -594,29 +594,20 @@ def validated_join(
 # Key remap (J9 / F17)
 # ---------------------------------------------------------------------------
 
-def remap_keys(
-    df: DataFrame,
-    key_col: str,
-    keymap: DataFrame,
-    old_col: str = "old",
-    new_col: str = "new",
-    broadcast: bool = True,
-) -> DataFrame:
-    """Replace ``key_col`` values via a mapping table, keeping the
-    original value when unmapped (``mapping.get(x, x)`` semantics).
+def remap_keys(df: DataFrame, key_col: str, keymap: DataFrame) -> DataFrame:
+    """Replace ``key_col`` values via a dimension-sized ``old → new``
+    mapping table, keeping the original value when unmapped
+    (``mapping.get(x, x)`` semantics).
 
     The reference holds the map as a driver dict and applies it per row
     (core/database_loader.py:182-188, tests/test_map_keys.py:7-57) — a
-    non-starter at scale. Here it is a left join + coalesce: distributed,
-    no driver state. ``broadcast=True`` (default) hints the map side —
-    right for dimension-sized keymaps; pass False for fact-sized maps
-    and let AQE pick the strategy from runtime stats.
+    non-starter at scale. Here it is a broadcast left join + coalesce:
+    distributed, no driver state.
     """
     mapping = keymap.select(
-        F.col(old_col).alias("__old"), F.col(new_col).alias("__new")
+        F.col("old").alias("__old"), F.col("new").alias("__new")
     ).dropDuplicates(["__old"])
-    rhs = F.broadcast(mapping) if broadcast else mapping
-    out = df.join(rhs, df[key_col] == F.col("__old"), "left")
+    out = df.join(F.broadcast(mapping), df[key_col] == F.col("__old"), "left")
     return out.withColumn(
         key_col, F.coalesce(F.col("__new"), F.col(key_col))
     ).drop("__old", "__new")

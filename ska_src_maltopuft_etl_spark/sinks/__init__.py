@@ -23,7 +23,6 @@ from ska_src_maltopuft_etl_spark.sinks.relational import (
     incremental_load,
     TargetInformation,
     load_targets_on_conflict,
-    prepare_data_for_insert,
 )
 from ska_src_maltopuft_etl_spark.sinks.introspection import (
     execute_jdbc_sql,
@@ -50,7 +49,6 @@ __all__ = [
     "TargetInformation",
     "incremental_load",
     "load_targets_on_conflict",
-    "prepare_data_for_insert",
     "execute_jdbc_sql",
     "jdbc_connection",
     "targets_from_jdbc",

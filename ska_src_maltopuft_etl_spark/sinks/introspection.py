@@ -203,7 +203,6 @@ def targets_from_jdbc(
     url: str,
     tables: Sequence[str],
     properties: dict[str, str] | None = None,
-    table_prefixes: dict[str, str] | None = None,
     schema: str | None = None,
 ) -> tuple[TargetInformation, ...]:
     """Build :class:`TargetInformation` for ``tables`` from the live schema.
@@ -218,16 +217,12 @@ def targets_from_jdbc(
     tables : table names to introspect (any case; resolved against the
         catalog). FK edges pointing at tables OUTSIDE this list are kept
         as metadata but do not constrain the ordering.
-    table_prefixes : optional ``table -> column prefix`` for
-        :func:`~.relational.prepare_data_for_insert` slicing (defaults
-        to ``""``, the reference's convention for unprefixed frames).
     schema : optional schema to scope catalog lookups to (otherwise a
         same-named table in another schema could be introspected).
 
     Returns targets in FK-dependency (load) order; ties broken by the
     caller's ``tables`` order so the result is deterministic.
     """
-    prefixes = table_prefixes or {}
     with jdbc_connection(spark, url, properties) as conn:
         md = conn.getMetaData()
         resolved: dict[str, str] = {}
@@ -305,7 +300,6 @@ def targets_from_jdbc(
 
             infos[t] = TargetInformation(
                 table_name=t,
-                table_prefix=prefixes.get(t, ""),
                 primary_key=pk,
                 foreign_keys=fks,
                 unique_key=unique_sets[0] if unique_sets else (),

@@ -15,8 +15,9 @@ dicts cannot scale, so
 - idempotency is a MERGE-shaped upsert: anti-join new rows against the
   existing natural keys, append only the novel ones (exactly the
   semantics of ``INSERT ... ON CONFLICT DO NOTHING``);
-- FK remap from pre-existing rows is a broadcast join
-  (operators/joins.py remap_keys), not a dict.
+- FK remap is a join against the parent table's keymap, not a dict; a
+  non-NULL FK with no parent row in the batch raises, as the reference's
+  FK constraints would reject it.
 
 Two sinks: :func:`incremental_load` for parquet directories (tests /
 lakehouse), which also reconciles ids and remaps FKs across batches, and
@@ -29,7 +30,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
@@ -42,7 +42,6 @@ class TargetInformation:
     by :func:`~.introspection.targets_from_jdbc`)."""
 
     table_name: str
-    table_prefix: str
     primary_key: str
     #: fk column name → parent table name (load-order DAG edges).
     foreign_keys: dict[str, str] = field(default_factory=dict)
@@ -61,28 +60,6 @@ class TargetInformation:
         return head + tuple(tuple(k) for k in self.extra_unique_keys)
 
 
-def prepare_data_for_insert(df: DataFrame, target: TargetInformation) -> DataFrame:
-    """Prefix-slice the wide frame into one table's insert frame (K5,
-    core/database_loader.py:27-67).
-
-    Uses removeprefix semantics — the reference's ``col.replace(prefix,
-    "")`` replaces the prefix anywhere in the name, a latent bug noted in
-    SURVEY.md §2.2.
-    """
-    cols = [
-        c
-        for c in df.columns
-        if c.startswith(target.table_prefix)
-        or c == target.primary_key
-        or c in target.foreign_keys
-    ]
-    def stripped(c: str) -> str:
-        return c[len(target.table_prefix):] if c.startswith(target.table_prefix) else c
-
-    renamed = [F.col(c).alias(stripped(c)) for c in cols]
-    return df.select(*renamed).dropDuplicates([stripped(target.primary_key)])
-
-
 def _null_safe_key_condition(left_cols: Sequence[str], right_cols: Sequence[str]):
     """AND-fold of null-safe equality over paired key columns.
 
@@ -99,45 +76,45 @@ def _null_safe_key_condition(left_cols: Sequence[str], right_cols: Sequence[str]
 
 #: MeerTRAP load order = the FK dependency DAG (meertrap/meertrap.py:173-197).
 MEERTRAP_TARGETS: tuple[TargetInformation, ...] = (
-    TargetInformation("schedule_block", "", "id", {}, ("start_at", "est_end_at")),
+    TargetInformation("schedule_block", "id", {}, ("start_at", "est_end_at")),
     TargetInformation(
-        "meerkat_schedule_block", "", "id",
+        "meerkat_schedule_block", "id",
         {"schedule_block_id": "schedule_block"}, ("meerkat_id",),
     ),
-    TargetInformation("host", "", "id", {}, ("ip_address", "hostname", "port")),
+    TargetInformation("host", "id", {}, ("ip_address", "hostname", "port")),
     TargetInformation(
-        "coherent_beam_config", "", "id", {}, ("angle", "fraction_overlap", "x", "y")
+        "coherent_beam_config", "id", {}, ("angle", "fraction_overlap", "x", "y")
     ),
     TargetInformation(
-        "observation", "", "id",
+        "observation", "id",
         {"schedule_block_id": "schedule_block",
          "coherent_beam_config_id": "coherent_beam_config"},
         ("t_min",),
     ),
     TargetInformation(
-        "tiling_config", "", "id", {"observation_id": "observation"},
+        "tiling_config", "id", {"observation_id": "observation"},
         ("observation_id", "epoch", "nbeams", "overlap", "target"),
     ),
     TargetInformation(
-        "beam", "", "id", {"observation_id": "observation", "host_id": "host"},
+        "beam", "id", {"observation_id": "observation", "host_id": "host"},
         ("number", "coherent", "observation_id"),
     ),
     TargetInformation(
-        "candidate", "", "id", {"beam_id": "beam"},
+        "candidate", "id", {"beam_id": "beam"},
         ("dm", "snr", "ra", "dec", "width", "observed_at", "beam_id"),
     ),
     TargetInformation(
-        "sp_candidate", "", "id", {"candidate_id": "candidate"}, ("plot_path",)
+        "sp_candidate", "id", {"candidate_id": "candidate"}, ("plot_path",)
     ),
 )
 
 ATNF_TARGETS: tuple[TargetInformation, ...] = (
-    TargetInformation("catalogue", "", "id", {}, ("name",)),
+    TargetInformation("catalogue", "id", {}, ("name",)),
     TargetInformation(
-        "catalogue_visit", "", "id", {"catalogue_id": "catalogue"}, ("visited_at",)
+        "catalogue_visit", "id", {"catalogue_id": "catalogue"}, ("visited_at",)
     ),
     TargetInformation(
-        "known_pulsar", "", "id", {"catalogue_visit_id": "catalogue_visit"},
+        "known_pulsar", "id", {"catalogue_visit_id": "catalogue_visit"},
         ("name", "catalogue_visit_id"),
     ),
 )
@@ -157,105 +134,137 @@ def incremental_load(
     one pass per table in FK order:
 
     1. remap this table's FK columns through the parents' keymaps
-       (broadcast joins — J9);
+       (joins — J9). NULL FKs stay NULL; a non-NULL FK with no row in
+       its parent's batch raises, naming the table and column, before
+       the table is written (the reference's FK constraints reject it);
     2. match rows against the existing table on the natural key
-       (broadcast anti/left join) — matches adopt the existing id;
+       (left joins) — matches adopt the existing id;
     3. novel rows get fresh contiguous ids above the existing max, in
        local-id order (a ``row_number`` window); each row's final id —
        existing or fresh — is pinned ONCE per table with
-       ``localCheckpoint``;
+       ``localCheckpoint``, whose job also counts the novel rows and
+       the orphan FKs;
     4. the (local id → final id) keymap that feeds children and the
        append below are both plain projections of that one pinned frame;
     5. only novel rows are appended (merge semantics — K3/K4); a table
        that gains none gets no file.
 
-    A missing table is a first load; a table that exists but cannot be
-    read raises rather than being renumbered from 1.
+    A table whose path does not exist (on its Hadoop filesystem, with
+    the session's Hadoop conf, as the reader sees it) is a first load; a
+    table that exists but cannot be read raises rather than being
+    renumbered from 1. The per-table checkpoints are released before the
+    call returns or raises; the returned frames are re-reads of the
+    written tables, and the caller's caches are left alone.
 
     Re-running the same batch is a no-op; partially-overlapping batches
     append only the new rows, with FKs pointing at the surviving ids.
     """
-    from ska_src_maltopuft_etl_spark.operators import remap_keys
-
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()  # noqa: SLF001
     keymaps: dict[str, DataFrame] = {}
     loaded: dict[str, DataFrame] = {}
-    for target in targets:
-        name, pk = target.table_name, target.primary_key
-        df = tables[name]
-        for fk_col, parent in target.foreign_keys.items():
-            if parent in keymaps:
+    pinned: list[DataFrame] = []
+    try:
+        for target in targets:
+            name, pk = target.table_name, target.primary_key
+            df = tables[name]
+            orphan_flags: dict[str, str] = {}
+            for fk_col, parent in target.foreign_keys.items():
+                if parent not in keymaps:
+                    continue
+                flag = orphan_flags[fk_col] = f"__orphan_{fk_col}"
                 # keymaps scale with the batch's table size (fact tables
                 # can be huge) — no forced broadcast; AQE decides.
-                df = remap_keys(df, fk_col, keymaps[parent], broadcast=False)
-        path = f"{output_dir}/{name}.parquet"
-        try:
-            existing = spark.read.parquet(path)
-        except AnalysisException as e:
-            # Only a missing table is a first load: an unreadable one
-            # must raise, not be renumbered from 1 beside its old files.
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            existing = None
+                df = (
+                    df.join(keymaps[parent], F.col(fk_col) == F.col("__old"), "left")
+                    .withColumn(flag, F.col(fk_col).isNotNull() & F.col("__new").isNull())
+                    .withColumn(fk_col, F.col("__new"))
+                    .drop("__old", "__new")
+                )
+            path = f"{output_dir}/{name}.parquet"
+            jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+            existing = (
+                spark.read.parquet(path)
+                if jpath.getFileSystem(hadoop_conf).exists(jpath)
+                else None
+            )
 
-        # Match against EVERY unique constraint, like
-        # load_targets_on_conflict — a table with extra_unique_keys must
-        # not get weaker dedup on the incremental path. The first set
-        # that matches wins (coalesce order = constraint declaration
-        # order, deterministic).
-        key_sets = [list(ks) for ks in target.all_unique_keys] or [
-            [c for c in df.columns if c != pk]
-        ]
-        if existing is not None:
-            eids = []
-            for si, nk in enumerate(key_sets):
-                aliased = [f"__nk{si}_{i}" for i in range(len(nk))]
-                eid = f"__eid{si}"
-                match = existing.select(
-                    *[F.col(c).alias(a) for c, a in zip(nk, aliased)],
-                    F.col(pk).alias(eid),
-                ).dropDuplicates(aliased)
-                # existing tables grow without bound — let AQE pick the
-                # join strategy instead of forcing a broadcast.
-                # Null-safe equality so NULL key columns (e.g.
-                # sp_candidate plot_path) match on re-runs instead of
-                # re-appending with fresh ids.
-                df = df.join(
-                    match, _null_safe_key_condition(nk, aliased), "left"
-                ).drop(*aliased)
-                eids.append(eid)
-            df = df.withColumn(
-                "__existing_id", F.coalesce(*[F.col(e) for e in eids])
-            ).drop(*eids)
-            offset_row = existing.agg(F.max(pk).alias("m")).first()
-            offset = int(offset_row["m"] or 0)
-        else:
-            df = df.withColumn("__existing_id", F.lit(None).cast("long"))
-            offset = 0
+            # Match against EVERY unique constraint, like
+            # load_targets_on_conflict — a table with extra_unique_keys
+            # must not get weaker dedup on the incremental path. The
+            # first set that matches wins (coalesce order = constraint
+            # declaration order, deterministic).
+            key_sets = [list(ks) for ks in target.all_unique_keys] or [
+                [c for c in tables[name].columns if c != pk]
+            ]
+            if existing is not None:
+                eids = []
+                for si, nk in enumerate(key_sets):
+                    aliased = [f"__nk{si}_{i}" for i in range(len(nk))]
+                    eid = f"__eid{si}"
+                    match = existing.select(
+                        *[F.col(c).alias(a) for c, a in zip(nk, aliased)],
+                        F.col(pk).alias(eid),
+                    ).dropDuplicates(aliased)
+                    # existing tables grow without bound — let AQE pick
+                    # the join strategy instead of forcing a broadcast.
+                    # Null-safe equality so NULL key columns (e.g.
+                    # sp_candidate plot_path) match on re-runs instead of
+                    # re-appending with fresh ids.
+                    df = df.join(
+                        match, _null_safe_key_condition(nk, aliased), "left"
+                    ).drop(*aliased)
+                    eids.append(eid)
+                df = df.withColumn(
+                    "__existing_id", F.coalesce(*[F.col(e) for e in eids])
+                ).drop(*eids)
+                offset_row = existing.agg(F.max(pk).alias("m")).first()
+                offset = int(offset_row["m"] or 0)
+            else:
+                df = df.withColumn("__existing_id", F.lit(None).cast("long"))
+                offset = 0
 
-        is_novel = F.col("__existing_id").isNull()
-        novel_id = F.row_number().over(Window.partitionBy(is_novel).orderBy(pk)) + offset
-        # The keymap's lineage would drag the ENTIRE upstream pipeline
-        # DAG into every child table's plan — after a few tables the
-        # combined plan string alone can OOM the driver. Eagerly
-        # localCheckpoint to truncate lineage at each table boundary; its
-        # job also counts the novel rows.
-        seen = Observation()
-        numbered = (
-            df.withColumn("__final_id", F.coalesce("__existing_id", novel_id.cast("long")))
-            .observe(seen, F.count_if(is_novel).alias("novel"))
-            .localCheckpoint()
-        )
-        keymaps[name] = numbered.select(
-            F.col(pk).alias("old"), F.col("__final_id").alias("new")
-        )
-        # A rerun appends nothing: skip the empty file. A missing table
-        # is still written, so an empty first batch creates it.
-        if existing is None or seen.get["novel"]:
-            novel = numbered.where(is_novel).withColumn(pk, F.col("__final_id"))
-            novel.select(*tables[name].columns).write.mode("append").option(
-                "compression", "gzip"
-            ).parquet(path)
-        loaded[name] = spark.read.parquet(path)
+            is_novel = F.col("__existing_id").isNull()
+            novel_id = F.row_number().over(Window.partitionBy(is_novel).orderBy(pk)) + offset
+            # The keymap's lineage would drag the ENTIRE upstream
+            # pipeline DAG into every child table's plan — after a few
+            # tables the combined plan string alone can OOM the driver.
+            # Eagerly localCheckpoint to truncate lineage at each table
+            # boundary; its job also counts novel rows and orphan FKs.
+            seen = Observation()
+            numbered = (
+                df.withColumn("__final_id", F.coalesce("__existing_id", novel_id.cast("long")))
+                .observe(
+                    seen,
+                    F.count_if(is_novel).alias("novel"),
+                    *[F.count_if(flag).alias(flag) for flag in orphan_flags.values()],
+                )
+                .drop(*orphan_flags.values())
+                .localCheckpoint()
+            )
+            pinned.append(numbered)
+            metrics = seen.get
+            for fk_col, flag in orphan_flags.items():
+                if metrics[flag]:
+                    raise ValueError(
+                        f"{name}.{fk_col}: {metrics[flag]} rows reference no "
+                        f"{target.foreign_keys[fk_col]} row in this batch"
+                    )
+            keymaps[name] = numbered.select(
+                F.col(pk).alias("__old"), F.col("__final_id").alias("__new")
+            ).dropDuplicates(["__old"])
+            # A rerun appends nothing: skip the empty file. A missing
+            # table is still written, so an empty first batch creates it.
+            if existing is None or metrics["novel"]:
+                novel = numbered.where(is_novel).withColumn(pk, F.col("__final_id"))
+                novel.select(*tables[name].columns).write.mode("append").option(
+                    "compression", "gzip"
+                ).parquet(path)
+            loaded[name] = spark.read.parquet(path)
+    finally:
+        for numbered in pinned:
+            # The checkpoint's own RDD: a caller's cache, perhaps first
+            # materialized inside this call, stays.
+            numbered._jdf.logicalPlan().rdd().unpersist(False)  # noqa: SLF001
     return loaded
 
 
@@ -265,7 +274,6 @@ def load_targets_on_conflict(
     targets: Sequence[TargetInformation],
     jdbc_url: str,
     jdbc_properties: dict[str, str] | None = None,
-    staging_suffix: str = "_stage",
 ) -> dict[str, DataFrame]:
     """Executable twin of the reference's ``INSERT .. ON CONFLICT DO
     NOTHING`` round trip (reference core/insert.py:76-119), set-based.
@@ -318,7 +326,7 @@ def load_targets_on_conflict(
     loaded: dict[str, DataFrame] = {}
     for target in targets:
         name = check_identifier(target.table_name)
-        stage = check_identifier(f"{name}{staging_suffix}")
+        stage = check_identifier(f"{name}_stage")
         df = tables[name]
         df = df.dropDuplicates([target.primary_key])
         for ks in target.all_unique_keys:

@@ -175,15 +175,13 @@ def scan_run_summaries(reader: DataFrameReader | DataStreamReader, directory: st
     )
 
 
-def read_run_summaries(spark: SparkSession, directory: str) -> DataFrame:
-    """Scan ``<directory>/**/*run_summary.json`` into the flat prefixed
-    frame the observation transform consumes. Corrupt files are
-    quarantined (dropped + available via ``_corrupt_record`` if needed)
-    rather than aborting the scan.
+def parse_run_summaries(raw: DataFrame) -> DataFrame:
+    """``scan_run_summaries`` output, batch or streaming, as the flat
+    prefixed columns the observation transform consumes, plus the S4
+    dedup key ``content_hash`` over every column but ``filename``.
+    Files that did not parse are dropped rather than aborting the scan.
     """
-    raw = scan_run_summaries(spark.read, directory)
     ok = raw.where(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-
     flat = ok.select(
         "filename",
         F.col("beams.ca_target_request.beams").alias("beams_beams"),
@@ -215,14 +213,17 @@ def read_run_summaries(spark: SparkSession, directory: str) -> DataFrame:
         F.col("pipeline").alias("search_pipeline"),
         F.col("version_info").alias("version_info"),
     )
+    content_cols = [c for c in flat.columns if c != "filename"]
+    return flat.withColumn("content_hash", F.md5(F.to_json(F.struct(*content_cols))))
 
+
+def read_run_summaries(spark: SparkSession, directory: str) -> DataFrame:
+    """Scan ``<directory>/**/*run_summary.json`` into the flat prefixed
+    frame the observation transform consumes (``parse_run_summaries``),
+    one row per distinct content.
+    """
+    hashed = parse_run_summaries(scan_run_summaries(spark.read, directory))
     # S4 content dedup: identical summaries shared by many candidate dirs
     # collapse to one row; deterministic winner = lexicographically first
     # filename (the reference's winner is thread-timing dependent).
-    content_cols = [c for c in flat.columns if c != "filename"]
-    hashed = flat.withColumn(
-        "__content_hash", F.md5(F.to_json(F.struct(*content_cols)))
-    )
-    return dedup_keep_first(hashed, ["__content_hash"], ["filename"]).drop(
-        "__content_hash"
-    )
+    return dedup_keep_first(hashed, ["content_hash"], ["filename"]).drop("content_hash")

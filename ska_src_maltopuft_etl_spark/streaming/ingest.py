@@ -5,9 +5,10 @@ handled by re-runs + content dedup + idempotent upserts. On a cluster the
 natural evolution is a file-arrival stream with the same semantics:
 
 - ``stream_run_summaries``: streaming version of the run-summary scan —
-  same schema, same flattening; ``dropDuplicatesWithinWatermark`` on the
-  content hash replaces the batch keep-first dedup (S4/W1) for files that
-  arrive within the watermark horizon;
+  same schema, quarantine, flattening and content hash;
+  ``dropDuplicatesWithinWatermark`` on the content hash replaces the
+  batch keep-first dedup (S4/W1) for files that arrive within the
+  watermark horizon;
 - ``stream_with_watermark_dedup``: the generic operator;
 - ``sessionize_events``: an example custom stateful operator
   (``applyInPandasWithState``) — session windows with timeout, the shape
@@ -36,6 +37,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ska_src_maltopuft_etl_spark.sources.run_summary import parse_run_summaries, scan_run_summaries
+
 
 def stream_with_watermark_dedup(
     df: DataFrame,
@@ -56,21 +59,17 @@ def stream_run_summaries(
 ) -> DataFrame:
     """File-arrival stream of run summaries with content dedup.
 
-    Reads the files as the batch source does (``scan_run_summaries``);
-    event time is the observation start.
+    Reads, quarantines and hashes the files as the batch source does
+    (``parse_run_summaries``); event time is the observation start.
     """
-    from ska_src_maltopuft_etl_spark.sources.run_summary import scan_run_summaries
-
     raw = scan_run_summaries(spark.readStream.option("maxFilesPerTrigger", "1000"), directory)
-    # minimal projection for streaming consumers; the full flatten is the
+    # minimal projection for streaming consumers; the full frame is the
     # batch path's job once files land in bronze.
-    flat = raw.select(
+    flat = parse_run_summaries(raw).select(
         F.input_file_name().alias("path"),
-        F.to_timestamp(F.col("utc_start"), "yyyy-MM-dd'_'HH:mm:ss").alias("utc_start"),
-        F.md5(F.to_json(F.struct("beams", "data", "sb_details", "utc_start", "utc_stop"))).alias(
-            "content_hash"
-        ),
-        F.col("sb_details.id").alias("meerkat_id"),
+        F.col("obs_t_min").alias("utc_start"),
+        "content_hash",
+        F.col("mk_sb_meerkat_id").alias("meerkat_id"),
     )
     return stream_with_watermark_dedup(flat, "utc_start", ["content_hash"], watermark)
 

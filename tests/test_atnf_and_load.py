@@ -9,10 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark.plans.atnf import atnf_run
-from ska_src_maltopuft_etl_spark.sinks import (
-    TargetInformation,
-    prepare_data_for_insert,
-)
+from ska_src_maltopuft_etl_spark.sinks import TargetInformation
 
 
 def fake_atnf() -> pd.DataFrame:
@@ -43,17 +40,6 @@ def test_atnf_pipeline(spark):
     assert ps[0]["dec"] == pytest.approx(-47.25269, abs=1e-5)
     assert ps[0]["pos"] == "(69.31663,-47.25269)"
     assert "dm" in tables["known_pulsar"].columns
-
-
-def test_prepare_data_for_insert(spark):
-    wide = spark.createDataFrame(
-        [(1, 10, "x", 5.0), (2, 20, "y", 6.0), (2, 20, "y", 6.0)],
-        "obs_id int, schedule_block_id int, obs_name string, other double",
-    )
-    t = TargetInformation("observation", "obs_", "obs_id", ("schedule_block_id",))
-    out = prepare_data_for_insert(wide, t)
-    assert sorted(out.columns) == ["id", "name", "schedule_block_id"]
-    assert out.count() == 2
 
 
 def test_atnf_two_visits_incremental(spark, tmp_path):
@@ -100,7 +86,7 @@ def test_incremental_load_null_safe_keys(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, None), (2, "b.png")], "id int, plot_path string"
     )
-    targets = (TargetInformation("sp", "", "id", {}, ("plot_path",)),)
+    targets = (TargetInformation("sp", "id", {}, ("plot_path",)),)
     loaded1 = incremental_load(spark, {"sp": df}, targets, out)
     assert loaded1["sp"].count() == 2
     loaded2 = incremental_load(spark, {"sp": df}, targets, out)

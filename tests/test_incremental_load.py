@@ -14,6 +14,7 @@ from ska_src_maltopuft_etl_spark.plans.meertrap import meertrap_run
 from ska_src_maltopuft_etl_spark.sinks import MEERTRAP_TARGETS, incremental_load
 
 from tests.test_meertrap_pipeline import HOST_BEAMS, OBS, mjd, run_summary, spccl_line
+from tools.metrics import measure
 
 
 def _write_batch(root, obs_list, start_offset):
@@ -45,14 +46,16 @@ def test_incremental_load_reconciles_ids_and_fks(spark, tmp_path):
     _write_batch(batch2, OBS, 100)
 
     t1 = meertrap_run(spark, str(batch1), partition_key="p1")
-    loaded1 = incremental_load(spark, t1, MEERTRAP_TARGETS, out)
+    with measure(spark, "first") as first:
+        loaded1 = incremental_load(spark, t1, MEERTRAP_TARGETS, out)
     sb1 = {(r["id"],) for r in loaded1["schedule_block"].collect()}
     assert len(sb1) == 1
     n_obs_1 = loaded1["observation"].count()
     assert n_obs_1 == 2
 
     t2 = meertrap_run(spark, str(batch2), partition_key="p2")
-    loaded2 = incremental_load(spark, t2, MEERTRAP_TARGETS, out)
+    with measure(spark, "overlap") as overlap:
+        loaded2 = incremental_load(spark, t2, MEERTRAP_TARGETS, out)
     sbs = sorted(r["id"] for r in loaded2["schedule_block"].collect())
     assert sbs == [1, 2]  # SB1 kept its id, SB2 appended
     obs = loaded2["observation"].collect()
@@ -76,10 +79,14 @@ def test_incremental_load_reconciles_ids_and_fks(spark, tmp_path):
     cands = loaded2["candidate"].collect()
     assert all(c["beam_id"] in beams for c in cands)
     # re-running batch2 is a no-op (idempotency)
-    loaded3 = incremental_load(spark, meertrap_run(spark, str(batch2), partition_key="p2"),
-                               MEERTRAP_TARGETS, out)
+    t3 = meertrap_run(spark, str(batch2), partition_key="p2")
+    with measure(spark, "rerun") as rerun:
+        loaded3 = incremental_load(spark, t3, MEERTRAP_TARGETS, out)
     for name in ("schedule_block", "observation", "beam", "candidate", "sp_candidate"):
         assert loaded3[name].count() == loaded2[name].count(), name
+    # 63, 106 and 99 jobs alone; a full suite run once read one more
+    bounds = ((first, 65), (overlap, 108), (rerun, 101))
+    assert all(m["jobs"] <= n for m, n in bounds), bounds
 
 
 def test_incremental_load_matches_on_every_unique_set(spark, tmp_path):
@@ -91,7 +98,7 @@ def test_incremental_load_matches_on_every_unique_set(spark, tmp_path):
 
     out = str(tmp_path / "wh")
     target = TargetInformation(
-        "account", "", "id",
+        "account", "id",
         unique_key=("email",),
         extra_unique_keys=(("username",),),
     )
@@ -141,7 +148,7 @@ def test_incremental_load_raises_on_unreadable_table(spark, tmp_path):
     from ska_src_maltopuft_etl_spark.sinks import TargetInformation
 
     out = tmp_path / "wh"
-    target = TargetInformation("account", "", "id", unique_key=("email",))
+    target = TargetInformation("account", "id", unique_key=("email",))
     batch = spark.createDataFrame([(1, "a@x.io")], "id long, email string")
     incremental_load(spark, {"account": batch}, [target], str(out))
     table = out / "account.parquet"
@@ -154,9 +161,11 @@ def test_incremental_load_raises_on_unreadable_table(spark, tmp_path):
     assert sorted(p.name for p in table.iterdir()) == files
 
 
-def test_incremental_load_pins_one_frame_per_table(spark, tmp_path):
-    """Each table pins one frame, its rows' final ids; the keymap and the
-    append are projections of it."""
+def test_incremental_load_releases_its_pins(spark, tmp_path):
+    """The call releases its per-table checkpoints before returning (it
+    used to leave one pinned per table) and nothing else: a batch table
+    the caller cached, which the call's own jobs materialize, stays
+    cached."""
     batch, stage = tmp_path / "p1", str(tmp_path / "stage")
     _write_batch(batch, OBS[:2], 0)
     meertrap_run(spark, str(batch), output_dir=stage)
@@ -164,10 +173,42 @@ def test_incremental_load_pins_one_frame_per_table(spark, tmp_path):
         t.table_name: spark.read.parquet(f"{stage}/{t.table_name}.parquet")
         for t in MEERTRAP_TARGETS
     }
+    tables["beam"] = tables["beam"].cache()
     jsc = spark.sparkContext._jsc  # noqa: SLF001
-    before = jsc.getPersistentRDDs().size()
+    before = set(jsc.getPersistentRDDs())
     incremental_load(spark, tables, MEERTRAP_TARGETS, str(tmp_path / "wh"))
-    assert jsc.getPersistentRDDs().size() - before <= len(MEERTRAP_TARGETS)
+    added = set(jsc.getPersistentRDDs()) - before
+    # the one RDD added is the caller's cache, built by the call's jobs
+    assert len(added) == 1
+    assert added <= {info.id() for info in jsc.sc().getRDDStorageInfo()}
+    tables["beam"].unpersist(blocking=True)
+    # ContextCleaner may drop pins that are garbage, never add any
+    assert set(jsc.getPersistentRDDs()) <= before
+
+
+def test_incremental_load_rejects_orphan_fk(spark, tmp_path):
+    """A non-NULL FK with no row in its parent's batch raises, naming
+    the table and column, and its table is not written; a NULL FK
+    loads as NULL. ``login`` declares no unique key, so it matches on
+    all its columns but the primary key."""
+    from ska_src_maltopuft_etl_spark.sinks import TargetInformation
+
+    out = tmp_path / "wh"
+    targets = [
+        TargetInformation("account", "id", unique_key=("email",)),
+        TargetInformation("login", "id", {"account_id": "account"}),
+    ]
+    account = spark.createDataFrame([(1, "a@x.io")], "id long, email string")
+    login = spark.createDataFrame([(1, 10, 1), (2, 11, None)], "id long, at long, account_id long")
+    loaded = incremental_load(spark, {"account": account, "login": login}, targets, str(out / "ok"))
+    assert {r["at"]: r["account_id"] for r in loaded["login"].collect()} == {10: 1, 11: None}
+    loaded = incremental_load(spark, {"account": account, "login": login}, targets, str(out / "ok"))
+    assert loaded["login"].count() == 2
+
+    orphan = spark.createDataFrame([(1, 10, 1), (2, 11, 7)], "id long, at long, account_id long")
+    with pytest.raises(ValueError, match=r"login\.account_id: 1 rows reference no account"):
+        incremental_load(spark, {"account": account, "login": orphan}, targets, str(out / "bad"))
+    assert not (out / "bad" / "login.parquet").exists()
 
 
 def test_incremental_load_rerun_writes_no_file(spark, tmp_path):
@@ -178,9 +219,9 @@ def test_incremental_load_rerun_writes_no_file(spark, tmp_path):
 
     out = tmp_path / "wh"
     targets = [
-        TargetInformation("account", "", "id", unique_key=("email",)),
-        TargetInformation("login", "", "id", {"account_id": "account"}, ("at", "account_id")),
-        TargetInformation("note", "", "id", unique_key=("text",)),
+        TargetInformation("account", "id", unique_key=("email",)),
+        TargetInformation("login", "id", {"account_id": "account"}, ("at", "account_id")),
+        TargetInformation("note", "id", unique_key=("text",)),
     ]
     tables = {
         "account": spark.createDataFrame(

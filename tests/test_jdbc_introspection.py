@@ -102,14 +102,14 @@ def test_targets_from_jdbc_derives_constraints_and_load_order(spark, jdbc):
     # Same tuples a static declaration would hand-write (cf.
     # MEERTRAP_TARGETS in sinks/relational.py) — but discovered.
     assert sb == TargetInformation(
-        "i_schedule_block", "", "id", {}, ("start_at", "est_end_at")
+        "i_schedule_block", "id", {}, ("start_at", "est_end_at")
     )
     assert obs == TargetInformation(
-        "i_observation", "", "id",
+        "i_observation", "id",
         {"schedule_block_id": "i_schedule_block"}, ("t_min",),
     )
     assert beam == TargetInformation(
-        "i_beam", "", "id",
+        "i_beam", "id",
         {"observation_id": "i_observation"}, ("number", "observation_id"),
     )
 
@@ -284,7 +284,7 @@ def test_check_identifier_rejects_sql_fragments(spark, jdbc):
     assert check_identifier("i_beam") == "i_beam"
     with pytest.raises(ValueError, match="unsafe"):
         check_identifier('x"; DROP TABLE i_beam; --')
-    bad = TargetInformation("bad name!", "", "id", {}, ("c",))
+    bad = TargetInformation("bad name!", "id", {}, ("c",))
     with pytest.raises(ValueError, match="unsafe"):
         load_targets_on_conflict(
             spark,
@@ -329,7 +329,7 @@ def _items_batch(spark, keys):
 def test_on_conflict_merge_commutes_over_batch_order(spark, a, b):
     import tempfile
 
-    target = TargetInformation("h_items", "", "id", {}, ("ukey",))
+    target = TargetInformation("h_items", "id", {}, ("ukey",))
     finals = []
     for order in ((a, b), (b, a)):
         dbdir = tempfile.mkdtemp(prefix="derby_commute_")

@@ -26,9 +26,9 @@ from ska_src_maltopuft_etl_spark.sinks.relational import (
 )
 
 TARGETS = (
-    TargetInformation("jdbc_schedule_block", "", "id", {}, ("start_at",)),
+    TargetInformation("jdbc_schedule_block", "id", {}, ("start_at",)),
     TargetInformation(
-        "jdbc_observation", "", "id",
+        "jdbc_observation", "id",
         {"schedule_block_id": "jdbc_schedule_block"}, ("t_min",),
     ),
 )

@@ -25,6 +25,18 @@ def ts(s):
 
 
 @pytest.fixture()
+def uncoalesced(spark):
+    """One range partition per shuffle partition, so the per-partition
+    offsets of the surrogate keys are exercised instead of AQE
+    coalescing a test's input into one partition."""
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    yield
+    spark.conf.set(coalesce, prev)
+
+
+@pytest.fixture()
 def obs(spark):
     # right side of the as-of join: observation starts per (beam, coherent)
     return spark.createDataFrame(
@@ -155,15 +167,18 @@ def test_surrogate_key_modes(spark):
     }
 
 
+@pytest.mark.usefixtures("uncoalesced")
 def test_surrogate_key_scalable_large(spark):
     n = 10_000
     df = spark.range(n).select((F.col("id") * 37 % n).alias("k"))
     out = surrogate_key_with_count(df, "sk", ["k"])[0]
+    assert out.select(F.spark_partition_id()).distinct().count() > 1
     rows = out.orderBy("sk").collect()
     assert [r["sk"] for r in rows] == list(range(1, n + 1))
     assert [r["k"] for r in rows] == sorted(r["k"] for r in rows)
 
 
+@pytest.mark.usefixtures("uncoalesced")
 def test_surrogate_key_subset_matches_scalable(spark):
     """surrogate_key_with_subset numbers a flagged subset from the sort
     that numbers all rows: on a gappy keep pattern, each kept row's
@@ -173,42 +188,34 @@ def test_surrogate_key_subset_matches_scalable(spark):
     than partitions."""
     from ska_src_maltopuft_etl_spark.operators import surrogate_key_with_subset
 
-    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce)
-    # one range partition per shuffle partition, so the per-partition
-    # offsets are exercised instead of AQE coalescing into one
-    spark.conf.set(coalesce, "false")
-    try:
-        n = 10_000
-        base = spark.range(1, n + 1).select(
-            F.col("id").alias("cid"),
-            # keep ~1/3 of keys, biased gaps: drop whole ranges plus a modulus
-            (((F.col("id") % 3) == 1) & ~F.col("id").between(2_000, 4_000)).alias("keep"),
-        )
-        got, seen = surrogate_key_with_subset(
-            base, "sk", ["cid"], "keep", "ksk", n_kept=F.count_if("keep")
-        )
-        assert got.select(F.spark_partition_id()).distinct().count() > 1
-        kept = base.where("keep")
-        want_all = surrogate_key_with_count(base, "sk", ["cid"])[0].where("keep")
-        want_kept = surrogate_key_with_count(kept, "ksk", ["cid"])[0]
-        want = want_all.join(want_kept.select("cid", "ksk"), "cid")
-        cols = ["cid", "keep", "sk", "ksk"]
-        assert (
-            got.select(cols).orderBy("cid").collect()
-            == want.select(cols).orderBy("cid").collect()
-        )
-        assert seen == {"n_kept": kept.count()}
-        # degenerate: fewer rows than partitions, the first row not kept
-        tiny = spark.createDataFrame(
-            [(9_999, True), (7, True), (3, False)], "cid long, keep boolean"
-        )
-        rows, seen = surrogate_key_with_subset(tiny, "sk", ["cid"], "keep", "ksk")
-        assert seen == {}
-        assert sorted((r["cid"], r["sk"], r["ksk"]) for r in rows.collect()) == [
-            (7, 2, 1), (9_999, 3, 2)]
-    finally:
-        spark.conf.set(coalesce, prev)
+    n = 10_000
+    base = spark.range(1, n + 1).select(
+        F.col("id").alias("cid"),
+        # keep ~1/3 of keys, biased gaps: drop whole ranges plus a modulus
+        (((F.col("id") % 3) == 1) & ~F.col("id").between(2_000, 4_000)).alias("keep"),
+    )
+    got, seen = surrogate_key_with_subset(
+        base, "sk", ["cid"], "keep", "ksk", n_kept=F.count_if("keep")
+    )
+    assert got.select(F.spark_partition_id()).distinct().count() > 1
+    kept = base.where("keep")
+    want_all = surrogate_key_with_count(base, "sk", ["cid"])[0].where("keep")
+    want_kept = surrogate_key_with_count(kept, "ksk", ["cid"])[0]
+    want = want_all.join(want_kept.select("cid", "ksk"), "cid")
+    cols = ["cid", "keep", "sk", "ksk"]
+    assert (
+        got.select(cols).orderBy("cid").collect()
+        == want.select(cols).orderBy("cid").collect()
+    )
+    assert seen == {"n_kept": kept.count()}
+    # degenerate: fewer rows than partitions, the first row not kept
+    tiny = spark.createDataFrame(
+        [(9_999, True), (7, True), (3, False)], "cid long, keep boolean"
+    )
+    rows, seen = surrogate_key_with_subset(tiny, "sk", ["cid"], "keep", "ksk")
+    assert seen == {}
+    assert sorted((r["cid"], r["sk"], r["ksk"]) for r in rows.collect()) == [
+        (7, 2, 1), (9_999, 3, 2)]
 
 
 @pytest.mark.parametrize("odd", ["cand-id", "cand.id", "cand`id"])
@@ -225,6 +232,7 @@ def test_surrogate_key_subset_quotes_names(spark, odd):
     assert rows == [(1, 1, 1), (5, 3, 2), (9, 4, 3)]
 
 
+@pytest.mark.usefixtures("uncoalesced")
 def test_surrogate_key_scalable_counter_invariant(spark):
     """The scalable path validates, per partition, that
     monotonically_increasing_id's local counter is consecutive from 0
@@ -239,6 +247,7 @@ def test_surrogate_key_scalable_counter_invariant(spark):
         F.col("id").alias("tie"),
     )
     out = surrogate_key_with_count(df, "sk", ["k", "tie"])[0]
+    assert out.select(F.spark_partition_id()).distinct().count() > 1
     assert out.count() == 20_000
     agg = out.agg(
         F.min("sk").alias("lo"), F.max("sk").alias("hi"),

@@ -146,10 +146,10 @@ def _targets():
 
     return (
         TargetInformation(
-            "pg_schedule_block", "", "id", {}, ("start_at", "est_end_at")
+            "pg_schedule_block", "id", {}, ("start_at", "est_end_at")
         ),
         TargetInformation(
-            "pg_observation", "", "id",
+            "pg_observation", "id",
             {"schedule_block_id": "pg_schedule_block"}, ("t_min",),
         ),
     )

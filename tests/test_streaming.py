@@ -25,6 +25,13 @@ def test_stream_run_summaries_dedup(spark, tmp_path):
                        indent=2 if host == "tpn-0-38" else None)
         )
 
+    # a truncated summary is quarantined, as by read_run_summaries
+    bad = data / "tpn-0-39_1700000003"
+    bad.mkdir()
+    (bad / "t0_tpn-0-39_run_summary.json").write_text(
+        json.dumps(run_summary(*OBS[1], "tpn-0-38"))[:200]
+    )
+
     stream = stream_run_summaries(spark, str(data))
     assert stream.isStreaming
     q = (
@@ -36,7 +43,7 @@ def test_stream_run_summaries_dedup(spark, tmp_path):
     )
     q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM rs_stream").collect()
-    # 3 files, 2 identical → 2 survivors
+    # 3 good files, 2 identical → 2 survivors
     assert len(rows) == 2
     assert {r["meerkat_id"] for r in rows} == {79119}
     assert all(r["utc_start"] is not None for r in rows)
