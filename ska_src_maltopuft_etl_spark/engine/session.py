@@ -6,8 +6,10 @@ session is configured for a distributed, optimizer-driven engine:
 - **UTC session timezone** — required for datetime-kernel parity with the
   reference, which pins ``Datetime("us", "UTC")`` everywhere
   (reference: src/ska_src_maltopuft_etl/meertrap/observation/extract.py:115-121).
-- **AQE on** (coalesce partitions + skew-join handling) so plans re-optimize
-  from runtime statistics at any scale factor.
+- **AQE** (coalesce partitions + skew-join handling) re-optimizes plans
+  from runtime statistics at any scale factor. It is Spark's own default
+  (since 3.2), as is the 128MB ``spark.sql.files.maxPartitionBytes`` split,
+  so neither is set here.
 - **Arrow on** for the few pandas-UDF paths (vectorized batch transfer).
 - ``spark.sql.shuffle.partitions`` defaults small for local testing; on a
   real cluster AQE's coalescing makes the initial number mostly moot, and
@@ -40,9 +42,6 @@ def box_driver_memory(meminfo: str = "/proc/meminfo") -> str:
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Keep broadcast autodetection on; dimension tables in both the
     # reference schema (sb/obs/beam/host) and the test star schema
@@ -78,10 +77,6 @@ _DEFAULTS: dict[str, str] = {
     # disk mid-run). Two minutes keeps cleanup ahead of churn at
     # negligible GC cost for every workload this engine runs.
     "spark.cleaner.periodicGC.interval": "2min",
-    # Parquet scans: allow large-enough splits that small SFs don't
-    # fragment into thousands of empty tasks, while 100 TB inputs still
-    # split per-rowgroup.
-    "spark.sql.files.maxPartitionBytes": "128MB",
     # Unfiltered MIN/MAX/COUNT aggregates directly over a parquet scan
     # answer from footer statistics instead of scanning data (guide §6:
     # let statistics do the work). Exact by construction (Spark only

@@ -31,6 +31,10 @@ MHZ_TO_HZ = 1e6
 _MJD_UNIX_EPOCH = 40_587.0
 _SECONDS_PER_DAY = 86_400.0
 
+#: Decimal places of HMS/DMS → degrees, the reference's explicit
+#: ``round(..., 5)`` (utils/coordinate.py:7-19).
+DEGREE_DECIMALS = 5
+
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
@@ -40,21 +44,21 @@ def _col(c: Column | str) -> Column:
 # Coordinates (F15): HMS / DMS sexagesimal strings → decimal degrees.
 # ---------------------------------------------------------------------------
 
-def hms_to_degrees(ra: Column | str, decimals: int = 5) -> Column:
+def hms_to_degrees(ra: Column | str) -> Column:
     """Right ascension ``"H:M:S.s"`` → decimal degrees, rounded.
 
     Native replacement for the reference's per-row astropy SkyCoord UDF
-    (utils/coordinate.py:7-19): ``(h + m/60 + s/3600) * 15``. The
-    5-decimal rounding matches the reference's explicit ``round(..., 5)``.
+    (utils/coordinate.py:7-19): ``(h + m/60 + s/3600) * 15``, rounded to
+    :data:`DEGREE_DECIMALS`.
     """
     parts = F.split(_col(ra), ":")
     h = parts.getItem(0).cast("double")
     m = parts.getItem(1).cast("double")
     s = parts.getItem(2).cast("double")
-    return F.round((h + m / 60.0 + s / 3600.0) * 15.0, decimals)
+    return F.round((h + m / 60.0 + s / 3600.0) * 15.0, DEGREE_DECIMALS)
 
 
-def dms_to_degrees(dec: Column | str, decimals: int = 5) -> Column:
+def dms_to_degrees(dec: Column | str) -> Column:
     """Declination ``"[+-]D:M:S.s"`` → decimal degrees, rounded.
 
     Sign applies to the whole sexagesimal value (``-0:30:00`` → -0.5), so
@@ -68,7 +72,7 @@ def dms_to_degrees(dec: Column | str, decimals: int = 5) -> Column:
     d = parts.getItem(0).cast("double")
     m = parts.getItem(1).cast("double")
     s = parts.getItem(2).cast("double")
-    return F.round(sign * (d + m / 60.0 + s / 3600.0), decimals)
+    return F.round(sign * (d + m / 60.0 + s / 3600.0), DEGREE_DECIMALS)
 
 
 def degrees_to_hms(deg: Column | str) -> Column:
@@ -114,15 +118,14 @@ def mjd_to_timestamp(mjd: Column | str) -> Column:
     return F.timestamp_micros(micros.cast("long"))
 
 
-def timestamp_to_mjd(ts: Column | str, decimals: int | None = None) -> Column:
+def timestamp_to_mjd(ts: Column | str) -> Column:
     """UTC timestamp → MJD float days (inverse of :func:`mjd_to_timestamp`).
 
     Computed from integer epoch-micros (exact in double below 2^53) with a
     single division, so any engine evaluating the same formula gets the
     bit-identical IEEE result.
     """
-    mjd = F.unix_micros(_col(ts)) / F.lit(_SECONDS_PER_DAY * 1e6) + F.lit(_MJD_UNIX_EPOCH)
-    return F.round(mjd, decimals) if decimals is not None else mjd
+    return F.unix_micros(_col(ts)) / F.lit(_SECONDS_PER_DAY * 1e6) + F.lit(_MJD_UNIX_EPOCH)
 
 
 def round_timestamp_seconds(ts: Column | str) -> Column:

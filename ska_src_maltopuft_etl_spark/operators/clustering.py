@@ -9,7 +9,7 @@ engine-dependent because the centroid mean's addition order is not.
 This operator makes the whole recurrence integer-exact, the same trick
 as :func:`~.graph.pagerank_fixed_point`:
 
-- embeddings are quantized once to ``floor(x * scale + 0.5)`` BIGINTs
+- embeddings are quantized once to ``floor(x * 1024 + 0.5)`` BIGINTs
   (both IEEE multiplication and floor are deterministic across
   engines);
 - distances are exact integer sums of squared differences;
@@ -51,7 +51,6 @@ def kmeans_fixed_point(
     vec_col: str,
     k: int = 4,
     iters: int = 2,
-    scale: int = 1024,
 ) -> DataFrame:
     """Deterministic Lloyd k-means: (id, cluster, dist_sq).
 
@@ -66,7 +65,7 @@ def kmeans_fixed_point(
         F.col(id_col).alias("__id"),
         F.expr(
             f"transform({vec_col}, x -> "
-            f"CAST(FLOOR(CAST(x AS DOUBLE) * {scale} + 0.5) AS BIGINT))"
+            "CAST(FLOOR(CAST(x AS DOUBLE) * 1024 + 0.5) AS BIGINT))"
         ).alias("__e"),
     )
     # Referenced in every round (assignment + update + final) — same

@@ -66,15 +66,14 @@ def surrogate_key(
     df: DataFrame,
     name: str,
     order_by: Sequence[Column | str],
-    offset: int = 1,
 ) -> DataFrame:
-    """Add a contiguous ``offset``-based integer key following a
-    deterministic global order (reference W5 ``with_row_index``): a
-    global ``row_number`` window, fine at dimension-table scale (the
+    """Add a contiguous 1-based integer key following a deterministic
+    global order (reference W5 ``with_row_index``): a global
+    ``row_number`` window, fine at dimension-table scale (the
     reference's frames). Fact-sized frames use surrogate_key_with_count.
     """
     w = Window.orderBy(*_order_cols(order_by))
-    return df.withColumn(name, (F.row_number().over(w) + offset - 1).cast("long"))
+    return df.withColumn(name, F.row_number().over(w).cast("long"))
 
 
 # monotonically_increasing_id() is (partition id << 33) + a 0-based row

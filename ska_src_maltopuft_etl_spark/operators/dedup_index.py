@@ -35,27 +35,19 @@ from ska_src_maltopuft_etl_spark.operators.similarity import (
 )
 
 
-def band_table(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    band_size: int = 4,
-) -> DataFrame:
-    """(id, band, band_hash) for each document — the index payload."""
-    sh = ngram_shingles(docs, id_col, text_col, n=n, distinct=False)
-    sigs = minhash_signatures(sh, id_col, num_hashes=num_hashes)
-    nb = band_size
+def band_table(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_hash) for each ``(doc_id, text)`` document —
+    the index payload: 16 MinHash values over word 3-gram shingles, cut
+    into bands of 4."""
+    sh = ngram_shingles(docs, "doc_id", "text", distinct=False)
+    sigs = minhash_signatures(sh, "doc_id")
     return sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
-                F.sequence(
-                    F.lit(0), F.floor(F.size("signature") / nb).cast("int") - 1
-                ),
+                F.sequence(F.lit(0), F.floor(F.size("signature") / 4).cast("int") - 1),
                 lambda b: F.xxhash64(
-                    F.concat_ws(",", F.slice(F.col("signature"), b * nb + 1, nb))
+                    F.concat_ws(",", F.slice(F.col("signature"), b * 4 + 1, 4))
                 ),
             )
         ).alias("band", "band_hash"),
@@ -63,20 +55,17 @@ def band_table(
 
 
 class NearDupIndex:
-    """Parquet-backed incremental LSH index.
+    """Parquet-backed incremental LSH index over ``(doc_id, text)``
+    documents.
 
     >>> idx = NearDupIndex(spark, "/lake/neardup_index")
     >>> cands = idx.candidates(new_docs)    # vs indexed corpus + in-batch
     >>> idx.update(new_docs)                # append new docs' bands
     """
 
-    def __init__(self, spark: SparkSession, path: str, **params) -> None:
+    def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        self.params = params
-
-    def _bands(self, docs: DataFrame) -> DataFrame:
-        return band_table(docs, **self.params)
 
     def _existing(self) -> DataFrame | None:
         try:
@@ -88,13 +77,12 @@ class NearDupIndex:
         """Candidate near-dup pairs (doc_a, doc_b): batch-vs-index and
         batch-vs-batch. ``doc_b`` is always the batch side; ``doc_a``
         is an indexed doc or an earlier-id batch doc."""
-        batch = self._bands(docs)
+        batch = band_table(docs)
         existing = self._existing()
-        id_col = self.params.get("id_col", "doc_id")
         a = (
             existing.union(batch) if existing is not None else batch
-        ).select(F.col(id_col).alias("doc_a"), "band", "band_hash")
-        b = batch.select(F.col(id_col).alias("doc_b"), "band", "band_hash")
+        ).select(F.col("doc_id").alias("doc_a"), "band", "band_hash")
+        b = batch.select(F.col("doc_id").alias("doc_b"), "band", "band_hash")
         return (
             a.join(b, ["band", "band_hash"])
             .where(F.col("doc_a") < F.col("doc_b"))
@@ -107,12 +95,11 @@ class NearDupIndex:
         number of newly indexed documents. Re-running the same batch is
         a no-op (anti-join on the id), matching incremental_load's
         re-run contract."""
-        batch = self._bands(docs)
-        id_col = self.params.get("id_col", "doc_id")
+        batch = band_table(docs)
         existing = self._existing()
         if existing is not None:
-            seen = existing.select(id_col).distinct()
-            batch = batch.join(seen, id_col, "left_anti")
+            seen = existing.select("doc_id").distinct()
+            batch = batch.join(seen, "doc_id", "left_anti")
         # localCheckpoint: the append below reads self.path, which
         # `_existing` lineage also scans — materialize first so the
         # write doesn't race its own input scan. Lazy: the n_new count
@@ -120,7 +107,7 @@ class NearDupIndex:
         # ran the identical computation in an extra prior job — r14/r15
         # checkpoint-conversion discipline).
         batch = batch.localCheckpoint(eager=False)
-        n_new = batch.select(id_col).distinct().count()
+        n_new = batch.select("doc_id").distinct().count()
         if n_new:
             batch.write.mode("append").parquet(self.path)
         return n_new

@@ -37,6 +37,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: PageRank damping factor, in percent: the integer form of the usual 0.85.
+DAMPING_PCT = 85
+
 
 def connected_components(
     edges: DataFrame,
@@ -263,8 +266,9 @@ def dedup_clusters(
     )
 
 
-def symmetrize(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
-    """Edge-set symmetrization ``pairs ∪ reversed(pairs)`` in one pass.
+def symmetrize(pairs: DataFrame) -> DataFrame:
+    """Edge-set symmetrization ``pairs ∪ reversed(pairs)`` in one pass,
+    over the endpoint columns ``a`` and ``b``.
 
     Expressed as an inline explode of ``[(a,b), (b,a)]`` instead of
     ``pairs.union(pairs.select(b, a))``: the union's two branches are
@@ -279,11 +283,11 @@ def symmetrize(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     return pairs.select(
         F.explode(
             F.array(
-                F.struct(F.col(a).alias(a), F.col(b).alias(b)),
-                F.struct(F.col(b).alias(a), F.col(a).alias(b)),
+                F.struct(F.col("a").alias("a"), F.col("b").alias("b")),
+                F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
             )
         ).alias("__e")
-    ).select(f"__e.{a}", f"__e.{b}")
+    ).select("__e.a", "__e.b")
 
 
 def pagerank_fixed_point(
@@ -292,15 +296,14 @@ def pagerank_fixed_point(
     dst: str = "dst",
     iters: int = 5,
     scale: int = 10**9,
-    damping_pct: int = 85,
     symmetric: bool = False,
 ) -> DataFrame:
     """Deterministic integer fixed-point PageRank: (node, rank_scaled).
 
     Ranks are maintained as scaled BIGINTs (initial rank = ``scale``)
     and every operation is integer arithmetic: a node's contribution
-    per round is ``(rank * damping_pct) DIV (100 * outdeg)`` and the
-    teleport term is ``(scale * (100 - damping_pct)) DIV 100``. Float
+    per round is ``(rank * DAMPING_PCT) DIV (100 * outdeg)`` and the
+    teleport term is ``(scale * (100 - DAMPING_PCT)) DIV 100``. Float
     PageRank is NOT reproducible across engines (the inflow sum's
     addition order is engine-dependent); integer sums are exact and
     order-insensitive, so two engines running this recurrence agree
@@ -332,7 +335,7 @@ def pagerank_fixed_point(
     folded into the aggregate projection. Results are bit-identical to
     the general path on symmetric inputs.
     """
-    teleport = (scale * (100 - damping_pct)) // 100
+    teleport = (scale * (100 - DAMPING_PCT)) // 100
     # The edge table, out-degrees and node set are loop-invariant and
     # referenced in EVERY iteration. Materialize them ONCE before
     # entering the loop: without it the plan tree duplicates the
@@ -387,7 +390,7 @@ def pagerank_fixed_point(
         contribs = e_deg.join(ranks, e_deg["__src"] == ranks["node"]).select(
             F.col("__dst").alias("node"),
             F.expr(
-                f"(rank_scaled * {damping_pct}) DIV (100 * __outdeg)"
+                f"(rank_scaled * {DAMPING_PCT}) DIV (100 * __outdeg)"
             ).alias("__contrib"),
         )
         if symmetric:

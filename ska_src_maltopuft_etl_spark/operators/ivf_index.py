@@ -208,7 +208,6 @@ class IvfIndex:
         queries: DataFrame,
         k: int = 5,
         n_probe: int = 2,
-        decimals: int = 5,
     ) -> DataFrame:
         """Top-k cosine neighbors from the persisted inverted lists:
         (query_id, rank, neighbor_id, cosine). No training, no corpus
@@ -219,6 +218,4 @@ class IvfIndex:
         # the centroid matrix fixes the vector dimensionality — no
         # limit(1) probe job against the members table needed
         dim = int(cents.shape[1])
-        return ivf_score_topk(
-            probed, members, self.vec_col, self.id_col, k, decimals, dim
-        )
+        return ivf_score_topk(probed, members, self.vec_col, self.id_col, k, dim)

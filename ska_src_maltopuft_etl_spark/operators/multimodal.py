@@ -3,10 +3,11 @@
 The engine treats image/audio/video as ``BinaryType`` columns moved in
 Arrow batches through ``mapInPandas``; decode/feature-extraction runs
 vectorized per batch. The actual media codecs are NOT available in this
-environment (SURVEY/task contract), so ``decode`` ships a deterministic
-fake: real Spark-side plumbing (schema, batching, partition preservation),
-stubbed byte-level features. Swapping in PIL/librosa later only changes
-``_fake_decode_batch``.
+environment (SURVEY/task contract), so ``decode_binary_features`` runs a
+deterministic fake: real Spark-side plumbing (schema, batching, partition
+preservation), stubbed byte-level features. Swapping in PIL/librosa later
+only changes ``_fake_decode_batch``; the cross-encoder stand-in of
+``score_pairs_batched`` is ``_md5_score_batch``.
 """
 
 from __future__ import annotations
@@ -30,15 +31,6 @@ DECODED_FEATURE_FIELDS = [
 ]
 
 
-def real_media_decode(payload: bytes) -> dict:
-    """Placeholder for a real codec (PIL.Image.open / soundfile / ffmpeg
-    frame sampling). Not available in this container."""
-    raise NotImplementedError(
-        "media codecs are not installed; production deployments plug a "
-        "real decoder into decode_binary_features(decoder=...)"
-    )
-
-
 def _fake_decode_batch(payloads: pd.Series) -> pd.DataFrame:
     """Deterministic stub decode: byte length, first byte, small modular
     tag. Stands in for (width, height, channels)-style metadata."""
@@ -55,7 +47,6 @@ def decode_binary_features(
     df: DataFrame,
     id_col: str,
     binary_col: str,
-    batch_decoder=_fake_decode_batch,
 ) -> DataFrame:
     """Arrow-batched decode of a binary media column → typed features.
 
@@ -69,17 +60,17 @@ def decode_binary_features(
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = batch_decoder(pdf[binary_col])
+            feats = _fake_decode_batch(pdf[binary_col])
             feats.insert(0, id_col, pdf[id_col].values)
             yield feats
 
     return narrow.mapInPandas(process, schema=out_schema)
 
 
-def with_binary_payload(df: DataFrame, text_col: str, out_col: str = "payload") -> DataFrame:
-    """Synthesize a binary payload column from text (test fixture for the
-    decode path; real pipelines read binaryFile / parquet binary)."""
-    return df.withColumn(out_col, F.encode(F.col(text_col), "UTF-8"))
+def with_binary_payload(df: DataFrame, text_col: str) -> DataFrame:
+    """Synthesize a binary ``payload`` column from text (test fixture for
+    the decode path; real pipelines read binaryFile / parquet binary)."""
+    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
 
 
 # ---------------------------------------------------------------------------
@@ -192,46 +183,40 @@ def extract_features(
     return narrow.mapInPandas(process, schema=out_schema)
 
 
+def _md5_score_batch(q: pd.Series, t: pd.Series) -> pd.Series:
+    """Deterministic cross-encoder stand-in:
+    ``int(md5(q + '|' + text)[:8], 16) / 4294967295``."""
+    import hashlib
+
+    return pd.Series(
+        [
+            int(hashlib.md5(f"{a}|{b}".encode()).hexdigest()[:8], 16) / 4294967295.0
+            for a, b in zip(q, t)
+        ],
+        index=q.index,
+        dtype="float64",
+    )
+
+
 def score_pairs_batched(
     pairs: DataFrame,
     query_col: str,
     text_col: str,
     id_cols: list[str],
-    batch_scorer=None,
 ) -> DataFrame:
     """Model-inference plumbing for a cross-encoder rerank stage.
 
     Ships (query, document) candidate pairs through Arrow
     ``mapInPandas`` batches to a vectorized scorer — the exact batch
-    shape a real cross-encoder ONNX/torch session consumes. The
-    default scorer is a deterministic md5-derived stand-in
-    (``int(md5(q + '|' + text)[:8], 16) / 4294967295``), which makes
-    the WHOLE plumbing oracle-checkable: an independent SQL engine
-    reproduces the scores bit-for-bit, certifying the Arrow path
-    neither drops, duplicates, nor reorders pairs. Swap
-    ``batch_scorer`` for a real model callable in production — the
-    plan shape (map-only over candidate pairs, embarrassingly
-    parallel) is unchanged.
+    shape a real cross-encoder ONNX/torch session consumes. The scorer
+    is a deterministic md5-derived stand-in (:func:`_md5_score_batch`),
+    which makes the WHOLE plumbing oracle-checkable: an independent SQL
+    engine reproduces the scores bit-for-bit, certifying the Arrow path
+    neither drops, duplicates, nor reorders pairs. A real model replaces
+    that one function; the plan shape (map-only over candidate pairs,
+    embarrassingly parallel) is unchanged.
     """
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    if batch_scorer is None:
-
-        def batch_scorer(q: "pd.Series", t: "pd.Series") -> "pd.Series":
-            import hashlib
-
-            return pd.Series(
-                [
-                    int(
-                        hashlib.md5(f"{a}|{b}".encode()).hexdigest()[:8], 16
-                    )
-                    / 4294967295.0
-                    for a, b in zip(q, t)
-                ],
-                index=q.index,
-                dtype="float64",
-            )
+    from pyspark.sql.types import DoubleType
 
     narrow = pairs.select(*id_cols, query_col, text_col)
     out_schema = StructType(
@@ -241,7 +226,7 @@ def score_pairs_batched(
     def process(batches):
         for pdf in batches:
             out = pdf[id_cols].copy()
-            out["ce_score"] = batch_scorer(pdf[query_col], pdf[text_col])
+            out["ce_score"] = _md5_score_batch(pdf[query_col], pdf[text_col])
             yield out
 
     return narrow.mapInPandas(process, schema=out_schema)

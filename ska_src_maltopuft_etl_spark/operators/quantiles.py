@@ -46,12 +46,11 @@ def exact_percentiles(
     value_col: str,
     probs: Sequence[float],
     by: Sequence[str] = (),
-    out_col: str = "value",
 ) -> DataFrame:
     """Exact interpolated percentiles, distributed.
 
     Returns one row per (``by`` group, probability): columns
-    ``(*by, prob double, <out_col> double)``. Semantics match
+    ``(*by, prob double, value double)``. Semantics match
     ``F.percentile(value_col, prob)`` bit-for-bit: nulls ignored,
     position ``p * (n - 1)`` on the ascending sort, linear
     interpolation between the bracketing ranks. Groups whose values
@@ -143,5 +142,5 @@ def exact_percentiles(
             F.min(F.when(F.col("__role") == "lo", F.col("__v"))).alias("__vlo"),
             F.min(F.when(F.col("__role") == "hi", F.col("__v"))).alias("__vhi"),
         )
-        .select(*by, F.col("__prob").alias("prob"), interp.alias(out_col))
+        .select(*by, F.col("__prob").alias("prob"), interp.alias("value"))
     )

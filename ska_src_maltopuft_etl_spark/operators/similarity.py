@@ -17,6 +17,10 @@ Design for 100 TB:
   functions (JVM-side, no Python). The LSH-bucketed variant
   (``cosine_topk_lsh``) buckets by random-hyperplane signs so each query
   only scans its bucket — the scale path.
+
+Every cosine these operators return is rounded to
+:data:`COSINE_DECIMALS` places before ranking, so ties and ranks are
+deterministic and match the SQL oracle.
 """
 
 from __future__ import annotations
@@ -24,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
+#: Decimal places of every returned cosine.
+COSINE_DECIMALS = 5
 
 # ---------------------------------------------------------------------------
 # Shingling + exact Jaccard
@@ -311,7 +316,6 @@ def cosine_topk_bruteforce(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    decimals: int = 5,
     dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector.
@@ -337,7 +341,7 @@ def cosine_topk_bruteforce(
         "neighbor_id",
         F.round(
             dot_expr("__qv", "__cv", dim) / (F.col("__qn") * F.col("__cn")),
-            decimals,
+            COSINE_DECIMALS,
         ).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -374,14 +378,12 @@ def cosine_topk_lsh(
     vec_col: str,
     k: int = 5,
     num_planes: int = 8,
-    seed: int = 42,
-    decimals: int = 5,
     portable: bool = False,
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH bucketing.
 
-    Bucket id = sign bits of `num_planes` fixed pseudo-random
-    hyperplanes (deterministic from ``seed``); each query scans only its
+    Bucket id = sign bits of `num_planes` fixed pseudo-random Gaussian
+    hyperplanes (drawn from a fixed seed); each query scans only its
     bucket — at 100 TB the crossJoin becomes an equi-join on the bucket
     key. Recall is tunable via ``num_planes`` (fewer planes → bigger
     buckets → higher recall/cost).
@@ -426,7 +428,7 @@ def cosine_topk_lsh(
     else:
         import random
 
-        rng = random.Random(seed)
+        rng = random.Random(42)
         planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(num_planes)]
 
         def add_bucket(df: DataFrame, dvec: str) -> DataFrame:
@@ -459,7 +461,7 @@ def cosine_topk_lsh(
         "neighbor_id",
         F.round(
             dot_expr("__qv", "__cv", dim) / (F.col("__qn") * F.col("__cn")),
-            decimals,
+            COSINE_DECIMALS,
         ).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -477,8 +479,6 @@ def cosine_pairs_exact(
     id_col: str,
     vec_col: str,
     threshold: float,
-    decimals: int = 5,
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine similarity >= threshold, exact, distributed.
 
@@ -494,10 +494,10 @@ def cosine_pairs_exact(
     Unlike a broadcast/collect design there is NO driver materialization
     and no full-corpus broadcast: shuffle volume is (B+1)·n vectors,
     per-task memory is two corpus blocks (~n/B rows each), and the n²/B²
-    cells spread across the cluster. B defaults to the session's default
-    parallelism (capped at 64); at cluster scale pick B ≈ √(2·cores) so
-    every core gets a cell. (A non-equi pair join would instead plan as
-    a BroadcastNestedLoopJoin — non-codegen, ~40 µs/pair interpreted.)
+    cells spread across the cluster. B is the session's default
+    parallelism (at least 2, capped at 64). (A non-equi pair join would
+    instead plan as a BroadcastNestedLoopJoin — non-codegen, ~40 µs/pair
+    interpreted.)
 
     Summation accumulates dimension-by-dimension in index order, exactly
     matching the sequential fold of :func:`_dot` / the SQL oracle, so
@@ -520,7 +520,7 @@ def cosine_pairs_exact(
             StructField("cosine", DoubleType()),
         ]
     )
-    B = n_blocks or max(2, min(64, spark.sparkContext.defaultParallelism))
+    B = max(2, min(64, spark.sparkContext.defaultParallelism))
 
     base = df.select(id_col, vec_col).withColumn(
         "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int")
@@ -558,7 +558,7 @@ def cosine_pairs_exact(
         dots = np.zeros((A.shape[0], Bm.shape[0]))
         for d in range(A.shape[1]):
             dots += np.outer(A[:, d], Bm[:, d])
-        cos = np.round(dots / np.outer(na, nb), decimals)
+        cos = np.round(dots / np.outer(na, nb), COSINE_DECIMALS)
         hit = cos >= threshold
         if key[0] == key[1]:
             # diagonal cell: both sides are the same block — orient and
@@ -679,7 +679,6 @@ def ivf_score_topk(
     vec_col: str,
     id_col: str,
     k: int,
-    decimals: int,
     dim: int,
 ) -> DataFrame:
     """Equi-join probes against inverted lists on cluster id and keep
@@ -699,7 +698,7 @@ def ivf_score_topk(
         "neighbor_id",
         F.round(
             dot_expr("__qv", "__cv", dim) / (F.col("__qn") * F.col("__cn")),
-            decimals,
+            COSINE_DECIMALS,
         ).alias("cosine"),
     ).dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(
@@ -720,78 +719,22 @@ def cosine_topk_ivf(
     k: int = 5,
     n_centroids: int = 8,
     n_probe: int = 2,
-    lloyd_iters: int = 2,
-    decimals: int = 5,
-    distributed_refine_iters: int = 0,
 ) -> DataFrame:
     """Approximate top-k cosine via IVF (inverted-file) clustering.
 
     Deterministic kmeans-lite: centroids initialize from the first
-    ``n_centroids`` corpus vectors in id order and run ``lloyd_iters``
-    Lloyd iterations over a bounded sample on the driver; corpus rows are
-    assigned to their nearest centroid (vectorized numpy over Arrow
-    batches), and each query scans only its ``n_probe`` nearest
-    centroids' inverted lists. At scale the assignment is a map-only
-    pass and the probe is an equi-join on cluster id — the crossJoin
-    disappears.
-
-    ``distributed_refine_iters`` > 0 runs additional Lloyd iterations
-    over the FULL corpus (VERDICT r2 #9): each iteration is one map-only
-    pass emitting per-batch partial (sum, count) per centroid, a tiny
-    keyed aggregate (n_centroids groups), and an O(n_centroids·dim)
-    driver collect — so centroid quality no longer depends on what the
-    bounded sample saw. Note the cross-partition float sums make the
-    refined centroids order-sensitive in the last ulp, so refined runs
-    are recall-stable but not bit-reproducible — keep it off for
-    hash-pinned oracle queries.
+    ``n_centroids`` corpus vectors in id order and run Lloyd iterations
+    over a bounded sample on the driver (:func:`train_ivf_centroids`);
+    corpus rows are assigned to their nearest centroid (vectorized numpy
+    over Arrow batches), and each query scans only its ``n_probe``
+    nearest centroids' inverted lists. At scale the assignment is a
+    map-only pass and the probe is an equi-join on cluster id — the
+    crossJoin disappears.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    cents = train_ivf_centroids(corpus, id_col, vec_col, n_centroids, lloyd_iters)
-
-    dim_full = len(cents[0])
-    for _ in range(distributed_refine_iters):
-        it_bc = spark.sparkContext.broadcast(cents)
-
-        def partial_sums(batches):
-            C = it_bc.value
-            K = C.shape[0]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                An = A / np.linalg.norm(A, axis=1, keepdims=True)
-                a = np.argmax(An @ C.T, axis=1)
-                sums = np.zeros((K, C.shape[1]))
-                np.add.at(sums, a, An)
-                counts = np.bincount(a, minlength=K)
-                yield pd.DataFrame(
-                    {
-                        "__c": np.arange(K, dtype="int32"),
-                        "__s": list(sums),
-                        "__n": counts.astype("int64"),
-                    }
-                )
-
-        part = corpus.select(vec_col).mapInPandas(
-            partial_sums, schema="__c int, __s array<double>, __n long"
-        )
-        reduced = part.groupBy("__c").agg(
-            *[F.sum(F.col("__s")[d]).alias(f"s{d}") for d in range(dim_full)],
-            F.sum("__n").alias("n"),
-        )
-        for r in reduced.collect():  # n_centroids rows — bounded by design
-            if r["n"]:
-                m = np.array([r[f"s{d}"] for d in range(dim_full)]) / r["n"]
-                cents[r["__c"]] = m / np.linalg.norm(m)
-
+    cents = train_ivf_centroids(corpus, id_col, vec_col, n_centroids)
     tagged_corpus = ivf_assign(corpus, cents, id_col, vec_col)
     probed_queries = ivf_probe(queries, cents, id_col, vec_col, n_probe)
     # the trained centroid matrix fixes the dimensionality — no extra
     # limit(1) probe job against the corpus needed
     dim = int(len(cents[0]))
-    return ivf_score_topk(
-        probed_queries, tagged_corpus, vec_col, id_col, k, decimals, dim
-    )
+    return ivf_score_topk(probed_queries, tagged_corpus, vec_col, id_col, k, dim)

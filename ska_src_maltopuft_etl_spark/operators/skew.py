@@ -1,6 +1,6 @@
 """Skew-mitigation operators.
 
-AQE's skew-join handling (enabled in the session defaults) splits
+AQE's skew-join handling (on by default in Spark) splits
 oversized partitions at runtime, but only for sort-merge joins after
 statistics exist. ``salted_join`` is the explicit technique for the
 cases AQE can't fix: a shuffled equi-join where a handful of hot keys
@@ -24,21 +24,18 @@ def salted_join(
     small: DataFrame,
     on: Sequence[str] | str,
     salt_buckets: int = 16,
-    salt_source: str | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join with k-way key salting.
 
-    ``salt_source``: a stable column on the large side used to derive
-    the salt deterministically (defaults to the join key itself plus all
-    large-side columns via xxhash64 — deterministic for identical rows).
-    The small side is replicated ``salt_buckets`` times; keep it the
-    genuinely smaller input.
+    The salt is the xxhash64 of every large-side column, so it is
+    deterministic for identical rows. The small side is replicated
+    ``salt_buckets`` times; keep it the genuinely smaller input.
     """
     on = [on] if isinstance(on, str) else list(on)
-    salt_cols = [F.col(salt_source)] if salt_source else [F.col(c) for c in large.columns]
     salted_large = large.withColumn(
-        "__salt", F.pmod(F.xxhash64(*salt_cols), F.lit(salt_buckets)).cast("int")
+        "__salt",
+        F.pmod(F.xxhash64(*[F.col(c) for c in large.columns]), F.lit(salt_buckets)).cast("int"),
     )
     replicated_small = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))

@@ -5,10 +5,9 @@ tokenization via split, hashing via md5, per-row folds via higher-order
 functions — no Python UDFs. Each operator is demonstrated against a
 DuckDB oracle in plans/llmops.py.
 
-Scale notes: everything here is embarrassingly parallel per-row except
-``simhash_bits``'s aggregation formulation (used when token weights must
-be combined across a shuffle); the per-row variant keeps simhash inside
-a single projection.
+Scale notes: everything here is embarrassingly parallel per-row; both
+``simhash_bits`` forms keep a document's signature inside one map-only
+pass, with no shuffle.
 """
 
 from __future__ import annotations
@@ -19,10 +18,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def tokens(text: Column | str, sep: str = " ") -> Column:
-    """Whitespace tokens with empties removed."""
+def tokens(text: Column | str) -> Column:
+    """Single-space-separated tokens with empties removed."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(c, sep), lambda w: w != "")
+    return F.filter(F.split(c, " "), lambda w: w != "")
 
 
 def token_count_ws(text: Column | str) -> Column:
@@ -36,14 +35,6 @@ def token_count_bpe_ish(text: Column | str) -> Column:
     return F.regexp_count(c, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"))
 
 
-def sum_token_lengths(text: Column | str) -> Column:
-    return F.aggregate(
-        F.transform(tokens(text), lambda w: F.length(w)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-
-
 def stopword_ratio(text: Column | str, stopwords: Sequence[str]) -> Column:
     toks = tokens(text)
     stops = F.array(*[F.lit(w) for w in stopwords])
@@ -51,17 +42,13 @@ def stopword_ratio(text: Column | str, stopwords: Sequence[str]) -> Column:
     return n_stop.cast("double") / F.size(toks).cast("double")
 
 
-def quality_score(
-    text: Column | str,
-    stopwords: Sequence[str] = ("the", "a"),
-    target_tokens: int = 100,
-) -> Column:
-    """Heuristic quality score in [0,1]: mix of stopword density (fluent
-    text has some) and length saturation. Deterministic arithmetic —
-    mirrors the SQL oracle op-for-op."""
+def quality_score(text: Column | str) -> Column:
+    """Heuristic quality score in [0,1]: mix of stopword density over
+    ("the", "a") (fluent text has some) and length saturation at 100
+    tokens. Deterministic arithmetic — mirrors the SQL oracle op-for-op."""
     n = token_count_ws(text).cast("double")
-    stop = stopword_ratio(text, stopwords)
-    length_sat = F.least(n / F.lit(float(target_tokens)), F.lit(1.0))
+    stop = stopword_ratio(text, ("the", "a"))
+    length_sat = F.least(n / F.lit(100.0), F.lit(1.0))
     return F.round(0.5 * stop + 0.5 * length_sat, 4)
 
 
@@ -145,8 +132,6 @@ def simhash_bits(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    nbits: int = 64,
-    per_row: bool = True,
     arrow: bool = True,
 ) -> DataFrame:
     """64-bit SimHash per document, emitted as a '0'/'1' bit-string.
@@ -156,9 +141,9 @@ def simhash_bits(
     token hash votes ±(token count); the sign of the vote sum is the
     simhash bit. Summing over token OCCURRENCES equals summing over
     distinct tokens weighted by count, so no per-doc counting stage is
-    needed in either formulation; all three produce identical bits.
+    needed in either formulation; both produce identical bits.
 
-    ``per_row=True, arrow=True`` (default): Arrow ``mapInPandas``
+    ``arrow=True`` (default): Arrow ``mapInPandas``
     kernel — md5 each DISTINCT token once per task (memoized ±1
     numpy vote vectors via ``unpackbits`` over the digest), one
     vectorized accumulate per (doc, distinct token). No shuffle, no
@@ -169,17 +154,12 @@ def simhash_bits(
     at sf0.1 under a full-materialization sink vs 0.5 s for this
     kernel (noop-sink battery, round 7).
 
-    ``per_row=True, arrow=False``: the pure-expression fold (hash each
-    token once, fold a 64-lane vote vector via ``aggregate`` +
-    ``zip_with``, take signs). Kept as the no-Python-worker twin and
-    as the semantics reference the Arrow kernel is property-tested
-    against.
-
-    ``per_row=False``: explode(token) × explode(bit) → hash-agg on
-    (doc, j). Use when per-doc token arrays don't fit a task
-    (pathological document lengths) — the shuffle splits the work.
+    ``arrow=False``: the pure-expression fold (hash each token once,
+    fold a 64-lane vote vector via ``aggregate`` + ``zip_with``, take
+    signs). Kept as the no-Python-worker twin and as the semantics
+    reference the Arrow kernel is property-tested against.
     """
-    if per_row and arrow:
+    if arrow:
         import pandas as pd  # noqa: F401 — worker-side import below
         from pyspark.sql.types import StringType, StructField, StructType
 
@@ -187,7 +167,6 @@ def simhash_bits(
         out_schema = StructType(
             [src.schema[id_col], StructField("simhash", StringType(), True)]
         )
-        nb = int(nbits)
         txt = text_col
 
         def gen(batches):
@@ -198,7 +177,6 @@ def simhash_bits(
             import pandas as pd
 
             memo: dict = {}
-            nbytes = (nb + 7) // 8
             for pdf in batches:
                 out = []
                 for text in pdf[txt].tolist():
@@ -207,7 +185,7 @@ def simhash_bits(
                         # concat_ws over NULL -> empty string
                         out.append("")
                         continue
-                    votes = np.zeros(nb, dtype=np.int64)
+                    votes = np.zeros(64, dtype=np.int64)
                     for w, c in Counter(
                         w for w in text.split(" ") if w
                     ).items():
@@ -215,8 +193,8 @@ def simhash_bits(
                         if v is None:
                             dig = hashlib.md5(w.encode("utf-8")).digest()
                             bits = np.unpackbits(
-                                np.frombuffer(dig, dtype=np.uint8)[:nbytes]
-                            )[:nb]
+                                np.frombuffer(dig, dtype=np.uint8)[:8]
+                            )
                             v = 2 * bits.astype(np.int16) - 1
                             # bound the memo so a huge vocabulary can't
                             # pin task memory (1M x 64 x 2B = 128 MB cap)
@@ -232,77 +210,38 @@ def simhash_bits(
                 yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
 
         return src.mapInPandas(gen, out_schema)
-    if per_row:
-        hashes = F.transform(tokens(F.col(text_col)), lambda w: F.md5(w))
-        divisors = F.array(F.lit(8), F.lit(4), F.lit(2), F.lit(1))
 
-        def vote_vec(h):
-            # per-hash ±1 vote for each of the nbits bits; substr with a
-            # COLUMN start via Column.substr (hex digit j//4, bit j%4)
-            return F.transform(
-                F.sequence(F.lit(0), F.lit(nbits - 1)),
-                lambda j: (
-                    F.floor(
-                        F.conv(h.substr(F.floor(j / 4).cast("int") + 1, F.lit(1)), 16, 10).cast("int")
-                        / F.element_at(divisors, (j % 4).cast("int") + 1)
-                    ).cast("int")
-                    .bitwiseAND(F.lit(1))
-                    * 2
-                    - 1
-                ),
-            )
+    hashes = F.transform(tokens(F.col(text_col)), lambda w: F.md5(w))
+    divisors = F.array(F.lit(8), F.lit(4), F.lit(2), F.lit(1))
 
-        zeros = F.transform(
-            F.sequence(F.lit(0), F.lit(nbits - 1)), lambda _: F.lit(0).cast("long")
-        )
-        votes = F.aggregate(
-            hashes,
-            zeros,
-            lambda acc, h: F.zip_with(acc, vote_vec(h), lambda a, v: a + v),
-        )
-        sig = F.concat_ws(
-            "",
-            F.transform(
-                votes, lambda s: F.when(s > 0, F.lit("1")).otherwise(F.lit("0"))
+    def vote_vec(h):
+        # per-hash ±1 vote for each of the 64 bits; substr with a
+        # COLUMN start via Column.substr (hex digit j//4, bit j%4)
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(63)),
+            lambda j: (
+                F.floor(
+                    F.conv(h.substr(F.floor(j / 4).cast("int") + 1, F.lit(1)), 16, 10).cast("int")
+                    / F.element_at(divisors, (j % 4).cast("int") + 1)
+                ).cast("int")
+                .bitwiseAND(F.lit(1))
+                * 2
+                - 1
             ),
         )
-        return df.select(F.col(id_col), sig.alias("simhash"))
-    tok_counts = (
-        df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__w"))
-        .groupBy(id_col, "__w")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .withColumn("__h", F.md5(F.col("__w")))
+
+    zeros = F.transform(
+        F.sequence(F.lit(0), F.lit(63)), lambda _: F.lit(0).cast("long")
     )
-    bits = tok_counts.select(
-        F.col(id_col),
-        F.col("__cnt"),
-        F.col("__h"),
-        F.explode(F.sequence(F.lit(0), F.lit(nbits - 1))).alias("__j"),
+    votes = F.aggregate(
+        hashes,
+        zeros,
+        lambda acc, h: F.zip_with(acc, vote_vec(h), lambda a, v: a + v),
     )
-    digit = (
-        F.conv(F.substring(F.col("__h"), (F.col("__j") / 4).cast("int") + 1, 1), 16, 10)
-    ).cast("int")
-    # bit j of the hex digit; shiftright needs a literal count, so use
-    # integer division by 2^(3 - j%4) instead.
-    divisor = (
-        F.when(F.col("__j") % 4 == 0, F.lit(8))
-        .when(F.col("__j") % 4 == 1, F.lit(4))
-        .when(F.col("__j") % 4 == 2, F.lit(2))
-        .otherwise(F.lit(1))
+    sig = F.concat_ws(
+        "",
+        F.transform(
+            votes, lambda s: F.when(s > 0, F.lit("1")).otherwise(F.lit("0"))
+        ),
     )
-    bit = F.floor(digit / divisor).cast("int").bitwiseAND(F.lit(1))
-    votes = bits.withColumn("__vote", F.col("__cnt") * (2 * bit - 1))
-    summed = votes.groupBy(id_col, "__j").agg(F.sum("__vote").alias("__s"))
-    chars = summed.select(
-        F.col(id_col),
-        F.col("__j"),
-        F.when(F.col("__s") > 0, F.lit("1")).otherwise(F.lit("0")).alias("__b"),
-    )
-    return chars.groupBy(id_col).agg(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__j", "__b"))), lambda s: s["__b"]
-            ),
-        ).alias("simhash")
-    )
+    return df.select(F.col(id_col), sig.alias("simhash"))

@@ -14,6 +14,9 @@ serializes onto a single task (the same cliff
    through the ordinary window — now over a set bounded by parallelism,
    not data size.
 
+Both phases always run; the result equals the plain window's, with the
+rank in a ``rank`` column.
+
 The order must be TOTAL (include a tiebreaker column) for the result
 to be deterministic — the same contract as every keep-first operator in
 this engine (see ADVICE round-1 on beam surrogate keys).
@@ -30,46 +33,39 @@ def topk_per_group(
     group_cols: list[str],
     order_cols: list[tuple[str, bool]],
     k: int,
-    rank_col: str = "rank",
-    prefilter: bool = True,
 ) -> DataFrame:
-    """Top-k rows per group under a total order.
+    """Top-k rows per group under a total order, ranked in ``rank``.
 
     Parameters
     ----------
     order_cols : [(column, ascending)] — must define a total order over
         rows within a group for deterministic output.
-    prefilter : apply the no-shuffle local top-k pass first. Disable
-        only to A/B the plans; semantics are identical.
     """
     names = [c for c, _ in order_cols]
     asc = [a for _, a in order_cols]
     spark_order = [
         (F.col(c).asc() if a else F.col(c).desc()) for c, a in order_cols
     ]
+    gcols = list(group_cols)
 
-    src = df
-    if prefilter:
-        gcols = list(group_cols)
+    def gen(batches):
+        import pandas as pd
 
-        def gen(batches):
-            import pandas as pd
-
-            kept = None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cur = pd.concat([kept, pdf]) if kept is not None else pdf
-                # mergesort: stable, so earlier-batch rows win exact ties
-                # — irrelevant under a total order, harmless otherwise
-                cur = cur.sort_values(names, ascending=asc, kind="mergesort")
-                kept = cur.groupby(gcols, sort=False).head(k)
-            if kept is not None and len(kept):
-                yield kept
-
-        src = df.mapInPandas(gen, schema=df.schema)
+        kept = None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cur = pd.concat([kept, pdf]) if kept is not None else pdf
+            # mergesort: stable, so earlier-batch rows win exact ties
+            # — irrelevant under a total order, harmless otherwise
+            cur = cur.sort_values(names, ascending=asc, kind="mergesort")
+            kept = cur.groupby(gcols, sort=False).head(k)
+        if kept is not None and len(kept):
+            yield kept
 
     w = Window.partitionBy(*group_cols).orderBy(*spark_order)
-    return src.withColumn(rank_col, F.row_number().over(w)).where(
-        F.col(rank_col) <= k
+    return (
+        df.mapInPandas(gen, schema=df.schema)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
     )

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from ska_src_maltopuft_etl_spark.operators import similarity, text
 from ska_src_maltopuft_etl_spark.plans.registry import register
+from ska_src_maltopuft_etl_spark.sinks.inverted_index import BM25_B, BM25_K1
 from ska_src_maltopuft_etl_spark.sources import load_table
 
 
@@ -38,8 +39,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BM25_TERMS = ("spark", "hash", "window")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
 
 
 @register(
@@ -61,9 +60,9 @@ _BM25_B = 0.75
     scored AS (
       SELECT tf.doc_id, tf.term,
              ((stats.n - dfreq.df + 0.5) / (dfreq.df + 0.5))
-               * (tf.tf * ({_BM25_K1} + 1.0))
-               / (tf.tf + {_BM25_K1} * (1.0 - {_BM25_B}
-                    + {_BM25_B} * (CAST(dl.dl AS DOUBLE) / stats.avgdl))) AS s
+               * (tf.tf * ({BM25_K1} + 1.0))
+               / (tf.tf + {BM25_K1} * (1.0 - {BM25_B}
+                    + {BM25_B} * (CAST(dl.dl AS DOUBLE) / stats.avgdl))) AS s
       FROM tf JOIN dl USING (doc_id) CROSS JOIN stats JOIN dfreq USING (term)),
     pivoted AS (
       SELECT doc_id,
@@ -119,7 +118,7 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
+    k1, b = F.lit(BM25_K1), F.lit(BM25_B)
     scored = (
         tf.join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
@@ -1168,9 +1167,9 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored AS (
       SELECT tf.doc_id, tf.term,
              ((stats.n - dfreq.df + 0.5) / (dfreq.df + 0.5))
-               * (tf.tf * ({_BM25_K1} + 1.0))
-               / (tf.tf + {_BM25_K1} * (1.0 - {_BM25_B}
-                    + {_BM25_B} * (CAST(dl.dl AS DOUBLE) / stats.avgdl))) AS s
+               * (tf.tf * ({BM25_K1} + 1.0))
+               / (tf.tf + {BM25_K1} * (1.0 - {BM25_B}
+                    + {BM25_B} * (CAST(dl.dl AS DOUBLE) / stats.avgdl))) AS s
       FROM tf JOIN dl USING (doc_id) CROSS JOIN stats JOIN dfreq USING (term)),
     pivoted AS (
       SELECT doc_id,

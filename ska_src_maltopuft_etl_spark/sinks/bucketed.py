@@ -8,7 +8,8 @@ it. This is the standing-layout optimization the reference (single-node)
 has no concept of.
 
 Bucketed tables must go through the session catalog (``saveAsTable``);
-the warehouse directory is plain parquet underneath.
+the warehouse directory is plain parquet underneath. ``write_bucketed``
+always overwrites and does not sort within buckets.
 """
 
 from __future__ import annotations
@@ -43,19 +44,13 @@ def write_bucketed(
     table: str,
     bucket_cols: list[str],
     num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) catalog table."""
-    if mode == "overwrite":
-        _clear_orphaned_location(df.sparkSession, table)
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table)
-
-
-def bucketed_join_ready(spark: SparkSession, table_a: str, table_b: str) -> bool:
-    """True when both catalog tables exist (helper for callers deciding
-    between the bucketed fast path and a plain join)."""
-    return spark.catalog.tableExists(table_a) and spark.catalog.tableExists(table_b)
+    """Persist ``df`` as a bucketed catalog table, replacing any table
+    (or orphaned table directory) of that name."""
+    _clear_orphaned_location(df.sparkSession, table)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(num_buckets, *bucket_cols)
+        .format("parquet")
+        .saveAsTable(table)
+    )

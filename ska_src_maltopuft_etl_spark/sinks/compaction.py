@@ -16,9 +16,9 @@ helpers rewrite a dataset into scan-friendly shape:
   groups, the poor man's Z-order for the 1-D case that covers most
   time-series pruning (events by ts, candidates by observed_at).
 
-Both write to a sibling staging directory and atomically swap, so a
-reader never sees a half-written dataset and a failed compaction leaves
-the original untouched.
+Both write gzip-compressed parquet to a sibling staging directory and
+atomically swap, so a reader never sees a half-written dataset and a
+failed compaction leaves the original untouched.
 """
 
 from __future__ import annotations
@@ -55,7 +55,6 @@ def compact_parquet(
     spark: SparkSession,
     path: str,
     target_file_mb: float = 256,
-    compression: str = "gzip",
 ) -> int:
     """Rewrite the parquet dataset at ``path`` into
     ``ceil(bytes / target_file_mb)`` files; returns the file count.
@@ -70,7 +69,7 @@ def compact_parquet(
     (
         df.repartition(n_files)
         .write.mode("overwrite")
-        .option("compression", compression)
+        .option("compression", "gzip")
         .parquet(staging)
     )
     _swap_in(staging, path)
@@ -82,7 +81,6 @@ def cluster_parquet(
     path: str,
     cluster_cols: list[str],
     target_file_mb: float = 256,
-    compression: str = "gzip",
 ) -> int:
     """Compact AND sort-cluster: range-partition on ``cluster_cols``
     then sort within each partition, so every output file holds a
@@ -96,7 +94,7 @@ def cluster_parquet(
         df.repartitionByRange(n_files, *cols)
         .sortWithinPartitions(*cols)
         .write.mode("overwrite")
-        .option("compression", compression)
+        .option("compression", "gzip")
         .parquet(staging)
     )
     _swap_in(staging, path)

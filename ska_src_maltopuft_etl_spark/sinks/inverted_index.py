@@ -17,8 +17,11 @@ computed on the driver from the query string (hashlib md5 — portable
 with Spark's ``md5`` by construction), the partition filter prunes
 every other directory at file-listing time, and the surviving scan is
 |terms|/|buckets| of the index regardless of corpus size. Scoring is
-the same rational-idf BM25 variant as the ad-hoc query, so results are
-bit-identical to it — the test asserts exactly that equivalence.
+the same rational-idf BM25 variant as the ad-hoc query, with the same
+``BM25_K1``/``BM25_B``, so results are bit-identical to it — the test
+asserts exactly that equivalence.
+
+Documents are ``(doc_id, text)`` frames.
 
 At 100 TB: the build is one explode + one keyed aggregate (map-side
 partial tf counts) + a partitioned write; queries are a few-partition
@@ -37,6 +40,10 @@ from pyspark.sql import functions as F
 from ska_src_maltopuft_etl_spark.operators import text
 
 __all__ = ["build_inverted_index", "search_index", "term_bucket_py"]
+
+#: BM25 term-frequency saturation and document-length normalization.
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
 def term_bucket_py(term: str, n_buckets: int) -> int:
@@ -59,14 +66,10 @@ def _term_bucket_col(term: Column | str, n_buckets: int) -> Column:
 def build_inverted_index(
     docs: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 64,
 ) -> None:
     """Materialize postings/doclens/stats under ``path``."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), text.tokens(F.col(text_col)).alias("__t")
-    )
+    toks = docs.select("doc_id", text.tokens(F.col("text")).alias("__t"))
     doclens = toks.select("doc_id", F.size("__t").alias("dl"))
     postings = (
         toks.select("doc_id", F.explode("__t").alias("term"))
@@ -94,12 +97,7 @@ def _write_stats(doclens: DataFrame, path: str, n_buckets: int) -> None:
     )
 
 
-def update_inverted_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> int:
+def update_inverted_index(docs: DataFrame, path: str) -> int:
     """Idempotently append a document batch to an existing index.
 
     Already-indexed doc ids are dropped with an anti join (the same
@@ -119,16 +117,14 @@ def update_inverted_index(
     n_buckets = stats.select("n_buckets").head()[0]
     existing = spark.read.parquet(f"{path}/doclens").select("doc_id")
     fresh = (
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
-        )
+        docs.select("doc_id", "text")
         .join(existing, "doc_id", "left_anti")
         .localCheckpoint()  # pin the novelty decision before the appends
     )
     n_new = fresh.count()
     if n_new == 0:
         return 0
-    toks = fresh.select("doc_id", text.tokens(F.col("__text")).alias("__t"))
+    toks = fresh.select("doc_id", text.tokens(F.col("text")).alias("__t"))
     doclens = toks.select("doc_id", F.size("__t").alias("dl"))
     postings = (
         toks.select("doc_id", F.explode("__t").alias("term"))
@@ -148,15 +144,13 @@ def run_index_maintenance_stream(
     doc_stream: DataFrame,
     path: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """foreachBatch wiring of :func:`update_inverted_index`: each
     micro-batch appends idempotently, so replayed batches after a
     restart dedupe on doc id. Caller starts/awaits the query."""
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        update_inverted_index(batch_df, path, id_col, text_col)
+        update_inverted_index(batch_df, path)
 
     return (
         doc_stream.writeStream.foreachBatch(process)
@@ -170,8 +164,6 @@ def search_index(
     path: str,
     terms: list[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 top-k over the materialized index, pruned to the query terms'
     buckets. Scoring matches `bm25_keyword_search` bit-for-bit (same
@@ -199,7 +191,7 @@ def search_index(
     dfreq = postings.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
-    k1c, bc = F.lit(k1), F.lit(b)
+    k1c, bc = F.lit(BM25_K1), F.lit(BM25_B)
     scored = (
         postings.join(doclens, "doc_id")
         .crossJoin(F.broadcast(stats.select("n", "avgdl")))

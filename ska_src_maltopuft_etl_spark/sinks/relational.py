@@ -131,12 +131,13 @@ def incremental_load(
     The reference loads each table with INSERT..RETURNING and keeps a
     driver dict of local→DB ids that downstream tables use to remap
     their FKs (core/database_loader.py:25-189). Distributed equivalent,
-    one pass per table in FK order:
+    in FK order, first numbering every table (steps 1-4) and only then
+    appending (step 5), so a call that raises writes nothing:
 
     1. remap this table's FK columns through the parents' keymaps
        (joins — J9). NULL FKs stay NULL; a non-NULL FK with no row in
-       its parent's batch raises, naming the table and column, before
-       the table is written (the reference's FK constraints reject it);
+       its parent's batch raises, naming the table and column (the
+       reference's FK constraints reject it);
     2. match rows against the existing table on the natural key
        (left joins) — matches adopt the existing id;
     3. novel rows get fresh contiguous ids above the existing max, in
@@ -152,16 +153,17 @@ def incremental_load(
     A table whose path does not exist (on its Hadoop filesystem, with
     the session's Hadoop conf, as the reader sees it) is a first load; a
     table that exists but cannot be read raises rather than being
-    renumbered from 1. The per-table checkpoints are released before the
-    call returns or raises; the returned frames are re-reads of the
-    written tables, and the caller's caches are left alone.
+    renumbered from 1. The per-table checkpoints are held until every
+    table is appended and released before the call returns or raises;
+    the returned frames are re-reads of the written tables, and the
+    caller's caches are left alone.
 
     Re-running the same batch is a no-op; partially-overlapping batches
     append only the new rows, with FKs pointing at the surviving ids.
     """
     hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()  # noqa: SLF001
     keymaps: dict[str, DataFrame] = {}
-    loaded: dict[str, DataFrame] = {}
+    appends: list[tuple[str, DataFrame]] = []
     pinned: list[DataFrame] = []
     try:
         for target in targets:
@@ -256,15 +258,22 @@ def incremental_load(
             # table is still written, so an empty first batch creates it.
             if existing is None or metrics["novel"]:
                 novel = numbered.where(is_novel).withColumn(pk, F.col("__final_id"))
-                novel.select(*tables[name].columns).write.mode("append").option(
-                    "compression", "gzip"
-                ).parquet(path)
-            loaded[name] = spark.read.parquet(path)
+                appends.append((path, novel.select(*tables[name].columns)))
+        for path, novel in appends:
+            novel.write.mode("append").option("compression", "gzip").parquet(path)
+        loaded = {
+            t.table_name: spark.read.parquet(f"{output_dir}/{t.table_name}.parquet")
+            for t in targets
+        }
     finally:
+        sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
         for numbered in pinned:
             # The checkpoint's own RDD: a caller's cache, perhaps first
-            # materialized inside this call, stays.
-            numbered._jdf.logicalPlan().rdd().unpersist(False)  # noqa: SLF001
+            # materialized inside this call, stays. SparkContext's
+            # unpersistRDD is what RDD.unpersist calls, without the
+            # warning that a local checkpoint cannot be recomputed.
+            rdd = numbered._jdf.logicalPlan().rdd()  # noqa: SLF001
+            sc.unpersistRDD(rdd.id(), False)
     return loaded
 
 

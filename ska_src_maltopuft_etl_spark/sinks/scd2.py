@@ -42,14 +42,12 @@ def scd2_apply(
     key_cols: list[str],
     tracked_cols: list[str],
     batch_ts,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> DataFrame:
     """Fold one batch of key->attributes observations into a type-2
     dimension table.
 
-    ``existing`` must carry ``key_cols + tracked_cols + [valid_from,
-    valid_to]`` with ``valid_to IS NULL`` marking current versions.
+    ``existing`` must carry ``key_cols + tracked_cols + ["valid_from",
+    "valid_to"]`` with ``valid_to IS NULL`` marking current versions.
     ``batch`` carries ``key_cols + tracked_cols``. ``batch_ts`` is the
     effective timestamp of the batch (Column or literal value).
 
@@ -67,12 +65,12 @@ def scd2_apply(
     """
     ts = batch_ts if isinstance(batch_ts, Column) else F.lit(batch_ts)
     # struct branches of a CASE must agree exactly on field types
-    ts_from = ts.cast(existing.schema[valid_from].dataType)
-    ts_to = ts.cast(existing.schema[valid_to].dataType)
-    out_cols = key_cols + tracked_cols + [valid_from, valid_to]
+    ts_from = ts.cast(existing.schema["valid_from"].dataType)
+    ts_to = ts.cast(existing.schema["valid_to"].dataType)
+    out_cols = key_cols + tracked_cols + ["valid_from", "valid_to"]
 
-    history = existing.where(F.col(valid_to).isNotNull()).select(*out_cols)
-    current = existing.where(F.col(valid_to).isNull()).select(*out_cols)
+    history = existing.where(F.col("valid_to").isNotNull()).select(*out_cols)
+    current = existing.where(F.col("valid_to").isNull()).select(*out_cols)
 
     b = batch.select(
         *[F.col(k).alias(f"__bk_{k}") for k in key_cols],
@@ -95,19 +93,19 @@ def scd2_apply(
 
     cur_struct = F.struct(
         *[F.col(c).alias(c) for c in key_cols + tracked_cols],
-        F.col(valid_from).alias(valid_from),
-        F.col(valid_to).alias(valid_to),
+        F.col("valid_from").alias("valid_from"),
+        F.col("valid_to").alias("valid_to"),
     )
     closed_struct = F.struct(
         *[F.col(c).alias(c) for c in key_cols + tracked_cols],
-        F.col(valid_from).alias(valid_from),
-        ts_to.alias(valid_to),
+        F.col("valid_from").alias("valid_from"),
+        ts_to.alias("valid_to"),
     )
     new_struct = F.struct(
         *[F.coalesce(F.col(f"__bk_{k}"), F.col(k)).alias(k) for k in key_cols],
         *[F.col(f"__b_{c}").alias(c) for c in tracked_cols],
-        ts_from.alias(valid_from),
-        F.lit(None).cast(existing.schema[valid_to].dataType).alias(valid_to),
+        ts_from.alias("valid_from"),
+        F.lit(None).cast(existing.schema["valid_to"].dataType).alias("valid_to"),
     )
 
     versions = F.when(

@@ -63,7 +63,7 @@ def _load_manifest(table_path: str, version: int) -> dict:
         return json.load(fh)
 
 
-def write_snapshot(df: DataFrame, table_path: str, wall_clock=time.time) -> int:
+def write_snapshot(df: DataFrame, table_path: str) -> int:
     """Publish ``df`` as the next version of the table; returns the
     version number. The write is atomic: the version exists only once
     its manifest file has been renamed into the manifest directory."""
@@ -83,7 +83,7 @@ def write_snapshot(df: DataFrame, table_path: str, wall_clock=time.time) -> int:
         "version": version,
         "files": files,
         "n_rows": n_rows,
-        "committed_at": wall_clock(),
+        "committed_at": time.time(),
     }
     mdir = os.path.join(table_path, _MANIFEST_DIR)
     os.makedirs(mdir, exist_ok=True)
@@ -112,7 +112,7 @@ def read_snapshot(
     return spark.read.parquet(*manifest["files"])
 
 
-def rollback_snapshot(table_path: str, to_version: int, wall_clock=time.time) -> int:
+def rollback_snapshot(table_path: str, to_version: int) -> int:
     """Publish a NEW version whose manifest points at ``to_version``'s
     files — history stays intact, no data is moved or deleted."""
     versions = snapshot_versions(table_path)
@@ -124,7 +124,7 @@ def rollback_snapshot(table_path: str, to_version: int, wall_clock=time.time) ->
         "version": version,
         "files": old["files"],
         "n_rows": old["n_rows"],
-        "committed_at": wall_clock(),
+        "committed_at": time.time(),
         "rolled_back_from": to_version,
     }
     tmp = os.path.join(table_path, _MANIFEST_DIR, f".v{version:08d}.json.tmp")

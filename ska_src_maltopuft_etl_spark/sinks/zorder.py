@@ -88,7 +88,7 @@ def _interleave(codes: list[Column], bits: int) -> Column:
 
 
 def zorder_key(
-    df: DataFrame, cols: list[str], bits: int = 12, rel_err: float = 0.01
+    df: DataFrame, cols: list[str], bits: int = 12
 ) -> Column:
     """Z-value column for ``cols`` (numeric/timestamp-castable).
 
@@ -105,7 +105,7 @@ def zorder_key(
     for c in cols:
         dc = f"__zq_{c}"
         qdf = df.select(F.col(c).cast("double").alias(dc))
-        boundaries = qdf.approxQuantile(dc, probs, rel_err)
+        boundaries = qdf.approxQuantile(dc, probs, 0.01)
         # dedupe (constant/low-cardinality columns repeat boundaries)
         uniq = sorted(set(boundaries))
         codes.append(_bucket(F.col(c), uniq, bits))

@@ -4,10 +4,11 @@ One tab-separated line per file; field 0 is a throwaway index; ``.jpg`` /
 ``.fil`` values get the candidate-directory prefix
 (reference: meertrap/candidate/extract.py:25-117).
 
-Spark-first: one csv scan with an explicit schema (``scan_spccl``, shared
-with the streaming source) replaces the per-file thread pool;
-``input_file_name()`` supplies the ``filename`` column, whose candidate
-directory prefixes the paths.
+Spark-first: one csv scan with an explicit schema replaces the per-file
+thread pool; ``input_file_name()`` supplies the ``filename`` column,
+whose candidate directory prefixes the paths. The scan (``scan_spccl``)
+and the projection (``parse_spccl``) are shared with the streaming
+source.
 """
 
 from __future__ import annotations
@@ -65,13 +66,11 @@ def scan_spccl(reader: DataFrameReader | DataStreamReader, directory: str) -> Da
     )
 
 
-def read_spccl(spark: SparkSession, directory: str) -> DataFrame:
-    """Scan ``<directory>/**/*spccl*`` into the prefixed candidate frame.
-
-    Output columns follow the reference's rename map
+def parse_spccl(raw: DataFrame) -> DataFrame:
+    """``scan_spccl`` output, batch or streaming, as the prefixed
+    candidate frame. Output columns follow the reference's rename map
     (cand_*, sp_cand_plot_path, label, probability, fil_file, filename).
     """
-    raw = scan_spccl(spark.read, directory)
     cand_dir = F.substring_index("filename", "/", 1)
 
     def prefixed(col: str):
@@ -92,3 +91,8 @@ def read_spccl(spark: SparkSession, directory: str) -> DataFrame:
         prefixed("fil_file").alias("fil_file"),
         prefixed("plot_file").alias("sp_cand_plot_path"),
     )
+
+
+def read_spccl(spark: SparkSession, directory: str) -> DataFrame:
+    """Scan ``<directory>/**/*spccl*`` into the prefixed candidate frame."""
+    return parse_spccl(scan_spccl(spark.read, directory))

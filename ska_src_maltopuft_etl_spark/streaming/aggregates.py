@@ -5,7 +5,9 @@ count / sum / sum-of-squares / min / max per group) to Structured
 Streaming: each micro-batch's state is merged into a parquet-backed
 state table via ``foreachBatch``, so per-group statistics over an
 unbounded stream stay queryable at any time with one small scan —
-no re-aggregation of history, ever.
+no re-aggregation of history, ever. Each run is an ``availableNow``
+trigger: it drains the input present at start and stops, and the next
+run resumes from the checkpoint.
 
 Why ``foreachBatch`` + explicit state parquet instead of the built-in
 streaming aggregation state store:
@@ -71,10 +73,10 @@ def maintain_aggregate_state(
     value_col: str,
     state_path: str,
     checkpoint_path: str,
-    trigger_available_now: bool = True,
 ):
-    """Start a stream that folds each micro-batch into the persistent
-    aggregate state at ``state_path``.
+    """Start an ``availableNow`` stream that folds each micro-batch into
+    the persistent aggregate state at ``state_path``: it processes the
+    input present at start, then stops.
 
     Returns the started :class:`StreamingQuery`. Query the live
     statistics at any moment with :func:`read_finalized`.
@@ -111,12 +113,12 @@ def maintain_aggregate_state(
         os.rename(tmp_dir, cur_dir)
         shutil.rmtree(old_dir, ignore_errors=True)
 
-    writer = stream_df.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        stream_df.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_finalized(

@@ -20,22 +20,19 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ska_src_maltopuft_etl_spark import functions as K
 from ska_src_maltopuft_etl_spark.plans.meertrap.candidate import resolve_beams
-from ska_src_maltopuft_etl_spark.sources.spccl import scan_spccl
+from ska_src_maltopuft_etl_spark.sources.spccl import parse_spccl, scan_spccl
 
 
 def stream_spccl(spark: SparkSession, directory: str) -> DataFrame:
-    """File-arrival stream of SPCCL candidate lines (streaming S5), read
-    as :func:`read_spccl` reads them."""
+    """File-arrival stream of SPCCL candidate lines (streaming S5): the
+    :func:`read_spccl` columns plus the ``cand_coherent`` and
+    ``cand_observed_at`` that ``resolve_beams`` groups and orders by."""
     raw = scan_spccl(spark.readStream.option("maxFilesPerTrigger", "1000"), directory)
-    return raw.select(
-        "filename",
-        F.col("mjd").alias("cand_mjd"),
-        F.col("dm").alias("cand_dm"),
-        F.col("snr").alias("cand_snr"),
-        F.col("width").alias("cand_width"),
-        F.col("beam").alias("cand_beam"),
-        (F.col("beam_mode") == "C").alias("cand_coherent"),
-        K.mjd_to_timestamp(F.col("mjd")).alias("cand_observed_at"),
+    return parse_spccl(raw).withColumns(
+        {
+            "cand_coherent": F.col("cand_beam_mode") == "C",
+            "cand_observed_at": K.mjd_to_timestamp("cand_mjd"),
+        }
     )
 
 

@@ -16,6 +16,9 @@ Two composition patterns, each used where it is legal and fast:
   batch DataFrame, so the exact batch semantics (including the
   broadcast anti join) apply per batch — the same pattern
   ``streaming/candidates.py`` uses for beam resolution.
+
+Streamed documents are ``(doc_id, text)`` rows, and contamination means
+sharing a word 3-gram with the eval set.
 """
 
 from __future__ import annotations
@@ -45,13 +48,7 @@ def eval_gram_table(
     )
 
 
-def flag_contaminated_stream(
-    doc_stream: DataFrame,
-    eval_grams: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def flag_contaminated_stream(doc_stream: DataFrame, eval_grams: DataFrame) -> DataFrame:
     """Stream-static join: (doc, shared eval gram) match events.
 
     Stateless — no watermark needed; the static side broadcasts per
@@ -61,53 +58,40 @@ def flag_contaminated_stream(
     """
     from ska_src_maltopuft_etl_spark.operators.similarity import ngram_shingles
 
-    grams = ngram_shingles(doc_stream, id_col, text_col, n=n, distinct=False)
-    return grams.join(F.broadcast(eval_grams), "shingle").select(
-        id_col, "shingle"
-    )
+    grams = ngram_shingles(doc_stream, "doc_id", "text", distinct=False)
+    return grams.join(F.broadcast(eval_grams), "shingle").select("doc_id", "shingle")
 
 
-def curate_batch(
-    batch_df: DataFrame,
-    eval_grams: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_top_word_ratio_pct: int = 20,
-) -> DataFrame:
+def curate_batch(batch_df: DataFrame, eval_grams: DataFrame) -> DataFrame:
     """One micro-batch (or plain batch) of curation: quality + decontam.
 
     - map-only quality columns: token count and the most-frequent-word
       count via explode + groupBy (the scale-correct shape for long
       documents — a per-row nested array scan is quadratic in doc
       length), thresholded in integer space like the batch
-      `text_repetition_filter`;
+      `text_repetition_filter`: the top word may be at most 20 % of the
+      tokens;
     - broadcast anti join drops docs sharing any n-gram with the eval
       set.
     """
     from ska_src_maltopuft_etl_spark.operators.similarity import ngram_shingles
 
-    toks = batch_df.withColumn("n_tokens", F.size(text.tokens(F.col(text_col))))
+    toks = batch_df.withColumn("n_tokens", F.size(text.tokens(F.col("text"))))
     wc = (
-        batch_df.select(
-            F.col(id_col), F.explode(text.tokens(F.col(text_col))).alias("__w")
-        )
-        .groupBy(id_col, "__w")
+        batch_df.select("doc_id", F.explode(text.tokens(F.col("text"))).alias("__w"))
+        .groupBy("doc_id", "__w")
         .agg(F.count(F.lit(1)).alias("__cnt"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("__cnt").alias("top_word_count"))
     )
-    with_quality = toks.join(wc, id_col)
+    with_quality = toks.join(wc, "doc_id")
     keep_quality = with_quality.where(
         (F.col("n_tokens") > 0)
-        & (
-            F.col("top_word_count") * 100
-            <= F.col("n_tokens") * max_top_word_ratio_pct
-        )
+        & (F.col("top_word_count") * 100 <= F.col("n_tokens") * 20)
     )
-    grams = ngram_shingles(keep_quality, id_col, text_col, n=n, distinct=False)
-    contaminated = grams.join(F.broadcast(eval_grams), "shingle").select(id_col)
-    return keep_quality.join(contaminated, id_col, "left_anti")
+    grams = ngram_shingles(keep_quality, "doc_id", "text", distinct=False)
+    contaminated = grams.join(F.broadcast(eval_grams), "shingle").select("doc_id")
+    return keep_quality.join(contaminated, "doc_id", "left_anti")
 
 
 def run_curation_stream(
@@ -115,9 +99,6 @@ def run_curation_stream(
     eval_grams: DataFrame,
     sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
 ):
     """Wire :func:`curate_batch` into a foreachBatch streaming query.
 
@@ -128,7 +109,7 @@ def run_curation_stream(
     """
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        sink(curate_batch(batch_df, eval_grams, id_col, text_col, n), epoch_id)
+        sink(curate_batch(batch_df, eval_grams), epoch_id)
 
     return (
         doc_stream.writeStream.foreachBatch(process)

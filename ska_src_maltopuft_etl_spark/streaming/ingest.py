@@ -11,8 +11,9 @@ natural evolution is a file-arrival stream with the same semantics:
   watermark horizon;
 - ``stream_with_watermark_dedup``: the generic operator;
 - ``sessionize_events``: an example custom stateful operator
-  (``applyInPandasWithState``) — session windows with timeout, the shape
-  any bespoke streaming state machine takes in this engine.
+  (``applyInPandasWithState``) — session windows closed by an event-time
+  timeout, the shape any bespoke streaming state machine takes in this
+  engine.
 
 All sinks are left to the caller (``writeStream`` with checkpointing);
 tests drive these with ``Trigger.AvailableNow`` over static directories.
@@ -54,13 +55,12 @@ def stream_with_watermark_dedup(
     )
 
 
-def stream_run_summaries(
-    spark: SparkSession, directory: str, watermark: str = "1 hour"
-) -> DataFrame:
+def stream_run_summaries(spark: SparkSession, directory: str) -> DataFrame:
     """File-arrival stream of run summaries with content dedup.
 
     Reads, quarantines and hashes the files as the batch source does
-    (``parse_run_summaries``); event time is the observation start.
+    (``parse_run_summaries``); event time is the observation start, and
+    duplicates collapse within a 1 hour watermark.
     """
     raw = scan_run_summaries(spark.readStream.option("maxFilesPerTrigger", "1000"), directory)
     # minimal projection for streaming consumers; the full frame is the
@@ -71,7 +71,7 @@ def stream_run_summaries(
         "content_hash",
         F.col("mk_sb_meerkat_id").alias("meerkat_id"),
     )
-    return stream_with_watermark_dedup(flat, "utc_start", ["content_hash"], watermark)
+    return stream_with_watermark_dedup(flat, "utc_start", ["content_hash"])
 
 
 SESSION_SCHEMA = StructType(
@@ -128,13 +128,10 @@ def _merge_spans(
 def sessionize_events(
     events: DataFrame,
     gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    timeout: str = "event",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Custom stateful operator: gap-based session windows per user via
+    """Custom stateful operator: gap-based session windows per
+    ``user_id`` over ``(user_id, ts, value)`` events via
     ``applyInPandasWithState``.
 
     Demonstrates the engine's pattern for operators Structured Streaming
@@ -151,52 +148,29 @@ def sessionize_events(
     convention.
 
     NULL conventions (round-13, pinned by tools/fuzz_stream.py):
-    NULL-``ts_col`` rows are dropped (no place on the time axis — same
-    rule as asof_join); a NULL ``user_col`` is a regular group (Spark
-    groupBy semantics); NULL ``value_col`` contributes nothing to
+    NULL-``ts`` rows are dropped (no place on the time axis — same
+    rule as asof_join); a NULL ``user_id`` is a regular group (Spark
+    groupBy semantics); NULL ``value`` contributes nothing to
     ``total_value`` (SQL SUM), with an all-NULL span totalling 0.0.
 
-    ``timeout`` picks the session-close clock:
-
-    - ``"event"`` (default): EventTimeTimeout — a session is emitted
-      only once the WATERMARK passes its end + gap (matching the
-      built-in ``session_window`` semantics): no row the watermark
-      still admits can change an emitted session, so the appended
-      output content is deterministic — a replay, any batch split, and
-      any within-watermark arrival order produce the same sessions.
-      Terminates under ``Trigger.AvailableNow``; requires ``watermark``
-      on ``ts_col``.
-    - ``"processing"``: ProcessingTimeTimeout — a session closes
-      ``gap_minutes`` of WALL CLOCK after its last update. Only for
-      genuinely live streams. **Never combine with AvailableNow**: the
-      trigger cannot drain pending processing-time timeouts, so the
-      query spins empty micro-batches at full CPU — every batch cycles
-      the whole state store through Python — until the wall-clock gap
-      elapses (measured: 90+ CPU-minutes "processing" 1 M rows that
-      took 6 s of real work; found by the round-8 scale harness).
+    Sessions close on an EventTimeTimeout: a session is emitted only
+    once the WATERMARK (``watermark`` on ``ts``) passes its end + gap
+    (matching the built-in ``session_window`` semantics): no row the
+    watermark still admits can change an emitted session, so the
+    appended output content is deterministic — a replay, any batch
+    split, and any within-watermark arrival order produce the same
+    sessions. Terminates under ``Trigger.AvailableNow``.
     """
     gap_us = gap_minutes * 60 * 1_000_000
-
-    if timeout == "event":
-        events = events.withWatermark(ts_col, watermark)
-        timeout_conf = GroupStateTimeout.EventTimeTimeout
-    elif timeout == "processing":
-        timeout_conf = GroupStateTimeout.ProcessingTimeTimeout
-    else:
-        raise ValueError(f"timeout must be 'event' or 'processing': {timeout!r}")
+    events = events.withWatermark("ts", watermark)
 
     def set_timeout(state: GroupState, end_us: int) -> None:
-        if timeout == "event":
-            # fire when the watermark passes session end + gap (ms);
-            # clamp above the current watermark — a timeout timestamp
-            # at/behind it is an error (late rows within the allowed
-            # lateness can end a session before the watermark).
-            ts_ms = end_us // 1000 + gap_minutes * 60 * 1000
-            state.setTimeoutTimestamp(
-                max(ts_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        else:
-            state.setTimeoutDuration(gap_minutes * 60 * 1000)
+        # fire when the watermark passes session end + gap (ms); clamp
+        # above the current watermark — a timeout timestamp at/behind it
+        # is an error (late rows within the allowed lateness can end a
+        # session before the watermark).
+        ts_ms = end_us // 1000 + gap_minutes * 60 * 1000
+        state.setTimeoutTimestamp(max(ts_ms, state.getCurrentWatermarkMs() + 1))
 
     def load_spans(state: GroupState) -> list[tuple[int, int, int, float]]:
         starts, ends, ns, totals = state.get
@@ -223,15 +197,11 @@ def sessionize_events(
     ) -> tuple[list, list]:
         """Partition spans into (sealed, open). A span is sealed once the
         watermark passes end + gap: no admissible row can extend, precede,
-        or bridge it (any non-late row has ts >= watermark > end + gap).
-        Processing-time mode has no watermark; there, every span but the
-        most recent is 'sealed' the moment an in-batch gap closes it."""
-        if timeout == "event":
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            sealed = [s for s in spans if s[1] + gap_us < wm_us]
-            kept = [s for s in spans if s[1] + gap_us >= wm_us]
-            return sealed, kept
-        return spans[:-1], spans[-1:]
+        or bridge it (any non-late row has ts >= watermark > end + gap)."""
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        sealed = [s for s in spans if s[1] + gap_us < wm_us]
+        kept = [s for s in spans if s[1] + gap_us >= wm_us]
+        return sealed, kept
 
     def emit(key, spans: list[tuple[int, int, int, float]]) -> pd.DataFrame:
         return pd.DataFrame(
@@ -248,8 +218,6 @@ def sessionize_events(
         if state.hasTimedOut:
             spans = load_spans(state)
             sealed, kept = split_sealed(state, spans)
-            if timeout != "event":
-                sealed, kept = spans, []
             if kept:
                 store_spans(state, kept)
             else:
@@ -263,7 +231,7 @@ def sessionize_events(
         # this, NaT.astype(int64) is int64-min and the garbage span
         # merges into a real session (round-13 streaming-fuzzer probe:
         # a session_end in year 1677).
-        rows = rows[rows[ts_col].notna()]
+        rows = rows[rows["ts"].notna()]
         if rows.empty:
             # Defensive re-arm (round-14 advice): on PySpark 4.1.2 a
             # stored timeoutTimestamp survives an invocation that does
@@ -276,9 +244,9 @@ def sessionize_events(
                     state, min(e for _, e, _, _ in load_spans(state))
                 )
             return
-        rows = rows.sort_values(ts_col)
-        ts_us = (rows[ts_col].astype("int64") // 1000).to_numpy()
-        vals = rows[value_col].to_numpy()
+        rows = rows.sort_values("ts")
+        ts_us = (rows["ts"].astype("int64") // 1000).to_numpy()
+        vals = rows["value"].to_numpy()
         # Sessionize WITHIN the batch: split the key's (sorted) rows at
         # every gap > gap_us. Merging the whole batch into one span —
         # the round-8 shape — silently fused separate sessions whenever
@@ -315,12 +283,12 @@ def sessionize_events(
             yield emit(key, sealed)
         return
 
-    return events.groupBy(user_col).applyInPandasWithState(
+    return events.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=SESSION_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=timeout_conf,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

@@ -25,3 +25,16 @@ def test_driver_memory_without_meminfo(tmp_path):
     assert box_driver_memory(str(tmp_path / "absent")) == "16384m"
     (tmp_path / "empty").write_text("MemFree: 1 kB\n")
     assert box_driver_memory(str(tmp_path / "empty")) == "16384m"
+
+
+def test_session_keeps_spark_aqe_and_split_defaults(spark):
+    """get_spark leaves AQE (with partition coalescing and skew-join
+    splitting) and the 128 MiB file split to Spark's own defaults."""
+    for key in (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+    ):
+        assert spark.conf.get(key) == "true", key
+    sql_conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    assert sql_conf.filesMaxPartitionBytes() == 128 * 1024 * 1024

@@ -138,9 +138,12 @@ def test_streaming_candidate_beam_resolution(spark, tmp_path):
     assert len(collected) == 2
     by_dm = {round(r["cand_dm"], 1): r["beam_id"] for r in collected}
     assert by_dm == {1.5: 101, 2.5: 102}
-    # the stream names each file as the batch source does (extension cut)
-    batch = read_spccl(spark, str(data)).collect()
-    assert sorted(r["filename"] for r in collected) == sorted(r["filename"] for r in batch)
+    # the stream reads each file as the batch source does: every
+    # read_spccl column, paths prefixed and file names extension-cut
+    batch = read_spccl(spark, str(data))
+    assert sorted(tuple(r[c] for c in batch.columns) for r in collected) == sorted(
+        tuple(r) for r in batch.collect()
+    )
 
 
 def test_streaming_aggregate_state_maintenance(spark, tmp_path):
