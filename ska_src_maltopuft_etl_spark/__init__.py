@@ -12,11 +12,14 @@ re-expressed Spark-first:
                  dedup, surrogate keys, key remap, cardinality-validated
                  joins) plus large-scale training-data ops (dedup family,
                  similarity search, text analysis, multimodal plumbing)
-- ``sources``    run-summary JSON / SPCCL TSV / parquet-checkpoint / ATNF
-                 readers
-- ``sinks``      parquet + idempotent relational (merge-style) sinks
-- ``plans``      the MeerTRAP and ATNF pipelines composed from the above
-- ``streaming``  Structured Streaming extensions (file-arrival ingest)
+- ``sources``    run-summary JSON / SPCCL TSV / star-schema test-table
+                 readers and candidate-directory layout steps
+- ``sinks``      parquet + idempotent relational (merge-style) and JDBC
+                 sinks, SCD2
+- ``plans``      the MeerTRAP and ATNF pipelines composed from the above,
+                 plus the query battery
+- ``streaming``  Structured Streaming extensions (file-arrival ingest,
+                 stream-stream joins, sessionization)
 
 Everything is built on the public Apache Spark DataFrame API and designed
 for a multi-executor cluster at ~100 TB scale; local[*] is only the test

@@ -104,9 +104,14 @@ def main(argv: list[str] | None = None) -> int:
                 remote_file_root_path = cfg.remote_file_root_path
             if args.data_dir is None:
                 raise SystemExit("meertrap: DATA_DIR or --config required")
+            if args.incremental and args.output is None:
+                raise SystemExit(
+                    "meertrap --incremental: no output dir (--output, or a "
+                    "--config with save_output true)"
+                )
             args.partition_key = args.partition_key or ""
 
-            if args.incremental and args.output:
+            if args.incremental:
                 from ska_src_maltopuft_etl_spark.sinks import (
                     MEERTRAP_TARGETS,
                     incremental_load,
@@ -134,13 +139,12 @@ def main(argv: list[str] | None = None) -> int:
             from ska_src_maltopuft_etl_spark.sinks import ATNF_TARGETS, incremental_load
 
             tables = atnf_run(spark, psrqpy_fetcher)
-            if args.output:
-                # incremental_load reconciles the batch-local ids (e.g.
-                # catalogue_visit_id=1 from transform()) above the existing
-                # table's max and remaps known_pulsar FKs, so each visit
-                # gets a fresh id — matching the reference's
-                # INSERT..RETURNING per-visit behavior.
-                tables = incremental_load(spark, tables, ATNF_TARGETS, args.output)
+            # incremental_load reconciles the batch-local ids (e.g.
+            # catalogue_visit_id=1 from transform()) above the existing
+            # table's max and remaps known_pulsar FKs, so each visit
+            # gets a fresh id — matching the reference's
+            # INSERT..RETURNING per-visit behavior.
+            tables = incremental_load(spark, tables, ATNF_TARGETS, args.output)
             for name, df in tables.items():
                 print(f"{name}: {df.count()} rows")
     finally:

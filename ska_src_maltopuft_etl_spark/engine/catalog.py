@@ -1,11 +1,11 @@
-"""Session catalog helpers: temp-view registration so users can drive
+"""Session catalog helper: temp-view registration so users can drive
 the engine through plain ``spark.sql`` (ANSI SQL frontend) as well as
 the DataFrame API.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ska_src_maltopuft_etl_spark.sources import TABLES, load_table
 
@@ -26,10 +26,3 @@ def register_star_schema(spark: SparkSession, sf_dir: str) -> list[str]:
         _REGISTERED[app] = sf_dir
     return list(TABLES)
 
-
-def register_tables(spark: SparkSession, tables: dict[str, DataFrame]) -> None:
-    """Register arbitrary named frames (e.g. MeerTRAP pipeline outputs)
-    as temp views for SQL access — the reference's post-load SQL surface
-    (README smoke query) without a database."""
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)

@@ -30,9 +30,6 @@ from ska_src_maltopuft_etl_spark.operators.bloom import (
     build_bloom,
 )
 from ska_src_maltopuft_etl_spark.operators.expectations import (
-    ExpectationError,
-    assert_expectations,
-    expect,
     expect_between,
     expect_fk,
     expect_non_null,
@@ -51,12 +48,9 @@ from ska_src_maltopuft_etl_spark.operators.sketches import (
 
 __all__ = [
     "CardinalityError",
-    "ExpectationError",
-    "assert_expectations",
     "bloom_might_contain",
     "bloom_semi_join",
     "build_bloom",
-    "expect",
     "expect_between",
     "expect_fk",
     "expect_non_null",

@@ -11,15 +11,8 @@ evaluate in ONE pass over the data (a single aggregate of
 set-level expectations (uniqueness, referential integrity) run as
 keyed aggregates / anti joins.
 
-Three consumption modes:
-
-- :func:`quality_report` — (expectation, n_violations) frame, the
-  audit artifact;
-- :func:`violations` — the offending rows per expectation, for
-  quarantine flows (the PERMISSIVE ``_corrupt_record`` pattern at the
-  semantic level);
-- :func:`assert_expectations` — fail the pipeline (the reference's
-  behavior) when any expectation is violated.
+:func:`quality_report` returns the (expectation, n_violations) frame,
+the audit artifact.
 """
 
 from __future__ import annotations
@@ -32,22 +25,13 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "Expectation",
-    "expect",
     "expect_non_null",
     "expect_between",
     "expect_regex",
     "expect_unique",
     "expect_fk",
     "quality_report",
-    "violations",
-    "assert_expectations",
-    "ExpectationError",
 ]
-
-
-class ExpectationError(RuntimeError):
-    """Raised by :func:`assert_expectations` when data violates an
-    expectation (parity with the reference's validation failure)."""
 
 
 @dataclass(frozen=True)
@@ -57,11 +41,6 @@ class Expectation:
     predicate: Column | None = None
     #: set-level violation counter: df -> violating-rows DataFrame
     set_rule: Callable[[DataFrame], DataFrame] | None = None
-
-
-def expect(name: str, predicate: Column) -> Expectation:
-    """Arbitrary row-level expectation from any boolean Column."""
-    return Expectation(name, predicate=predicate)
 
 
 def expect_non_null(*cols: str) -> list[Expectation]:
@@ -169,7 +148,6 @@ def quality_report(df: DataFrame, expectations) -> DataFrame:
 
     if not parts:
         # no expectations supplied — an empty report, not a crash
-        # (assert_expectations then trivially passes; ADVICE r2).
         return df.sparkSession.createDataFrame(
             [], "expectation string, n_violations long"
         )
@@ -178,23 +156,3 @@ def quality_report(df: DataFrame, expectations) -> DataFrame:
         report = report.unionByName(p)
     return report
 
-
-def violations(df: DataFrame, expectation: Expectation) -> DataFrame:
-    """The offending rows for one expectation (quarantine feed)."""
-    if expectation.predicate is not None:
-        return df.where(~F.coalesce(expectation.predicate, F.lit(False)))
-    assert expectation.set_rule is not None
-    return expectation.set_rule(df)
-
-
-def assert_expectations(df: DataFrame, expectations) -> None:
-    """Raise :class:`ExpectationError` listing every violated
-    expectation (reference parity: validation failure stops the run)."""
-    bad = [
-        (r["expectation"], r["n_violations"])
-        for r in quality_report(df, expectations).collect()
-        if r["n_violations"] > 0
-    ]
-    if bad:
-        detail = ", ".join(f"{n}={c}" for n, c in bad)
-        raise ExpectationError(f"expectations violated: {detail}")

@@ -5,9 +5,8 @@ search without re-training or re-assigning the corpus per query batch.
 centroids, tags the whole corpus, and probes — fine for a single
 pipeline pass, wasteful when the same corpus serves many query batches.
 This module persists the two IVF artifacts to parquet once and reuses
-them, the same incremental-index pattern as
-`operators.dedup_index.NearDupIndex` (itself the near-dup lift of the
-reference's idempotent re-run model, observation/extract.py:60-77):
+them, the index form of the reference's idempotent re-run model
+(observation/extract.py:60-77):
 
 - ``{path}/centroids`` — (cluster int, centroid array<double>,
   n_at_build long), n_centroids rows. Tiny; read to the driver and
@@ -169,7 +168,7 @@ class IvfIndex:
         """Assign vectors whose ids are not yet indexed to the FROZEN
         centroids and append them; returns the number added. Re-running
         the same batch is a no-op (anti-join on the id) — the
-        `incremental_load` / `NearDupIndex.update` contract."""
+        `incremental_load` contract."""
         cents = self._centroids()
         # No .distinct() on the seen side: left-anti semantics are
         # unaffected by duplicate right-side keys, so the distinct's
@@ -178,7 +177,8 @@ class IvfIndex:
         fresh = vectors.join(seen, self.id_col, "left_anti")
         tagged = ivf_assign(fresh, cents, self.id_col, self.vec_col)
         # localCheckpoint: the append writes the same path its anti-join
-        # lineage scans — materialize first (NearDupIndex.update's rule).
+        # lineage scans — materialize first so the write does not race
+        # its own input scan.
         # Lazy: the count below IS the materializing action (eager=True
         # spends an extra job running the identical computation first).
         tagged = tagged.localCheckpoint(eager=False)

@@ -73,116 +73,6 @@ def with_binary_payload(df: DataFrame, text_col: str) -> DataFrame:
     return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
 
 
-# ---------------------------------------------------------------------------
-# Resize / frame-sample / feature-extract (stub codecs, real plumbing)
-# ---------------------------------------------------------------------------
-
-RESIZED_SCHEMA_FIELDS = [
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("n_bytes", LongType()),
-]
-
-
-def resize_images(
-    df: DataFrame, id_col: str, binary_col: str, width: int = 64, height: int = 64
-) -> DataFrame:
-    """Image resize over Arrow batches (stub: emits the target geometry
-    and the RGB byte count a real resize would produce; a production
-    deployment swaps the body for PIL/opencv). Map-only — no shuffle."""
-    id_field = df.schema[id_col]
-    out_schema = StructType([id_field] + RESIZED_SCHEMA_FIELDS)
-    narrow = df.select(id_col, binary_col)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "width": [width] * n,
-                    "height": [height] * n,
-                    "n_bytes": [width * height * 3] * n,
-                }
-            )
-
-    return narrow.mapInPandas(process, schema=out_schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    frame_size: int = 256,
-    max_frames: int = 4,
-) -> DataFrame:
-    """Frame sampling: one output row per sampled frame (one-to-many
-    mapInPandas — the UDTF shape). The stub treats the payload as a
-    concatenation of ``frame_size``-byte frames and emits every k-th
-    frame's bytes; a real decoder would seek keyframes via ffmpeg."""
-    id_field = df.schema[id_col]
-    out_schema = StructType(
-        [
-            id_field,
-            StructField("frame_idx", IntegerType()),
-            StructField("frame_bytes", LongType()),
-            StructField("frame_head", IntegerType()),
-        ]
-    )
-    narrow = df.select(id_col, binary_col)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, sizes, heads = [], [], [], []
-            for rid, payload in zip(pdf[id_col].values, pdf[binary_col].values):
-                n_frames = max(1, len(payload) // frame_size)
-                step = max(1, n_frames // max_frames)
-                for k, f in enumerate(range(0, n_frames, step)):
-                    if k >= max_frames:
-                        break
-                    chunk = payload[f * frame_size : (f + 1) * frame_size]
-                    ids.append(rid)
-                    idxs.append(f)
-                    sizes.append(len(chunk))
-                    heads.append(chunk[0] if len(chunk) else -1)
-            yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "frame_bytes": sizes,
-                 "frame_head": heads}
-            )
-
-    return narrow.mapInPandas(process, schema=out_schema)
-
-
-def extract_features(
-    df: DataFrame, id_col: str, binary_col: str, dim: int = 16
-) -> DataFrame:
-    """Deterministic byte-level feature vector (``array<float>``): a
-    dim-bucketed byte histogram, L1-normalized. Stub for a real vision/
-    audio embedding model; the output feeds directly into
-    operators/similarity.py (cosine_topk_*)."""
-    from pyspark.sql.types import ArrayType, FloatType
-
-    id_field = df.schema[id_col]
-    out_schema = StructType(
-        [id_field, StructField("features", ArrayType(FloatType()))]
-    )
-    narrow = df.select(id_col, binary_col)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            feats = []
-            for payload in pdf[binary_col].values:
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype("float32")
-                total = hist.sum()
-                feats.append((hist / total if total else hist).tolist())
-            yield pd.DataFrame({id_col: pdf[id_col].values, "features": feats})
-
-    return narrow.mapInPandas(process, schema=out_schema)
-
-
 def _md5_score_batch(q: pd.Series, t: pd.Series) -> pd.Series:
     """Deterministic cross-encoder stand-in:
     ``int(md5(q + '|' + text)[:8], 16) / 4294967295``."""

@@ -26,8 +26,11 @@ from pyspark.sql.window import Window
 
 from ska_src_maltopuft_etl_spark.operators import similarity, text
 from ska_src_maltopuft_etl_spark.plans.registry import register
-from ska_src_maltopuft_etl_spark.sinks.inverted_index import BM25_B, BM25_K1
 from ska_src_maltopuft_etl_spark.sources import load_table
+
+#: BM25 term-frequency saturation and document-length normalization.
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1597,9 +1600,8 @@ def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NTILE needs a global total order — a single-partition window, the
     documented local-scale formulation. At 100 TB swap the exact NTILE
-    for the quantile-boundary approach `sinks/zorder.py` uses (GK
-    sketch boundaries + broadcast bucket lookup) — same output shape,
-    approximate boundaries, no global sort.
+    for GK-sketch quantile boundaries + a broadcast bucket lookup — same
+    output shape, approximate boundaries, no global sort.
     """
     o = load_table(spark, sf_dir, "orders")
     w = Window.orderBy(F.col("o_totalprice").asc(), F.col("o_orderkey").asc())

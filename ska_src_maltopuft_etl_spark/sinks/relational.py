@@ -32,7 +32,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructType
 
 
 @dataclass(frozen=True)
@@ -155,8 +155,9 @@ def incremental_load(
     table that exists but cannot be read raises rather than being
     renumbered from 1. The per-table checkpoints are held until every
     table is appended and released before the call returns or raises;
-    the returned frames are re-reads of the written tables, and the
-    caller's caches are left alone.
+    the returned frames are re-reads of the written tables, with the
+    schema the call already holds (the existing table's, or the appended
+    frame's on a first load), and the caller's caches are left alone.
 
     Re-running the same batch is a no-op; partially-overlapping batches
     append only the new rows, with FKs pointing at the surviving ids.
@@ -164,6 +165,9 @@ def incremental_load(
     hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()  # noqa: SLF001
     keymaps: dict[str, DataFrame] = {}
     appends: list[tuple[str, DataFrame]] = []
+    # each table's schema after the call, so the re-read runs no
+    # schema-inference job
+    schemas: dict[str, StructType] = {}
     pinned: list[DataFrame] = []
     try:
         for target in targets:
@@ -254,15 +258,22 @@ def incremental_load(
             keymaps[name] = numbered.select(
                 F.col(pk).alias("__old"), F.col("__final_id").alias("__new")
             ).dropDuplicates(["__old"])
+            novel = (
+                numbered.where(is_novel)
+                .withColumn(pk, F.col("__final_id"))
+                .select(*tables[name].columns)
+            )
             # A rerun appends nothing: skip the empty file. A missing
             # table is still written, so an empty first batch creates it.
             if existing is None or metrics["novel"]:
-                novel = numbered.where(is_novel).withColumn(pk, F.col("__final_id"))
-                appends.append((path, novel.select(*tables[name].columns)))
+                appends.append((path, novel))
+            schemas[name] = (novel if existing is None else existing).schema
         for path, novel in appends:
             novel.write.mode("append").option("compression", "gzip").parquet(path)
         loaded = {
-            t.table_name: spark.read.parquet(f"{output_dir}/{t.table_name}.parquet")
+            t.table_name: spark.read.schema(schemas[t.table_name]).parquet(
+                f"{output_dir}/{t.table_name}.parquet"
+            )
             for t in targets
         }
     finally:

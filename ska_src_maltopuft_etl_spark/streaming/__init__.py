@@ -1,16 +1,6 @@
-from ska_src_maltopuft_etl_spark.streaming.aggregates import (
-    maintain_aggregate_state,
-    read_finalized,
-)
 from ska_src_maltopuft_etl_spark.streaming.candidates import (
     resolve_beams_stream,
     stream_spccl,
-)
-from ska_src_maltopuft_etl_spark.streaming.curation import (
-    curate_batch,
-    eval_gram_table,
-    flag_contaminated_stream,
-    run_curation_stream,
 )
 from ska_src_maltopuft_etl_spark.streaming.ingest import (
     join_event_streams,
@@ -25,15 +15,9 @@ from ska_src_maltopuft_etl_spark.streaming.recovery import (
 
 __all__ = [
     "clear_aborted_batch0",
-    "curate_batch",
     "is_aborted_batch0",
-    "eval_gram_table",
-    "flag_contaminated_stream",
     "join_event_streams",
-    "maintain_aggregate_state",
-    "read_finalized",
     "resolve_beams_stream",
-    "run_curation_stream",
     "sessionize_events",
     "stream_run_summaries",
     "stream_spccl",

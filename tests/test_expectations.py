@@ -50,20 +50,6 @@ def test_quality_report_counts(spark, dirty, dim):
     }
 
 
-def test_violations_rows(spark, dirty, dim):
-    bad_fk = X.violations(dirty, X.expect_fk("ref", dim, "key"))
-    assert [r["ref"] for r in bad_fk.collect()] == [999]
-    dup = X.violations(dirty, X.expect_unique("id"))
-    assert sorted(r["id"] for r in dup.collect()) == [3, 3]
-
-
-def test_assert_expectations_raises_with_detail(spark, dirty):
-    with pytest.raises(X.ExpectationError, match="non_null:v=1"):
-        X.assert_expectations(dirty, [X.expect_non_null("v")])
-    # clean data passes
-    X.assert_expectations(dirty, [X.expect_non_null("id")])
-
-
 def test_row_level_rules_share_one_scan(spark, dirty):
     rep = X.quality_report(
         dirty,
@@ -78,12 +64,6 @@ def test_row_level_rules_share_one_scan(spark, dirty):
     assert plan.count("LogicalRDD") + plan.count("Relation") <= 1
 
 def test_empty_expectation_list(spark, dirty):
-    from ska_src_maltopuft_etl_spark.operators.expectations import (
-        assert_expectations,
-        quality_report,
-    )
-
-    report = quality_report(dirty, [])
+    report = X.quality_report(dirty, [])
     assert report.columns == ["expectation", "n_violations"]
     assert report.count() == 0
-    assert_expectations(dirty, [])  # trivially passes

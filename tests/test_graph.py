@@ -145,34 +145,6 @@ def test_star_matches_union_find(spark, edges):
     assert got == want
 
 
-def test_near_dup_index_incremental(spark, tmp_path):
-    from ska_src_maltopuft_etl_spark.operators.dedup_index import NearDupIndex
-
-    path = str(tmp_path / "neardup_index")
-    idx = NearDupIndex(spark, path)
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    b1 = spark.createDataFrame(
-        [(1, base), (2, "completely different words about spark shuffles here")],
-        ["doc_id", "text"],
-    )
-    # first batch: only in-batch comparison, no dups
-    assert idx.candidates(b1).count() == 0
-    assert idx.update(b1) == 2
-    # re-running the same batch indexes nothing new
-    assert idx.update(b1) == 0
-
-    b2 = spark.createDataFrame(
-        [(10, base + " slightly"), (11, "nothing like anything indexed before now")],
-        ["doc_id", "text"],
-    )
-    cands = {(r["doc_a"], r["doc_b"]) for r in idx.candidates(b2).collect()}
-    assert (1, 10) in cands
-    assert all(b in (10, 11) for _, b in cands)
-    assert idx.update(b2) == 2
-    # index now holds 4 docs' bands
-    assert spark.read.parquet(path).select("doc_id").distinct().count() == 4
-
-
 def test_pagerank_fixed_point_known_graph(spark):
     """3-node graph with a hand-checkable python model: ranks must match
     the exact integer recurrence, sum close to total mass (floor loss

@@ -84,8 +84,12 @@ def test_incremental_load_reconciles_ids_and_fks(spark, tmp_path):
         loaded3 = incremental_load(spark, t3, MEERTRAP_TARGETS, out)
     for name in ("schedule_block", "observation", "beam", "candidate", "sp_candidate"):
         assert loaded3[name].count() == loaded2[name].count(), name
-    # 63, 106 and 99 jobs alone; a full suite run once read one more
-    bounds = ((first, 65), (overlap, 108), (rerun, 101))
+    # the returned frames carry the written tables' schemas
+    for loaded in (loaded1, loaded2, loaded3):
+        for name, df in loaded.items():
+            assert df.schema == spark.read.parquet(f"{out}/{name}.parquet").schema, name
+    # 54, 97 and 89 jobs alone; a full suite run once read one more
+    bounds = ((first, 56), (overlap, 99), (rerun, 91))
     assert all(m["jobs"] <= n for m, n in bounds), bounds
 
 

@@ -57,62 +57,6 @@ def test_salted_join_matches_plain_join(spark):
     )
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    import contextlib
-    import io
-
-    from ska_src_maltopuft_etl_spark.sinks.bucketed import write_bucketed
-
-    orders = spark.range(10_000).selectExpr("id as o_orderkey", "id % 997 as o_custkey")
-    lineitem = spark.range(30_000).selectExpr(
-        "id % 10000 as l_orderkey", "id as l_qty"
-    )
-    write_bucketed(orders, "b_orders", ["o_orderkey"], num_buckets=8)
-    write_bucketed(lineitem, "b_lineitem", ["l_orderkey"], num_buckets=8)
-    a = spark.table("b_orders")
-    b = spark.table("b_lineitem")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b, a.o_orderkey == b.l_orderkey)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        # bucketed both sides on the join key → SMJ with no shuffle
-        assert "SortMergeJoin" in plan
-        assert not any(
-            line.strip().startswith("(") and ") Exchange" in line
-            for line in plan.splitlines()
-        ), plan
-        assert joined.count() == 30_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_bucketed_write_clears_orphaned_location(spark):
-    """A run killed between writing table files and committing the catalog
-    entry leaves the warehouse dir on disk with no table; overwrite-mode
-    write_bucketed must clear the orphan instead of failing with
-    LOCATION_ALREADY_EXISTS."""
-    import os
-    from urllib.parse import urlparse
-
-    from ska_src_maltopuft_etl_spark.sinks.bucketed import write_bucketed
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    orphan = os.path.join(warehouse, "b_orphan_tbl")
-    os.makedirs(os.path.join(orphan, "leftover"), exist_ok=True)
-    try:
-        df = spark.range(100).selectExpr("id as k", "id * 2 as v")
-        write_bucketed(df, "b_orphan_tbl", ["k"], num_buckets=4)
-        assert spark.table("b_orphan_tbl").count() == 100
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orphan_tbl")
-
-
 def test_partition_pruned_scan(spark, tmp_path):
     """Hive-partitioned layout (O1): a date filter must prune partitions
     at the scan, not filter rows post-hoc."""
@@ -141,7 +85,6 @@ def test_partition_pruned_scan(spark, tmp_path):
 def test_sql_frontend_over_pipeline_outputs(spark, tmp_path):
     """The reference's post-load SQL surface: register pipeline outputs
     as views and run the documented smoke query via spark.sql."""
-    from ska_src_maltopuft_etl_spark.engine.catalog import register_tables
     from ska_src_maltopuft_etl_spark.plans.meertrap import meertrap_run
     from tests.test_meertrap_pipeline import OBS, run_summary, spccl_line, mjd
     import datetime as dt
@@ -159,7 +102,8 @@ def test_sql_frontend_over_pipeline_outputs(spark, tmp_path):
                    "4:40:17.07", "-43:33:09.0")
     )
     tables = meertrap_run(spark, str(data), partition_key="x")
-    register_tables(spark, tables)
+    for name, df in tables.items():
+        df.createOrReplaceTempView(name)
     rows = spark.sql("SELECT * FROM sp_candidate LIMIT 1").collect()
     assert len(rows) == 1
 
@@ -262,59 +206,6 @@ def test_hash_split_partition_invariant(spark):
 
     c = Counter(a.values())
     assert c["train"] > 400 and c["val"] + c["test"] > 20
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    from ska_src_maltopuft_etl_spark.sinks.compaction import compact_parquet
-
-    path = str(tmp_path / "many")
-    # 40 tiny files
-    spark.range(0, 4000).withColumn("v", F.col("id") * 2).repartition(
-        40
-    ).write.parquet(path)
-    files_before = [p for p in (tmp_path / "many").glob("part-*")]
-    assert len(files_before) == 40
-    n = compact_parquet(spark, path, target_file_mb=1024)
-    assert n == 1
-    files_after = [p for p in (tmp_path / "many").glob("part-*")]
-    assert len(files_after) == 1
-    got = spark.read.parquet(path)
-    assert got.count() == 4000
-    assert got.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(4000))
-    assert not (tmp_path / "many._compacting").exists()
-    assert not (tmp_path / "many._pre_compact").exists()
-
-
-def test_cluster_parquet_nonoverlapping_ranges(spark, tmp_path):
-    import pyarrow.parquet as pq
-
-    from ska_src_maltopuft_etl_spark.sinks.compaction import cluster_parquet
-
-    path = str(tmp_path / "clust")
-    # shuffle ids so the input files have overlapping id ranges
-    spark.range(0, 20000).withColumn(
-        "shuf", F.xxhash64("id")
-    ).orderBy("shuf").drop("shuf").repartition(8).write.parquet(path)
-    # force >1 output file via a tiny target size
-    n = cluster_parquet(spark, path, ["id"], target_file_mb=0.02)
-    files = sorted((tmp_path / "clust").glob("part-*.parquet"))
-    assert len(files) >= 2 and len(files) == n
-    ranges = []
-    for f in files:
-        md = pq.read_metadata(str(f))
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    for (lo_a, hi_a), (lo_b, _hi_b) in zip(ranges, ranges[1:]):
-        assert hi_a < lo_b, "file key ranges overlap — clustering broken"
-    total = sum(
-        pq.read_metadata(str(f)).num_rows for f in files
-    )
-    assert total == 20000
 
 
 def test_pipeline_config_contract(tmp_path):

@@ -375,6 +375,31 @@ def test_cli_config_remote_root(spark, tmp_path, monkeypatch, incremental):
     assert all(p.startswith("s3://bucket/cands/2023-11-20/") for p in paths), paths
 
 
+@pytest.mark.parametrize("config", [False, True], ids=["no_output", "save_output_false"])
+def test_cli_incremental_without_output_fails(spark, tmp_path, monkeypatch, config):
+    """``meertrap --incremental`` with nowhere to load raises instead of
+    running the plain in-memory pipeline and exiting 0."""
+    from ska_src_maltopuft_etl_spark.cli import main
+
+    data = tmp_path / "data" / "2023-11-20"
+    data.mkdir(parents=True)
+    write_tree(data)
+    argv = ["meertrap", str(data), "--incremental"]
+    if config:
+        cfg = tmp_path / "config.yml"
+        cfg.write_text(
+            f"data_path: {tmp_path / 'data'}\n"
+            "partition_key: 2023-11-20\n"
+            f"output_path: {tmp_path / 'out'}\n"
+            "remote_file_root_path: data\n"
+            "save_output: false\n"
+        )
+        argv += ["--config", str(cfg)]
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    with pytest.raises(SystemExit, match="no output dir"):
+        main(argv)
+
+
 def test_cand_obs_count_asset(spark):
     """Parity for the reference's plot_cand_obs_count asset data
     (reference assets.py:55-76): distributed counts, plotting gated."""

@@ -1,5 +1,5 @@
-"""Multimodal plumbing tests: Arrow-batched decode/resize/frame-sample/
-feature-extract over binary columns (stub codecs, real schemas)."""
+"""Multimodal plumbing tests: Arrow-batched decode over binary columns
+(stub codec, real schema) and the cosine search operators."""
 
 from __future__ import annotations
 
@@ -24,42 +24,6 @@ def test_decode_features(docs_with_payload):
     assert rows[0]["first_byte"] == ord("w")
     assert rows[0]["n_bytes"] == len("word0 ") * 10
     assert rows[0]["tag"] == rows[0]["n_bytes"] % 251
-
-
-def test_resize_stub(docs_with_payload):
-    out = multimodal.resize_images(docs_with_payload, "doc_id", "payload", 32, 24)
-    rows = out.collect()
-    assert len(rows) == 8
-    assert all(r["width"] == 32 and r["height"] == 24 and r["n_bytes"] == 32 * 24 * 3
-               for r in rows)
-
-
-def test_sample_frames_one_to_many(docs_with_payload):
-    out = multimodal.sample_frames(
-        docs_with_payload, "doc_id", "payload", frame_size=16, max_frames=3
-    )
-    rows = out.collect()
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], []).append(r)
-    assert set(per_doc) == set(range(8))
-    assert all(1 <= len(v) <= 3 for v in per_doc.values())
-    assert all(r["frame_bytes"] > 0 for r in rows)
-
-
-def test_extract_features_feeds_similarity(spark, docs_with_payload):
-    feats = multimodal.extract_features(docs_with_payload, "doc_id", "payload", dim=8)
-    rows = feats.collect()
-    assert all(len(r["features"]) == 8 for r in rows)
-    assert all(abs(sum(r["features"]) - 1.0) < 1e-5 for r in rows)
-    # compose with the ANN operator
-    q = feats.where(F.col("doc_id") < 2)
-    c = feats.where(F.col("doc_id") >= 2)
-    topk = similarity.cosine_topk_bruteforce(q, c, "doc_id", "features", k=3)
-    got = topk.collect()
-    assert {r["query_id"] for r in got} == {0, 1}
-    assert all(0.0 <= r["cosine"] <= 1.0001 for r in got)
-    assert max(r["rank"] for r in got) == 3
 
 
 def test_ivf_recall_vs_bruteforce(spark):

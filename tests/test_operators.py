@@ -336,34 +336,6 @@ def test_interval_join_duplicate_left_rows(spark):
     assert all(r["sb_id"] == 1 for r in rows)
 
 
-def test_topk_per_group_matches_plain_window(spark):
-    import random
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ska_src_maltopuft_etl_spark.operators.topk import topk_per_group
-
-    rng = random.Random(7)
-    rows = [
-        (rng.choice(["a", "b", "c"]), rng.randint(0, 10_000), i)
-        for i in range(5_000)
-    ]
-    # skew: one dominant group
-    rows += [("hot", rng.randint(0, 10_000), 100_000 + i) for i in range(20_000)]
-    df = spark.createDataFrame(rows, ["grp", "score", "row_id"]).repartition(16)
-
-    got = topk_per_group(
-        df, ["grp"], [("score", False), ("row_id", True)], k=7
-    )
-    w = Window.partitionBy("grp").orderBy(F.col("score").desc(), F.col("row_id").asc())
-    want = (
-        df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= 7)
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert got.count() == 4 * 7
-
-
 def test_incremental_agg_matches_full_recompute(spark):
     """finalize(merge(state(A), state(B), state(C))) == finalize(state(A∪B∪C))
     for any merge tree (the monoid invariant)."""

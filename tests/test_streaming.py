@@ -146,92 +146,6 @@ def test_streaming_candidate_beam_resolution(spark, tmp_path):
     )
 
 
-def test_streaming_aggregate_state_maintenance(spark, tmp_path):
-    """Stream batches fold into parquet state; finalize == full recompute,
-    and a restarted stream merges only new files."""
-    import json as _json
-
-    from ska_src_maltopuft_etl_spark.operators import incremental_agg as ia
-    from ska_src_maltopuft_etl_spark.streaming import (
-        maintain_aggregate_state,
-        read_finalized,
-    )
-
-    data = tmp_path / "agg_stream"
-    data.mkdir()
-    rows_a = [
-        {"k": "x", "v": 1.0}, {"k": "x", "v": 3.0}, {"k": "y", "v": 10.0},
-    ]
-    rows_b = [{"k": "x", "v": 5.0}, {"k": "y", "v": None}]
-    (data / "a.json").write_text("\n".join(_json.dumps(r) for r in rows_a))
-    (data / "b.json").write_text("\n".join(_json.dumps(r) for r in rows_b))
-
-    schema = "k string, v double"
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def start():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .json(str(data))
-        )
-        return maintain_aggregate_state(stream, ["k"], "v", state, ckpt)
-
-    q = start()
-    q.awaitTermination(120)
-
-    got = {
-        r["k"]: (r["n_rows"], r["value_sum"], r["value_min"], r["value_max"])
-        for r in read_finalized(spark, state, ["k"]).collect()
-    }
-    full = {
-        r["k"]: (r["n_rows"], r["value_sum"], r["value_min"], r["value_max"])
-        for r in ia.finalize(
-            ia.aggregate_state(spark.read.schema(schema).json(str(data)), ["k"], "v"),
-            ["k"],
-        ).collect()
-    }
-    assert got == full
-    assert got["x"] == (3, 9.0, 1.0, 5.0)
-    assert got["y"][0] == 2  # null row counted in n_rows
-
-    # restart with one new file: only the delta is merged (same ckpt)
-    (data / "c.json").write_text(_json.dumps({"k": "z", "v": 7.0}))
-    q2 = start()
-    q2.awaitTermination(120)
-    got2 = {
-        r["k"]: r["n_rows"]
-        for r in read_finalized(spark, state, ["k"]).collect()
-    }
-    assert got2 == {"x": 3, "y": 2, "z": 1}
-
-    # crash-window recovery (ADVICE r2): simulate dying between the two
-    # promote renames — current state moved aside to _old, nothing in its
-    # place. The next merge must heal (_old → state), then process only
-    # the genuinely new file; the epoch stamp lives INSIDE the state dir
-    # so a replayed epoch can never double-merge.
-    import os as _os
-
-    from ska_src_maltopuft_etl_spark.streaming.aggregates import (
-        _EPOCH_FILE,
-        _state_dirs,
-    )
-
-    cur_dir, _tmp, old_dir = _state_dirs(state)
-    assert _os.path.exists(_os.path.join(cur_dir, _EPOCH_FILE))
-    _os.rename(cur_dir, old_dir)
-    (data / "d.json").write_text(_json.dumps({"k": "z", "v": 2.0}))
-    q3 = start()
-    q3.awaitTermination(120)
-    got3 = {
-        r["k"]: (r["n_rows"], r["value_sum"])
-        for r in read_finalized(spark, state, ["k"]).collect()
-    }
-    assert got3 == {"x": (3, 9.0), "y": (2, 10.0), "z": (2, 9.0)}
-    assert _os.path.exists(cur_dir) and not _os.path.exists(old_dir)
-
-
 def test_stream_stream_interval_join(spark, tmp_path):
     """Two file streams joined on user within a 5-minute band; the band
     bounds the state store, and only in-band pairs emit."""
@@ -341,74 +255,6 @@ def test_stream_join_bucketed_naive_parity(spark, tmp_path):
         ("l1", "r1"), ("l1", "r2"), ("l1", "r3"), ("l1", "r4"),
         ("l2", "r4"), ("l2", "r5"),
     ]
-
-
-def test_streaming_curation_stream_static_and_foreachbatch(spark, tmp_path):
-    """Stream-static decontamination: detection via a continuous
-    stream-static join, filtering via foreachBatch (batch semantics per
-    micro-batch); the curated output must equal the batch curate_batch
-    over the same files."""
-    import pandas as pd
-
-    from ska_src_maltopuft_etl_spark.streaming import (
-        curate_batch,
-        eval_gram_table,
-        flag_contaminated_stream,
-        run_curation_stream,
-    )
-
-    data = tmp_path / "docs_in"
-    data.mkdir()
-    rows = [
-        # clean, low repetition
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        # contaminated: contains the eval 3-gram "secret eval phrase"
-        (2, "alpha secret eval phrase beta gamma delta epsilon"),
-        # repetitive: one word dominates
-        (3, "spam spam spam spam spam spam spam ham"),
-        (4, "one two three four five six seven eight nine ten"),
-    ]
-    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
-        data / "part-0.parquet"
-    )
-    eval_docs = spark.createDataFrame(
-        [(100, "the secret eval phrase here")], ["doc_id", "text"]
-    )
-    eval_grams = eval_gram_table(eval_docs, "doc_id", "text", n=3)
-
-    static_docs = spark.read.parquet(str(data))
-    doc_stream = spark.readStream.schema(static_docs.schema).parquet(str(data))
-    assert doc_stream.isStreaming
-
-    # continuous half: detection events via stream-static join
-    flagged = flag_contaminated_stream(doc_stream, eval_grams)
-    q1 = (
-        flagged.writeStream.format("memory")
-        .queryName("contam_events")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination(120)
-    events = spark.sql("SELECT * FROM contam_events").collect()
-    assert {r["doc_id"] for r in events} == {2}
-    assert {r["shingle"] for r in events} == {"secret eval phrase"}
-
-    # filtering half: foreachBatch curation == batch curation
-    out: list = []
-    writer = run_curation_stream(
-        doc_stream,
-        eval_grams,
-        sink=lambda df, epoch: out.extend(df.collect()),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q2 = writer.start()
-    q2.awaitTermination(120)
-    stream_ids = sorted(r["doc_id"] for r in out)
-    batch_ids = sorted(
-        r["doc_id"] for r in curate_batch(static_docs, eval_grams).collect()
-    )
-    assert stream_ids == batch_ids == [1, 4]
 
 
 def test_sessionize_event_time_timeout_emission(spark, tmp_path):

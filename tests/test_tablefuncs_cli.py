@@ -1,50 +1,6 @@
-"""Table-function surface (functions/tablefuncs.py) and CLI parsing."""
+"""CLI parsing and the layout commands."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from ska_src_maltopuft_etl_spark.functions import tablefuncs
-
-
-def test_udtf_lateral_join_from_sql(spark):
-    tablefuncs.register_table_functions(spark)
-    docs = spark.createDataFrame(
-        [(1, "first one. second one."), (2, "only"), (3, ""), (4, None)],
-        "doc_id long, text string",
-    )
-    docs.createOrReplaceTempView("tf_docs")
-    rows = spark.sql(
-        "SELECT doc_id, s.pos, s.sentence "
-        "FROM tf_docs, LATERAL split_sentences(text) s "
-        "ORDER BY doc_id, s.pos"
-    ).collect()
-    assert [(r["doc_id"], r["pos"], r["sentence"]) for r in rows] == [
-        (1, 0, "first one"),
-        (1, 1, "second one"),
-        (2, 0, "only"),
-    ]
-
-
-def test_native_path_matches_udtf(spark):
-    tablefuncs.register_table_functions(spark)
-    docs = spark.createDataFrame(
-        [(1, "a. b.c . "), (2, "x"), (3, "...")],
-        "doc_id long, text string",
-    )
-    native = {
-        (r["doc_id"], r["pos"], r["sentence"])
-        for r in tablefuncs.split_sentences_df(docs, "doc_id", "text").collect()
-    }
-    docs.createOrReplaceTempView("tf_docs2")
-    via_udtf = {
-        (r["doc_id"], r["pos"], r["sentence"])
-        for r in spark.sql(
-            "SELECT doc_id, s.pos, s.sentence "
-            "FROM tf_docs2, LATERAL split_sentences(text) s"
-        ).collect()
-    }
-    assert native == via_udtf and len(native) == 4
 
 
 def test_cli_parser_and_layout_commands(tmp_path):
