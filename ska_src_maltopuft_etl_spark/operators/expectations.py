@@ -12,7 +12,8 @@ set-level expectations (uniqueness, referential integrity) run as
 keyed aggregates / anti joins.
 
 :func:`quality_report` returns the (expectation, n_violations) frame,
-the audit artifact.
+the audit artifact; :func:`violations` returns the offending rows of one
+expectation, for quarantine flows.
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ __all__ = [
     "expect_unique",
     "expect_fk",
     "quality_report",
+    "violations",
 ]
 
 
@@ -156,3 +158,10 @@ def quality_report(df: DataFrame, expectations) -> DataFrame:
         report = report.unionByName(p)
     return report
 
+
+def violations(df: DataFrame, expectation: Expectation) -> DataFrame:
+    """The offending rows for one expectation (quarantine feed)."""
+    if expectation.predicate is not None:
+        return df.where(~F.coalesce(expectation.predicate, F.lit(False)))
+    assert expectation.set_rule is not None
+    return expectation.set_rule(df)

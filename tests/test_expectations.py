@@ -50,6 +50,13 @@ def test_quality_report_counts(spark, dirty, dim):
     }
 
 
+def test_violations_rows(spark, dirty, dim):
+    bad_fk = X.violations(dirty, X.expect_fk("ref", dim, "key"))
+    assert [r["ref"] for r in bad_fk.collect()] == [999]
+    dup = X.violations(dirty, X.expect_unique("id"))
+    assert sorted(r["id"] for r in dup.collect()) == [3, 3]
+
+
 def test_row_level_rules_share_one_scan(spark, dirty):
     rep = X.quality_report(
         dirty,

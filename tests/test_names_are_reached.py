@@ -34,6 +34,7 @@ ALLOWED = {
     "is_aborted_batch0": "oracle the batch-0 recovery test compares against",
     "degrees_to_hms": "oracle the coordinate-kernel tests compare against",
     "timestamp_to_mjd": "oracle the MJD-kernel tests compare against",
+    "violations": "quarantine view of an expectation; its deletion waits for a later change",
 }
 
 
