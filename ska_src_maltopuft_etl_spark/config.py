@@ -88,57 +88,3 @@ def load_config(
         # reference core/config.py:60-75 creates the output dir eagerly
         cfg.output_path.mkdir(parents=True, exist_ok=True)
     return cfg
-
-
-@dataclass(frozen=True)
-class HarnessConfig:
-    """Shared configuration for the bench/sweep/gate harnesses.
-
-    Until round 6 these were env-var-only (``SPARK_GRAFT_SF_DIR``,
-    ``SPARK_GRAFT_BENCH_ROUNDS``); a YAML file makes the round-end
-    ritual reproducible from one committed artifact (round-6 VERDICT
-    item #6). Precedence: dataclass defaults < environment variables <
-    YAML file values < explicit ``overrides`` — so a config file pins a
-    run regardless of ambient env, and CLI flags still win.
-    """
-
-    sf_dir: str = "/root/testdata/sf0.1"
-    bench_rounds: int = 3
-    sweep_sfs: tuple[str, ...] = ("sf0.001", "sf0.01", "sf0.1")
-    testdata_root: str = "/root/testdata"
-    queries: tuple[str, ...] = ()  # empty = the full registry
-
-
-def load_harness_config(
-    cfg_path: str | Path | None = None,
-    overrides: dict | None = None,
-) -> HarnessConfig:
-    """Load a :class:`HarnessConfig` (see precedence in the class doc)."""
-    import os
-
-    raw: dict = {}
-    if "SPARK_GRAFT_SF_DIR" in os.environ:
-        raw["sf_dir"] = os.environ["SPARK_GRAFT_SF_DIR"]
-    if "SPARK_GRAFT_BENCH_ROUNDS" in os.environ:
-        raw["bench_rounds"] = int(os.environ["SPARK_GRAFT_BENCH_ROUNDS"])
-    if cfg_path is not None:
-        import yaml
-
-        p = Path(cfg_path)
-        with p.open("r", encoding="utf-8") as f:
-            loaded = yaml.safe_load(f) or {}
-        if not isinstance(loaded, dict):
-            raise ValueError(f"{p}: expected a YAML mapping")
-        raw.update(loaded)
-    raw.update(overrides or {})
-
-    known = {f.name for f in fields(HarnessConfig)}
-    unknown = set(raw) - known
-    if unknown:
-        raise ValueError(f"unknown harness config keys: {sorted(unknown)}")
-    if "bench_rounds" in raw:
-        raw["bench_rounds"] = max(1, int(raw["bench_rounds"]))
-    for k in ("sweep_sfs", "queries"):
-        if k in raw:
-            raw[k] = tuple(str(v) for v in raw[k])
-    return HarnessConfig(**raw)

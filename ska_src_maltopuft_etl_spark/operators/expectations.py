@@ -12,8 +12,7 @@ set-level expectations (uniqueness, referential integrity) run as
 keyed aggregates / anti joins.
 
 :func:`quality_report` returns the (expectation, n_violations) frame,
-the audit artifact; :func:`violations` returns the offending rows of one
-expectation, for quarantine flows.
+the audit artifact.
 """
 
 from __future__ import annotations
@@ -32,7 +31,6 @@ __all__ = [
     "expect_unique",
     "expect_fk",
     "quality_report",
-    "violations",
 ]
 
 
@@ -157,11 +155,3 @@ def quality_report(df: DataFrame, expectations) -> DataFrame:
     for p in parts[1:]:
         report = report.unionByName(p)
     return report
-
-
-def violations(df: DataFrame, expectation: Expectation) -> DataFrame:
-    """The offending rows for one expectation (quarantine feed)."""
-    if expectation.predicate is not None:
-        return df.where(~F.coalesce(expectation.predicate, F.lit(False)))
-    assert expectation.set_rule is not None
-    return expectation.set_rule(df)

@@ -145,19 +145,6 @@ def test_cli_parser():
     assert a.command == "reorg"
 
 
-def test_format_roundtrips(spark, tmp_path):
-    from ska_src_maltopuft_etl_spark.sinks.formats import read_table, write_table
-    from ska_src_maltopuft_etl_spark.sources import load_table
-
-    orig = load_table(spark, "/root/testdata/sf0.001", "nation")
-    baseline = sorted(tuple(r) for r in orig.collect())
-    for fmt in ("parquet", "orc", "json", "csv"):
-        path = str(tmp_path / f"nation_{fmt}")
-        write_table(orig, path, fmt)
-        back = read_table(spark, path, fmt, schema=orig.schema)
-        assert sorted(tuple(r) for r in back.collect()) == baseline, fmt
-
-
 def test_ngram_shingles_short_documents(spark):
     # docs shorter than n tokens must yield zero shingles, not crash
     # (sequence(0, size-n) with size<n counts DOWN -> element_at OOB)
@@ -249,32 +236,6 @@ def test_cli_meertrap_config_flag(tmp_path):
     p = build_parser()
     ns = p.parse_args(["meertrap", "--config", "cfg/config.yml"])
     assert ns.command == "meertrap" and ns.config and ns.data_dir is None
-
-
-def test_harness_config_precedence(tmp_path, monkeypatch):
-    """env < YAML file < overrides; unknown keys fail loudly."""
-    import pytest
-
-    from ska_src_maltopuft_etl_spark.config import load_harness_config
-
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/env/sf")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ROUNDS", "9")
-    cfg = load_harness_config()
-    assert cfg.sf_dir == "/env/sf" and cfg.bench_rounds == 9
-
-    yml = tmp_path / "harness.yml"
-    yml.write_text("sf_dir: /file/sf\nqueries: [a, b]\nsweep_sfs: [sf0.01]\n")
-    cfg = load_harness_config(yml)
-    assert cfg.sf_dir == "/file/sf"          # file beats env
-    assert cfg.bench_rounds == 9             # env survives where file silent
-    assert cfg.queries == ("a", "b") and cfg.sweep_sfs == ("sf0.01",)
-
-    cfg = load_harness_config(yml, overrides={"sf_dir": "/cli/sf"})
-    assert cfg.sf_dir == "/cli/sf"           # overrides beat file
-
-    yml.write_text("sf_dirr: /typo\n")
-    with pytest.raises(ValueError, match="unknown harness config keys"):
-        load_harness_config(yml)
 
 
 def test_partitioned_oracle_digest_equals_frame_hash():

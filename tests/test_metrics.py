@@ -1,5 +1,6 @@
-"""The harness metrics reader: status-store totals per job group, and
-totals over every progress event of a streaming query."""
+"""The harness metrics reader: status-store totals per job group, the
+battery timing loop, and totals over every progress event of a
+streaming query."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import time
 import pytest
 
 from ska_src_maltopuft_etl_spark.streaming import stream_with_watermark_dedup
-from tools.metrics import job_totals, measure, stream_totals
+from tools.metrics import TOTALS, best_of, job_totals, measure, stream_totals
 
 
 def test_measure_cpu_bound_job(spark):
@@ -53,6 +54,39 @@ def test_measure_counts_only_its_own_group(spark):
 def test_unknown_job_raises(spark):
     with pytest.raises(LookupError):
         job_totals(spark, [10**9])
+
+
+def test_best_of_keeps_the_fastest_round_and_releases_its_pins(spark):
+    jsc = spark.sparkContext._jsc
+
+    def pinned() -> set[int]:
+        return set(jsc.getPersistentRDDs().keys())
+
+    entry = pinned()
+    fixture = spark.range(0, 1000, 1, 2).localCheckpoint()
+    with_fixture = pinned()
+    (fixture_id,) = with_fixture - entry
+    rounds: list[set[int]] = []
+
+    def build():
+        df = fixture.selectExpr("id * 2 AS x").localCheckpoint()
+        rounds.append(pinned() - with_fixture)
+        if len(rounds) != 2:
+            # rounds 1 and 3 are slower and run one more job
+            df.count()
+            time.sleep(1.0)
+        return df
+
+    rec = best_of(spark, "best_of", build, 3)
+    assert len(rounds) == 3
+    # each round's pin was released before the next round began
+    assert all(len(r) == 1 for r in rounds) and len(set().union(*rounds)) == 3
+    assert set(rec) == {"wall_s", "jobs", "build_s", *TOTALS}
+    # round 2: the eager checkpoint and the noop write, and no sleep
+    assert rec["jobs"] == 2
+    assert rec["build_s"] < 1.0 and rec["wall_s"] < 1.0
+    assert pinned() == with_fixture
+    jsc.getPersistentRDDs()[fixture_id].unpersist()
 
 
 def test_stream_totals_count_every_batch(spark, tmp_path):

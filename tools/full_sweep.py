@@ -6,8 +6,8 @@ the combined log to CORRECTNESS_FULL.txt with a header recording the
 exact commit the sweep certifies (round-5 VERDICT item #3: the artifact
 must be reproducible against a hash).
 
-Usage: python tools/full_sweep.py [out_path] [--config harness.yml]
-(YAML keys: sweep_sfs, testdata_root — see config.HarnessConfig.)
+Usage: python tools/full_sweep.py [out_path] [testdata_root]
+(testdata_root holds one directory per SF.)
 """
 
 from __future__ import annotations
@@ -17,20 +17,13 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from ska_src_maltopuft_etl_spark.config import load_harness_config  # noqa: E402
+SFS = ("sf0.001", "sf0.01", "sf0.1")
 
 
 def main() -> int:
-    cfg_path = None
-    if "--config" in sys.argv:
-        cfg_path = sys.argv[sys.argv.index("--config") + 1]
-    cfg = load_harness_config(cfg_path)
-    positional = [
-        a for a in sys.argv[1:] if a != "--config" and a != cfg_path
-    ]
-    out_path = positional[0] if positional else os.path.join(REPO, "CORRECTNESS_FULL.txt")
+    args = sys.argv[1:]
+    out_path = args[0] if args else os.path.join(REPO, "CORRECTNESS_FULL.txt")
+    testdata_root = args[1] if len(args) > 1 else "/root/testdata"
     commit = subprocess.run(
         ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True, check=True,
@@ -49,15 +42,14 @@ def main() -> int:
     ).strip()
     lines = [
         f"# Full local oracle sweep ({commit}{'+dirty' if dirty else ''}), "
-        f"all queries, SFs {','.join(cfg.sweep_sfs)}"
-        + (f", config={cfg_path}" if cfg_path else "")
+        f"all queries, SFs {','.join(SFS)}"
     ]
     rc = 0
-    for sf in cfg.sweep_sfs:
+    for sf in SFS:
         lines.append(f"== {sf}")
         p = subprocess.run(
             [sys.executable, os.path.join(REPO, "tools", "check_correctness.py"),
-             os.path.join(cfg.testdata_root, sf)],
+             os.path.join(testdata_root, sf)],
             capture_output=True, text=True, cwd=REPO,
         )
         for ln in p.stdout.splitlines():

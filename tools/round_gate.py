@@ -14,10 +14,9 @@ Prints a one-line machine-readable record (commit, dirty flag, pass and
 fail counts) to stdout and appends it to GATE.log so the snapshot commit
 demonstrably follows a green run.
 
-Usage: python tools/round_gate.py [--skip-oracle] [--config harness.yml]
-(--config pins the oracle's testdata root and is recorded in the
-GATE.log line, so the round-end ritual is reproducible from one file —
-round-6 VERDICT item #6.)
+Usage: python tools/round_gate.py [--skip-oracle] [testdata_root]
+(the oracle and the invariant harness run on testdata_root's sf0.01
+directory, and the GATE.log line records the root.)
 """
 
 from __future__ import annotations
@@ -29,9 +28,6 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from ska_src_maltopuft_etl_spark.config import load_harness_config  # noqa: E402
 
 
 def run(cmd: list[str]) -> tuple[int, str]:
@@ -40,6 +36,9 @@ def run(cmd: list[str]) -> tuple[int, str]:
 
 
 def main() -> int:
+    skip_oracle = "--skip-oracle" in sys.argv
+    args = [a for a in sys.argv[1:] if a != "--skip-oracle"]
+    testdata_root = args[0] if args else "/root/testdata"
     commit = subprocess.run(
         ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True, check=True,
@@ -55,16 +54,11 @@ def main() -> int:
     m = re.search(r"(\d+) failed", out_t)
     failed = int(m.group(1)) if m else 0
 
-    cfg_path = None
-    if "--config" in sys.argv:
-        cfg_path = sys.argv[sys.argv.index("--config") + 1]
-    cfg = load_harness_config(cfg_path)
-
     oracle = "skipped"
-    if "--skip-oracle" not in sys.argv:
+    if not skip_oracle:
         rc_o, out_o = run(
             [sys.executable, "tools/check_correctness.py",
-             os.path.join(cfg.testdata_root, "sf0.01")]
+             os.path.join(testdata_root, "sf0.01")]
         )
         oracle = "green" if rc_o == 0 and "all queries match" in out_o else "RED"
     else:
@@ -75,10 +69,10 @@ def main() -> int:
     # and it checks properties the value-hash oracle can't (e.g. LSH
     # completeness on recomputed bands, CC over-merge).
     invariants = "skipped"
-    if "--skip-oracle" not in sys.argv:
+    if not skip_oracle:
         rc_i, out_i = run(
             [sys.executable, "tools/invariants_x100.py",
-             os.path.join(cfg.testdata_root, "sf0.01"), "--sample", "200"]
+             os.path.join(testdata_root, "sf0.01"), "--sample", "200"]
         )
         invariants = "green" if rc_i == 0 and "ALL GREEN" in out_i else "RED"
     else:
@@ -89,7 +83,7 @@ def main() -> int:
         f"{dt.datetime.now(dt.timezone.utc).isoformat(timespec='seconds')} "
         f"gate={status} commit={commit}{'+dirty' if dirty else ''} "
         f"pytest={passed}p/{failed}f oracle={oracle} invariants={invariants}"
-        f" config={cfg_path or 'defaults'}"
+        f" testdata={testdata_root}"
     )
     print(line)
     with open(os.path.join(REPO, "GATE.log"), "a") as f:

@@ -1,18 +1,17 @@
 #!/usr/bin/env python
 """Scale-up sweep: wall-clock + shuffle bytes at two tiers (VERDICT r6 #1).
 
-Runs the shuffle-heavy flagship queries at the base tier (sf0.1) and a
-10× tier generated by tools/make_sfN.py, recording per query:
+Runs the shuffle-heavy flagship queries at a base tier (default sf0.1)
+and a 10× tier generated by tools/make_sfN.py, recording per query:
 
-- at each tier, Spark's accounting of the fastest of N rounds from
-  ``tools.metrics.measure``: ``wall_s``, ``jobs``, ``run_s``, ``cpu_s``,
-  ``shuffle_mb`` (shuffle write, summed over every stage the query's
-  jobs ran — including the jobs that materialize localCheckpoint
-  invariants, which ARE part of the query), ``spill_mb`` and
-  ``input_mb``;
+- at each tier, the ``tools.metrics.best_of`` record of the fastest of
+  N rounds: ``wall_s``, ``jobs``, ``build_s`` and every
+  ``tools.metrics.TOTALS`` key — ``shuffle_mb`` is shuffle write summed
+  over every stage the query's jobs ran, including the jobs that
+  materialize localCheckpoint invariants, which ARE part of the query;
 - the wall and shuffle scale factors (flagging anything super-linear).
 
-Usage: python tools/scale_bench.py [sf1_dir] [rounds] [query ...]
+Usage: python tools/scale_bench.py [sf1_dir] [base_dir] [rounds] [query ...]
                                    [--factor N] [--out FILE]
 Writes SCALE_SWEEP.json (or --out; --factor relabels the scaled tier
 "xN" and sets the super-linear wall threshold to N — use with a
@@ -28,9 +27,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted
+from ska_src_maltopuft_etl_spark.engine import get_spark
 from ska_src_maltopuft_etl_spark.plans import QUERIES
-from tools.metrics import STATUS_CONF, measure
+from tools.metrics import STATUS_CONF, best_of
 
 DEFAULT_QUERIES = [
     "dedup_connected_components",
@@ -44,9 +43,6 @@ DEFAULT_QUERIES = [
     # sort + scalable surrogate keys; built FOR scale, so it sweeps.
     "percentile_stats",
 ]
-
-#: per-tier fields kept from the fastest round's accounting
-TIER_FIELDS = ("wall_s", "jobs", "run_s", "cpu_s", "shuffle_mb", "spill_mb", "input_mb")
 
 
 def main() -> int:
@@ -66,9 +62,12 @@ def main() -> int:
     out_name = _flag("--out", "SCALE_SWEEP.json")
     tier_label = f"x{factor}"
     sf1_dir = args[0] if args else "/tmp/sparkgraft_sf1"
-    rounds = int(args[1]) if len(args) > 1 else 3
-    names = args[2:] or DEFAULT_QUERIES
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    base_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
+    rounds = int(args[2]) if len(args) > 2 else 3
+    names = args[3:] or DEFAULT_QUERIES
+    for d in (sf1_dir, base_dir):
+        if not os.path.isdir(d):
+            sys.exit(f"tier {d} is not a directory")
 
     spark = get_spark(
         app_name="scale_bench", conf={"spark.ui.enabled": "false", **STATUS_CONF}
@@ -101,13 +100,9 @@ def main() -> int:
         spec = QUERIES[name]
         row: dict = {}
         for tier, sf_dir in (("base", base_dir), (tier_label, sf1_dir)):
-            best = None
-            for _ in range(rounds):
-                release_all_persisted(spark)
-                with measure(spark, f"{name}@{tier}") as m:
-                    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                if best is None or m["wall_s"] < best["wall_s"]:
-                    best = {k: m[k] for k in TIER_FIELDS}
+            best = best_of(
+                spark, f"{name}@{tier}", lambda: spec.fn(spark, sf_dir), rounds
+            )
             row[tier] = best
             print(
                 f"{name} [{tier}]: {best['wall_s']}s "

@@ -12,7 +12,9 @@ three configurations:
    works where AQE can't: broadcast-ineligible hash joins, streaming,
    aggregations keyed on the hot column).
 
-For each config prints wall-clock (best of N) and the post-shuffle
+For each config records the ``tools.metrics.best_of`` record of the
+fastest of N noop-sink writes (``wall_s``, ``jobs``, ``build_s`` and
+every ``tools.metrics.TOTALS`` key), and prints the post-shuffle
 row-count spread per partition (max / mean — the direct proxy for task
 -time spread: one 360k-row reducer vs 31 idle ones IS the straggler).
 
@@ -24,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,6 +34,12 @@ from pyspark.sql import functions as F
 from ska_src_maltopuft_etl_spark.engine import get_spark
 from ska_src_maltopuft_etl_spark.operators.skew import salted_join
 from ska_src_maltopuft_etl_spark.sources import load_table
+from tools.metrics import STATUS_CONF, best_of
+
+#: fact replication: 12M rows at sf0.1, so the hot reducer's work
+#: dominates scheduling overhead — the straggler effect is what the
+#: bench exists to show
+MULT = 20
 
 
 def partition_spread(df, key_cols):
@@ -57,15 +64,13 @@ def partition_spread(df, key_cols):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    spark = get_spark(app_name="skew_bench", conf={"spark.ui.enabled": "false"})
+    spark = get_spark(
+        app_name="skew_bench", conf={"spark.ui.enabled": "false", **STATUS_CONF}
+    )
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm
 
-    mult = int(os.environ.get("SKEW_BENCH_MULT", "20"))
     li = load_table(spark, sf_dir, "lineitem")
-    # 60% of rows -> ONE hot key (hkey=1); the rest keep distinct keys.
-    # Replicated x20 (12M rows at sf0.1) so the hot reducer's work
-    # dominates scheduling overhead — the straggler effect is what the
-    # bench exists to show.
+    # 60% of rows -> ONE hot key (hkey=1); the rest keep distinct keys
     fact = (
         li.select(
             F.when(F.pmod(F.col("l_orderkey"), F.lit(10)) < 6, F.lit(1))
@@ -74,7 +79,7 @@ def main() -> None:
             "l_quantity",
             "l_extendedprice",
         )
-        .crossJoin(spark.range(mult).select(F.col("id").alias("__rep")))
+        .crossJoin(spark.range(MULT).select(F.col("id").alias("__rep")))
         .localCheckpoint()  # freeze the fixture; every config reads identical input
     )
     dim = (
@@ -87,24 +92,21 @@ def main() -> None:
     mx, mean = partition_spread(fact, ["hkey"])
     print(f"fixture: {n_fact} fact rows, hot-partition spread max={mx} mean={mean:.0f} (x{mx/mean:.1f})")
 
-    def run_join(salted: bool) -> float:
-        q = (
-            salted_join(fact, dim, "hkey", salt_buckets=16)
-            if salted
-            else fact.join(dim, "hkey")
-        )
-        out = q.groupBy("dim_weight").agg(
-            F.sum("l_quantity").alias("qty"), F.count(F.lit(1)).alias("n")
-        )
-        best = None
-        for _ in range(rounds):
-            t0 = time.time()
-            out.count()
-            e = time.time() - t0
-            best = e if best is None else min(best, e)
-        return round(best, 2)
-
     results = {}
+
+    def run_join(label: str, salted: bool) -> None:
+        def build():
+            q = (
+                salted_join(fact, dim, "hkey", salt_buckets=16)
+                if salted
+                else fact.join(dim, "hkey")
+            )
+            return q.groupBy("dim_weight").agg(
+                F.sum("l_quantity").alias("qty"), F.count(F.lit(1)).alias("n")
+            )
+
+        results[label] = best_of(spark, label, build, rounds)
+
     # Force the shuffle path: with a broadcast-able dim the demo is moot
     # (broadcast joins don't shuffle the fact at all — that IS the first
     # fix to try; salting is for when neither side broadcasts).
@@ -112,7 +114,7 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    results["plain_shuffle_join_skew_off"] = run_join(salted=False)
+    run_join("plain_shuffle_join_skew_off", salted=False)
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     # make the splitter see our hot partition at this small scale
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
@@ -120,8 +122,8 @@ def main() -> None:
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m"
     )
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-    results["plain_shuffle_join_aqe_skew_split"] = run_join(salted=False)
-    results["salted_join_k16"] = run_join(salted=True)
+    run_join("plain_shuffle_join_aqe_skew_split", salted=False)
+    run_join("salted_join_k16", salted=True)
 
     smx, smean = partition_spread(
         fact.withColumn(

@@ -26,7 +26,10 @@ Usage:
 
 --ab-only runs just the key profiles + the sort-merge-join A/B.
 
-Emits one JSON line per datapoint and writes the --out artifact.
+Each timed datapoint is a ``tools.metrics.best_of`` record: the fastest
+of ``--rounds`` noop-sink writes with Spark's own accounting of it
+(``wall_s``, ``jobs``, ``build_s`` and every ``tools.metrics.TOTALS``
+key). Emits one JSON line per datapoint and writes the --out artifact.
 """
 
 from __future__ import annotations
@@ -34,30 +37,17 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from ska_src_maltopuft_etl_spark.engine import (  # noqa: E402
-    get_spark,
-    release_all_persisted,
-)
+from ska_src_maltopuft_etl_spark.engine import get_spark  # noqa: E402
 from ska_src_maltopuft_etl_spark.operators.skew import salted_join  # noqa: E402
 from ska_src_maltopuft_etl_spark.plans import QUERIES  # noqa: E402
 from ska_src_maltopuft_etl_spark.sources import load_table  # noqa: E402
-
-
-def timed(spark, fn, rounds: int) -> float:
-    best = None
-    for _ in range(rounds):
-        t0 = time.time()
-        fn().write.format("noop").mode("overwrite").save()
-        best = min(best or 9e9, time.time() - t0)
-        release_all_persisted(spark)
-    return round(best, 3)
+from tools.metrics import STATUS_CONF, best_of  # noqa: E402
 
 
 def plain_join_revenue(spark, sf_dir):
@@ -111,7 +101,9 @@ def main() -> int:
     zipf = args[0] if args else "/tmp/sparkgraft_sf1_zipf"
     uniform = args[1] if len(args) > 1 else "/tmp/sparkgraft_sf1"
 
-    spark = get_spark(app_name="zipf_bench", conf={"spark.ui.enabled": "false"})
+    spark = get_spark(
+        app_name="zipf_bench", conf={"spark.ui.enabled": "false", **STATUS_CONF}
+    )
     results: list[dict] = []
 
     def record(**kw) -> None:
@@ -140,12 +132,15 @@ def main() -> int:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
         record(kind="join_ab", tier=tag, config="plain_no_skewfix",
-               wall_sec=timed(spark, lambda: plain_join_revenue(spark, tier), rounds))
+               **best_of(spark, "plain_no_skewfix",
+                         lambda: plain_join_revenue(spark, tier), rounds))
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         record(kind="join_ab", tier=tag, config="plain_aqe_skew",
-               wall_sec=timed(spark, lambda: plain_join_revenue(spark, tier), rounds))
+               **best_of(spark, "plain_aqe_skew",
+                         lambda: plain_join_revenue(spark, tier), rounds))
         record(kind="join_ab", tier=tag, config="salted_k8",
-               wall_sec=timed(spark, lambda: salted_join_revenue_k8(spark, tier), rounds))
+               **best_of(spark, "salted_k8",
+                         lambda: salted_join_revenue_k8(spark, tier), rounds))
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
     # --- flagship family under the session default, uniform vs zipf --
@@ -162,7 +157,7 @@ def main() -> int:
         fn = QUERIES[name].fn
         for tier, tag in ((uniform, "uniform"), (zipf, "zipf")):
             record(kind="flagship", tier=tag, query=name,
-                   wall_sec=timed(spark, lambda: fn(spark, tier), rounds))
+                   **best_of(spark, name, lambda: fn(spark, tier), rounds))
 
     with open(os.path.join(REPO, out_name), "w") as f:
         json.dump({"zipf_tier": zipf, "uniform_tier": uniform,
