@@ -11,9 +11,9 @@ session is configured for a distributed, optimizer-driven engine:
   (since 3.2), as is the 128MB ``spark.sql.files.maxPartitionBytes`` split,
   so neither is set here.
 - **Arrow on** for the few pandas-UDF paths (vectorized batch transfer).
-- ``spark.sql.shuffle.partitions`` defaults small for local testing; on a
+- ``spark.sql.shuffle.partitions`` is 32, small for local testing; on a
   real cluster AQE's coalescing makes the initial number mostly moot, and
-  callers can override via ``conf``.
+  callers size it per tier through ``get_spark(conf=...)``.
 """
 
 from __future__ import annotations
@@ -52,11 +52,8 @@ _DEFAULTS: dict[str, str] = {
     # the ×1000 tier a 48-partition sort put ~37M post-explode rows in
     # ONE task's sorter and OOM'd a 48g heap (salted_join's 8× build
     # replication, stage 56). On a real cluster this is sized to
-    # ~128-200MB per partition; the env var lets the scale harness
-    # provision per tier the same way SPARK_GRAFT_DRIVER_MEM does.
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
-    ),
+    # ~128-200MB per partition, passed through get_spark(conf=...).
+    "spark.sql.shuffle.partitions": "32",
     # local mode: the driver JVM IS the executor; the 1g default heap
     # GC-thrashes under 32 task threads. Must be set before JVM launch.
     # 16g/32 slots ≈ 0.3 GB execution memory per task — enough for the

@@ -99,7 +99,7 @@ def bloom_semi_join(
     fact: DataFrame,
     dim: DataFrame,
     fact_key: str,
-    dim_key: str | None = None,
+    dim_key: str,
     m_bits: int = 1 << 17,
     k: int = 4,
 ) -> DataFrame:
@@ -111,13 +111,12 @@ def bloom_semi_join(
     already avoids the fact shuffle) but its KEY SET still fits a
     bloom: the filter cuts the fact-side shuffle to matches plus the
     false-positive margin."""
-    dk = dim_key or fact_key
-    bitmap = build_bloom(dim, dk, m_bits=m_bits, k=k)
+    bitmap = build_bloom(dim, dim_key, m_bits=m_bits, k=k)
     pruned = fact.where(
         bloom_might_contain(bitmap, F.col(fact_key), m_bits, k=k)
     )
     return pruned.join(
-        dim.select(F.col(dk).alias(fact_key)).distinct(),
+        dim.select(F.col(dim_key).alias(fact_key)).distinct(),
         fact_key,
         "left_semi",
     )

@@ -17,12 +17,8 @@ Design for 100 TB:
   state; the driver holds only the loop counter and a changed-row count.
 - Rounds = graph diameter. Near-dup clusters are shallow (duplicates of
   a common source collapse in 1-2 rounds), so this converges in a
-  handful of rounds; the known pathological case is a long chain, where
-  an alternating large-star/small-star scheme (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14) bounds rounds at
-  O(log² n). Label propagation is preferred here because each round is
-  strictly cheaper (no edge-set rewriting) and dedup graphs are
-  diameter-bounded in practice.
+  handful of rounds; the known pathological case is a long chain, which
+  exceeds ``max_iter`` and raises rather than returning partial labels.
 - ``localCheckpoint`` per round cuts lineage so the plan stays O(1) in
   the number of iterations instead of re-planning an ever-deeper join
   tree (the same trick incremental_load uses per table).
@@ -47,7 +43,6 @@ def connected_components(
     dst: str = "dst",
     nodes: DataFrame | None = None,
     max_iter: int = 25,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Label every node with the MIN node id of its connected component.
 
@@ -58,19 +53,10 @@ def connected_components(
         (no incident edge) appear in the output only if supplied here.
     max_iter : hard round bound; raises if not converged (a dedup graph
         needing >25 rounds of min propagation means the edge set is
-        pathological and needs ``algorithm="star"`` instead).
-    algorithm : ``"label"`` (min-label propagation, rounds = diameter,
-        cheapest per round — right for shallow dedup graphs) or
-        ``"star"`` (alternating large-star/small-star contraction,
-        O(log² n) rounds regardless of diameter — right for long-chain
-        / unknown-topology graphs at scale).
+        pathological).
 
     Returns (node, component).
     """
-    if algorithm == "star":
-        return _cc_star(edges, src, dst, nodes, max_iter)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     node_col = edges.schema[src].name  # validate columns exist early
     _ = edges.schema[dst].name
 
@@ -142,111 +128,8 @@ def connected_components(
             return with_isolates(labels)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
-        "graph diameter too large for label propagation — use "
-        'algorithm="star" for this edge set'
+        "graph diameter too large for label propagation"
     )
-
-
-def _min_per_node(e: DataFrame) -> DataFrame:
-    """(a, m) where m = min(neighbors of a ∪ {a}) over directed edges."""
-    return e.groupBy("a").agg(
-        F.least(F.min("b"), F.first("a")).alias("m")
-    )
-
-
-def _cc_star(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    nodes: DataFrame | None,
-    max_iter: int,
-) -> DataFrame:
-    """Alternating large-star / small-star contraction.
-
-    Kiveris et al., "Connected Components in MapReduce and Beyond"
-    (SoCC'14): converges in O(log² n) rounds independent of graph
-    diameter, each round two keyed aggregations + a projection — no
-    driver-side state beyond the loop counter and a convergence
-    checksum. At convergence the edge set is a forest of stars rooted
-    at each component's minimum id.
-
-    - large-star: every node links its strictly-larger neighbors to the
-      minimum of its closed neighborhood.
-    - small-star: edges oriented large→small; every node links its
-      smaller neighbors (and itself) to their minimum.
-    """
-    e0 = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        und = symmetrize(e)
-        m = _min_per_node(und)
-        out = (
-            und.join(m, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        )
-        return out.where(F.col("a") != F.col("b")).distinct()
-
-    def small_star(e: DataFrame) -> DataFrame:
-        ori = e.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        )
-        m = _min_per_node(ori)  # here all b < a, so m = min neighbor
-        # one join, two output rows per match via explode — the union
-        # form executed the ori ⋈ m join once PER BRANCH every round
-        out = (
-            ori.join(m, "a")
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("b").alias("a"), F.col("m").alias("b")),
-                        F.struct(F.col("a").alias("a"), F.col("m").alias("b")),
-                    )
-                ).alias("__e")
-            )
-            .select("__e.a", "__e.b")
-        )
-        return out.where(F.col("a") != F.col("b")).distinct()
-
-    def checksum(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: a long sum of 64-bit hashes
-            # overflows under ANSI arithmetic
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    e = e0
-    prev = None
-    for _round in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint(eager=False)
-        cur = checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"star contraction did not converge in {max_iter} rounds"
-        )
-
-    # stars point (member -> root); roots and isolated nodes label themselves
-    members = e.select(F.col("a").alias("node"), F.col("b").alias("component"))
-    own = e0.select(F.col("a").alias("node")).union(
-        e0.select(F.col("b").alias("node"))
-    )
-    if nodes is not None:
-        n_col = nodes.columns[0]
-        own = own.union(nodes.select(F.col(n_col).alias("node")))
-    own = own.distinct().join(members, "node", "left_anti").withColumn(
-        "component", F.col("node")
-    )
-    return members.union(own)
 
 
 def dedup_clusters(

@@ -6,17 +6,18 @@ Design for 100 TB:
 - ``ngram_shingles`` / ``jaccard_pairs``: the exact path — explode
   distinct shingles, self-equi-join on the shingle (shuffle co-located),
   hash-agg intersections. The join key is the shingle, so common
-  shingles are the skew risk; callers can drop ultra-frequent shingles
-  (document-frequency cap) exactly like stopword removal.
+  shingles are the skew risk.
 - ``minhash_signatures`` / ``lsh_candidate_pairs``: the approximate path —
   per-doc signature is a single hash-agg; banding turns all-pairs into an
   equi-join on (band, band-hash), i.e. candidates only. This is the
-  standard shingle→minhash→band→bucket-join pipeline.
+  standard shingle→minhash→band→bucket-join pipeline. Both hash with md5
+  (:func:`md5_hash60`, an md5 band digest), so signatures and bands
+  reproduce bit-for-bit in an independent SQL engine.
 - ``cosine_topk_bruteforce``: exact ANN baseline — broadcast the (small)
   query set against the corpus, fold the dot product with higher-order
   functions (JVM-side, no Python). The LSH-bucketed variant
-  (``cosine_topk_lsh``) buckets by random-hyperplane signs so each query
-  only scans its bucket — the scale path.
+  (``cosine_topk_lsh``) buckets by md5-derived ±1 hyperplane signs so
+  each query only scans its bucket — the scale path.
 
 Every cosine these operators return is rounded to
 :data:`COSINE_DECIMALS` places before ranking, so ties and ranks are
@@ -53,7 +54,8 @@ def ngram_shingles(
     ~2^-64-per-pair event (birthday bound ~2^32 distinct shingles —
     far beyond any per-partition corpus), the standard trade in
     shingle-based dedup. Use the string form only where the exact
-    shingle text is needed (e.g. the portable md5 minhash oracle).
+    shingle text is needed (e.g. the md5 minhash, which an independent
+    SQL engine reproduces from the text).
 
     ``distinct=False`` skips the per-doc set dedup — and with it the
     only wide shuffle in the shingling stage. Correct whenever the
@@ -97,24 +99,12 @@ def jaccard_pairs(
     id_col: str,
     min_intersection: int = 2,
     threshold: float = 0.0,
-    max_doc_frequency: int | None = None,
 ) -> DataFrame:
     """Exact pairwise Jaccard over a (id, shingle) set table.
 
     Returns (doc_a, doc_b, intersection, jaccard) for unordered pairs
     with intersection >= min_intersection and jaccard >= threshold.
-
-    ``max_doc_frequency`` is the skew guard for power-law corpora: a
-    shingle appearing in f documents contributes f² join rows, so a
-    handful of boilerplate shingles can dominate the shuffle. Capping
-    document frequency drops those stop-shingles before the self-join
-    (the standard approximation — sizes are computed on the capped set
-    so the jaccard stays a true set similarity over retained shingles).
     """
-    if max_doc_frequency is not None:
-        df_counts = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        keep = df_counts.where(F.col("__df") <= max_doc_frequency).select("shingle")
-        shingles = shingles.join(keep, "shingle", "left_semi")
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
     a = shingles.select(F.col(id_col).alias("doc_a"), "shingle")
     b = shingles.select(F.col(id_col).alias("doc_b"), "shingle")
@@ -153,9 +143,7 @@ def md5_hash60(c: Column) -> Column:
 
     Engine-independent (any engine with md5 reproduces it — DuckDB:
     ``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``), unlike xxhash64
-    whose seed/implementation is Spark-specific. ~2-3× the cost of
-    xxhash64, so it is the *verification* hash; the default fast path
-    stays on xxhash64.
+    whose seed/implementation is Spark-specific.
     """
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
@@ -187,7 +175,7 @@ def minhash_affine_params(num_hashes: int) -> list[tuple[int, int]]:
 
 
 def minhash_signatures(
-    shingles: DataFrame, id_col: str, num_hashes: int = 16, portable: bool = False
+    shingles: DataFrame, id_col: str, num_hashes: int = 16
 ) -> DataFrame:
     """MinHash signature per doc via affine permutations of ONE base hash.
 
@@ -197,17 +185,12 @@ def minhash_signatures(
     shuffle carries one row per (doc, shingle) instead of num_hashes
     rows, which is what makes 10k-hash signatures viable at 100 TB.
 
-    ``portable=True`` uses :func:`md5_hash60` as the base hash so the
-    whole signature (and downstream LSH banding) is bit-reproducible in
-    an independent SQL engine; the default base is xxhash64 (faster,
-    Spark-specific).
+    The base hash is :func:`md5_hash60`, so the whole signature (and
+    downstream LSH banding) is bit-reproducible in an independent SQL
+    engine.
     """
     p = F.lit(MINHASH_PRIME)
-    if portable:
-        base = md5_hash60(F.col("shingle"))
-    else:
-        # pmod: xxhash64 is signed; Long.MIN_VALUE-safe positive residue
-        base = (F.xxhash64("shingle") % p + p) % p
+    base = md5_hash60(F.col("shingle"))
     params = minhash_affine_params(num_hashes)
     aggs = [
         F.min((F.lit(a) * F.col("__h") + F.lit(b)) % p).alias(f"__m{k}")
@@ -227,21 +210,18 @@ def minhash_signatures(
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str, band_size: int = 4, portable: bool = False
+    signatures: DataFrame, id_col: str, band_size: int = 4
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs sharing any band.
 
     Equi-join on (band index, band hash): only near-duplicates collide,
     so the join output is ~linear in true-duplicate count, not O(n²).
-    ``portable=True`` uses an md5 band digest reproducible in an
-    independent SQL engine (join cardinality is identical; md5 vs
-    xxhash64 only changes the bucket labels).
+    The band digest is md5, reproducible in an independent SQL engine.
     """
     n = band_size
 
     def band_digest(b):
-        joined = F.concat_ws(",", F.slice(F.col("signature"), b * n + 1, n))
-        return F.md5(joined) if portable else F.xxhash64(joined)
+        return F.md5(F.concat_ws(",", F.slice(F.col("signature"), b * n + 1, n)))
 
     banded = signatures.select(
         F.col(id_col),
@@ -270,12 +250,6 @@ def _as_double_vec(c: Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 def dot_expr(a_name: str, b_name: str, dim: int) -> Column:
     """Dot product as an expanded left-associative sum of products,
     built as ONE SQL string parsed JVM-side.
@@ -286,8 +260,8 @@ def dot_expr(a_name: str, b_name: str, dim: int) -> Column:
     ``F.expr`` (vs a Python Column loop) avoids ~4 Py4J round-trips per
     term — hundreds of ms at dim=64, per call site. Bracket indexing is
     0-based in Spark SQL, so ``a[i]`` equals ``element_at(a, i+1)``;
-    the left-associative sum order matches the sequential fold of
-    :func:`_dot` and the DuckDB oracle bit-for-bit. Note that
+    the left-associative sum order matches a sequential index-order
+    fold and the DuckDB oracle bit-for-bit. Note that
     pair-enumeration joins (BroadcastNestedLoopJoin / CartesianProduct)
     do NOT participate in whole-stage codegen at all — for dense O(n²)
     scoring use :func:`cosine_pairs_exact` (vectorized numpy over Arrow
@@ -378,69 +352,45 @@ def cosine_topk_lsh(
     vec_col: str,
     k: int = 5,
     num_planes: int = 8,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH bucketing.
 
-    Bucket id = sign bits of `num_planes` fixed pseudo-random Gaussian
-    hyperplanes (drawn from a fixed seed); each query scans only its
+    Bucket id = sign bits of ``num_planes`` md5-derived ±1 hyperplanes
+    (:func:`hyperplane_signs`) applied to micro-quantized vectors
+    (``floor(x*1e6 + 0.5)`` as int64); each query scans only its
     bucket — at 100 TB the crossJoin becomes an equi-join on the bucket
     key. Recall is tunable via ``num_planes`` (fewer planes → bigger
-    buckets → higher recall/cost).
-
-    ``portable=True`` swaps the Gaussian planes for md5-derived ±1
-    planes (:func:`hyperplane_signs`) applied to micro-quantized vectors
-    (``floor(x*1e6 + 0.5)`` as int64): the bucket bit is then a pure
-    integer sum — no float summation-order sensitivity — so buckets,
+    buckets → higher recall/cost). The bucket bit is a pure integer
+    sum — no float summation-order sensitivity — so buckets,
     candidates, and the final top-k reproduce bit-for-bit in an
-    independent SQL engine. Sign-pattern planes are a standard SimHash
-    family; recall behavior is comparable to Gaussian planes.
+    independent SQL engine.
     """
     dim_df = corpus.select(F.size(F.col(vec_col)).alias("d")).limit(1)
     dim = dim_df.first()["d"]
+    signs = hyperplane_signs(num_planes, dim)
 
-    if portable:
-        signs = hyperplane_signs(num_planes, dim)
-
-        def add_bucket(df: DataFrame, dvec: str) -> DataFrame:
-            # one quantization pass materialized as a column (multi-ref
-            # non-cheap alias — CollapseProject keeps it single-eval),
-            # then every plane bit is an exact integer sum over it. The
-            # whole bucket is ONE parsed SQL string: building 4×dim
-            # sign terms through the Column API costs 4 Py4J calls per
-            # term, which dominated this operator's wall time.
-            qq = F.expr(
-                f"transform({dvec}, x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT))"
+    def add_bucket(df: DataFrame, dvec: str) -> DataFrame:
+        # one quantization pass materialized as a column (multi-ref
+        # non-cheap alias — CollapseProject keeps it single-eval),
+        # then every plane bit is an exact integer sum over it. The
+        # whole bucket is ONE parsed SQL string: building 4×dim
+        # sign terms through the Column API costs 4 Py4J calls per
+        # term, which dominated this operator's wall time.
+        qq = F.expr(
+            f"transform({dvec}, x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT))"
+        )
+        bits = []
+        for p in signs:
+            terms = " ".join(
+                ("+" if s > 0 else "-") + f" __qq[{d}]" for d, s in enumerate(p)
             )
-            bits = []
-            for p in signs:
-                terms = " ".join(
-                    ("+" if s > 0 else "-") + f" __qq[{d}]" for d, s in enumerate(p)
-                )
-                bits.append(f"CASE WHEN (0 {terms}) >= 0 THEN '1' ELSE '0' END")
-            bucket = F.expr("concat(" + ", ".join(bits) + ")")
-            return (
-                df.withColumn("__qq", qq)
-                .withColumn("__bucket", bucket)
-                .drop("__qq")
-            )
-
-    else:
-        import random
-
-        rng = random.Random(42)
-        planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(num_planes)]
-
-        def add_bucket(df: DataFrame, dvec: str) -> DataFrame:
-            bits = []
-            for p in planes:
-                plane = F.lit(p)
-                bits.append(
-                    F.when(_dot(F.col(dvec), plane) >= 0, F.lit("1")).otherwise(
-                        F.lit("0")
-                    )
-                )
-            return df.withColumn("__bucket", F.concat(*bits))
+            bits.append(f"CASE WHEN (0 {terms}) >= 0 THEN '1' ELSE '0' END")
+        bucket = F.expr("concat(" + ", ".join(bits) + ")")
+        return (
+            df.withColumn("__qq", qq)
+            .withColumn("__bucket", bucket)
+            .drop("__qq")
+        )
 
     q = add_bucket(
         queries.select(
@@ -500,8 +450,8 @@ def cosine_pairs_exact(
     interpreted.)
 
     Summation accumulates dimension-by-dimension in index order, exactly
-    matching the sequential fold of :func:`_dot` / the SQL oracle, so
-    results are bit-identical to the expression formulation. Pair
+    matching :func:`dot_expr` / the SQL oracle, so results are
+    bit-identical to the expression formulation. Pair
     orientation is (id_a < id_b).
 
     Scale note: exact all-pairs stays quadratic in COMPUTE — this is

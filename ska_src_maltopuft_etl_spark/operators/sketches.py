@@ -76,16 +76,14 @@ def _mg_candidates(col: str, capacity: int):
     return gen
 
 
-def heavy_hitters(
-    df: DataFrame, col: str, threshold: float, capacity: int | None = None
-) -> DataFrame:
+def heavy_hitters(df: DataFrame, col: str, threshold: float) -> DataFrame:
     """Exact frequent-items: every value of ``col`` whose frequency is
     ``>= threshold * N`` (N = row count), with its exact count.
 
     Two phases:
 
     1. **Candidate sketch** — per-partition streaming Misra-Gries with
-       ``capacity = ceil(2 / threshold)`` counters. Pigeonhole over the
+       ``capacity = max(4, floor(2 / threshold) + 1)`` counters. Pigeonhole over the
        per-partition error bound (n_p / capacity) guarantees the union
        of partition survivors is a superset of all global heavy
        hitters: f >= threshold*N > N/capacity implies f_p > n_p/capacity
@@ -104,7 +102,7 @@ def heavy_hitters(
     """
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    cap = capacity or max(4, int(2.0 / threshold) + 1)
+    cap = max(4, int(2.0 / threshold) + 1)
     src = df.select(col)
     cand = (
         src.mapInPandas(_mg_candidates(col, cap), schema=src.schema)

@@ -200,15 +200,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersistable (the returned plan is lazy) — a storage leak for
     # callers that compose this query (corpus_dedup_clusters_lsh).
     sh = similarity.ngram_shingles(d, "doc_id", "text", n=3, distinct=False)
-    # portable=True: md5-derived 60-bit hashes reproduce bit-for-bit in
-    # DuckDB, upgrading this from a rows-only check to a full value-hash
-    # oracle. The xxhash64 fast path stays available for production.
-    sigs = similarity.minhash_signatures(sh, "doc_id", num_hashes=16, portable=True)
+    # md5-derived 60-bit hashes reproduce bit-for-bit in DuckDB, so the
+    # oracle checks values, not just rows.
+    sigs = similarity.minhash_signatures(sh, "doc_id", num_hashes=16)
     # candidate pairs are tiny but referenced three times below; cutting
     # lineage here keeps the final plan linear instead of re-planning the
     # signature subtree per reference (45 -> ~8 exchanges).
     cands = similarity.lsh_candidate_pairs(
-        sigs, "doc_id", band_size=4, portable=True
+        sigs, "doc_id", band_size=4
     ).localCheckpoint(eager=False)
     # Exact-verify ONLY the candidate pairs: restrict the shingle table
     # to docs that appear in any candidate pair before the quadratic
@@ -438,7 +437,7 @@ def knn_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 10)
     c = e.where(F.col("vec_id") >= 10)
     return similarity.cosine_topk_lsh(
-        q, c, "vec_id", "embedding", k=5, num_planes=4, portable=True
+        q, c, "vec_id", "embedding", k=5, num_planes=4
     )
 
 

@@ -921,8 +921,8 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Skew guard (the scale hazard of ANY banded scheme): a band value
     # shared by f docs contributes f² candidate pairs, and a hot bucket
     # (near-constant signature region — boilerplate-dominated corpora)
-    # can carry the whole corpus. Cap bucket size like jaccard_pairs'
-    # max_doc_frequency: pairs whose ONLY collision is a hot bucket are
+    # can carry the whole corpus. Cap bucket size, as stopword removal
+    # caps document frequency: pairs whose ONLY collision is a hot bucket are
     # dropped — the standard trade, applied identically in the oracle
     # (the cap reads an exact COUNT, so both engines drop the same
     # buckets). 188k → bounded candidates on the sf0.1 word-salad corpus.

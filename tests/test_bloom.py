@@ -18,7 +18,7 @@ def _fact_dim(spark):
 
 def test_bloom_semi_join_is_exact(spark):
     fact, dim = _fact_dim(spark)
-    got = bloom.bloom_semi_join(fact, dim, "key")
+    got = bloom.bloom_semi_join(fact, dim, "key", "key")
     want = fact.join(dim, "key", "left_semi")
     assert got.count() == want.count() == 2_500
     assert got.agg(F.sum("payload")).collect() == want.agg(F.sum("payload")).collect()
@@ -28,7 +28,7 @@ def test_bloom_exact_even_with_tiny_bitmap(spark):
     # m=256 bits for 500 keys -> saturated filter, many false positives;
     # the exact join must still deliver the exact answer.
     fact, dim = _fact_dim(spark)
-    got = bloom.bloom_semi_join(fact, dim, "key", m_bits=256, k=2)
+    got = bloom.bloom_semi_join(fact, dim, "key", "key", m_bits=256, k=2)
     assert got.count() == 2_500
 
 

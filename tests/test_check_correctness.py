@@ -1,0 +1,31 @@
+"""tools/check_correctness.py end to end: the battery queries built on
+the similarity, graph, sketch and bloom operators match their DuckDB
+oracles on the test tier."""
+
+from __future__ import annotations
+
+import subprocess
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+QUERIES = [
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "knn_cosine_lsh",
+    "corpus_clean_pipeline",
+    "dedup_connected_components",
+    "corpus_dedup_clusters_lsh",
+    "heavy_hitter_customers",
+    "bloom_pruned_semi_join",
+]
+
+
+def test_operator_queries_match_duckdb(sf_dir):
+    p = subprocess.run(
+        [sys.executable, str(ROOT / "tools" / "check_correctness.py"), sf_dir, *QUERIES],
+        capture_output=True, text=True, cwd=ROOT, timeout=900,
+    )
+    assert p.returncode == 0, p.stdout[-3000:] + p.stderr[-3000:]
+    ok = {line.split()[1].rstrip(":") for line in p.stdout.splitlines() if line.startswith("OK ")}
+    assert ok == set(QUERIES)

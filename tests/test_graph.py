@@ -105,46 +105,6 @@ def test_matches_union_find(spark, edges):
     assert got == want
 
 
-def test_star_algorithm_chain_and_triangles(spark):
-    # long chain: the case label propagation needs diameter rounds for;
-    # star contraction collapses it in O(log n) rounds
-    n = 40
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)] + [(100, 101), (101, 102), (102, 100)],
-        ["src", "dst"],
-    )
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, algorithm="star", max_iter=12).collect()
-    }
-    want = {i: 0 for i in range(n)}
-    want.update({100: 100, 101: 100, 102: 100})
-    assert got == want
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 19), st.integers(0, 19)), max_size=40
-    )
-)
-def test_star_matches_union_find(spark, edges):
-    n = 20
-    nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    if edges:
-        edf = spark.createDataFrame(edges, ["src", "dst"])
-    else:
-        edf = spark.createDataFrame([], "src int, dst int")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            edf, nodes=nodes, max_iter=30, algorithm="star"
-        ).collect()
-    }
-    want = _uf_components(n, edges)
-    assert got == want
-
-
 def test_pagerank_fixed_point_known_graph(spark):
     """3-node graph with a hand-checkable python model: ranks must match
     the exact integer recurrence, sum close to total mass (floor loss

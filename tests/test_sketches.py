@@ -40,15 +40,15 @@ def test_heavy_hitters_exact_counts(spark, skewed):
 
 
 def test_heavy_hitters_with_forced_decrements(spark, skewed):
-    # capacity 41 (~2/0.05) over 1003 distinct values per the whole
-    # frame: every partition's summary overflows repeatedly, so the MG
-    # decrement path runs. The guarantee must still hold: no heavy
-    # hitter lost, and every surviving count exact.
+    # threshold 0.05 gives capacity 41 (~2/0.05) over 1003 distinct
+    # values per the whole frame: every partition's summary overflows
+    # repeatedly, so the MG decrement path runs. The guarantee must
+    # still hold: no heavy hitter lost, and every surviving count exact.
     cap = max(4, int(2.0 / 0.05) + 1)
     assert cap < 100  # decrements genuinely fire vs ~1003 distincts
     out = {
         r["k"]: r["freq"]
-        for r in sketches.heavy_hitters(skewed, "k", 0.05, capacity=cap).collect()
+        for r in sketches.heavy_hitters(skewed, "k", 0.05).collect()
     }
     assert out == {"hot": 600, "warm": 300, "mild": 150}
 
