@@ -50,8 +50,8 @@ _DEFAULTS: dict[str, str] = {
     # Shuffle parallelism must scale with the tier: 32 is right for the
     # test SFs (one wave on local[32], AQE coalesces below it), but at
     # the ×1000 tier a 48-partition sort put ~37M post-explode rows in
-    # ONE task's sorter and OOM'd a 48g heap (salted_join's 8× build
-    # replication, stage 56). On a real cluster this is sized to
+    # ONE task's sorter and OOM'd a 48g heap (a join whose build side
+    # was replicated 8×, stage 56). On a real cluster this is sized to
     # ~128-200MB per partition, passed through get_spark(conf=...).
     "spark.sql.shuffle.partitions": "32",
     # local mode: the driver JVM IS the executor; the 1g default heap

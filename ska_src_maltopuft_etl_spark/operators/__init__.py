@@ -24,11 +24,6 @@ from ska_src_maltopuft_etl_spark.operators.clustering import (
 from ska_src_maltopuft_etl_spark.operators.quantiles import (
     exact_percentiles,
 )
-from ska_src_maltopuft_etl_spark.operators.bloom import (
-    bloom_might_contain,
-    bloom_semi_join,
-    build_bloom,
-)
 from ska_src_maltopuft_etl_spark.operators.expectations import (
     expect_between,
     expect_fk,
@@ -48,9 +43,6 @@ from ska_src_maltopuft_etl_spark.operators.sketches import (
 
 __all__ = [
     "CardinalityError",
-    "bloom_might_contain",
-    "bloom_semi_join",
-    "build_bloom",
     "expect_between",
     "expect_fk",
     "expect_non_null",

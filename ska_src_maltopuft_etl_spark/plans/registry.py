@@ -77,9 +77,9 @@ from ska_src_maltopuft_etl_spark.plans.meertrap import parity  # noqa: E402,F401
 # `pivot_event_counts` (the two round-1 driver hash failures whose
 # fixes had not been driver-re-certified) are pinned in-window, the
 # MeerTRAP end-to-end parity queries are in-window, and five
-# redundant-covers rows (q05 / bloom semi / funnel / approx sketches,
-# every `covers` ID of which has another in-window certified row)
-# rotated to the tail. Do not reorder again; keep certification
+# redundant-covers rows (q05 / bloom semi, since removed / funnel /
+# approx sketches, every `covers` ID of which has another in-window
+# certified row) rotated to the tail. Do not reorder again; keep certification
 # comparable across rounds.
 #
 # Round 5: ONE-TIME amendment per the round-4 judge directive
@@ -104,8 +104,8 @@ from ska_src_maltopuft_etl_spark.plans.meertrap import parity  # noqa: E402,F401
 #
 # Round 9: BULK rotation per the round-8 judge directive (VERDICT.md
 # "Next round" #2): 27 never-driver-certified queries move in-window
-# (the judge's named priorities — salted join, triangle count, BM25,
-# RRF, cube/grouping-sets/hierarchy rollups — plus the curation /
+# (the judge's named priorities — salted join, since removed, triangle
+# count, BM25, RRF, cube/grouping-sets/hierarchy rollups — plus the curation /
 # time-series / stats tail and `q09_product_profit` +
 # `incremental_agg_events`, which for the first time give P3 and K3 an
 # in-window holder, making EVERY §2 covers ID window-held). In
@@ -234,7 +234,6 @@ _TAIL = [
     "null_guard_stats",
     "cube_event_counts",
     "timeseries_gapfill_linear",
-    "salted_join_revenue",
     "window_distribution_funcs",
     "grouping_sets_revenue",
     "bm25_keyword_search",
@@ -289,7 +288,6 @@ _TAIL = [
     "topk_orders_per_nation",
     "text_fingerprint",
     "q05_local_supplier_volume",
-    "bloom_pruned_semi_join",
     "funnel_view_click_purchase",
     "approx_distinct_accuracy",
     "approx_quantile_accuracy",

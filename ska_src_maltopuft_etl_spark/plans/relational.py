@@ -1990,83 +1990,6 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "bloom_pruned_semi_join",
-    oracle="""
-    SELECT l_returnflag,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM lineitem
-    WHERE l_orderkey IN
-          (SELECT o_orderkey FROM orders WHERE o_totalprice > 400000)
-    GROUP BY l_returnflag
-    """,
-    covers=("J1", "P5", "A2"),
-    description=(
-        "bloom-pruned exact semi join (operators/bloom.py): lineitem "
-        "rows of high-value orders — a broadcast hex-bitmap literal "
-        "discards non-matching fact rows in whole-stage codegen before "
-        "the join's exchange; false positives are removed by the real "
-        "semi join, so the result is exact (oracle: plain IN-subquery)"
-    ),
-)
-def bloom_pruned_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pattern pays when the dim key set fits a bloom but not a
-    broadcast hash table: the fact-side shuffle shrinks to matches plus
-    the false-positive margin, before any exchange."""
-    from ska_src_maltopuft_etl_spark.operators import bloom
-
-    li = _t(spark, sf_dir, "lineitem")
-    big_orders = _t(spark, sf_dir, "orders").where(
-        F.col("o_totalprice") > 400000
-    )
-    matched = bloom.bloom_semi_join(
-        li, big_orders, "l_orderkey", "o_orderkey"
-    )
-    return matched.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue"),
-    )
-
-
-@register(
-    "salted_join_revenue",
-    oracle="""
-    SELECT o.o_orderpriority,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                         * CAST(1 - l.l_discount AS DECIMAL(18,2)))
-                     AS DECIMAL(38,4)) AS DOUBLE) AS revenue
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    GROUP BY o.o_orderpriority
-    """,
-    covers=("J1", "A2"),
-    description=(
-        "k-way salted equi-join (operators/skew.py): hot-key mitigation "
-        "for power-law fact keys; result identical to the plain join "
-        "(oracle: unsalted SQL join)"
-    ),
-)
-def salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salting spreads each hot key across `salt_buckets` reducers: the
-    fact side derives a deterministic salt, the dim side replicates
-    per salt, and the equi-join runs on (key, salt). The oracle is the
-    UNSALTED join — certifying that salting never changes results."""
-    from ska_src_maltopuft_etl_spark.operators.skew import salted_join
-
-    li = _t(spark, sf_dir, "lineitem")
-    od = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), F.col("o_orderpriority")
-    )
-    joined = salted_join(li, od, "l_orderkey", salt_buckets=8, how="inner")
-    return joined.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        _money_sum_exact().alias("revenue"),
-    )
-
-
-@register(
     "revenue_exact_decimal",
     oracle="""
     SELECT o.o_orderpriority,

@@ -2387,15 +2387,14 @@ def weekly_growth_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     description=(
         "join-key skew report across the three fact keys: rows, distinct "
         "keys, hottest-key rows, and skew factor (hottest/average) — the "
-        "diagnostic read before choosing salting/AQE-skew settings"
+        "diagnostic read before choosing AQE skew-join settings"
     ),
 )
 def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-join-key skew profile: how much hotter is the hottest key
     than the average? (skew_factor = max_key_rows / (n_rows/n_keys),
-    computed as the integer product ratio). The number that decides
-    between a plain shuffle join, AQE skew handling, and explicit
-    salting (`operators/skew.py`)."""
+    computed as the integer product ratio). The number that says
+    whether a shuffle join on the key will lean on AQE's skew split."""
     parts = []
     for key_name, tbl, key in [
         ("orders.o_custkey", "orders", "o_custkey"),

@@ -1,6 +1,7 @@
 """tools/check_correctness.py end to end: the battery queries built on
-the similarity, graph, sketch and bloom operators match their DuckDB
-oracles on the test tier."""
+the similarity, graph and sketch operators match their DuckDB oracles
+on the test tier, and a query name the registry does not hold fails the
+run."""
 
 from __future__ import annotations
 
@@ -17,15 +18,25 @@ QUERIES = [
     "dedup_connected_components",
     "corpus_dedup_clusters_lsh",
     "heavy_hitter_customers",
-    "bloom_pruned_semi_join",
 ]
 
 
-def test_operator_queries_match_duckdb(sf_dir):
-    p = subprocess.run(
-        [sys.executable, str(ROOT / "tools" / "check_correctness.py"), sf_dir, *QUERIES],
+def _check(sf_dir, *names):
+    return subprocess.run(
+        [sys.executable, str(ROOT / "tools" / "check_correctness.py"), sf_dir, *names],
         capture_output=True, text=True, cwd=ROOT, timeout=900,
     )
+
+
+def test_operator_queries_match_duckdb(sf_dir):
+    p = _check(sf_dir, *QUERIES)
     assert p.returncode == 0, p.stdout[-3000:] + p.stderr[-3000:]
     ok = {line.split()[1].rstrip(":") for line in p.stdout.splitlines() if line.startswith("OK ")}
     assert ok == set(QUERIES)
+
+
+def test_unknown_query_name_fails(sf_dir):
+    p = _check(sf_dir, "heavy_hitter_customers", "no_such_query")
+    assert p.returncode != 0
+    assert "no_such_query" in p.stdout
+    assert not any(line.startswith("OK ") for line in p.stdout.splitlines())

@@ -1,4 +1,6 @@
-"""Tests for layout CLIs (O4) and the salted join."""
+"""Tests for the layout CLIs (O4) and small leftovers: partition-pruned
+scans, the SQL frontend, the CLI and pipeline config, shingling, hash
+splits and the partitioned oracle digest."""
 
 from __future__ import annotations
 
@@ -7,7 +9,6 @@ import tarfile
 
 from pyspark.sql import functions as F
 
-from ska_src_maltopuft_etl_spark.operators.skew import salted_join
 from ska_src_maltopuft_etl_spark.sources.layout import (
     delete_empty_candidate_dirs,
     reorganise_candidate_dirs,
@@ -41,20 +42,6 @@ def test_untar_and_reorg_and_cleanup(tmp_path):
     (data / "empty1" / "empty2").mkdir(parents=True)
     removed = delete_empty_candidate_dirs(data)
     assert any("empty2" in r for r in removed) and any("empty1" in r for r in removed)
-
-
-def test_salted_join_matches_plain_join(spark):
-    # skewed large side: 90% of rows share key 1
-    large = spark.range(1000).select(
-        F.when(F.col("id") % 10 != 0, F.lit(1)).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame([(1, "hot"), (10, "cold"), (999, "miss")], "k long, v string")
-    plain = large.join(small, "k").groupBy("v").count().collect()
-    salted = salted_join(large, small, "k", salt_buckets=8).groupBy("v").count().collect()
-    assert sorted((r["v"], r["count"]) for r in plain) == sorted(
-        (r["v"], r["count"]) for r in salted
-    )
 
 
 def test_partition_pruned_scan(spark, tmp_path):

@@ -10,6 +10,8 @@ Runs every ``queries()`` entry in Spark and (when present) the matching
   canonicalized to a string, rows sorted, md5 over the whole thing)
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+
+Query names not in the registry are refused before Spark starts (exit 2).
 """
 
 from __future__ import annotations
@@ -57,6 +59,11 @@ def frame_hash(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    queries = entrymod.queries()
+    unknown = sorted(only - queries.keys())
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
     spark = get_spark(app_name="correctness", conf={"spark.ui.enabled": "false"})
     con = duckdb.connect()
     # Bound the oracle's spill so an infeasible single-node oracle at a
@@ -84,7 +91,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in queries.items():

@@ -71,7 +71,6 @@ def main() -> int:
         sys.exit(f"events table not found: {events_path}")
 
     spark = get_spark(app_name="stream_bench", conf={"spark.ui.enabled": "false"})
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     stage = tempfile.mkdtemp(prefix="stream_bench_src_")
     os.symlink(os.path.abspath(events_path), os.path.join(stage, "events.parquet"))

@@ -3,19 +3,16 @@
 
 Runs the join-family flagships at a `make_sfN.py --skew zipf` tier —
 where the hottest lineitem.l_orderkey holds ~5% of all rows (~30,000×
-the mean) and the hottest events.user_id ~7% — and measures the two
-mitigation layers against the naive baseline:
+the mean) and the hottest events.user_id ~7% — and measures AQE's skew
+split against the naive baseline:
 
 - `plain_aqe_skew`   : shuffle sort-merge join, AQE skew-split ON (the
                        session default) — broadcast disabled so the
                        plan is the one a 100 TB fact-fact join gets;
 - `plain_no_skewfix` : same join, AQE skew handling OFF — the naive
-                       baseline whose straggler IS the cliff;
-- `salted_k8`        : operators/skew.salted_join — the explicit fix
-                       that also covers what AQE can't (broadcast-
-                       ineligible hash joins, streaming, hot-key aggs).
+                       baseline whose straggler IS the cliff.
 
-Plus the as-of / interval / bloom flagships (their skew exposure is the
+Plus the as-of / interval flagships (their skew exposure is the
 window/bucket key, not a sort-merge join, so they run under the session
 default only) at BOTH the uniform ×10 tier and the zipf tier — the
 uniform-vs-zipf delta is the cliff measurement.
@@ -44,33 +41,18 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from ska_src_maltopuft_etl_spark.engine import get_spark  # noqa: E402
-from ska_src_maltopuft_etl_spark.operators.skew import salted_join  # noqa: E402
 from ska_src_maltopuft_etl_spark.plans import QUERIES  # noqa: E402
 from ska_src_maltopuft_etl_spark.sources import load_table  # noqa: E402
 from tools.metrics import STATUS_CONF, best_of  # noqa: E402
 
 
 def plain_join_revenue(spark, sf_dir):
-    """The unsalted twin of salted_join_revenue (same agg, plain join)."""
+    """revenue_exact_decimal's join and GROUP BY, with a double sum."""
     li = load_table(spark, sf_dir, "lineitem")
     od = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), F.col("o_orderpriority")
     )
     return li.join(od, "l_orderkey").groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue"),
-    )
-
-
-def salted_join_revenue_k8(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    od = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), F.col("o_orderpriority")
-    )
-    joined = salted_join(li, od, "l_orderkey", salt_buckets=8, how="inner")
-    return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.round(
             F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
@@ -135,7 +117,7 @@ def main() -> int:
             record(kind="key_profile", tier=tag, table=t, key=k,
                    hottest=int(prof["mx"]), mean=round(float(prof["mean"]), 1))
 
-    # --- the sort-merge-join A/B: AQE skew-split vs salting ----------
+    # --- the sort-merge-join A/B: AQE skew-split on vs off -----------
     # broadcast disabled so the shuffle join actually happens (at 100 TB
     # neither side of a fact-fact join broadcasts). Skipped when an
     # explicit --flagships list asks for a targeted flagship-only run.
@@ -148,8 +130,6 @@ def main() -> int:
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         record(kind="join_ab", tier=tag, config="plain_aqe_skew",
                **timed("plain_aqe_skew", lambda: plain_join_revenue(spark, tier)))
-        record(kind="join_ab", tier=tag, config="salted_k8",
-               **timed("salted_k8", lambda: salted_join_revenue_k8(spark, tier)))
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
     # --- flagship family under the session default, uniform vs zipf --
@@ -157,8 +137,6 @@ def main() -> int:
         "asof_join_forward_next_action",
         "interval_join_sessions",
         "interval_overlap_pairs",
-        "bloom_pruned_semi_join",
-        "salted_join_revenue",
     )
     if flagships is None:
         flagships = () if ab_only else default_battery
