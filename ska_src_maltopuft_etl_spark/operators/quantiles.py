@@ -18,8 +18,9 @@ interpolated percentiles via the classic distributed sort-rank plan:
    broadcast-hash join of the fact against a tiny (2 x groups x probs)-row
    target table — map-side, codegen'd;
 5. linear interpolation with EXACTLY the built-in's operation order
-   (``(higher - pos) * v_lo + (pos - lower) * v_hi``, the special-cased
-   ``higher == lower`` branch first), so results are bit-identical to
+   (``(higher - pos) * v_lo + (pos - lower) * v_hi``, with the
+   built-in's two shortcuts to ``v_lo`` first: ``higher == lower`` and
+   ``v_hi == v_lo``), so results are bit-identical to
    ``F.percentile`` — property-tested in ``tests/test_quantiles.py``.
 
 Peak per-task memory is one sorted partition (spillable), never one
@@ -128,7 +129,15 @@ def exact_percentiles(
 
     lower = F.floor("__pos").cast("double")
     higher = F.ceil("__pos").cast("double")
-    interp = F.when(F.col("__vhi").isNull() | (higher == lower), F.col("__vlo")).otherwise(
+    # Equal bracketing values return v_lo as the built-in does: the
+    # interpolation below can miss it by an ulp (0.8 * 0.75 + 0.2 * 0.75
+    # is 0.7500000000000001).
+    interp = F.when(
+        F.col("__vhi").isNull()
+        | (higher == lower)
+        | (F.col("__vhi") == F.col("__vlo")),
+        F.col("__vlo"),
+    ).otherwise(
         # F.percentile's exact operation order (Spark Percentile
         # aggregate): (higher - pos) * lo + (pos - lower) * hi.
         (higher - F.col("__pos")) * F.col("__vlo")
